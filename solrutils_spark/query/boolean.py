@@ -48,11 +48,14 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import B, K1, analyze, analyze_series
 from solrutils_spark.index.codec import decode_run
+from solrutils_spark.query import arrow_rows
+from solrutils_spark.query.wand import _EMPTY, _member, _tfn
 
 TOPK_DDL = "doc_id long, score double"
 
@@ -63,11 +66,6 @@ class TooManyClauses(ValueError):
 
 
 # ------------------------------------------------------------ kernels ----
-
-
-def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
-    tfv = tf.astype(np.float64)
-    return tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
 
 
 def needed_block_runs(
@@ -97,9 +95,6 @@ def needed_block_runs(
     return [(int(needed[s]), int(needed[e]) + 1) for s, e in zip(starts, ends)]
 
 
-_EMPTY = (np.empty(0, np.int64), np.empty(0, np.float64))
-
-
 def conj_slice(
     rows,
     idf_by_term: dict[str, float],
@@ -109,8 +104,8 @@ def conj_slice(
 ) -> tuple[np.ndarray, np.ndarray]:
     """ALL (doc_id, score) pairs of one salt slice under AND semantics.
 
-    ``rows``: posting-row records for this slice (pandas itertuples or
-    ``_PostingRow``). ``n_terms``: number of live query terms — a slice
+    ``rows``: ``PostingRow`` records for this slice (or every salt, on the
+    driver). ``n_terms``: number of live query terms — a slice
     missing any term can contain no conjunctive match and returns without
     decoding a byte. Scores are the BM25 sum over the query terms (identical
     arithmetic to the disjunctive kernels, summed rare→hot by GLOBAL df —
@@ -132,20 +127,14 @@ def conj_slice(
     for term, rlist in ordered:
         parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
         for r in rlist:
-            payload = (
-                r.payload
-                if isinstance(r.payload, np.ndarray)
-                else np.frombuffer(r.payload, dtype=np.uint8)
-            )
-            bo = np.asarray(r.block_offset, dtype=np.int64)
-            bl = np.asarray(r.block_last, dtype=np.int64)
+            bo, bl = r.block_offset, r.block_last
             if cand is None:
-                parts.append(decode_run(payload, int(r.df_part), bo, 0, len(bo), 0))
+                parts.append(decode_run(r.payload, int(r.df_part), bo, 0, len(bo), 0))
             else:
                 for i0, i1 in needed_block_runs(bl, int(r.first_doc), cand):
                     prev_last = int(bl[i0 - 1]) if i0 else 0
                     parts.append(
-                        decode_run(payload, int(r.df_part), bo, i0, i1, prev_last)
+                        decode_run(r.payload, int(r.df_part), bo, i0, i1, prev_last)
                     )
         if not parts:
             return _EMPTY
@@ -159,11 +148,7 @@ def conj_slice(
             return _EMPTY
         if cand is None:
             if allowed_docs is not None:
-                pos = np.searchsorted(allowed_docs, d)
-                if allowed_docs.size == 0:
-                    return _EMPTY
-                ok = pos < allowed_docs.size
-                ok &= allowed_docs[np.minimum(pos, allowed_docs.size - 1)] == d
+                ok = _member(d, allowed_docs)
                 d, tf, dl = d[ok], tf[ok], dl[ok]
                 if d.size == 0:
                     return _EMPTY
@@ -209,17 +194,13 @@ def scored_matches_slice(
 ) -> tuple[np.ndarray, np.ndarray]:
     """ALL (doc_id, score) of one slice under OR semantics — the exhaustive
     per-clause contribution used by the boolean executor (no top-k cut:
-    clause contributions must survive to the cross-clause aggregation)."""
+    clause contributions must survive to the cross-clause aggregation).
+    Contributions add in the shared ``(-idf, term)`` order."""
     ds: list[np.ndarray] = []
     cs: list[np.ndarray] = []
-    for r in rows:
-        payload = (
-            r.payload
-            if isinstance(r.payload, np.ndarray)
-            else np.frombuffer(r.payload, dtype=np.uint8)
-        )
-        bo = np.asarray(r.block_offset, dtype=np.int64)
-        d, tf, dl = decode_run(payload, int(r.df_part), bo, 0, len(bo), 0)
+    for r in sorted(rows, key=lambda r: (-idf_by_term[r.term], r.term, r.salt)):
+        bo = r.block_offset
+        d, tf, dl = decode_run(r.payload, int(r.df_part), bo, 0, len(bo), 0)
         ds.append(d)
         cs.append(idf_by_term[r.term] * _tfn(tf, dl, avgdl))
     if not ds:
@@ -269,34 +250,25 @@ def search_conj(
     if filter_df is not None:
         fids = reader._aligned_filter(filter_df)
 
-        def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
-            if cand_pdf.empty or fid_pdf.empty:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float64")}
-                )
-            allowed = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
-            d, s = topk_conj(
-                list(cand_pdf.itertuples(index=False)), idf_by_term, avgdl,
-                fetch_k, n_terms, allowed_docs=allowed,
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
+        def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
+            allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
+            rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
+            return arrow_rows.topk_table(*topk_conj(
+                rows, idf_by_term, avgdl, fetch_k, n_terms, allowed_docs=allowed))
 
         sliced = (
             cand.groupBy("salt")
             .cogroup(fids.groupBy("salt"))
-            .applyInPandas(ckernel, schema=TOPK_DDL)
+            .applyInArrow(ckernel, schema=TOPK_DDL)
         )
     else:
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            d, s = topk_conj(
-                list(pdf.itertuples(index=False)), idf_by_term, avgdl,
-                fetch_k, n_terms,
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
+        def kernel(tbl: pa.Table) -> pa.Table:
+            return arrow_rows.topk_table(*topk_conj(
+                arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl, fetch_k,
+                n_terms))
 
-        sliced = cand.groupBy("salt").applyInPandas(kernel, schema=TOPK_DDL)
+        sliced = cand.groupBy("salt").applyInArrow(kernel, schema=TOPK_DDL)
     ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
     if offset:
         ranked = ranked.offset(offset)
@@ -336,34 +308,20 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
     live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
     cand = reader._candidate_rows(live_terms)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(tbl: pa.Table) -> pa.Table:
         rows_by_term: dict[str, list] = {}
-        for r in pdf.itertuples(index=False):
+        for r in arrow_rows.rows_from_arrow(tbl):
             rows_by_term.setdefault(r.term, []).append(r)
-        live = []
+        results = []
         for qid, idf_by_term, k in plans:
             if any(t not in rows_by_term for t in idf_by_term):
                 continue  # slice lacks a term ⇒ no conjunctive match here
             rows = [r for t in idf_by_term for r in rows_by_term[t]]
-            d, s = topk_conj(rows, idf_by_term, avgdl, k,
-                             n_terms=len(idf_by_term))
-            if d.size:
-                live.append((qid, d, s))
-        if not live:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype({"query_id": "int64", "doc_id": "int64",
-                      "score": "float64"})
-        qids = np.concatenate(
-            [np.full(d.size, qid, dtype=np.int64) for qid, d, _ in live]
-        )
-        return pd.DataFrame(
-            {"query_id": qids,
-             "doc_id": np.concatenate([d for _, d, _ in live]),
-             "score": np.concatenate([s for _, _, s in live])}
-        )
+            results.append((qid, *topk_conj(rows, idf_by_term, avgdl, k,
+                                            n_terms=len(idf_by_term))))
+        return arrow_rows.batch_table(results)
 
-    sliced = cand.groupBy("salt").applyInPandas(kernel, BATCH_DDL)
+    sliced = cand.groupBy("salt").applyInArrow(kernel, BATCH_DDL)
     k_df = reader.spark.createDataFrame(
         [(qid, k) for qid, _, k in plans], "query_id long, k int"
     )
@@ -390,13 +348,13 @@ def conj_matches(reader, terms: list[str]) -> DataFrame:
     n_terms = len(terms)
     cand = reader._candidate_rows(terms)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(tbl: pa.Table) -> pa.Table:
         d, _ = conj_slice(
-            list(pdf.itertuples(index=False)), idf_by_term, avgdl, n_terms
+            arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl, n_terms
         )
-        return pd.DataFrame({"doc_id": d})
+        return pa.table({"doc_id": pa.array(d, pa.int64())})
 
-    return cand.groupBy("salt").applyInPandas(kernel, "doc_id long")
+    return cand.groupBy("salt").applyInArrow(kernel, "doc_id long")
 
 
 def scored_matches(reader, terms: list[str]) -> DataFrame:
@@ -409,13 +367,11 @@ def scored_matches(reader, terms: list[str]) -> DataFrame:
     avgdl = float(reader.stats["avgdl"])
     cand = reader._candidate_rows(live)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        d, s = scored_matches_slice(
-            list(pdf.itertuples(index=False)), idf_by_term, avgdl
-        )
-        return pd.DataFrame({"doc_id": d, "score": s})
+    def kernel(tbl: pa.Table) -> pa.Table:
+        return arrow_rows.topk_table(*scored_matches_slice(
+            arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl))
 
-    return cand.groupBy("salt").applyInPandas(kernel, TOPK_DDL)
+    return cand.groupBy("salt").applyInArrow(kernel, TOPK_DDL)
 
 
 # --------------------------------------------------------------- phrase ----
@@ -578,25 +534,13 @@ def phrase_slice(
         rlist = sorted(rlist, key=lambda r: int(r.first_doc))
         d_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
         for r in rlist:
-            payload = (
-                r.payload
-                if isinstance(r.payload, np.ndarray)
-                else np.frombuffer(r.payload, dtype=np.uint8)
-            )
-            bo = np.asarray(r.block_offset, dtype=np.int64)
-            bl = np.asarray(r.block_last, dtype=np.int64)
-            pos_bo = np.asarray(r.pos_block_offset, dtype=np.int64)
+            bo, bl, pos_bo = r.block_offset, r.block_last, r.pos_block_offset
             if len(bo) and not len(pos_bo):
                 raise ValueError(
                     f"positional sidecar missing for term {r.term!r} — the "
                     "index mixes pre-positions segments; rebuild it "
                     "(resume=False) or query via candidate-verify"
                 )
-            pos_payload = (
-                r.pos_payload
-                if isinstance(r.pos_payload, np.ndarray)
-                else np.frombuffer(r.pos_payload, dtype=np.uint8)
-            )
             runs = (
                 [(0, len(bo))]
                 if cand is None
@@ -605,13 +549,13 @@ def phrase_slice(
             for i0, i1 in runs:
                 prev_last = int(bl[i0 - 1]) if i0 else 0
                 d, tf, dl = decode_run(
-                    payload, int(r.df_part), bo, i0, i1, prev_last
+                    r.payload, int(r.df_part), bo, i0, i1, prev_last
                 )
                 d_parts.append(d)
                 tf_parts.append(tf)
                 dl_parts.append(dl)
                 pos_parts.append(
-                    decode_positions_run(pos_payload, pos_bo, i0, i1, tf)
+                    decode_positions_run(r.pos_payload, pos_bo, i0, i1, tf)
                 )
         if not d_parts:
             return _EMPTY
@@ -728,14 +672,12 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
         cand_rows = reader._candidate_rows_with_positions(uniq)
         seq_l, slop_l = list(seq), slop
 
-        def pkernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            d, s = phrase_slice(
-                list(pdf.itertuples(index=False)), seq_l, idf_by_term,
-                avgdl, slop_l,
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
+        def pkernel(tbl: pa.Table) -> pa.Table:
+            return arrow_rows.topk_table(*phrase_slice(
+                arrow_rows.rows_from_arrow(tbl), seq_l, idf_by_term, avgdl,
+                slop_l))
 
-        return cand_rows.groupBy("salt").applyInPandas(pkernel, TOPK_DDL)
+        return cand_rows.groupBy("salt").applyInArrow(pkernel, TOPK_DDL)
 
     cand = conj_matches(reader, uniq)
     # docs ⋈ candidates: candidates ≪ corpus (bounded by the rarest term's
@@ -876,23 +818,11 @@ def multi_term_docs(reader, terms: list[str]) -> DataFrame:
         return reader.spark.createDataFrame([], TOPK_DDL)
     cand = reader._candidate_rows(live)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from solrutils_spark.index.codec import decode_postings
+    def kernel(tbl: pa.Table) -> pa.Table:
+        docs = arrow_rows.slice_doc_ids(arrow_rows.rows_from_arrow(tbl))
+        return arrow_rows.topk_table(docs, np.ones(docs.size))
 
-        out = []
-        for row in pdf.itertuples(index=False):
-            payload = np.frombuffer(row.payload, dtype=np.uint8)
-            d, _, _ = decode_postings(
-                int(row.df_part), payload, np.asarray(row.block_offset),
-                np.asarray(row.block_last),
-            )
-            out.append(d)
-        docs = np.unique(np.concatenate(out)) if out else np.empty(0, np.int64)
-        return pd.DataFrame(
-            {"doc_id": docs, "score": np.ones(docs.size, dtype=np.float64)}
-        )
-
-    return cand.groupBy("salt").applyInPandas(kernel, TOPK_DDL)
+    return cand.groupBy("salt").applyInArrow(kernel, TOPK_DDL)
 
 
 def prefix_search(

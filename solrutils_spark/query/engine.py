@@ -8,7 +8,10 @@ Query lifecycle (the Spark twin of SURVEY.md §3.1's Solr crossing):
    for surviving rows (Parquet column/predicate pushdown)
 3. global df per term = sum of row-level ``df_part`` (metadata-only pass,
    payload column never touched — column pruning does this for free)
-4. score: per-salt-slice block-max WAND kernel in ``applyInPandas``
+4. score: ``groupBy("salt").applyInArrow`` — each salt slice's rows go
+   through the one Arrow adapter (``arrow_rows.rows_from_arrow``) into the
+   one block-max WAND kernel (``wand.topk_rows``), the same adapter and
+   kernel ``search_local`` runs on the driver
 5. merge: ``orderBy(score desc, doc_id).limit(k)`` over ≤ slices·k rows
    (TakeOrderedAndProject — never a full sort)
 6. optional stored-field fetch: broadcast join of the tiny top-k against the
@@ -36,78 +39,23 @@ import math
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solrutils_spark.index.builder import read_docs, read_stats
 from solrutils_spark.index.merge import read_index, term_bucket
+from solrutils_spark.query import arrow_rows, wand
+from solrutils_spark.query.arrow_rows import rows_from_arrow as _rows_from_arrow
 from solrutils_spark.query.exact import query_terms
-from solrutils_spark.query.wand import topk_rows, topk_slice, topk_slice_batch
+from solrutils_spark.query.wand import topk_rows
+
+# Driver paths call the module-level ``_rows_from_arrow`` / ``topk_rows``
+# names; executor closures reach the same functions through their modules
+# (``arrow_rows.rows_from_arrow``, ``wand.topk_rows``), so a driver-side
+# wrapper around these names is never pickled into a task.
 
 TOPK_DDL = "doc_id long, score double"
-
-
-class _PostingRow:
-    """Lightweight posting-row record for the serving path (attribute access
-    matches what ``topk_rows`` reads off pandas ``itertuples``)."""
-
-    __slots__ = ("term", "salt", "df_part", "first_doc", "payload",
-                 "block_offset", "block_last", "block_max_tf", "block_min_dl")
-
-
-_SLICED_FALLBACKS = 0  # observability: serving reads should NEVER be sliced
-
-
-def _list_col_views(arr) -> list[np.ndarray]:
-    """pyarrow ListArray → per-row numpy views (zero-copy; no python lists).
-
-    At 1M+ docs a hot term's block arrays hold thousands of entries —
-    ``to_pydict`` boxes every element into a Python object (measured: serving
-    p50 633→883 ms at 1M), while offset-sliced views cost O(rows)."""
-    if arr.offset != 0:  # sliced array: offsets buffer is shifted — rare here
-        # Counted, not silent (round-3 advice): serving reads are whole
-        # tables post-combine_chunks, so this boxing path indicates an
-        # upstream pyarrow behavior change eating the zero-copy win. The
-        # counter makes that visible to a latency investigation.
-        global _SLICED_FALLBACKS
-        _SLICED_FALLBACKS += 1
-        return [np.asarray(v) for v in arr.to_pylist()]
-    offs = arr.offsets.to_numpy(zero_copy_only=False)
-    vals = arr.values.to_numpy(zero_copy_only=False)
-    return [vals[offs[i] : offs[i + 1]] for i in range(len(arr))]
-
-
-def _rows_from_arrow(tbl) -> list[_PostingRow]:
-    """pyarrow Table → records, bypassing pandas (serving hot path)."""
-    tbl = tbl.combine_chunks()
-    terms = tbl.column("term").to_pylist()
-    salts = tbl.column("salt").to_pylist()
-    df_parts = tbl.column("df_part").to_numpy(zero_copy_only=False)
-    first_docs = tbl.column("first_doc").to_numpy(zero_copy_only=False)
-    payloads = tbl.column("payload").to_pylist()
-    col = lambda n: tbl.column(n).chunk(0) if tbl.column(n).num_chunks else None  # noqa: E731
-    n = tbl.num_rows
-    if n == 0:
-        return []
-    offs = _list_col_views(col("block_offset"))
-    lasts = _list_col_views(col("block_last"))
-    mtfs = _list_col_views(col("block_max_tf"))
-    mdls = _list_col_views(col("block_min_dl"))
-    out = []
-    for i in range(n):
-        r = _PostingRow()
-        r.term = terms[i]
-        r.salt = salts[i]
-        r.df_part = df_parts[i]
-        r.first_doc = first_docs[i]
-        r.payload = payloads[i]
-        r.block_offset = offs[i].astype(np.int32, copy=False)
-        r.block_last = lasts[i].astype(np.int64, copy=False)
-        r.block_max_tf = mtfs[i].astype(np.int64, copy=False)
-        r.block_min_dl = mdls[i].astype(np.int64, copy=False)
-        out.append(r)
-    return out
 
 
 class IndexReader:
@@ -121,8 +69,8 @@ class IndexReader:
         self._bucket_datasets: dict[int, object] = {}
         self._has_positions: bool | None = None
         self._serving_partitions: int | None = None
-        # filter-alignment cache: id(filter_df) → (source ref, aligned df).
-        # Bounded LRU; see _aligned_filter.
+        # filter-alignment cache: id(filter_df) → (source ref, aligned df,
+        # owned). Bounded LRU; see _aligned_filter.
         from collections import OrderedDict
 
         self._filter_align_cache: "OrderedDict[int, tuple]" = OrderedDict()
@@ -138,7 +86,8 @@ class IndexReader:
                           sort_for_pruning: bool = False) -> "IndexReader":
         """Hot-index mode: repartition the postings by ``salt`` and persist.
 
-        Every scored query stage is ``groupBy("salt").applyInPandas(...)``;
+        Every scored query stage is ``groupBy("salt").applyInArrow(...)``
+        (or its ``cogroup`` twin under ``filter_df``);
         with the cache already hash-partitioned on salt, Catalyst elides the
         per-query Exchange (ClusteredDistribution is satisfied by the cached
         partitioning for ANY partition count) — repeated queries shuffle
@@ -181,7 +130,12 @@ class IndexReader:
         end-to-end batch/serving numbers are neutral to slightly negative —
         the scan is not the binding cost at this scale (the Python kernel
         stage and job floor are), so the default stays OFF. On a cluster
-        with a much larger vocabulary (scan-bound), turn it on."""
+        with a much larger vocabulary (scan-bound), turn it on.
+
+        Calling it again re-partitions the cached index; when the partition
+        count changes, the filter-alignment cache is cleared (aligned frames
+        the reader persisted are unpersisted) because its entries are
+        co-partitioned with the OLD count."""
         if num_partitions is None:
             num_salts = int(self.stats.get("num_salts", 0))
             shuffle_parts = int(
@@ -191,12 +145,18 @@ class IndexReader:
                 min(4 * num_salts, shuffle_parts) if num_salts > 0
                 else shuffle_parts
             )
-        part = self.index.repartition(int(num_partitions), "salt")
+        num_partitions = int(num_partitions)
+        if self._serving_partitions not in (None, num_partitions):
+            for _src, aligned, owned in self._filter_align_cache.values():
+                if owned:
+                    aligned.unpersist()
+            self._filter_align_cache.clear()
+        part = self.index.repartition(num_partitions, "salt")
         if sort_for_pruning:
             part = part.sortWithinPartitions("bucket", "term")
         self.index = part.persist()
         self.index.count()
-        self._serving_partitions = int(num_partitions)
+        self._serving_partitions = num_partitions
         return self
 
     def idf(self, df: int) -> float:
@@ -361,7 +321,6 @@ class IndexReader:
         offset: int = 0,
         filter_doc_ids: list[int] | None = None,
         filter_df: DataFrame | None = None,
-        use_wand: bool = True,
     ) -> DataFrame:
         """Disjunctive BM25 top-k → DataFrame(doc_id, score), ranked.
 
@@ -383,23 +342,16 @@ class IndexReader:
         if filter_df is not None:
             fids = self._aligned_filter(filter_df)
 
-            def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
-                if cand_pdf.empty or fid_pdf.empty:
-                    return pd.DataFrame(
-                        {"doc_id": pd.Series(dtype="int64"),
-                         "score": pd.Series(dtype="float64")}
-                    )
-                allowed_local = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
-                d, s = topk_slice(
-                    cand_pdf, idf_by_term, avgdl, fetch_k,
-                    use_wand=use_wand, allowed_docs=allowed_local,
-                )
-                return pd.DataFrame({"doc_id": d, "score": s})
+            def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
+                allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
+                rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
+                return arrow_rows.topk_table(*wand.topk_rows(
+                    rows, idf_by_term, avgdl, fetch_k, allowed_docs=allowed))
 
             sliced = (
                 cand.groupBy("salt")
                 .cogroup(fids.groupBy("salt"))
-                .applyInPandas(ckernel, schema=TOPK_DDL)
+                .applyInArrow(ckernel, schema=TOPK_DDL)
             )
         else:
             allowed = (
@@ -408,14 +360,12 @@ class IndexReader:
                 else None
             )
 
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                d, s = topk_slice(
-                    pdf, idf_by_term, avgdl, fetch_k,
-                    use_wand=use_wand, allowed_docs=allowed,
-                )
-                return pd.DataFrame({"doc_id": d, "score": s})
+            def kernel(tbl: pa.Table) -> pa.Table:
+                return arrow_rows.topk_table(*wand.topk_rows(
+                    arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl,
+                    fetch_k, allowed_docs=allowed))
 
-            sliced = cand.groupBy("salt").applyInPandas(kernel, schema=TOPK_DDL)
+            sliced = cand.groupBy("salt").applyInArrow(kernel, schema=TOPK_DDL)
         ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
         if offset:
             ranked = ranked.offset(offset)
@@ -462,8 +412,10 @@ class IndexReader:
         The throughput path for offline evaluation / reranking pipelines:
         candidate rows for the UNION of all query terms are fetched once,
         each salt-slice scores every query locally (shared decode within the
-        slice), and a per-query window takes global top-k. Per-query results
-        are rank-identical to :meth:`search` (same kernel, same stats).
+        slice), and a per-query window takes global top-k. The slice kernel
+        (``wand.topk_slice_batch``) is exhaustive with the same BM25
+        arithmetic and summation order as the WAND kernel, so per-query
+        results equal :meth:`search` exactly — ids, order and float scores.
 
         ``filter_df``: optional single-column DataFrame of allowed doc_ids
         applied to EVERY query in the batch (P2 semantics — restrict, never
@@ -490,48 +442,28 @@ class IndexReader:
         live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
         BATCH_DDL = "query_id long, doc_id long, score double"
 
-        def _rows(results) -> pd.DataFrame:
-            # ONE DataFrame per slice from concatenated numpy arrays — a
-            # per-query pd.DataFrame + pd.concat here costs ~20-50 µs ×
-            # |queries| × 64 slices per job, a measurable slice of the
-            # batch's per-query marginal cost at 1M docs
-            live = [(qid, d, s) for qid, d, s in results if d.size]
-            if not live:
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                    {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-                )
-            qids = np.concatenate(
-                [np.full(d.size, qid, dtype=np.int64) for qid, d, _ in live]
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": qids,
-                    "doc_id": np.concatenate([d for _, d, _ in live]),
-                    "score": np.concatenate([s for _, _, s in live]),
-                }
-            )
-
         cand = self._candidate_rows(live_terms)
         if filter_df is not None:
             fids = self._aligned_filter(filter_df)
 
-            def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
-                if cand_pdf.empty or fid_pdf.empty:
-                    return _rows([])
-                allowed = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
-                return _rows(topk_slice_batch(cand_pdf, plans, avgdl, allowed))
+            def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
+                allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
+                rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
+                return arrow_rows.batch_table(
+                    wand.topk_slice_batch(rows, plans, avgdl, allowed))
 
             sliced = (
                 cand.groupBy("salt")
                 .cogroup(fids.groupBy("salt"))
-                .applyInPandas(ckernel, BATCH_DDL)
+                .applyInArrow(ckernel, BATCH_DDL)
             )
         else:
 
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                return _rows(topk_slice_batch(pdf, plans, avgdl))
+            def kernel(tbl: pa.Table) -> pa.Table:
+                return arrow_rows.batch_table(wand.topk_slice_batch(
+                    arrow_rows.rows_from_arrow(tbl), plans, avgdl))
 
-            sliced = cand.groupBy("salt").applyInPandas(kernel, BATCH_DDL)
+            sliced = cand.groupBy("salt").applyInArrow(kernel, BATCH_DDL)
         k_map = {qid: k for qid, _, k in plans}
         k_df = self.spark.createDataFrame(
             [(qid, k) for qid, k in k_map.items()], "query_id long, k int"
@@ -544,7 +476,7 @@ class IndexReader:
             .drop("k")
         )
 
-    def _local_rows(self, terms: list[str]) -> list["_PostingRow"]:
+    def _local_rows(self, terms: list[str]) -> list[arrow_rows.PostingRow]:
         """Candidate posting rows read directly with pyarrow (no Spark job):
         bucket-directory pruned, term-filtered, dataset handles cached — the
         shared driver-serving fetch under :meth:`search_local` and
@@ -552,7 +484,7 @@ class IndexReader:
         import pyarrow.dataset as ds
 
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
-        rows: list[_PostingRow] = []
+        rows: list[arrow_rows.PostingRow] = []
         index_root = Path(self.index_dir) / "index"
         for b in buckets:
             dset = self._bucket_datasets.get(b)
@@ -561,7 +493,8 @@ class IndexReader:
                 if not bdir.exists():
                     continue
                 dset = self._bucket_datasets[b] = ds.dataset(str(bdir))
-            tbl = dset.to_table(filter=ds.field("term").isin(terms))
+            tbl = dset.to_table(columns=arrow_rows.POSTING_COLUMNS,
+                                filter=ds.field("term").isin(terms))
             if tbl.num_rows:
                 rows.extend(_rows_from_arrow(tbl))
         return rows
@@ -617,7 +550,7 @@ class IndexReader:
         path).
 
         Hot path is pandas-free: candidate rows go pyarrow table →
-        ``_PostingRow`` records straight into the kernel (the DataFrame
+        ``PostingRow`` records straight into the kernel (the DataFrame
         conversion + traversal measured ~45% of serving latency), and
         per-bucket dataset discovery (a filesystem listing) is cached — the
         on-disk index is immutable after build."""
@@ -633,8 +566,7 @@ class IndexReader:
         rows = self._local_rows(terms)
         if not rows:
             return []
-        docs, scores = topk_rows(rows, idf_by_term, avgdl, fetch_k,
-                                 n_docs=int(self.stats["n_docs"]))
+        docs, scores = topk_rows(rows, idf_by_term, avgdl, fetch_k)
         return [
             (int(docs[i]), float(scores[i]))
             for i in range(offset, min(fetch_k, docs.size))
@@ -668,21 +600,11 @@ class IndexReader:
             return self.spark.createDataFrame([], "doc_id long")
         cand = self._candidate_rows(terms)
 
-        def decode_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            from solrutils_spark.index.codec import decode_postings
+        def decode_all(tbl: pa.Table) -> pa.Table:
+            ids = arrow_rows.slice_doc_ids(arrow_rows.rows_from_arrow(tbl))
+            return pa.table({"doc_id": pa.array(ids, pa.int64())})
 
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = np.frombuffer(row.payload, dtype=np.uint8)
-                d, _, _ = decode_postings(
-                    int(row.df_part), payload, np.asarray(row.block_offset),
-                    np.asarray(row.block_last),
-                )
-                out.append(d)
-            docs = np.unique(np.concatenate(out)) if out else np.empty(0, np.int64)
-            return pd.DataFrame({"doc_id": docs})
-
-        return cand.groupBy("salt").applyInPandas(decode_all, "doc_id long")
+        return cand.groupBy("salt").applyInArrow(decode_all, "doc_id long")
 
     def matching_count(self, query_text: str) -> int:
         """numFound for an UNFILTERED scored request (Solr's exact hit count,
@@ -703,19 +625,9 @@ class IndexReader:
             return int(dfs[live[0]])
         cand = self._candidate_rows(live)
 
-        def count_slice(pdf: pd.DataFrame) -> pd.DataFrame:
-            from solrutils_spark.index.codec import decode_postings
+        def count_slice(tbl: pa.Table) -> pa.Table:
+            ids = arrow_rows.slice_doc_ids(arrow_rows.rows_from_arrow(tbl))
+            return pa.table({"n": pa.array([ids.size], pa.int64())})
 
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = np.frombuffer(row.payload, dtype=np.uint8)
-                d, _, _ = decode_postings(
-                    int(row.df_part), payload, np.asarray(row.block_offset),
-                    np.asarray(row.block_last),
-                )
-                out.append(d)
-            n = int(np.unique(np.concatenate(out)).size) if out else 0
-            return pd.DataFrame({"n": [n]})
-
-        rows = cand.groupBy("salt").applyInPandas(count_slice, "n long").collect()
+        rows = cand.groupBy("salt").applyInArrow(count_slice, "n long").collect()
         return int(sum(r["n"] for r in rows))

@@ -1,38 +1,43 @@
-"""E5 — block-max TAAT top-k kernel (numpy, prune-only ⇒ rank-identical).
+"""E5 — block-max WAND / MaxScore top-k kernel (numpy, prune-only ⇒ exact).
 
 The reference's ranked retrieval is Lucene's BooleanQuery + BM25 TopDocs
 collector with block-max WAND skipping (Lucene 8 BMW / the public block-max
-WAND literature). This kernel is the vectorized term-at-a-time variant:
+WAND literature). :func:`topk_rows` is the vectorized term-at-a-time
+variant, and the ONLY pruning kernel — every execution shape runs it:
 
-- terms are processed rare→hot (df ascending); accumulators are sorted
-  (doc_id, partial score) arrays merged with ``searchsorted``/``reduceat`` —
-  no Python per-posting loops;
-- before decoding a block of term *t* we check the certificate::
+- ``search_local``: every (term, salt) row of the query on the driver, one
+  shared θ across salts;
+- ``search`` (with or without filters): one salt slice's rows per
+  ``applyInArrow`` group — slices are disjoint doc ranges, so top-k is
+  embarrassingly parallel and Spark merges len(slices)·k candidate rows.
+
+Rows reach it through the one Arrow adapter (``arrow_rows.rows_from_arrow``)
+on both sides. Terms are processed rare→hot; before decoding a block of
+term *t* the kernel checks the certificate::
 
       max(best accumulated score inside the block's doc range, 0)
         + block_upper_bound(t)                      ← from block_max_tf/min_dl
         + Σ upper bounds of not-yet-processed terms
       < θ   (θ = current k-th best accumulated score)
 
-  Any doc in a skipped block finishes strictly below θ, and θ can only grow
-  toward the true k-th final score — so skipping never changes the top-k set,
-  scores, or tie-breaks (exactness guard; pinned by tests/test_index_engine.py
-  ``test_wand_rank_identical`` / ``test_wand_equals_exhaustive`` comparing
-  against exhaustive scoring on every reference query).
+Any doc in a skipped block finishes strictly below θ, and θ can only grow
+toward the true k-th final score — so skipping never changes the top-k set,
+scores, or tie-breaks. :func:`topk_slice_batch` is the deliberately
+exhaustive many-queries kernel and doubles as the exhaustive reference
+(tests compare WAND ``search`` against ``search_batch`` with exact ``==``).
 
-The kernel runs per salt-slice (a doc_id range of the whole index) inside
-``applyInPandas``; slices are independent, so top-k is embarrassingly
-parallel and the driver only merges len(slices)·k candidate rows.
+One BM25 arithmetic and one summation order everywhere: a posting scores
+``idf * _tfn(tf, dl, avgdl)`` and a doc's terms add from 0.0 in
+``(-idf, term)`` order (rare first; the conjunction kernels in boolean.py
+share both), so every path returns bit-identical floats.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from solrutils_spark.functions.analyzer import B, K1
-from solrutils_spark.index.codec import (BLOCK, decode_blocks,
-                                          decode_blocks_many, decode_run)
+from solrutils_spark.index.codec import BLOCK, decode_blocks_many, decode_run
 
 
 # test-visible instrumentation: how many times a kernel switched into
@@ -41,10 +46,30 @@ from solrutils_spark.index.codec import (BLOCK, decode_blocks,
 # exercises the lookup branch, not just that results stay identical.
 KERNEL_STATS = {"lookup_on": 0}
 
+_EMPTY = (np.empty(0, np.int64), np.empty(0, np.float64))
 
-def _tf_norm_bound(max_tf: np.ndarray, min_dl: np.ndarray, avgdl: float) -> np.ndarray:
-    mt = max_tf.astype(np.float64)
-    return mt / (mt + K1 * (1.0 - B + B * min_dl.astype(np.float64) / avgdl))
+
+def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """BM25 tf-normalization; with (block_max_tf, block_min_dl) it is the
+    block's upper bound."""
+    tfv = tf.astype(np.float64)
+    return tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+
+
+def _member(d: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Mask of the entries of ``d`` present in sorted ``sorted_ids``."""
+    if sorted_ids.size == 0:
+        return np.zeros(d.size, dtype=bool)
+    pos = np.minimum(np.searchsorted(sorted_ids, d), sorted_ids.size - 1)
+    return sorted_ids[pos] == d
+
+
+def _prev_lasts(row) -> np.ndarray:
+    """Per block, the last doc id before it (block 0: ``first_doc - 1``)."""
+    out = np.empty(len(row.block_last), dtype=np.int64)
+    out[0] = int(row.first_doc) - 1
+    out[1:] = row.block_last[:-1]
+    return out
 
 
 def _range_max(values: np.ndarray, left: np.ndarray, right: np.ndarray) -> np.ndarray:
@@ -93,49 +118,55 @@ def _dense_topk(scores: np.ndarray, k: int) -> np.ndarray:
 
 
 def topk_rows(
-    term_rows,
+    rows,
     idf_by_term: dict[str, float],
     avgdl: float,
     k: int,
-    n_docs: int | None = None,
+    allowed_docs: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Serving-path variant: process ALL (term, salt) rows with one shared θ.
+    """Block-max WAND + MaxScore top-k over posting rows → (doc_ids, scores),
+    tie-broken (score desc, doc_id asc).
 
-    A doc appears in exactly one salt per term (disjoint doc ranges), so the
-    skip certificate from :func:`topk_slice` holds row-by-row with a GLOBAL
-    accumulator: acc_max_in_block + block_ub + Σ ub(unprocessed terms) < θ.
-    Sharing θ across salts prunes strictly more than per-slice kernels, and
-    there is no per-slice python/pandas overhead. Rank-identical (prune-only).
+    ``rows``: ``PostingRow`` records — any number of (term, salt) rows. A doc
+    appears in exactly one salt per term (disjoint doc ranges), so the skip
+    certificate holds row-by-row with one accumulator and one θ: the driver
+    passes every salt (sharing θ prunes strictly more than per-slice
+    kernels), an executor passes its slice.
 
-    ``term_rows``: a pandas DataFrame OR a plain list of row records exposing
-    the posting columns as attributes (the serving path passes records built
-    straight from the pyarrow table — round-2 profiling showed the pandas
-    conversion + ``.iloc``/``itertuples`` traversal was ~45% of serving
-    latency, more than the decode kernel itself).
+    ``allowed_docs``: optional sorted int64 array — P2 filter semantics
+    (restricts candidates, never contributes to score;
+    BulkUpdateHandler.java:59 ``setIsFilter(true)``). Pruning STAYS on:
+    decoded postings are intersected with ``allowed_docs`` before they reach
+    the accumulator, so θ is the k-th best score over allowed docs only,
+    while block upper bounds remain valid for any doc — the certificate is
+    unchanged and the result equals exhaustive scoring over the filtered
+    domain (pinned by test_index_engine.py::test_filtered_wand_prunes_exactly).
     """
-    if isinstance(term_rows, pd.DataFrame):
-        rows = list(term_rows.itertuples(index=False))
-    else:
-        rows = list(term_rows)
-    rows.sort(key=lambda r: (r.term, r.salt))
+    rows = sorted(rows, key=lambda r: (r.term, r.salt))
+    if not rows:
+        return _EMPTY
     # per-term max upper bound across its rows (sound: a doc sees one row/term)
     term_ub: dict[str, float] = {}
-    df_by_term: dict[str, int] = {}
     rows_by_term: dict[str, list] = {}
     for row in rows:
-        idf = idf_by_term[row.term]
-        bb = _tf_norm_bound(np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl)
-        ub = float(idf * bb.max()) if len(bb) else 0.0
+        bb = _tfn(row.block_max_tf, row.block_min_dl, avgdl)
+        ub = float(idf_by_term[row.term] * bb.max()) if len(bb) else 0.0
         term_ub[row.term] = max(term_ub.get(row.term, 0.0), ub)
-        # processing order: terms by df asc (global df = sum df_part)
-        df_by_term[row.term] = df_by_term.get(row.term, 0) + int(row.df_part)
         rows_by_term.setdefault(row.term, []).append(row)
-    terms_sorted = sorted(term_ub, key=lambda t: (df_by_term[t], t))
+    terms_sorted = sorted(term_ub, key=lambda t: (-idf_by_term[t], t))
     remaining_after = {}
     acc_ub = 0.0
     for t in reversed(terms_sorted):
         remaining_after[t] = acc_ub
         acc_ub += term_ub[t]
+
+    def scored(parts, idf):
+        """Decode ``parts`` → allowed (doc_ids, idf·tf_norm)."""
+        d, tf, dl = decode_blocks_many(parts)
+        if allowed_docs is not None:
+            ok = _member(d, allowed_docs)
+            d, tf, dl = d[ok], tf[ok], dl[ok]
+        return d, idf * _tfn(tf, dl, avgdl)
 
     if len(terms_sorted) == 1:
         # single-term fast path: a doc's final score is exactly idf·tf_norm,
@@ -148,17 +179,9 @@ def topk_rows(
         blocks = []  # (bound, row_idx, block_idx)
         row_data = []
         for ri, row in enumerate(rows_by_term[t]):
-            block_ub = idf * _tf_norm_bound(
-                np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
-            )
-            block_last = np.asarray(row.block_last, dtype=np.int64)
-            block_offset = np.asarray(row.block_offset, dtype=np.int32)
-            prev_lasts = np.empty(len(block_offset), dtype=np.int64)
-            prev_lasts[0] = int(row.first_doc) - 1
-            prev_lasts[1:] = block_last[:-1]
+            block_ub = idf * _tfn(row.block_max_tf, row.block_min_dl, avgdl)
             row_data.append(
-                (np.frombuffer(row.payload, dtype=np.uint8), int(row.df_part),
-                 block_offset, prev_lasts)
+                (row.payload, int(row.df_part), row.block_offset, _prev_lasts(row))
             )
             for bi, ub in enumerate(block_ub):
                 blocks.append((float(ub), ri, bi))
@@ -172,19 +195,16 @@ def topk_rows(
         if not spiky:
             # flat list: bulk-decode EVERY row in one call (contiguous-run
             # fast path inside decode_blocks_many) + one global selection
-            docs1, tf1, dl1 = decode_blocks_many([
+            docs1, scores1 = scored([
                 (payload, n, block_offset, np.arange(len(block_offset)), prev_lasts)
                 for payload, n, block_offset, prev_lasts in row_data
-            ])
-            tfv = tf1.astype(np.float64)
-            scores1 = idf * tfv / (tfv + K1 * (1.0 - B + B * dl1.astype(np.float64) / avgdl))
+            ], idf)
             sel = np.lexsort((docs1, -scores1))[: min(k, docs1.size)]
             return docs1[sel], scores1[sel]
         # chunked descending-bound scan with a running top-k buffer:
         # merges are O(k + chunk) — never O(all decoded)
         CHUNK = 256
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
+        top_d, top_s = _EMPTY
         theta1 = -np.inf
         for c0 in range(0, len(blocks), CHUNK):
             chunk = blocks[c0 : c0 + CHUNK]
@@ -194,13 +214,10 @@ def topk_rows(
             by_row: dict[int, list[int]] = {}
             for _ub, ri, bi in chunk:
                 by_row.setdefault(ri, []).append(bi)
-            d, tf, dl = decode_blocks_many([
-                (row_data[ri][0], row_data[ri][1], row_data[ri][2],
-                 np.unique(np.asarray(bis)), row_data[ri][3])
+            d, cs = scored([
+                (*row_data[ri][:3], np.unique(np.asarray(bis)), row_data[ri][3])
                 for ri, bis in by_row.items()
-            ])
-            tfv = tf.astype(np.float64)
-            cs = idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+            ], idf)
             md = np.concatenate([top_d, d])
             ms = np.concatenate([top_s, cs])
             sel = np.lexsort((md, -ms))[: min(k, md.size)]
@@ -210,12 +227,13 @@ def topk_rows(
         return top_d, top_s
 
     # DENSE accumulator (round 4): doc ids are dense by construction, so a
-    # per-query float64 array indexed by doc_id replaces the per-term
+    # float64 array indexed by (doc_id - base) replaces the per-term
     # argsort-mergesort/add.reduceat merge (profiled ~35% of serving p50 at
-    # 1M docs). Per term: scores[d] += idf·tf_norm — fancy-index += is exact
-    # because a doc appears at most once per term; contributions still add
-    # in the SAME term order (df asc, term asc), so floating-point results
-    # are bit-identical to the sorted-merge accumulator it replaces. The
+    # 1M docs). It spans the rows' own doc range (min first_doc .. max
+    # block_last) — one salt slice on an executor, never the whole id space
+    # unless the query's terms span it. Per term: scores[d] += idf·tf_norm —
+    # fancy-index += is exact because a doc appears at most once per term;
+    # contributions add in the SAME term order as every other kernel. The
     # block certificate becomes maximum.reduceat over the dense array's
     # block ranges (zeros ≡ "no accumulated score", same semantics).
     #
@@ -231,17 +249,11 @@ def topk_rows(
     # fuzz suites). This buys most of what impact-ordered postings would,
     # without re-encoding the doc-ordered delta layout or perturbing float
     # summation order.
-    if n_docs is None:  # derive the id space from the rows' last blocks
-        n_docs = 1 + max(
-            int(np.asarray(row.block_last)[-1])
-            for rows in rows_by_term.values() for row in rows
-        )
-    scores = np.zeros(int(n_docs), dtype=np.float64)
+    base = min(int(r.first_doc) for r in rows)
+    scores = np.zeros(max(int(r.block_last[-1]) for r in rows) - base + 1)
     theta = -np.inf
-    # sorted unique touched doc ids: θ refresh is O(|touched|) over
-    # scores[touched] (the old scores[scores > 0] pass scanned the whole
-    # n_docs array once per term — ADVICE round-4), and lookup mode needs
-    # the id list anyway
+    # sorted unique touched LOCAL (base-shifted) doc ids: θ refresh is
+    # O(|touched|) over scores[touched], and lookup mode needs the id list
     touched = np.empty(0, dtype=np.int64)
     lookup = False
 
@@ -259,49 +271,33 @@ def topk_rows(
         # (amortizes the decoder's per-call fixed costs across the salts)
         parts = []
         for row in rows_by_term[t]:
-            payload = np.frombuffer(row.payload, dtype=np.uint8)
-            block_offset = np.asarray(row.block_offset, dtype=np.int32)
-            block_last = np.asarray(row.block_last, dtype=np.int64)
-            n = int(row.df_part)
-            n_blocks = len(block_offset)
-            prev_lasts = np.empty(n_blocks, dtype=np.int64)
-            prev_lasts[0] = int(row.first_doc) - 1
-            prev_lasts[1:] = block_last[:-1]
-
+            prev_lasts = _prev_lasts(row)
+            lo_doc, hi_doc = prev_lasts + 1 - base, row.block_last - base
             if np.isfinite(theta):
-                block_ub = idf * _tf_norm_bound(
-                    np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
-                )
-                max_acc = _range_max(scores, prev_lasts + 1, block_last + 1)
+                block_ub = idf * _tfn(row.block_max_tf, row.block_min_dl, avgdl)
+                max_acc = _range_max(scores, lo_doc, hi_doc + 1)
                 keep = max_acc + block_ub + rem >= theta
             else:
-                keep = np.ones(n_blocks, dtype=bool)
+                keep = np.ones(len(prev_lasts), dtype=bool)
             if lookup:
                 # only blocks holding ≥1 touched doc can contribute
-                lo = np.searchsorted(touched, prev_lasts + 1, side="left")
-                hi = np.searchsorted(touched, block_last, side="right")
+                lo = np.searchsorted(touched, lo_doc, side="left")
+                hi = np.searchsorted(touched, hi_doc, side="right")
                 keep &= hi > lo
-
             kept = np.flatnonzero(keep)
-            if kept.size == 0:
-                continue
-            parts.append((payload, n, block_offset, kept, prev_lasts))
+            if kept.size:
+                parts.append((row.payload, int(row.df_part), row.block_offset,
+                              kept, prev_lasts))
         if parts:
-            d, tf, dl = decode_blocks_many(parts)
-            tfv = tf.astype(np.float64)
-            nc = idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+            d, nc = scored(parts, idf)
+            d = d - base
             if lookup:
-                pos = np.searchsorted(touched, d)
-                pos = np.minimum(pos, touched.size - 1)
-                ok = touched[pos] == d
-                d, nc = d[ok], nc[ok]
-                if d.size == 0:
-                    continue
-                scores[d] += nc
+                ok = _member(d, touched)
+                scores[d[ok]] += nc[ok]
             else:
                 scores[d] += nc  # unique indices within a term: exact
-                # d is globally ascending (salt rows ascend, blocks ascend)
-                # and unique within the term — one merge keeps `touched`
+                # d is ascending (salt rows ascend, blocks ascend) and
+                # unique within the term — one merge keeps `touched`
                 # sorted-unique
                 touched = d if touched.size == 0 else np.union1d(touched, d)
         if touched.size >= k:
@@ -309,11 +305,11 @@ def topk_rows(
             theta = np.partition(tv, tv.size - k)[tv.size - k]
 
     sel = _dense_topk(scores, k)
-    return sel, scores[sel]
+    return sel + base, scores[sel]
 
 
 def topk_slice_batch(
-    term_rows: pd.DataFrame,
+    rows,
     plans: list[tuple[int, dict[str, float], int]],
     avgdl: float,
     allowed_docs: np.ndarray | None = None,
@@ -323,202 +319,62 @@ def topk_slice_batch(
     of the batch decodes once instead of once per query — decode is the batch
     path's dominant cost.
 
-    Accumulation is exhaustive with the SAME term order (df_part asc, term
-    asc) and the SAME stable-merge arithmetic as :func:`topk_slice`, and WAND
-    is prune-exact, so results are rank- and score-identical to calling
-    ``topk_slice`` per query (pinned by test_search_batch_rank_identical).
-    Returns [(query_id, doc_ids, scores)] for queries with ≥1 live term.
+    ``rows``: one salt slice's ``PostingRow`` records (one row per term).
+    Accumulation is EXHAUSTIVE with the same BM25 arithmetic and the same
+    ``(-idf, term)`` summation order as :func:`topk_rows`, and WAND is
+    prune-exact, so per-query results are score-identical (exact ``==``) to
+    :func:`topk_rows` on the same slice — this kernel is the exhaustive
+    reference the WAND tests compare against. Returns
+    [(query_id, doc_ids, scores)] for queries with ≥1 live term.
 
-    ``allowed_docs``: optional sorted int64 array — P2 filter semantics shared
-    by the WHOLE batch (restricts candidates, never contributes to score).
-    The intersection happens ONCE per decoded term, not per query — the
-    filtered offline-eval shape. Rank-identical to per-query
-    ``topk_slice(..., allowed_docs=...)`` (pinned by
+    ``allowed_docs``: optional sorted int64 array — P2 filter semantics
+    shared by the WHOLE batch (restricts candidates, never contributes to
+    score). The intersection happens ONCE per decoded term, not per query —
+    the filtered offline-eval shape (pinned by
     test_search_batch_filtered_rank_identical).
     """
     decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    dfp: dict[str, int] = {}
-    for row in term_rows.itertuples(index=False):
-        payload = np.frombuffer(row.payload, dtype=np.uint8)
-        block_offset = np.asarray(row.block_offset, dtype=np.int32)
+    for row in rows:
         d, tf, dl = decode_run(
-            payload, int(row.df_part), block_offset, 0, len(block_offset), 0
+            row.payload, int(row.df_part), row.block_offset, 0,
+            len(row.block_offset), 0,
         )
         if allowed_docs is not None:
-            pos = np.searchsorted(allowed_docs, d)
-            ok = (pos < allowed_docs.size) & (
-                allowed_docs[np.minimum(pos, max(allowed_docs.size - 1, 0))] == d
-            ) if allowed_docs.size else np.zeros(d.size, dtype=bool)
+            ok = _member(d, allowed_docs)
             d, tf, dl = d[ok], tf[ok], dl[ok]
-        tfv = tf.astype(np.float64)
-        tfn = tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-        decoded[row.term] = (d, tfn)
-        dfp[row.term] = int(row.df_part)
+        decoded[row.term] = (d, _tfn(tf, dl, avgdl))
 
     # dense per-query accumulator over the slice's doc range (round 4): a
     # base-shifted float64 array replaces the per-term argsort-mergesort
-    # merge; adds land in the same term order → identical floats. The span
-    # is one salt slice (~n_docs/num_salts), so the array is small and the
-    # per-query alloc trivial next to the shared decode above.
-    base = hi = None
-    for t, (d, tfn) in decoded.items():
-        if d.size:
-            base = int(d[0]) if base is None else min(base, int(d[0]))
-            hi = int(d[-1]) if hi is None else max(hi, int(d[-1]))
+    # merge. The span is one salt slice (~n_docs/num_salts), so the array is
+    # small and the per-query alloc trivial next to the shared decode above.
+    live = [d for d, _ in decoded.values() if d.size]
     out = []
-    if base is None:
+    if not live:
         return out
-    span = hi - base + 1
+    base = min(int(d[0]) for d in live)
+    span = max(int(d[-1]) for d in live) - base + 1
     # pre-shift doc ids once per term (shared across the whole batch)
-    dloc_by_term = {t: d - base for t, (d, tfn) in decoded.items() if d.size}
+    dloc_by_term = {t: d - base for t, (d, _) in decoded.items() if d.size}
     for qid, idf_by_term, k in plans:
         terms = sorted(
-            (t for t in idf_by_term if t in dloc_by_term), key=lambda t: (dfp[t], t)
+            (t for t in idf_by_term if t in dloc_by_term),
+            key=lambda t: (-idf_by_term[t], t),
         )
         if not terms:
             continue
         # Deliberately EXHAUSTIVE — no MaxScore here. The decode above is
         # shared across the batch, so the per-query marginal cost is just
         # the vectorized scatter-add (~1-2 ops/posting, memory-bound). A
-        # round-5 experiment added the same θ-cutoff the serving kernels
-        # use; at 1M docs (15.6k-doc slices) the per-term O(span)
+        # round-5 experiment added the same θ-cutoff the serving kernel
+        # uses; at 1M docs (15.6k-doc slices) the per-term O(span)
         # ``scores > 0`` θ refresh DOUBLED the measured marginal cost
         # (5.84 → 12.5 ms/query, BENCH/SERVING_PROBE_run3 vs the r5 rerun)
         # because there is no decode left to skip — MaxScore only pays when
-        # it gates decode (topk_rows / topk_slice, where it stays).
+        # it gates decode (topk_rows, where it stays).
         scores = np.zeros(span, dtype=np.float64)
-        touched = 0
         for t in terms:
-            dloc = dloc_by_term[t]
-            _, tfn = decoded[t]
-            scores[dloc] += idf_by_term[t] * tfn  # unique per term: exact
-            touched += dloc.size
-        if touched == 0:
-            continue
+            scores[dloc_by_term[t]] += idf_by_term[t] * decoded[t][1]  # unique per term: exact
         sel = _dense_topk(scores, k)
         out.append((qid, sel + base, scores[sel]))
     return out
-
-
-def topk_slice(
-    term_rows: pd.DataFrame,
-    idf_by_term: dict[str, float],
-    avgdl: float,
-    k: int,
-    use_wand: bool = True,
-    allowed_docs: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Score one salt-slice. ``term_rows``: one row per (term) with encoded
-    postings (this slice's doc range). Returns (doc_ids, scores) of the
-    slice-local top-k, tie-broken (score desc, doc_id asc).
-
-    ``allowed_docs``: optional sorted int64 array — P2 filter semantics
-    (restricts candidates, never contributes to score;
-    BulkUpdateHandler.java:59 ``setIsFilter(true)``). WAND pruning STAYS
-    enabled: decoded postings are intersected with ``allowed_docs`` before
-    merging into the accumulator, so θ is the k-th best score over allowed
-    docs only, while block upper bounds remain valid upper bounds for any
-    doc (allowed included) — the skip certificate is unchanged and the
-    result is rank-identical to exhaustive-over-the-filtered-domain
-    (pinned by test_index_engine.py::test_filtered_wand_prunes_exactly).
-    """
-    order = np.lexsort(
-        (term_rows["term"].to_numpy(), term_rows["df_part"].to_numpy())
-    )  # df asc, term asc tie-break — deterministic processing order
-    rows = term_rows.iloc[order]
-
-    ubs = []
-    for row in rows.itertuples(index=False):
-        idf = idf_by_term[row.term]
-        bb = _tf_norm_bound(
-            np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
-        )
-        ubs.append(idf * bb.max() if len(bb) else 0.0)
-    ubs = np.asarray(ubs, dtype=np.float64)
-    remaining_after = np.concatenate([np.cumsum(ubs[::-1])[::-1][1:], [0.0]]) if len(ubs) else ubs
-
-    # DENSE accumulator over the slice's doc range (round 4, same rationale
-    # as topk_rows): base-shifted float64 array replaces the per-term
-    # argsort-mergesort merge; adds land in the same term order → floats
-    # identical to the sorted-merge accumulator
-    base = hi = None
-    for row in rows.itertuples(index=False):
-        bl = row.block_last
-        if len(bl):
-            fd = int(row.first_doc)
-            last = int(bl[-1] if isinstance(bl, np.ndarray) else bl[len(bl) - 1])
-            base = fd if base is None else min(base, fd)
-            hi = last if hi is None else max(hi, last)
-    if base is None:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    scores = np.zeros(hi - base + 1, dtype=np.float64)
-    theta = -np.inf
-    touched = np.empty(0, dtype=np.int64)  # sorted unique LOCAL (base-shifted)
-    lookup = False
-
-    for t_idx, row in enumerate(rows.itertuples(index=False)):
-        idf = idf_by_term[row.term]
-        payload = np.frombuffer(row.payload, dtype=np.uint8)
-        block_offset = np.asarray(row.block_offset, dtype=np.int32)
-        block_last = np.asarray(row.block_last, dtype=np.int64)
-        n = int(row.df_part)
-        n_blocks = len(block_offset)
-        prev_lasts = np.empty(n_blocks, dtype=np.int64)
-        prev_lasts[0] = int(row.first_doc) - 1
-        prev_lasts[1:] = block_last[:-1]
-
-        if use_wand and not lookup and np.isfinite(theta) and theta > ubs[t_idx] + remaining_after[t_idx]:
-            # MaxScore essential-terms cutoff (see topk_rows): untouched docs
-            # are provably sub-θ from here on — decode only blocks holding a
-            # touched doc, add only to touched docs. θ only grows and the
-            # remaining-ub sum only shrinks, so lookup stays on.
-            lookup = True
-            KERNEL_STATS["lookup_on"] += 1
-
-        if use_wand and np.isfinite(theta):
-            block_ub = idf * _tf_norm_bound(
-                np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
-            )
-            # range-max of acc inside each block's (prev_last, last] doc range
-            max_acc = _range_max(
-                scores, np.maximum(prev_lasts + 1 - base, 0), block_last + 1 - base
-            )
-            keep = max_acc + block_ub + remaining_after[t_idx] >= theta
-        else:
-            keep = np.ones(n_blocks, dtype=bool)
-        if lookup:
-            lo = np.searchsorted(touched, prev_lasts + 1 - base, side="left")
-            hi_t = np.searchsorted(touched, block_last - base, side="right")
-            keep &= hi_t > lo
-
-        kept = np.flatnonzero(keep)
-        if kept.size == 0:
-            continue
-        nd, tf, dl = decode_blocks(payload, n, block_offset, kept, prev_lasts)
-        tfv = tf.astype(np.float64)
-        nc = idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-        if allowed_docs is not None:
-            pos = np.searchsorted(allowed_docs, nd)
-            ok = (pos < allowed_docs.size) & (allowed_docs[np.minimum(pos, allowed_docs.size - 1)] == nd)
-            nd, nc = nd[ok], nc[ok]
-            if nd.size == 0:
-                continue
-
-        ndl = nd - base
-        if lookup:
-            pos = np.searchsorted(touched, ndl)
-            pos = np.minimum(pos, touched.size - 1)
-            ok = touched[pos] == ndl
-            ndl, nc = ndl[ok], nc[ok]
-            if ndl.size == 0:
-                continue
-            scores[ndl] += nc
-        else:
-            scores[ndl] += nc  # unique indices within a term: exact
-            touched = ndl if touched.size == 0 else np.union1d(touched, ndl)
-        if touched.size >= k:
-            tv = scores[touched]
-            theta = np.partition(tv, tv.size - k)[tv.size - k]
-
-    sel = _dense_topk(scores, k)
-    return sel + base, scores[sel]

@@ -83,12 +83,23 @@ def test_range_max_segment_past_end_is_zero():
     assert out.tolist() == [5.0, 0.0, 0.0, 5.0]
 
 
+def _batch_ranked(reader, qs, **kw):
+    """search_batch (the exhaustive kernel) → {query_id: [(doc_id, score)]}."""
+    by_qid: dict = {}
+    for r in reader.search_batch(qs, **kw).collect():
+        by_qid.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    return {qid: [(d, s) for _, d, s in sorted(v)] for qid, v in by_qid.items()}
+
+
 def test_wand_equals_exhaustive(reader):
-    """Pruning must never change results — run both kernel modes."""
-    for qtext in ["posting segment lucene", "hotTermZipfianStorm posting", "delta encode posting list"]:
-        w = [(r["doc_id"], r["score"]) for r in reader.search(qtext, 20, use_wand=True).collect()]
-        e = [(r["doc_id"], r["score"]) for r in reader.search(qtext, 20, use_wand=False).collect()]
-        assert w == e
+    """Pruning must never change results: WAND ``search`` equals the
+    exhaustive batch kernel exactly (ids, order and float scores)."""
+    qs = [(i, q, 20) for i, q in enumerate(
+        ["posting segment lucene", "hotTermZipfianStorm posting", "delta encode posting list"])]
+    exhaustive = _batch_ranked(reader, qs)
+    for qid, qtext, k in qs:
+        w = [(r["doc_id"], r["score"]) for r in reader.search(qtext, k).collect()]
+        assert w and w == exhaustive[qid]
 
 
 def test_filtered_search_restricts_but_never_scores(reader, oracle):
@@ -124,17 +135,17 @@ def test_filter_df_distributed_equals_driver_list(spark, reader, oracle):
 
 
 def test_filtered_wand_prunes_exactly(spark, reader):
-    """WAND stays ON under filters (θ over allowed docs only) and must be
-    rank-identical to the exhaustive kernel under the same filter."""
+    """WAND stays ON under filters (θ over allowed docs only) and must equal
+    the exhaustive batch kernel under the same filter exactly."""
     allowed = [d for d in range(N_DOCS) if d % 2 == 0]
     fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long")
-    for qtext in ["posting segment lucene", "hotTermZipfianStorm posting",
-                  "delta encode posting list"]:
+    qs = [(i, q, 20) for i, q in enumerate(
+        ["posting segment lucene", "hotTermZipfianStorm posting", "delta encode posting list"])]
+    exhaustive = _batch_ranked(reader, qs, filter_df=fdf)
+    for qid, qtext, k in qs:
         w = [(r["doc_id"], r["score"])
-             for r in reader.search(qtext, 20, filter_df=fdf, use_wand=True).collect()]
-        e = [(r["doc_id"], r["score"])
-             for r in reader.search(qtext, 20, filter_df=fdf, use_wand=False).collect()]
-        assert w == e
+             for r in reader.search(qtext, k, filter_df=fdf).collect()]
+        assert w and w == exhaustive[qid]
         assert all(d % 2 == 0 for d, _ in w)
 
 
@@ -170,7 +181,7 @@ def test_cache_for_serving_rank_identical(spark, index_dir, oracle):
         # Exchange (the only exchange is the one-time REPARTITION_BY_COL
         # inside the InMemoryRelation's cached plan)
         assert "InMemoryTableScan" in plan
-        kernel_to_cache = plan.split("FlatMapGroupsInPandas", 1)[1].split(
+        kernel_to_cache = plan.split("FlatMapGroupsInArrow", 1)[1].split(
             "InMemoryTableScan", 1
         )[0]
         assert "Exchange" not in kernel_to_cache
@@ -450,12 +461,14 @@ def test_maxscore_lookup_mode_engages_and_stays_exact(spark, tmp_path):
     terms = query_terms(q)
     dfs = reader.term_dfs(terms)
     plans = [(0, {t: reader.idf(dfs[t]) for t in terms if dfs.get(t)}, 5)]
-    cand = reader._candidate_rows(terms).toPandas()
+    by_salt: dict = {}
+    for row in reader._local_rows(terms):
+        by_salt.setdefault(row.salt, []).append(row)
     before = wand.KERNEL_STATS["lookup_on"]
     merged = []
-    for _salt, slice_pdf in cand.groupby("salt"):
+    for slice_rows in by_salt.values():
         for _qid, d, s in topk_slice_batch(
-            slice_pdf, plans, float(reader.stats["avgdl"])
+            slice_rows, plans, float(reader.stats["avgdl"])
         ):
             merged.extend(zip(d.tolist(), s.tolist()))
     assert wand.KERNEL_STATS["lookup_on"] == before, "batch kernel must stay exhaustive"
@@ -544,4 +557,60 @@ def test_aligned_filter_copartitions_and_is_rank_identical(spark, index_dir):
         for f in [fdf, fdf_ok, *frames]:
             f.unpersist()
     finally:
+        reader.index.unpersist()
+
+
+def test_rows_from_arrow_sliced_table_matches_unsliced(index_dir):
+    """The one Arrow adapter reads a sliced table (non-zero ListArray
+    offset, as ``combine_chunks`` leaves a single sliced chunk) through the
+    same zero-copy views: every row equals the matching unsliced row,
+    including the positional sidecar columns."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    from solrutils_spark.query.arrow_rows import PostingRow, rows_from_arrow
+
+    tbl = ds.dataset(str(Path(index_dir) / "index")).to_table().combine_chunks()
+    assert "pos_payload" in tbl.column_names
+    n = tbl.num_rows - 2
+    sliced = tbl.slice(1, n)
+    assert sliced.combine_chunks().column("block_offset").chunk(0).offset == 1
+    full = rows_from_arrow(tbl)[1 : 1 + n]
+    part = rows_from_arrow(sliced)
+    assert len(part) == n
+    for a, b in zip(full, part):
+        for attr in PostingRow.__slots__:
+            va, vb = getattr(a, attr), getattr(b, attr)
+            if isinstance(va, np.ndarray):
+                assert va.dtype == vb.dtype and np.array_equal(va, vb), attr
+            else:
+                assert va == vb, attr
+
+
+def test_cache_for_serving_reconfigure_drops_aligned_filters(spark, index_dir):
+    """Re-calling cache_for_serving with a new partition count clears the
+    filter-alignment cache: the next filtered search re-aligns the filter
+    at the NEW count, and the frame aligned at the old count is unpersisted."""
+    reader = IndexReader(spark, index_dir).cache_for_serving(4)
+    try:
+        allowed = [d for d in range(N_DOCS) if d % 3 == 0]
+        fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long").repartition(3)
+        qtext = "posting segment lucene"
+        first = [(r["doc_id"], r["score"])
+                 for r in reader.search(qtext, 10, filter_df=fdf).collect()]
+        (_src, old, owned), = reader._filter_align_cache.values()
+        assert owned and old.rdd.getNumPartitions() == 4 and old.is_cached
+        reader.cache_for_serving(2)
+        again = [(r["doc_id"], r["score"])
+                 for r in reader.search(qtext, 10, filter_df=fdf).collect()]
+        assert again == first
+        (_src, aligned, owned), = reader._filter_align_cache.values()
+        assert owned and aligned is not old
+        assert aligned.rdd.getNumPartitions() == 2
+        assert not old.is_cached
+        assert not old.storageLevel.useMemory and not old.storageLevel.useDisk
+    finally:
+        for _src, aligned, owned in reader._filter_align_cache.values():
+            if owned:
+                aligned.unpersist()
         reader.index.unpersist()

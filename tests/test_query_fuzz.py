@@ -9,9 +9,13 @@ execution paths:
 
 - every draw through ``search_local`` (pyarrow serving path, WAND kernel)
 - every draw through ONE distributed ``search_batch`` job (decode-once
-  batch kernel)
-- a seeded subsample through distributed ``search`` with use_wand=True AND
-  False (WAND == exhaustive per draw)
+  exhaustive batch kernel)
+- a seeded subsample through distributed ``search`` (WAND) compared with
+  the exhaustive batch kernel by exact ``==``
+
+and, across paths, exact float equality: ``search_local``, ``search`` and
+``search_batch`` share one BM25 arithmetic and one summation order, so
+their scores must be bit-identical, not merely within atol.
 
 One 300-doc index build, one batch job, driver-speed point queries — the
 sweep stays CI-green while covering ~250 adversarial query shapes.
@@ -106,28 +110,49 @@ def test_fuzz_serving_path(reader, oracle):
             f"fuzz q{qid} {qtext!r} k={k}")
 
 
-def test_fuzz_batch_path(reader, oracle):
+@pytest.fixture(scope="module")
+def batch(reader, oracle) -> dict[int, list]:
+    """Every draw through ONE distributed batch job → {qid: [(doc, score)]}."""
+    by_qid: dict[int, list] = {}
+    for r in reader.search_batch(_draws(oracle)).collect():
+        by_qid.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    return {qid: [(d, s) for _, d, s in sorted(v)] for qid, v in by_qid.items()}
+
+
+def _search(reader, qtext, k):
+    return [(r["doc_id"], r["score"]) for r in reader.search(qtext, k).collect()]
+
+
+def test_fuzz_batch_path(oracle, batch):
     """Every draw through ONE distributed batch job == oracle (includes the
     empty-result draws: absent query_ids must simply be absent)."""
-    qs = _draws(oracle)
-    by_qid: dict[int, list] = {}
-    for r in reader.search_batch(qs).collect():
-        by_qid.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
-    for qid, qtext, k in qs:
-        expected = oracle.search(qtext, k)
-        got = [(d, s) for _, d, s in sorted(by_qid.get(qid, []))]
-        _assert_rank_identical(got, expected, f"batch q{qid} {qtext!r} k={k}")
+    for qid, qtext, k in _draws(oracle):
+        _assert_rank_identical(batch.get(qid, []), oracle.search(qtext, k),
+                               f"batch q{qid} {qtext!r} k={k}")
 
 
-def test_fuzz_distributed_wand_equals_exhaustive(reader, oracle):
-    """Seeded subsample: distributed search with WAND on and off — both ==
-    oracle, hence WAND pruning is rank-exact on the drawn shapes."""
+def test_fuzz_distributed_wand_equals_exhaustive(reader, oracle, batch):
+    """Seeded subsample: distributed WAND search == oracle, and == the
+    exhaustive batch kernel exactly, hence WAND pruning is exact on the
+    drawn shapes."""
     rng = random.Random(SEED + 1)
     qs = [q for q in _draws(oracle) if q[1].strip()]
     for qid, qtext, k in rng.sample(qs, 6):
-        expected = oracle.search(qtext, k)
-        for use_wand in (True, False):
-            got = [(r["doc_id"], r["score"])
-                   for r in reader.search(qtext, k, use_wand=use_wand).collect()]
-            _assert_rank_identical(
-                got, expected, f"dist q{qid} {qtext!r} k={k} wand={use_wand}")
+        got = _search(reader, qtext, k)
+        _assert_rank_identical(got, oracle.search(qtext, k),
+                               f"dist q{qid} {qtext!r} k={k}")
+        assert got == batch.get(qid, []), f"dist q{qid} {qtext!r} k={k}"
+
+
+def test_fuzz_scores_bit_identical_across_paths(reader, oracle, batch):
+    """``search_local`` == ``search_batch`` on every draw and ``search`` ==
+    ``search_batch`` on a seeded 40-draw subsample, with exact ``==`` on
+    ids AND float scores (no atol): one arithmetic, one summation order."""
+    draws = _draws(oracle)
+    for qid, qtext, k in draws:
+        assert reader.search_local(qtext, k) == batch.get(qid, []), (
+            f"local q{qid} {qtext!r} k={k}")
+    rng = random.Random(SEED + 2)
+    for qid, qtext, k in rng.sample(draws, 40):
+        assert _search(reader, qtext, k) == batch.get(qid, []), (
+            f"dist q{qid} {qtext!r} k={k}")
