@@ -13,7 +13,7 @@ is warmed untimed first — the timed number tracks the engine, not JIT):
 - bm25_conj_batch     : ALL multi-term queries as conjunctions (q.op=AND)
                         in ONE job through the block-skipping intersection
                         kernel; driver-local p50 in extra.bm25_conj_p50_ms
-- phrase              : exact-phrase query (candidate-verify re-analysis)
+- phrase              : exact-phrase query (positional-sidecar kernel)
 - boolean_query       : parsed Lucene-syntax boolean (+must "phrase" -not)
 - bm25_topk           : exact-DataFrame BM25 entry (driver-gate twin)
 - facet_field / json_facet_nested / topn_events / sort_paging / semi_join /
@@ -163,7 +163,7 @@ def main() -> None:
         len(qset) / timings["bm25_filtered_batch"], 2)
 
     # 2b. boolean surface (round 5): conjunctive queries (block-skipping
-    # intersection kernel), an exact-phrase query (candidate-verify), and a
+    # intersection kernel), an exact-phrase query (positional sidecar), and a
     # parsed Lucene-syntax boolean — same index, same warmup methodology
     from solrutils_spark.functions.analyzer import analyze
     from solrutils_spark.query.qparser import execute_boolean

@@ -10,11 +10,10 @@ Two questions only a big index can answer:
    with `needed_block_runs` monkeypatched to return the full block range
    (decode-all control) vs the shipped skip path — identical results
    (asserted), different decode volume.
-2. **Is phrase candidate-verify bounded the way the design claims?** A
-   phrase whose rarest term is rare ⇒ few candidates re-analyzed; wall
-   should sit near the conj wall plus a small verify term, NOT near a
-   corpus re-analysis (which at 1M costs ~100 s, the index build's
-   tokenize phase).
+2. **Is the phrase kernel bounded the way the design claims?** A phrase
+   whose rarest term is rare ⇒ few conjunctive candidates whose positions
+   get decoded; wall should sit near the conj wall plus a small position
+   decode term, NOT near a corpus-sized pass.
 
 Method: build the 1M index once at local[8] (fixed geometry, byte-identical
 regardless of build parallelism), then one query JVM at local[8] runs warm
@@ -124,7 +123,7 @@ doc = reader.docs.filter("doc_id = %d" % int(row["doc_id"])).select(
 toks = analyze(doc)
 i = toks.index(RARE)
 phrase_q = " ".join(toks[i:i+2]) if i + 1 < len(toks) else " ".join(toks[i-1:i+1])
-n_cand = B.conj_matches(reader, sorted(set(phrase_q.split()))).count()
+n_cand = reader.search_conj(phrase_q, int(reader.stats["n_docs"])).count()
 reader.phrase_search(phrase_q, 10).count()  # warm
 ph_walls = []
 for rep in range(3):

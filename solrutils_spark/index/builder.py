@@ -13,7 +13,15 @@ Layout under ``out_dir``::
     segments/seg=<k>.parquet
     lineage/seg=<k>.json
     index/bucket=<b>/...    merged, salted, term-bucketed postings
-    stats.json              {n_docs, avgdl, total_tokens, num_buckets, num_salts}
+    termdf/bucket=<b>/...   term → global df sidecar
+    doclen/                 doc_id → doc_len sidecar
+    stats.json              {format_version, n_docs, avgdl, total_tokens,
+                             num_buckets, num_salts, segment_size,
+                             n_segments, salt_group}
+
+``format_version`` stamps the on-disk layout (Lucene's index format
+version): :func:`read_stats` refuses any other value instead of keeping a
+reader alive for layouts no current build writes.
 """
 
 from __future__ import annotations
@@ -34,6 +42,9 @@ from solrutils_spark.index.merge import (
     write_index,
 )
 from solrutils_spark.index.segments import build_segments, read_lineage, read_segments
+
+# Bump on any change to the on-disk layout; read_stats refuses other values.
+FORMAT_VERSION = 1
 
 
 def build_index(
@@ -115,6 +126,7 @@ def build_index(
     sc.setJobDescription(None)
 
     stats = {
+        "format_version": FORMAT_VERSION,
         "n_docs": n_docs,
         "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
         "total_tokens": total_tokens,
@@ -131,7 +143,17 @@ def build_index(
 
 
 def read_stats(out_dir: str) -> dict:
-    return json.loads((Path(out_dir) / "stats.json").read_text())
+    """stats.json of a built index; raises ``ValueError`` unless it was
+    written by a build of the current :data:`FORMAT_VERSION`."""
+    stats = json.loads((Path(out_dir) / "stats.json").read_text())
+    found = stats.get("format_version")
+    if found != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {out_dir} has format_version={found!r}, this reader "
+            f"needs format_version={FORMAT_VERSION}; rebuild it with "
+            "build_index(..., resume=False)"
+        )
+    return stats
 
 
 def read_docs(spark: SparkSession, out_dir: str, with_len: bool = True) -> DataFrame:
@@ -146,4 +168,7 @@ def read_docs(spark: SparkSession, out_dir: str, with_len: bool = True) -> DataF
     return docs
 
 
-__all__ = ["build_index", "read_stats", "read_docs", "read_index", "read_lineage"]
+__all__ = [
+    "FORMAT_VERSION", "build_index", "read_stats", "read_docs", "read_index",
+    "read_lineage",
+]

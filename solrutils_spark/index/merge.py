@@ -88,19 +88,10 @@ def _merge_bucket_salt(pdf: pd.DataFrame) -> pd.DataFrame:
     # concatenation of the segment rows in this same (term, first_doc) order;
     # only the (term, block) offsets need recomputing — a terminator scan,
     # no decode (codec.position_layout_from_bytes).
-    if "pos_payload" in pdf.columns:
-        pos_buf = np.frombuffer(
-            b"".join(bytes(p) for p in pdf["pos_payload"]), dtype=np.uint8
-        )
-        lay = position_layout_from_bytes(pos_buf, tfs, term_counts)
-        pos_payload_col = [
-            pos_buf[lay.term_byte_start[t] : lay.term_byte_end[t]].tobytes()
-            for t in range(T)
-        ]
-        pos_bo_col = _split_list(lay.block_offset, lay.blocks_per_term)
-    else:  # segments built before the sidecar existed — loud-empty columns
-        pos_payload_col = [b""] * T
-        pos_bo_col = [[] for _ in range(T)]
+    pos_buf = np.frombuffer(
+        b"".join(bytes(p) for p in pdf["pos_payload"]), dtype=np.uint8
+    )
+    lay = position_layout_from_bytes(pos_buf, tfs, term_counts)
 
     return pd.DataFrame(
         {
@@ -118,8 +109,11 @@ def _merge_bucket_salt(pdf: pd.DataFrame) -> pd.DataFrame:
             "block_last": _split_list(enc.block_last, enc.blocks_per_term),
             "block_max_tf": _split_list(enc.block_max_tf, enc.blocks_per_term),
             "block_min_dl": _split_list(enc.block_min_dl, enc.blocks_per_term),
-            "pos_payload": pos_payload_col,
-            "pos_block_offset": pos_bo_col,
+            "pos_payload": [
+                pos_buf[lay.term_byte_start[t] : lay.term_byte_end[t]].tobytes()
+                for t in range(T)
+            ],
+            "pos_block_offset": _split_list(lay.block_offset, lay.blocks_per_term),
         }
     )
 
@@ -205,7 +199,5 @@ def read_index(spark, out_dir: str, with_positions: bool = False) -> DataFrame:
     ``with_positions=True``."""
     df = spark.read.parquet(str(Path(out_dir) / "index"))
     if not with_positions:
-        pos_cols = [c for c in ("pos_payload", "pos_block_offset") if c in df.columns]
-        if pos_cols:
-            df = df.drop(*pos_cols)
+        df = df.drop("pos_payload", "pos_block_offset")
     return df

@@ -17,13 +17,12 @@ rest of that delegated surface, Spark-first:
   (``needed_block_runs``), so a ``rare AND hot`` query decodes a fraction of
   the hot term's postings. At 100 TB this is the difference between "read
   the stopword's posting list" and "read 0.1% of it".
-- **Phrase** (``"a b c"``): candidate docs from the term conjunction, then
-  positional verify by re-analysis of ONLY the candidates' stored content.
-  Our index stores (doc_id, tf) — no positional stream (in a Lucene index
-  positions+offsets are typically the bulk of the bytes); candidate-verify
-  keeps the index half the size and reads |candidates| documents, bounded by
-  the rarest term's df. Scoring follows Lucene's PhraseQuery: tf = phrase
-  frequency, idf = Σ idf(term), same BM25 tf normalization.
+- **Phrase** (``"a b c"``): the same rarest-first block-skipping
+  intersection as the conjunction, then phrase frequency from the index's
+  positional sidecar (a third codec stream of per-posting positions, read
+  only by phrase queries and only for the blocks the intersection keeps) —
+  no document is re-analysed. Scoring follows Lucene's PhraseQuery: tf =
+  phrase frequency, idf = Σ idf(term), same BM25 tf normalization.
 - **Prefix / wildcard** (``pre*``, ``te?m``): term-dictionary expansion over
   the ``termdf`` sidecar (vocabulary-sized, NOT corpus-sized), capped at
   ``max_expansions`` with a loud ``TooManyClauses`` (Lucene's
@@ -47,12 +46,11 @@ import re
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from solrutils_spark.functions.analyzer import B, K1, analyze, analyze_series
+from solrutils_spark.functions.analyzer import B, K1, analyze
 from solrutils_spark.index.codec import decode_run
 from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.wand import _EMPTY, _member, _tfn
@@ -334,29 +332,6 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
     )
 
 
-def conj_matches(reader, terms: list[str]) -> DataFrame:
-    """All doc_ids containing EVERY term (unscored conjunctive domain).
-    Slices are disjoint doc ranges ⇒ the union is distinct with no extra
-    shuffle (same property :meth:`IndexReader.matching_docs` relies on)."""
-    terms = sorted(set(terms))
-    if not terms:
-        return reader.spark.createDataFrame([], "doc_id long")
-    live, idf_by_term = _live_terms(reader, terms)
-    if len(live) < len(terms):
-        return reader.spark.createDataFrame([], "doc_id long")
-    avgdl = float(reader.stats["avgdl"])
-    n_terms = len(terms)
-    cand = reader._candidate_rows(terms)
-
-    def kernel(tbl: pa.Table) -> pa.Table:
-        d, _ = conj_slice(
-            arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl, n_terms
-        )
-        return pa.table({"doc_id": pa.array(d, pa.int64())})
-
-    return cand.groupBy("salt").applyInArrow(kernel, "doc_id long")
-
-
 def scored_matches(reader, terms: list[str]) -> DataFrame:
     """ALL (doc_id, score) under OR semantics — exhaustive disjunctive
     contributions for the boolean executor (domain = ≥1 term present)."""
@@ -381,60 +356,32 @@ class UnsupportedQueryFeature(ValueError):
     """Query combines features outside the supported semantics (loud gate)."""
 
 
-def _phrase_freq(toks: list[str], seq: list[str]) -> int:
-    m = len(seq)
-    if m == 0 or len(toks) < m:
-        return 0
-    first = seq[0]
-    n = 0
-    for i in range(len(toks) - m + 1):
-        if toks[i] == first and toks[i : i + m] == seq:
-            n += 1
-    return n
+def _sloppy_sweep(lists: list[list[int]], seq: list[str], slop: int) -> float:
+    """Sloppy-phrase frequency of one document: minimal-window sweep over
+    phrase-offset-adjusted positions (Lucene PhraseQuery slop semantics:
+    ``slop`` is the total number of position moves allowed, a transposition
+    costs 2, and each match contributes ``sloppyFreq = 1/(1 + matchLength)``
+    where matchLength is the adjusted-position span of the match window).
 
+    ``lists[i]``: phrase slot i's adjusted positions ``{p - i}``, ascending
+    and non-empty (:func:`phrase_slice` builds them from decoded positions).
+    Pointers advance past the current minimum — when the current window's
+    span is ≤ slop it is a match and the minimum advances (Lucene's
+    advance-min repositioning), otherwise the minimum advances to seek a
+    tighter window.
 
-def _sloppy_freq(toks: list[str], seq: list[str], slop: int) -> float:
-    """Sloppy-phrase frequency: minimal-window sweep over phrase-offset-
-    adjusted positions (Lucene PhraseQuery slop semantics: ``slop`` is the
-    total number of position moves allowed, a transposition costs 2, and
-    each match contributes ``sloppyFreq = 1/(1 + matchLength)`` where
-    matchLength is the adjusted-position span of the match window).
-
-    The sweep: each phrase term i contributes its adjusted position list
-    ``{p - i}``; pointers advance past the current minimum — when the
-    current window's span is ≤ slop it is a match and the minimum advances
-    (Lucene's advance-min repositioning), otherwise the minimum advances to
-    seek a tighter window.
-
-    REPEATED terms (round 5: was a loud gate): phrase slots sharing a term
-    share one position list, so an unconstrained sweep could assign the
-    SAME token position to two slots ("a a"~2 false-matching a doc with a
-    single ``a``). Like Lucene's repeats resolution (SloppyPhraseMatcher
-    keeps repeating slots at strictly increasing positions), same-term
-    slots hold strictly increasing list indexes — initialized 0,1,2,… in
-    slot order and cascaded forward whenever an earlier slot advances onto
-    a later one. Exact phrases (slop=0) handle repeats via direct window
-    comparison; corner-case windows where Lucene's tie-breaking differs
+    REPEATED terms: phrase slots sharing a term share one position list, so
+    an unconstrained sweep could assign the SAME token position to two
+    slots ("a a"~2 false-matching a doc with a single ``a``). Like Lucene's
+    repeats resolution (SloppyPhraseMatcher keeps repeating slots at
+    strictly increasing positions), same-term slots hold strictly
+    increasing list indexes — initialized 0,1,2,… in slot order and
+    cascaded forward whenever an earlier slot advances onto a later one.
+    Exact phrases (slop=0) handle repeats in :func:`phrase_slice` by key
+    intersection; corner-case windows where Lucene's tie-breaking differs
     may count matches in a different order, but match EXISTENCE and
     single-window frequencies agree (pinned by the brute-force oracle in
     tests/test_boolean.py)."""
-    m = len(seq)
-    if m == 0 or len(toks) < m:
-        return 0.0
-    lists: list[list[int]] = []
-    for i, t in enumerate(seq):
-        li = [p - i for p, tok in enumerate(toks) if tok == t]
-        if not li:
-            return 0.0
-        lists.append(li)
-    return _sloppy_sweep(lists, seq, slop)
-
-
-def _sloppy_sweep(lists: list[list[int]], seq: list[str], slop: int) -> float:
-    """The minimal-window sweep of :func:`_sloppy_freq` over pre-built
-    per-slot adjusted position lists (slot i's list = {p − i}) — shared by
-    the token path above and the positional-sidecar path, which builds the
-    same lists from decoded positions instead of re-analysis."""
     m = len(seq)
     # same-term slot groups, each ordered by slot index
     groups: dict[str, list[int]] = {}
@@ -477,11 +424,11 @@ def phrase_search(reader, phrase_text: str, k: int = 10,
 
     Lucene PhraseQuery scoring: tf = phrase frequency (exact-adjacency
     count at slop=0; the minimal-window sloppy frequency of
-    :func:`_sloppy_freq` under slop>0), idf = Σ idf(term) over the phrase's
-    UNIQUE terms, BM25 tf-normalization with the doc's |d| — reproduced
-    here with the candidate-verify plan described in the module docstring.
-    Single-token phrases degrade to the plain ranked query (Lucene parses
-    ``"foo"`` to a TermQuery)."""
+    :func:`_sloppy_sweep` under slop>0), idf = Σ idf(term) over the phrase's
+    UNIQUE terms, BM25 tf-normalization with the doc's |d| — computed from
+    the positional sidecar by :func:`phrase_slice`. Single-token phrases
+    degrade to the plain ranked query (Lucene parses ``"foo"`` to a
+    TermQuery)."""
     seq = analyze(phrase_text)
     if len(seq) == 1:
         return reader.search(phrase_text, k)
@@ -497,7 +444,7 @@ def phrase_slice(
     slop: int,
 ) -> tuple[np.ndarray, np.ndarray]:
     """ALL (doc_id, score) of one salt slice for a phrase, computed from the
-    POSITIONAL SIDECAR (round 6, VERDICT r5 #1) — no document re-analysis.
+    POSITIONAL SIDECAR — no document re-analysis.
 
     Shape: rarest-first conjunctive intersection with block skipping (the
     same ``needed_block_runs`` certificate as :func:`conj_slice`), then
@@ -507,13 +454,13 @@ def phrase_slice(
       across slots (`np.intersect1d`, unique+sorted by construction) — the
       surviving key count per doc IS the exact phrase frequency (repeated
       slots intersect distinct offsets of the same list, so ``"a a"`` needs
-      two distinct positions, exactly like :func:`_phrase_freq`);
-    - slop > 0: the existing :func:`_sloppy_sweep` over per-slot adjusted
-      lists built from positions instead of re-tokenized text.
+      two distinct positions);
+    - slop > 0: :func:`_sloppy_sweep` per candidate over per-slot adjusted
+      lists built from the decoded positions.
 
     Scoring is Lucene PhraseQuery: tf = phrase frequency, idf = Σ idf over
-    unique terms, BM25 tf-normalization — bit-identical arithmetic to the
-    candidate-verify path (pinned by tests)."""
+    unique terms, BM25 tf-normalization — rank- and score-identical to the
+    re-analysing ``OracleIndex.search_phrase`` (pinned by tests)."""
     from solrutils_spark.index.codec import decode_positions_run
 
     uniq_terms = sorted(set(seq))
@@ -535,12 +482,6 @@ def phrase_slice(
         d_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
         for r in rlist:
             bo, bl, pos_bo = r.block_offset, r.block_last, r.pos_block_offset
-            if len(bo) and not len(pos_bo):
-                raise ValueError(
-                    f"positional sidecar missing for term {r.term!r} — the "
-                    "index mixes pre-positions segments; rebuild it "
-                    "(resume=False) or query via candidate-verify"
-                )
             runs = (
                 [(0, len(bo))]
                 if cand is None
@@ -619,7 +560,6 @@ def phrase_slice(
         scores = idf_sum * pf / (pf + norm[sel])
         return pf_docs, scores
     # sloppy: per-candidate python sweep over position-built slot lists
-    # (still no re-analysis; the sweep is the same code as the token path)
     slot_cache = {t: slot_positions(t) for t in set(seq)}
     out_docs: list[int] = []
     out_scores: list[float] = []
@@ -651,13 +591,10 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
     """ALL (doc_id, score) pairs matching the phrase (un-limited — the
     boolean executor needs every contribution, not a top-k cut).
 
-    Round 6: when the index carries the positional sidecar, phrase frequency
-    comes straight from decoded positions (:func:`phrase_slice`) — the
-    candidate re-analysis plan remains as the fallback for pre-sidecar
-    indexes. The hot-hot phrase shape (two Zipf-head terms ⇒ candidate set
-    ~corpus-sized ⇒ re-analysis ~the build's tokenize phase) was VERDICT
-    round-5 finding #1; with positions the kernel decodes only the blocks
-    the conjunction certificate keeps."""
+    One grouped ``applyInArrow`` stage over the phrase terms' candidate rows
+    read WITH the positional sidecar: each salt slice runs :func:`phrase_slice`, which
+    decodes positions only for the blocks the conjunction certificate keeps
+    (so a phrase of two Zipf-head terms never re-reads the corpus)."""
     seq = analyze(phrase_text)
     if not seq:
         return reader.spark.createDataFrame([], TOPK_DDL)
@@ -665,47 +602,14 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
     live, idf_by_term = _live_terms(reader, uniq)
     if len(live) < len(uniq):
         return reader.spark.createDataFrame([], TOPK_DDL)
-    idf_sum = float(sum(idf_by_term.values()))
     avgdl = float(reader.stats["avgdl"])
+    cand_rows = reader._candidate_rows_with_positions(uniq)
 
-    if reader.has_positions():
-        cand_rows = reader._candidate_rows_with_positions(uniq)
-        seq_l, slop_l = list(seq), slop
+    def pkernel(tbl: pa.Table) -> pa.Table:
+        return arrow_rows.topk_table(*phrase_slice(
+            arrow_rows.rows_from_arrow(tbl), seq, idf_by_term, avgdl, slop))
 
-        def pkernel(tbl: pa.Table) -> pa.Table:
-            return arrow_rows.topk_table(*phrase_slice(
-                arrow_rows.rows_from_arrow(tbl), seq_l, idf_by_term, avgdl,
-                slop_l))
-
-        return cand_rows.groupBy("salt").applyInArrow(pkernel, TOPK_DDL)
-
-    cand = conj_matches(reader, uniq)
-    # docs ⋈ candidates: candidates ≪ corpus (bounded by the rarest term's
-    # df); AQE picks a broadcast of the small side at runtime — we don't
-    # force a broadcast hint because "rarest df" can still be huge for a
-    # phrase of two stopwords.
-    joined = reader.docs.join(cand, "doc_id").select("doc_id", "content")
-
-    def verify(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            toks_series = analyze_series(pdf["content"])
-            ids, scores = [], []
-            for doc_id, toks in zip(pdf["doc_id"].tolist(), toks_series.tolist()):
-                pf = (_phrase_freq(toks, seq) if slop == 0
-                      else _sloppy_freq(toks, seq, slop))
-                if pf:
-                    dl = len(toks)
-                    norm = K1 * (1.0 - B + B * dl / avgdl) if avgdl else K1
-                    ids.append(doc_id)
-                    scores.append(idf_sum * pf / (pf + norm))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"),
-                 "score": pd.Series(scores, dtype="float64")}
-            )
-
-    return joined.mapInPandas(verify, TOPK_DDL)
+    return cand_rows.groupBy("salt").applyInArrow(pkernel, TOPK_DDL)
 
 
 # ---------------------------------------------- multi-term expansions ----

@@ -6,8 +6,8 @@ Query lifecycle (the Spark twin of SURVEY.md §3.1's Solr crossing):
 2. prune: ``index.filter(bucket IN … AND term IN …)`` — partition-directory
    pruning on ``bucket`` + row filter on ``term``; payload column read only
    for surviving rows (Parquet column/predicate pushdown)
-3. global df per term = sum of row-level ``df_part`` (metadata-only pass,
-   payload column never touched — column pruning does this for free)
+3. global df per term from the build's ``termdf`` sidecar (direct pyarrow
+   read of the terms' bucket files, cached — no Spark job)
 4. score: ``groupBy("salt").applyInArrow`` — each salt slice's rows go
    through the one Arrow adapter (``arrow_rows.rows_from_arrow``) into the
    one block-max WAND kernel (``wand.topk_rows``), the same adapter and
@@ -67,7 +67,6 @@ class IndexReader:
         self._docs: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
         self._bucket_datasets: dict[int, object] = {}
-        self._has_positions: bool | None = None
         self._serving_partitions: int | None = None
         # filter-alignment cache: id(filter_df) → (source ref, aligned df,
         # owned). Bounded LRU; see _aligned_filter.
@@ -82,8 +81,7 @@ class IndexReader:
             self._docs = read_docs(self.spark, self.index_dir)
         return self._docs
 
-    def cache_for_serving(self, num_partitions: int | None = None,
-                          sort_for_pruning: bool = False) -> "IndexReader":
+    def cache_for_serving(self, num_partitions: int | None = None) -> "IndexReader":
         """Hot-index mode: repartition the postings by ``salt`` and persist.
 
         Every scored query stage is ``groupBy("salt").applyInArrow(...)``
@@ -119,42 +117,22 @@ class IndexReader:
         itself, once per frame (:meth:`_aligned_filter`) — callers that
         co-partition their filterCache up front simply bypass that cache.
 
-        ``sort_for_pruning``: sort rows by ``(bucket, term)`` within each
-        salt partition before caching, so InMemoryRelation's per-batch
-        min/max stats let a query's ``bucket/term`` filter skip whole cached
-        batches (zone-map pruning; ``sortWithinPartitions`` preserves the
-        salt hash-partitioning, so the per-query Exchange stays elided).
-        Measured at 1M docs (order-controlled A/B, fresh JVMs, driver-local
-        p50 as a host-contention canary): the scan stage DOES get faster
-        (12-query candidate scan 4.2 → 3.6 s; scan+group 5.4 → 3.6 s), but
-        end-to-end batch/serving numbers are neutral to slightly negative —
-        the scan is not the binding cost at this scale (the Python kernel
-        stage and job floor are), so the default stays OFF. On a cluster
-        with a much larger vocabulary (scan-bound), turn it on.
-
         Calling it again re-partitions the cached index; when the partition
         count changes, the filter-alignment cache is cleared (aligned frames
         the reader persisted are unpersisted) because its entries are
         co-partitioned with the OLD count."""
         if num_partitions is None:
-            num_salts = int(self.stats.get("num_salts", 0))
             shuffle_parts = int(
                 self.spark.conf.get("spark.sql.shuffle.partitions")
             )
-            num_partitions = (
-                min(4 * num_salts, shuffle_parts) if num_salts > 0
-                else shuffle_parts
-            )
+            num_partitions = min(4 * int(self.stats["num_salts"]), shuffle_parts)
         num_partitions = int(num_partitions)
         if self._serving_partitions not in (None, num_partitions):
             for _src, aligned, owned in self._filter_align_cache.values():
                 if owned:
                     aligned.unpersist()
             self._filter_align_cache.clear()
-        part = self.index.repartition(num_partitions, "salt")
-        if sort_for_pruning:
-            part = part.sortWithinPartitions("bucket", "term")
-        self.index = part.persist()
+        self.index = self.index.repartition(num_partitions, "salt").persist()
         self.index.count()
         self._serving_partitions = num_partitions
         return self
@@ -169,24 +147,10 @@ class IndexReader:
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
-    def has_positions(self) -> bool:
-        """True when the on-disk index carries the positional sidecar
-        (round-6 codec third stream) — schema check only, cached."""
-        if self._has_positions is None:
-            from solrutils_spark.index.merge import read_index
-
-            cols = read_index(
-                self.spark, self.index_dir, with_positions=True
-            ).columns
-            self._has_positions = "pos_payload" in cols
-        return self._has_positions
-
     def _candidate_rows_with_positions(self, terms: list[str]) -> DataFrame:
         """Candidate rows INCLUDING the positional sidecar columns — read
         fresh from disk (not the lean serving cache): only phrase queries
         pay for the position bytes, and only for their own terms' buckets."""
-        from solrutils_spark.index.merge import read_index
-
         idx = read_index(self.spark, self.index_dir, with_positions=True)
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         return idx.filter(
@@ -196,26 +160,15 @@ class IndexReader:
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Global df per query term. Served from the bucket-partitioned
         ``termdf`` sidecar via direct pyarrow reads (no Spark job — the
-        lookup touches ≤ |query terms| bucket directories and is cached);
-        falls back to a Spark aggregation for indexes built before the
-        sidecar existed."""
+        lookup touches ≤ |query terms| bucket directories and is cached).
+        Terms absent from the corpus are left out of the result."""
         if not terms:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            sidecar = Path(self.index_dir) / "termdf"
-            if sidecar.exists():
-                self._df_cache.update(self._sidecar_dfs(sidecar, missing))
-            else:
-                rows = (
-                    self._candidate_rows(missing)
-                    .groupBy("term")
-                    .agg(F.sum("df_part").alias("df"))
-                    .collect()
-                )
-                self._df_cache.update({r["term"]: int(r["df"]) for r in rows})
-                for t in missing:
-                    self._df_cache.setdefault(t, 0)
+            self._df_cache.update(
+                self._sidecar_dfs(Path(self.index_dir) / "termdf", missing)
+            )
         return {t: self._df_cache[t] for t in terms if self._df_cache.get(t)}
 
     def _sidecar_dfs(self, sidecar: Path, terms: list[str]) -> dict[str, int]:
@@ -238,12 +191,7 @@ class IndexReader:
     def salt_span(self) -> int:
         """doc_ids per salt slice: salt = doc_id // salt_span (pure
         arithmetic — segment/salt geometry persisted by the build)."""
-        seg = int(self.stats["segment_size"])
-        g = self.stats.get("salt_group")
-        if g is None:  # index built before the geometry was persisted
-            n_segments = max(1, -(-int(self.stats["n_docs"]) // seg))
-            g = max(1, -(-n_segments // int(self.stats["num_salts"])))
-        return int(g) * seg
+        return int(self.stats["salt_group"]) * int(self.stats["segment_size"])
 
     def salted_filter(self, filter_df: DataFrame) -> DataFrame:
         """(doc_id) → (doc_id, salt) for the cogroup filter path. Passes
@@ -283,15 +231,15 @@ class IndexReader:
         at most ``_filter_align_max`` aligned domains are resident, eviction
         unpersists. On a correctly co-partitioned cluster deployment the
         counts match and this cache never engages (zero extra memory)."""
-        fids = self.salted_filter(filter_df)
         n = self._serving_partitions
         if n is None:
-            return fids
+            return self.salted_filter(filter_df)
         key = id(filter_df)
         hit = self._filter_align_cache.pop(key, None)
         if hit is not None:
             self._filter_align_cache[key] = hit  # re-insert → most recent
             return hit[1]
+        fids = self.salted_filter(filter_df)
         try:
             cur = fids.rdd.getNumPartitions()
         except Exception:
@@ -381,8 +329,8 @@ class IndexReader:
 
     def phrase_search(self, phrase_text: str, k: int = 10,
                       slop: int = 0) -> DataFrame:
-        """Phrase query, exact or sloppy (candidate-verify) — see
-        query/boolean.py."""
+        """Phrase query, exact or sloppy, scored from the positional
+        sidecar — see query/boolean.py."""
         from solrutils_spark.query.boolean import phrase_search
 
         return phrase_search(self, phrase_text, k, slop=slop)

@@ -41,10 +41,10 @@ precedence corners):
 - a MUST_NOT-only query matches nothing (Lucene: no positive clause).
 
 Proximity phrases ``"a b"~N`` run the minimal-window sloppy sweep over the
-candidate-verify re-analysis (Lucene slop semantics: moves budget, a
-transposition costs 2, sloppyFreq = 1/(1+matchLength); REPEATED terms
-hold distinct token positions in phrase order — see
-``boolean._sloppy_freq``). ``field:(...)`` grouping scopes every bare
+positions decoded from the index's positional sidecar (Lucene slop
+semantics: moves budget, a transposition costs 2, sloppyFreq =
+1/(1+matchLength); REPEATED terms hold distinct token positions in phrase
+order — see ``boolean._sloppy_sweep``). ``field:(...)`` grouping scopes every bare
 atom inside to the field (round 5; an explicit inner ``other:`` prefix
 re-scopes, as Lucene does). Unsupported constructs fail LOUDLY
 (``UnsupportedQuerySyntax``): fuzzy on metadata fields and unknown field

@@ -15,7 +15,7 @@ from solrutils_spark.oracle.reference_bm25 import OracleIndex
 from solrutils_spark.query.boolean import (
     TooManyClauses,
     _levenshtein_banded,
-    conj_matches,
+    _sloppy_sweep,
     expand_fuzzy,
     expand_wildcard,
     needed_block_runs,
@@ -113,7 +113,7 @@ def test_conj_matches_oracle(reader, oracle, qid, qtext, k):
 
 def test_conj_domain_is_subset_of_disjunction(reader, oracle):
     q = "posting segment lucene"
-    conj_ids = {r["doc_id"] for r in conj_matches(reader, q.split()).collect()}
+    conj_ids = {r["doc_id"] for r in reader.search_conj(q, N_DOCS).collect()}
     want = set(oracle.postings["posting"]) & set(oracle.postings["segment"]) \
         & set(oracle.postings["lucene"])
     assert conj_ids == want
@@ -224,9 +224,19 @@ def test_phrase_with_absent_term_is_empty(reader):
     assert reader.phrase_search("posting zzzneverseen", 5).count() == 0
 
 
-def test_sloppy_freq_semantics():
-    from solrutils_spark.query.boolean import _sloppy_freq
+def _sloppy_freq(toks: list[str], seq: list[str], slop: int) -> float:
+    """Sloppy frequency of ``seq`` in ``toks`` through the engine's sweep:
+    slot i's list holds the adjusted positions ``{p − i}`` of its term."""
+    if len(toks) < len(seq):
+        return 0.0
+    lists = [[p - i for p, tok in enumerate(toks) if tok == t]
+             for i, t in enumerate(seq)]
+    if not all(lists):
+        return 0.0
+    return _sloppy_sweep(lists, seq, slop)
 
+
+def test_sloppy_freq_semantics():
     toks = "aa bb cc dd".split()
     # exact adjacency: span 0 → freq 1
     assert _sloppy_freq(toks, ["aa", "bb"], 0) == 1.0
@@ -296,7 +306,6 @@ def test_sloppy_repeated_terms():
     from itertools import product as _product
 
     from solrutils_spark.oracle.reference_bm25 import OracleIndex
-    from solrutils_spark.query.boolean import _sloppy_freq
 
     # single 'a' cannot satisfy two slots
     assert _sloppy_freq(["xx", "aa", "yy"], ["aa", "aa"], 2) == 0.0
@@ -343,7 +352,7 @@ def test_sloppy_repeated_terms():
 
 
 def test_sloppy_repeated_terms_end_to_end(reader, oracle):
-    """The repeated-term sloppy path through the full candidate-verify
+    """The repeated-term sloppy path through the full positional-sidecar
     phrase search agrees with the exhaustive oracle."""
     # build a phrase from a doc that actually repeats a term, if any
     q = None

@@ -13,7 +13,7 @@ from pathlib import Path
 import pytest
 
 from solrutils_spark.corpus import reference_queries, synth_corpus
-from solrutils_spark.index.builder import build_index, read_lineage
+from solrutils_spark.index.builder import FORMAT_VERSION, build_index, read_lineage
 from solrutils_spark.oracle.reference_bm25 import OracleIndex
 from solrutils_spark.query.engine import IndexReader
 
@@ -197,18 +197,6 @@ def test_matching_count_exact(reader, oracle):
         assert n == reader.matching_docs(qtext).distinct().count(), qtext
         assert n == len(oracle.search(qtext, N_DOCS + 1)), qtext
     assert reader.matching_count("zzzabsent") == 0
-
-
-def test_salt_span_fallback_matches_persisted(reader):
-    """Indexes built before salt geometry was persisted derive the same span
-    from (n_docs, segment_size, num_salts)."""
-    import copy
-
-    legacy = copy.copy(reader)
-    legacy.stats = {
-        k: v for k, v in reader.stats.items() if k not in ("salt_group", "n_segments")
-    }
-    assert legacy.salt_span() == reader.salt_span()
 
 
 def test_paging_offset(reader):
@@ -614,3 +602,42 @@ def test_cache_for_serving_reconfigure_drops_aligned_filters(spark, index_dir):
             if owned:
                 aligned.unpersist()
         reader.index.unpersist()
+
+
+def test_aligned_filter_salts_only_on_cache_miss(spark, index_dir, monkeypatch):
+    """The filter-alignment cache is looked up BEFORE the filter is salted:
+    a repeated unsalted filter frame is salted once, on the miss."""
+    reader = IndexReader(spark, index_dir).cache_for_serving(4)
+    calls = []
+    real = reader.salted_filter
+
+    def spy(filter_df):
+        calls.append(filter_df)
+        return real(filter_df)
+
+    monkeypatch.setattr(reader, "salted_filter", spy)
+    try:
+        fdf = spark.createDataFrame(
+            [(d,) for d in range(0, N_DOCS, 3)], "doc_id long")
+        for _ in range(2):
+            reader.search("posting segment lucene", 5, filter_df=fdf).collect()
+        assert len(calls) == 1 and calls[0] is fdf
+    finally:
+        for _src, aligned, owned in reader._filter_align_cache.values():
+            if owned:
+                aligned.unpersist()
+        reader.index.unpersist()
+
+
+def test_format_version_gate(spark, index_dir, tmp_path):
+    """build_index stamps FORMAT_VERSION into stats.json; an index whose
+    stats.json lacks it, or carries another value, is refused when opened."""
+    stats = json.loads((Path(index_dir) / "stats.json").read_text())
+    assert stats["format_version"] == FORMAT_VERSION
+    missing = {k: v for k, v in stats.items() if k != "format_version"}
+    for name, bad in [("missing", missing), ("old", {**stats, "format_version": 0})]:
+        d = tmp_path / name
+        d.mkdir()
+        (d / "stats.json").write_text(json.dumps(bad))
+        with pytest.raises(ValueError, match="format_version"):
+            IndexReader(spark, str(d))
