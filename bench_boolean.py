@@ -116,8 +116,8 @@ assert skip_res == full_res, "skip path changed results"
 
 # phrase: a rare-anchored bigram taken from a real doc containing RARE
 row = reader.fetch(
-    reader.search(RARE, 1), fields=["repo", "path"]
-).limit(1).collect()[0]
+    reader.search(RARE, 1).collect(), fields=["repo", "path"]
+)[0]
 doc = reader.docs.filter("doc_id = %d" % int(row["doc_id"])).select(
     "content").collect()[0]["content"]
 toks = analyze(doc)

@@ -156,13 +156,12 @@ def read_stats(out_dir: str) -> dict:
     return stats
 
 
-def read_docs(spark: SparkSession, out_dir: str, with_len: bool = True) -> DataFrame:
-    """docs table; ``with_len=False`` skips the doc_len sidecar join — use for
-    stored-field fetches where |d| isn't needed (the join otherwise rides
-    along in every top-k fetch plan)."""
+def read_docs(spark: SparkSession, out_dir: str) -> DataFrame:
+    """docs table with ``doc_len`` from the doclen sidecar (0 for a doc the
+    sidecar lacks)."""
     docs = spark.read.parquet(str(Path(out_dir) / "docs.parquet"))
     dl_path = Path(out_dir) / "doclen"
-    if with_len and dl_path.exists():
+    if dl_path.exists():
         dl = spark.read.parquet(str(dl_path))
         docs = docs.join(dl, "doc_id", "left").fillna({"doc_len": 0})
     return docs

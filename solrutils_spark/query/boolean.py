@@ -243,30 +243,13 @@ def search_conj(
     avgdl = float(reader.stats["avgdl"])
     fetch_k = k + offset
     n_terms = len(terms)
-    cand = reader._candidate_rows(terms)
 
-    if filter_df is not None:
-        fids = reader._aligned_filter(filter_df)
+    def slice_conj(rows, allowed):
+        return arrow_rows.topk_table(*topk_conj(
+            rows, idf_by_term, avgdl, fetch_k, n_terms, allowed_docs=allowed))
 
-        def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
-            allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
-            rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
-            return arrow_rows.topk_table(*topk_conj(
-                rows, idf_by_term, avgdl, fetch_k, n_terms, allowed_docs=allowed))
-
-        sliced = (
-            cand.groupBy("salt")
-            .cogroup(fids.groupBy("salt"))
-            .applyInArrow(ckernel, schema=TOPK_DDL)
-        )
-    else:
-
-        def kernel(tbl: pa.Table) -> pa.Table:
-            return arrow_rows.topk_table(*topk_conj(
-                arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl, fetch_k,
-                n_terms))
-
-        sliced = cand.groupBy("salt").applyInArrow(kernel, schema=TOPK_DDL)
+    sliced = reader._per_slice(reader._candidate_rows(terms), slice_conj,
+                               TOPK_DDL, filter_df)
     ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
     if offset:
         ranked = ranked.offset(offset)
@@ -621,22 +604,14 @@ def _vocab_tables(reader):
     term dictionary is O(10⁷⁻⁸) rows — a driver scan with a pushed filter is
     the Solr analog of a terms-enum walk. (A globally SORTED term-dict
     sidecar would turn prefix scans into range pruning; noted in PLANS.md.)"""
-    import pyarrow.dataset as ds
-
     sidecar = Path(reader.index_dir) / "termdf"
     if not sidecar.exists():
         raise FileNotFoundError(
             f"termdf sidecar missing under {reader.index_dir} — multi-term "
             "expansion needs the term dictionary (rebuild the index)"
         )
-    cache = getattr(reader, "_vocab_datasets", None)
-    if cache is None:
-        cache = reader._vocab_datasets = {}
     for bdir in sorted(sidecar.glob("bucket=*")):
-        dset = cache.get(bdir.name)
-        if dset is None:
-            dset = cache[bdir.name] = ds.dataset(str(bdir))
-        yield dset
+        yield reader._dataset(f"termdf/{bdir.name}")
 
 
 _WILDCARD_OK = re.compile(r"^[^*?]*[*?][*?a-z0-9_.*]*$")

@@ -14,8 +14,18 @@ Query lifecycle (the Spark twin of SURVEY.md §3.1's Solr crossing):
    kernel ``search_local`` runs on the driver
 5. merge: ``orderBy(score desc, doc_id).limit(k)`` over ≤ slices·k rows
    (TakeOrderedAndProject — never a full sort)
-6. optional stored-field fetch: broadcast join of the tiny top-k against the
-   docs table (J3, QueryReRankComponent.java:80-85 semantics)
+6. optional stored-field fetch for the ≤ k hits: :meth:`IndexReader.fetch`
+   takes the collected (doc_id, score) rows and reads their stored fields
+   from ``docs.parquet`` with pyarrow on the driver (requested columns, a
+   ``doc_id`` predicate, cached dataset handles) — no Spark job
+   (J3, QueryReRankComponent.java:80-85 semantics)
+
+:meth:`IndexReader.scored_domain` is the request-shaped twin of steps 4-5:
+ALL (doc_id, score) matches of the query (∩ filter) from one grouped pass,
+scored by the exhaustive ``wand.topk_slice_batch`` kernel so every score is
+bit-identical to :meth:`IndexReader.search`. ``PlanExecutor`` persists it
+once per request and takes the ranked page, numFound and the facet domain
+from that one frame.
 
 Filters (P2, ``fq``) never affect scores — Lucene ``setIsFilter(true)``
 semantics (BulkUpdateHandler.java:59). Two shapes:
@@ -66,7 +76,7 @@ class IndexReader:
         self.index = read_index(spark, index_dir)
         self._docs: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
-        self._bucket_datasets: dict[int, object] = {}
+        self._datasets: dict[str, object] = {}
         self._serving_partitions: int | None = None
         # filter-alignment cache: id(filter_df) → (source ref, aligned df,
         # owned). Bounded LRU; see _aligned_filter.
@@ -117,10 +127,11 @@ class IndexReader:
         itself, once per frame (:meth:`_aligned_filter`) — callers that
         co-partition their filterCache up front simply bypass that cache.
 
-        Calling it again re-partitions the cached index; when the partition
-        count changes, the filter-alignment cache is cleared (aligned frames
-        the reader persisted are unpersisted) because its entries are
-        co-partitioned with the OLD count."""
+        Calling it again re-partitions the cached index and unpersists the
+        previous cached copy once the new one is materialized; when the
+        partition count changes, the filter-alignment cache is cleared
+        (aligned frames the reader persisted are unpersisted) because its
+        entries are co-partitioned with the OLD count."""
         if num_partitions is None:
             shuffle_parts = int(
                 self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -132,8 +143,13 @@ class IndexReader:
                 if owned:
                     aligned.unpersist()
             self._filter_align_cache.clear()
+        previous = self.index if self._serving_partitions is not None else None
         self.index = self.index.repartition(num_partitions, "salt").persist()
         self.index.count()
+        if previous is not None:
+            # after the count: a materialized cache no longer reads the
+            # copy it was built from, so unpersisting that copy keeps it
+            previous.unpersist()
         self._serving_partitions = num_partitions
         return self
 
@@ -166,27 +182,66 @@ class IndexReader:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            self._df_cache.update(
-                self._sidecar_dfs(Path(self.index_dir) / "termdf", missing)
-            )
+            self._df_cache.update(self._sidecar_dfs(missing))
         return {t: self._df_cache[t] for t in terms if self._df_cache.get(t)}
 
-    def _sidecar_dfs(self, sidecar: Path, terms: list[str]) -> dict[str, int]:
+    def _sidecar_dfs(self, terms: list[str]) -> dict[str, int]:
         import pyarrow.dataset as ds
 
         out = {t: 0 for t in terms}
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         for b in buckets:
-            bdir = sidecar / f"bucket={b}"
-            if not bdir.exists():
+            dset = self._dataset(f"termdf/bucket={b}")
+            if dset is None:
                 continue
-            table = ds.dataset(str(bdir)).to_table(
+            table = dset.to_table(
                 columns=["term", "df"],
                 filter=ds.field("term").isin(terms),
             )
             for t, d in zip(table["term"].to_pylist(), table["df"].to_pylist()):
                 out[t] = int(d)
         return out
+
+    def _dataset(self, rel: str):
+        """pyarrow dataset handle for ``index_dir/rel``, or None when that
+        directory does not exist. Opened once per reader: a handle is a
+        directory listing, and the built index is immutable."""
+        if rel not in self._datasets:
+            import pyarrow.dataset as ds
+
+            path = Path(self.index_dir) / rel
+            self._datasets[rel] = ds.dataset(str(path)) if path.exists() else None
+        return self._datasets[rel]
+
+    def _per_slice(self, cand: DataFrame, fn, schema: str,
+                   filter_df: DataFrame | None = None) -> DataFrame:
+        """``fn(rows, allowed) → pa.Table`` on every salt slice of ``cand``
+        in one ``applyInArrow`` stage — the shape of every scored query.
+
+        Without ``filter_df``, ``allowed`` is None. With it, the filter ids
+        are salted and co-partitioned (:meth:`_aligned_filter`) and
+        COGROUPed with the candidate rows, so each slice gets only its own
+        allowed ids as a sorted int64 array (a slice with none skips the
+        decode). ``fn`` is pickled into the tasks: it must not capture the
+        reader."""
+        if filter_df is None:
+
+            def kernel(tbl: pa.Table) -> pa.Table:
+                return fn(arrow_rows.rows_from_arrow(tbl), None)
+
+            return cand.groupBy("salt").applyInArrow(kernel, schema)
+
+        def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
+            allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
+            rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
+            return fn(rows, allowed)
+
+        fids = self._aligned_filter(filter_df)
+        return (
+            cand.groupBy("salt")
+            .cogroup(fids.groupBy("salt"))
+            .applyInArrow(ckernel, schema)
+        )
 
     def salt_span(self) -> int:
         """doc_ids per salt slice: salt = doc_id // salt_span (pure
@@ -285,35 +340,19 @@ class IndexReader:
         idf_by_term = {t: self.idf(dfs[t]) for t in terms}
         avgdl = float(self.stats["avgdl"])
         fetch_k = k + offset
-        cand = self._candidate_rows(terms)
+        listed = (
+            np.sort(np.asarray(filter_doc_ids, dtype=np.int64))
+            if filter_doc_ids is not None
+            else None
+        )
 
-        if filter_df is not None:
-            fids = self._aligned_filter(filter_df)
+        def slice_topk(rows, allowed):
+            return arrow_rows.topk_table(*wand.topk_rows(
+                rows, idf_by_term, avgdl, fetch_k,
+                allowed_docs=listed if allowed is None else allowed))
 
-            def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
-                allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
-                rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
-                return arrow_rows.topk_table(*wand.topk_rows(
-                    rows, idf_by_term, avgdl, fetch_k, allowed_docs=allowed))
-
-            sliced = (
-                cand.groupBy("salt")
-                .cogroup(fids.groupBy("salt"))
-                .applyInArrow(ckernel, schema=TOPK_DDL)
-            )
-        else:
-            allowed = (
-                np.sort(np.asarray(filter_doc_ids, dtype=np.int64))
-                if filter_doc_ids is not None
-                else None
-            )
-
-            def kernel(tbl: pa.Table) -> pa.Table:
-                return arrow_rows.topk_table(*wand.topk_rows(
-                    arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl,
-                    fetch_k, allowed_docs=allowed))
-
-            sliced = cand.groupBy("salt").applyInArrow(kernel, schema=TOPK_DDL)
+        sliced = self._per_slice(self._candidate_rows(terms), slice_topk,
+                                 TOPK_DDL, filter_df)
         ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
         if offset:
             ranked = ranked.offset(offset)
@@ -390,28 +429,12 @@ class IndexReader:
         live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
         BATCH_DDL = "query_id long, doc_id long, score double"
 
-        cand = self._candidate_rows(live_terms)
-        if filter_df is not None:
-            fids = self._aligned_filter(filter_df)
+        def slice_batch(rows, allowed):
+            return arrow_rows.batch_table(
+                wand.topk_slice_batch(rows, plans, avgdl, allowed))
 
-            def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
-                allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
-                rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
-                return arrow_rows.batch_table(
-                    wand.topk_slice_batch(rows, plans, avgdl, allowed))
-
-            sliced = (
-                cand.groupBy("salt")
-                .cogroup(fids.groupBy("salt"))
-                .applyInArrow(ckernel, BATCH_DDL)
-            )
-        else:
-
-            def kernel(tbl: pa.Table) -> pa.Table:
-                return arrow_rows.batch_table(wand.topk_slice_batch(
-                    arrow_rows.rows_from_arrow(tbl), plans, avgdl))
-
-            sliced = cand.groupBy("salt").applyInArrow(kernel, BATCH_DDL)
+        sliced = self._per_slice(self._candidate_rows(live_terms), slice_batch,
+                                 BATCH_DDL, filter_df)
         k_map = {qid: k for qid, _, k in plans}
         k_df = self.spark.createDataFrame(
             [(qid, k) for qid, k in k_map.items()], "query_id long, k int"
@@ -433,14 +456,10 @@ class IndexReader:
 
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         rows: list[arrow_rows.PostingRow] = []
-        index_root = Path(self.index_dir) / "index"
         for b in buckets:
-            dset = self._bucket_datasets.get(b)
+            dset = self._dataset(f"index/bucket={b}")
             if dset is None:
-                bdir = index_root / f"bucket={b}"
-                if not bdir.exists():
-                    continue
-                dset = self._bucket_datasets[b] = ds.dataset(str(bdir))
+                continue
             tbl = dset.to_table(columns=arrow_rows.POSTING_COLUMNS,
                                 filter=ds.field("term").isin(terms))
             if tbl.num_rows:
@@ -520,39 +539,78 @@ class IndexReader:
             for i in range(offset, min(fetch_k, docs.size))
         ]
 
-    def fetch(self, topk: DataFrame, fields: list[str] | None = None) -> DataFrame:
-        """J3 — stored-field fetch: broadcast the tiny top-k against docs.
+    def scored_domain(self, query_text: str, *,
+                      filter_df: DataFrame | None = None) -> DataFrame:
+        """Every (doc_id, score) matching ≥1 query term (∩ ``filter_df``),
+        unranked — the one scored pass a request takes its ranked page,
+        numFound and facet domain from (Solr's ``getDocListAndSet``: the
+        page and the full DocSet from one collector pass).
 
-        Uses the lean docs table (no doc_len sidecar join) unless the caller
-        asked for doc_len — keeps the fetch plan a single broadcast join."""
-        cols = fields or ["repo", "path", "commit", "lang"]
-        docs = (
-            self.docs
-            if "doc_len" in cols
-            else read_docs(self.spark, self.index_dir, with_len=False)
-        )
-        return (
-            docs.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "score", *cols)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-
-    def matching_docs(self, query_text: str) -> DataFrame:
-        """All docs containing ≥1 query term (the facet-domain doc set), unscored.
-
-        Salt slices are DISJOINT doc_id ranges and the kernel uniquifies
-        within its slice, so the union is already distinct — no extra
-        doc_id shuffle after the decode."""
+        Same grouped shape as :meth:`search`, but each slice runs the
+        exhaustive ``wand.topk_slice_batch`` with k = the slice's doc span,
+        so it keeps every doc it touches. That kernel shares the arithmetic
+        and summation order of :meth:`search`'s, so the scores are
+        bit-identical (pinned). Salt slices are disjoint doc ranges: the
+        rows are already distinct."""
         terms = query_terms(query_text)
-        if not terms:
-            return self.spark.createDataFrame([], "doc_id long")
-        cand = self._candidate_rows(terms)
+        dfs = self.term_dfs(terms)
+        idf_by_term = {t: self.idf(dfs[t]) for t in terms if dfs.get(t)}
+        if not idf_by_term:
+            return self.spark.createDataFrame([], TOPK_DDL)
+        plans = [(0, idf_by_term, self.salt_span())]
+        avgdl = float(self.stats["avgdl"])
 
-        def decode_all(tbl: pa.Table) -> pa.Table:
-            ids = arrow_rows.slice_doc_ids(arrow_rows.rows_from_arrow(tbl))
-            return pa.table({"doc_id": pa.array(ids, pa.int64())})
+        def slice_all(rows, allowed):
+            return arrow_rows.batch_table(wand.topk_slice_batch(
+                rows, plans, avgdl, allowed)).drop_columns("query_id")
 
-        return cand.groupBy("salt").applyInArrow(decode_all, "doc_id long")
+        return self._per_slice(self._candidate_rows(list(idf_by_term)),
+                               slice_all, TOPK_DDL, filter_df)
+
+    def fetch(self, hits, fields: list[str] | None = None) -> list[dict]:
+        """J3 — stored fields for collected hits.
+
+        ``hits``: (doc_id, score) pairs (tuples or Rows) in rank order.
+        Returns one dict per hit, in the same order, with keys ``doc_id``,
+        ``score``, then ``fields`` (default repo, path, commit, lang).
+
+        One pyarrow read of ``docs.parquet`` on the driver: only the
+        requested columns, filtered to the hits' doc_ids, through a cached
+        dataset handle. The doclen sidecar is read only when ``doc_len`` is
+        requested (0 for a doc it lacks, as in :attr:`docs`). No Spark job:
+        hits are ≤ start + rows rows already on the driver. The docs files
+        come out of a hash join, so each spans the whole doc_id range: the
+        predicate filters rows but prunes no file or row group."""
+        import pyarrow.dataset as ds
+
+        cols = fields or ["repo", "path", "commit", "lang"]
+        hits = [(int(d), float(s)) for d, s in hits]
+        if not hits:
+            return []
+        ids = ds.field("doc_id").isin([d for d, _ in hits])
+        stored = [c for c in dict.fromkeys(cols)
+                  if c not in ("doc_id", "score", "doc_len")]
+        tbl = self._dataset("docs.parquet").to_table(
+            columns=["doc_id", *stored], filter=ids)
+        if "doc_len" in cols:
+            lens = self._dataset("doclen").to_table(filter=ids)
+            by_doc = dict(zip(lens.column("doc_id").to_pylist(),
+                              lens.column("doc_len").to_pylist()))
+            tbl = tbl.append_column("doc_len", pa.array(
+                [by_doc.get(d, 0) for d in tbl.column("doc_id").to_pylist()],
+                pa.int32()))
+        by_id = {r["doc_id"]: r for r in tbl.to_pylist()}
+        out = []
+        for d, s in hits:
+            r = by_id.get(d)
+            if r is None:
+                continue  # not in the docs table: inner-join semantics
+            row = {"doc_id": d, "score": s}
+            for c in cols:
+                if c not in ("doc_id", "score"):
+                    row[c] = r[c]
+            out.append(row)
+        return out
 
     def matching_count(self, query_text: str) -> int:
         """numFound for an UNFILTERED scored request (Solr's exact hit count,

@@ -93,7 +93,7 @@ def test_search_lifecycle_boolean_syntax(engine):
     # numFound is the boolean match domain, not the OR-of-terms domain
     dom = execute_boolean(engine.reader, q, 10_000).count()
     assert rsp["response"]["numFound"] == dom
-    or_dom = engine.reader.matching_docs("posting segment").count()
+    or_dom = engine.reader.scored_domain("posting segment").count()
     assert dom < or_dom  # MUST_NOT actually excluded
 
 
@@ -557,34 +557,40 @@ def test_reporting_log_roundtrips_into_stats(spark, engine, tmp_path, caplog):
 
 
 def test_one_domain_decode_per_request(engine, monkeypatch):
-    """A scored+fq+facet request computes the facet/numFound domain ONCE:
-    ``matching_docs`` (the query-term postings-decode plan) is built exactly
-    once, and every facet family acts on a PERSISTED domain that numFound's
-    count() has already materialized — the reference holds one searcher
-    snapshot per request (SearchOp.java:133-148). Round 2 rebuilt the decode
-    per facet family."""
+    """A scored+fq+facet request decodes the query-term postings ONCE:
+    ``scored_domain`` (the one scored pass) is built exactly once, and every
+    facet family acts on a domain whose match side is that PERSISTED frame
+    — no second kernel plan — the reference holds one searcher snapshot per
+    request (SearchOp.java:133-148). Round 2 rebuilt the decode per facet
+    family."""
     from solrutils_spark.operators import executor as ex_mod
     from solrutils_spark.query.engine import IndexReader
 
     decode_plans: list[str] = []
-    orig_matching = IndexReader.matching_docs
+    orig_scored = IndexReader.scored_domain
 
-    def spy_matching(self, q):
+    def spy_scored(self, q, **kw):
         decode_plans.append(q)
-        return orig_matching(self, q)
+        return orig_scored(self, q, **kw)
 
-    monkeypatch.setattr(IndexReader, "matching_docs", spy_matching)
+    monkeypatch.setattr(IndexReader, "scored_domain", spy_scored)
 
     facet_domain_cached: list[bool] = []
     orig_field_facet = ex_mod.field_facet
     orig_query_facets = ex_mod.query_facets
 
+    def reads_persisted_matches(domain) -> bool:
+        # the kernel may appear only INSIDE the cached relation's plan
+        plan = domain._jdf.queryExecution().optimizedPlan().toString()
+        outside, cached = (plan.split("InMemoryRelation", 1) + [""])[:2]
+        return bool(cached) and "FlatMap" not in outside
+
     def spy_field_facet(domain, spec, **kw):
-        facet_domain_cached.append(domain.storageLevel.useMemory)
+        facet_domain_cached.append(reads_persisted_matches(domain))
         return orig_field_facet(domain, spec, **kw)
 
     def spy_query_facets(domain, specs, **kw):
-        facet_domain_cached.append(domain.storageLevel.useMemory)
+        facet_domain_cached.append(reads_persisted_matches(domain))
         return orig_query_facets(domain, specs, **kw)
 
     monkeypatch.setattr(ex_mod, "field_facet", spy_field_facet)
@@ -596,9 +602,160 @@ def test_one_domain_decode_per_request(engine, monkeypatch):
     )
     assert rsp["response"]["numFound"] > 0
     assert len(decode_plans) == 1  # one decode plan per request
-    # both facet families read the persisted domain (numFound's count()
-    # already materialized it — execute() orders count before _add_facets)
     assert facet_domain_cached == [True, True]
+
+
+@pytest.fixture(scope="module")
+def serving(spark, engine):
+    """An executor over a serving-cached reader of the ``engine`` index."""
+    reader = IndexReader(spark, engine.reader.index_dir).cache_for_serving()
+    yield PlanExecutor(reader.docs, reader)
+    reader.index.unpersist()
+
+
+def _request_jobs(spark, executor, req, group):
+    """(response, Spark job count) of one request run under a caller-set
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "request job budget")
+    try:
+        rsp = executor.search(MODEL, req)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rsp, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_request_job_budget(spark, serving, monkeypatch):
+    """A ranked q + fq + facet request over the serving cache runs at most 8
+    Spark jobs (12 before it took hits, numFound and facets from one
+    persisted scored domain) and builds that domain once. A Lucene-syntax
+    request evaluates its boolean plan once: 7 jobs here, 16 before."""
+    from solrutils_spark.query import qparser
+    from solrutils_spark.query.engine import IndexReader
+
+    req = {"query": "posting segment", "filter": {"lang": "py"},
+           "facet": ["lang"]}
+    _request_jobs(spark, serving, req, "budget-warm")  # fills the filterCache
+    built: list[str] = []
+    orig_scored = IndexReader.scored_domain
+
+    def spy_scored(self, q, **kw):
+        built.append(q)
+        return orig_scored(self, q, **kw)
+
+    monkeypatch.setattr(IndexReader, "scored_domain", spy_scored)
+    rsp, jobs = _request_jobs(spark, serving, req, "budget-ranked")
+    assert rsp["response"]["numFound"] > 0
+    assert jobs <= 8, jobs
+    assert built == ["posting segment"]
+
+    evaluated: list[str] = []
+    orig_boolean = qparser.boolean_scored
+
+    def spy_boolean(reader, q):
+        evaluated.append(q)
+        return orig_boolean(reader, q)
+
+    monkeypatch.setattr(qparser, "boolean_scored", spy_boolean)
+    lucene = {"query": "+posting -segment", "rows": 5.0}
+    _request_jobs(spark, serving, lucene, "budget-lucene-warm")
+    evaluated.clear()
+    rsp, jobs = _request_jobs(spark, serving, lucene, "budget-lucene")
+    assert rsp["response"]["numFound"] > 0
+    assert evaluated == ["+posting -segment"]
+    assert jobs < 16, jobs
+
+
+@pytest.fixture(scope="module")
+def engine_oracle(engine):
+    from solrutils_spark.oracle.reference_bm25 import OracleIndex
+
+    rows = engine.collection.select("doc_id", "content", "lang").collect()
+    oracle = OracleIndex([(r["doc_id"], r["content"]) for r in rows])
+    return oracle, {r["doc_id"]: r["lang"] for r in rows}
+
+
+# oracle match sets of the Lucene-syntax parity requests (a SHOULD clause
+# beside a MUST one only scores)
+LUCENE_MATCHES = {
+    "+posting -segment":
+        lambda o: set(o.postings["posting"]) - set(o.postings["segment"]),
+    '+posting "posting segment"': lambda o: set(o.postings["posting"]),
+}
+
+
+def _parity_requests(oracle):
+    """Fixed edge cases plus seeded 1-3-term draws from the vocabulary."""
+    import random
+
+    reqs = [
+        {"query": "posting segment", "filter": {"lang": "py"},
+         "facet": ["lang", "py_docs"], "page": 3.0, "rows": 4.0},
+        {"query": "posting segment", "rows": 6.0},               # no fq, no facet
+        {"query": "parseDateTime", "rows": 1000.0, "facet": ["lang"]},  # rows > numFound
+        {"query": "segment", "filter": {"lang": "go"}, "rows": 3.0},     # single term
+        {"query": "zzzabsentzzz", "facet": ["lang"]},             # absent term
+        {"query": "posting zzzabsentzzz", "filter": {"lang": "py"}},
+        {"query": "+posting -segment", "filter": {"lang": "py"},  # Lucene branch
+         "facet": ["lang"], "page": 2.0, "rows": 5.0},
+        {"query": '+posting "posting segment"', "rows": 1000.0},
+    ]
+    rng = random.Random(20)
+    vocab = sorted(oracle.postings)
+    for i in range(6):
+        q = " ".join(rng.sample(vocab, 1 + i % 3))
+        req = {"query": q, "rows": float(rng.choice([1, 5, 20])),
+               "page": float(rng.choice([0, 0, 2]))}
+        if i % 2:
+            req["filter"] = {"lang": rng.choice(["py", "go", "js"])}
+        if i % 3:
+            req["facet"] = ["lang"]
+        reqs.append(req)
+    return reqs
+
+
+def test_scored_request_parity(spark, engine, engine_oracle):
+    """Executor responses equal the engine's own paths and the oracle: docs
+    (ids, exact scores, key order) == ``reader.search`` (or
+    ``execute_boolean`` for Lucene syntax) with the same rows/offset/filter,
+    numFound == the oracle's match count ∩ fq, facet buckets == a groupBy
+    over the docs the oracle matches ∩ fq."""
+    from solrutils_spark.functions.analyzer import analyze
+    from solrutils_spark.query.qparser import execute_boolean, is_lucene_syntax
+
+    oracle, lang_of = engine_oracle
+    reader = engine.reader
+    for req in _parity_requests(oracle):
+        q = req["query"]
+        rows, start = int(req.get("rows", 5)), int(req.get("page", 0))
+        lang = req.get("filter", {}).get("lang")
+        fdf = (engine.collection.filter(F.col("lang") == lang).select("doc_id")
+               if lang else None)
+        rsp = engine.search(MODEL, req)
+        if is_lucene_syntax(q):
+            want = execute_boolean(reader, q, rows, offset=start, filter_df=fdf)
+            matches = LUCENE_MATCHES[q](oracle)
+        else:
+            want = reader.search(q, rows, offset=start, filter_df=fdf)
+            matches = set(oracle.docs_with_any(sorted(set(analyze(q)))))
+        if lang:
+            matches = {d for d in matches if lang_of[d] == lang}
+        docs = rsp["response"]["docs"]
+        assert [(d["doc_id"], d["score"]) for d in docs] == [
+            (r["doc_id"], r["score"]) for r in want.collect()], req
+        assert all(list(d) == ["doc_id", "score", "repo", "path", "commit",
+                               "lang"] for d in docs), req
+        assert rsp["response"]["numFound"] == len(matches), req
+        if "facet" not in req:
+            assert "facets" not in rsp, req
+            continue
+        counts: dict = {}
+        for d in matches:
+            counts[lang_of[d]] = counts.get(lang_of[d], 0) + 1
+        want_buckets = [{"val": v, "count": n} for v, n in
+                        sorted(counts.items(), key=lambda x: (-x[1], x[0]))]
+        assert rsp["facets"]["lang"]["buckets"] == want_buckets, req
 
 
 def test_xslt_params_do_not_leak_across_apply_templates():
@@ -1473,7 +1630,7 @@ def test_lucene_syntax_fq(engine):
     # over the metadata columns): equals the engine's distributed filter_df
     got = ids("content:segment AND lang:py")
     want_dom = {r["doc_id"] for r in
-                engine.reader.matching_docs("segment").collect()}
+                engine.reader.scored_domain("segment").collect()}
     sql_py = set(ids("lang = 'py'"))
     assert got and set(got) == {d for d in sql_py if d in want_dom}
     # a marker-free string SQL rejects is loud (the SQL error propagates
@@ -1499,7 +1656,7 @@ def test_lucene_syntax_facet_query(engine):
     )
     n_py = domain.filter("lang = 'py'").count()
     seg_ids = {r["doc_id"] for r in
-               engine.reader.matching_docs("segment").collect()}
+               engine.reader.scored_domain("segment").collect()}
     n_seg_py = domain.filter("lang = 'py'").filter(
         F.col("doc_id").isin(list(seg_ids))).count()
     n_either = domain.filter("lang in ('py','go')").count()

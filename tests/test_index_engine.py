@@ -190,11 +190,11 @@ def test_cache_for_serving_rank_identical(spark, index_dir, oracle):
 
 
 def test_matching_count_exact(reader, oracle):
-    """numFound fast path == materialized doc-set count == oracle hit count
+    """numFound fast path == scored doc-set count == oracle hit count
     (single-term df shortcut AND multi-term per-slice counting)."""
     for qtext in ["posting", "segment", "posting segment", "delta encode posting list"]:
         n = reader.matching_count(qtext)
-        assert n == reader.matching_docs(qtext).distinct().count(), qtext
+        assert n == reader.scored_domain(qtext).select("doc_id").distinct().count(), qtext
         assert n == len(oracle.search(qtext, N_DOCS + 1)), qtext
     assert reader.matching_count("zzzabsent") == 0
 
@@ -206,7 +206,7 @@ def test_paging_offset(reader):
 
 
 def test_fetch_joins_stored_fields(reader):
-    rows = reader.fetch(reader.search("posting segment", 5)).collect()
+    rows = reader.fetch(reader.search("posting segment", 5).collect())
     assert len(rows) == 5
     assert all(r["path"] and r["repo"] for r in rows)
 
@@ -601,6 +601,26 @@ def test_cache_for_serving_reconfigure_drops_aligned_filters(spark, index_dir):
         for _src, aligned, owned in reader._filter_align_cache.values():
             if owned:
                 aligned.unpersist()
+        reader.index.unpersist()
+
+
+def test_cache_for_serving_twice_keeps_one_cached_copy(spark, index_dir):
+    """Re-calling cache_for_serving unpersists the index copy the previous
+    call cached: after two calls one persisted index frame remains."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    reader = IndexReader(spark, index_dir).cache_for_serving(4)
+    first = reader.index
+    try:
+        reader.cache_for_serving(2)
+        assert not first.is_cached
+        assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
+        got = [r["doc_id"] for r in reader.search("posting segment", 5).collect()]
+        want = [r["doc_id"] for r in
+                IndexReader(spark, index_dir).search("posting segment", 5).collect()]
+        assert got == want
+    finally:
+        first.unpersist()
         reader.index.unpersist()
 
 
