@@ -36,8 +36,13 @@ rest of that delegated surface, Spark-first:
 
 All paths reuse the engine's layout: candidate rows pruned to the query
 terms' hash buckets, per-salt-slice kernels over the same delta+VByte
-payloads (``decode_run``), slice outputs unioned with no extra shuffle
-(slices are disjoint doc ranges).
+payloads (``decode_run``) run through the reader's one grouped stage
+(``IndexReader._per_slice``), slice outputs unioned with no extra shuffle
+(slices are disjoint doc ranges). Scored OR clauses of the Lucene-syntax
+executor (term clauses, single-token phrases) are not scored here: they
+reuse :meth:`IndexReader.scored_domain` (the exhaustive
+``wand.topk_slice_batch`` pass the ranked paths share), so a clause scores
+every doc bit-identically to ``IndexReader.search``.
 """
 
 from __future__ import annotations
@@ -46,7 +51,6 @@ import re
 from pathlib import Path
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -187,31 +191,6 @@ def topk_conj(
     return d[order], s[order]
 
 
-def scored_matches_slice(
-    rows, idf_by_term: dict[str, float], avgdl: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """ALL (doc_id, score) of one slice under OR semantics — the exhaustive
-    per-clause contribution used by the boolean executor (no top-k cut:
-    clause contributions must survive to the cross-clause aggregation).
-    Contributions add in the shared ``(-idf, term)`` order."""
-    ds: list[np.ndarray] = []
-    cs: list[np.ndarray] = []
-    for r in sorted(rows, key=lambda r: (-idf_by_term[r.term], r.term, r.salt)):
-        bo = r.block_offset
-        d, tf, dl = decode_run(r.payload, int(r.df_part), bo, 0, len(bo), 0)
-        ds.append(d)
-        cs.append(idf_by_term[r.term] * _tfn(tf, dl, avgdl))
-    if not ds:
-        return _EMPTY
-    d = np.concatenate(ds)
-    c = np.concatenate(cs)
-    order = np.argsort(d, kind="stable")
-    d, c = d[order], c[order]
-    uniq, start = np.unique(d, return_index=True)
-    sums = np.add.reduceat(c, start)
-    return uniq, sums
-
-
 # ------------------------------------------------- distributed surface ----
 
 
@@ -287,22 +266,22 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
         )
     avgdl = float(reader.stats["avgdl"])
     live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
-    cand = reader._candidate_rows(live_terms)
 
-    def kernel(tbl: pa.Table) -> pa.Table:
+    def slice_conj_batch(rows, _allowed):
         rows_by_term: dict[str, list] = {}
-        for r in arrow_rows.rows_from_arrow(tbl):
+        for r in rows:
             rows_by_term.setdefault(r.term, []).append(r)
         results = []
         for qid, idf_by_term, k in plans:
             if any(t not in rows_by_term for t in idf_by_term):
                 continue  # slice lacks a term ⇒ no conjunctive match here
-            rows = [r for t in idf_by_term for r in rows_by_term[t]]
-            results.append((qid, *topk_conj(rows, idf_by_term, avgdl, k,
+            qrows = [r for t in idf_by_term for r in rows_by_term[t]]
+            results.append((qid, *topk_conj(qrows, idf_by_term, avgdl, k,
                                             n_terms=len(idf_by_term))))
         return arrow_rows.batch_table(results)
 
-    sliced = cand.groupBy("salt").applyInArrow(kernel, BATCH_DDL)
+    sliced = reader._per_slice(reader._candidate_rows(live_terms),
+                               slice_conj_batch, BATCH_DDL)
     k_df = reader.spark.createDataFrame(
         [(qid, k) for qid, _, k in plans], "query_id long, k int"
     )
@@ -313,23 +292,6 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
         .filter(F.col("rank") <= F.col("k"))
         .drop("k")
     )
-
-
-def scored_matches(reader, terms: list[str]) -> DataFrame:
-    """ALL (doc_id, score) under OR semantics — exhaustive disjunctive
-    contributions for the boolean executor (domain = ≥1 term present)."""
-    terms = sorted(set(terms))
-    live, idf_by_term = _live_terms(reader, terms)
-    if not live:
-        return reader.spark.createDataFrame([], TOPK_DDL)
-    avgdl = float(reader.stats["avgdl"])
-    cand = reader._candidate_rows(live)
-
-    def kernel(tbl: pa.Table) -> pa.Table:
-        return arrow_rows.topk_table(*scored_matches_slice(
-            arrow_rows.rows_from_arrow(tbl), idf_by_term, avgdl))
-
-    return cand.groupBy("salt").applyInArrow(kernel, TOPK_DDL)
 
 
 # --------------------------------------------------------------- phrase ----
@@ -574,10 +536,11 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
     """ALL (doc_id, score) pairs matching the phrase (un-limited — the
     boolean executor needs every contribution, not a top-k cut).
 
-    One grouped ``applyInArrow`` stage over the phrase terms' candidate rows
-    read WITH the positional sidecar: each salt slice runs :func:`phrase_slice`, which
-    decodes positions only for the blocks the conjunction certificate keeps
-    (so a phrase of two Zipf-head terms never re-reads the corpus)."""
+    One grouped stage (``IndexReader._per_slice``) over the phrase terms'
+    candidate rows read WITH the positional sidecar: each salt slice runs
+    :func:`phrase_slice`, which decodes positions only for the blocks the
+    conjunction certificate keeps (so a phrase of two Zipf-head terms never
+    re-reads the corpus)."""
     seq = analyze(phrase_text)
     if not seq:
         return reader.spark.createDataFrame([], TOPK_DDL)
@@ -586,13 +549,13 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
     if len(live) < len(uniq):
         return reader.spark.createDataFrame([], TOPK_DDL)
     avgdl = float(reader.stats["avgdl"])
-    cand_rows = reader._candidate_rows_with_positions(uniq)
 
-    def pkernel(tbl: pa.Table) -> pa.Table:
+    def slice_phrase(rows, _allowed):
         return arrow_rows.topk_table(*phrase_slice(
-            arrow_rows.rows_from_arrow(tbl), seq, idf_by_term, avgdl, slop))
+            rows, seq, idf_by_term, avgdl, slop))
 
-    return cand_rows.groupBy("salt").applyInArrow(pkernel, TOPK_DDL)
+    return reader._per_slice(reader._candidate_rows_with_positions(uniq),
+                             slice_phrase, TOPK_DDL)
 
 
 # ---------------------------------------------- multi-term expansions ----
@@ -695,13 +658,13 @@ def multi_term_docs(reader, terms: list[str]) -> DataFrame:
     live = sorted(t for t, d in dfs.items() if d)
     if not live:
         return reader.spark.createDataFrame([], TOPK_DDL)
-    cand = reader._candidate_rows(live)
 
-    def kernel(tbl: pa.Table) -> pa.Table:
-        docs = arrow_rows.slice_doc_ids(arrow_rows.rows_from_arrow(tbl))
+    def slice_docs(rows, _allowed):
+        docs = arrow_rows.slice_doc_ids(rows)
         return arrow_rows.topk_table(docs, np.ones(docs.size))
 
-    return cand.groupBy("salt").applyInArrow(kernel, TOPK_DDL)
+    return reader._per_slice(reader._candidate_rows(live), slice_docs,
+                             TOPK_DDL)
 
 
 def prefix_search(

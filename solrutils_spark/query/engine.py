@@ -28,16 +28,12 @@ once per request and takes the ranked page, numFound and the facet domain
 from that one frame.
 
 Filters (P2, ``fq``) never affect scores — Lucene ``setIsFilter(true)``
-semantics (BulkUpdateHandler.java:59). Two shapes:
-
-- ``filter_df`` (the scale path): the filtered domain's doc_ids stay a
-  DataFrame; each id is mapped to its salt slice by pure arithmetic
-  (salt = doc_id // (segment_size·salt_group), geometry from stats.json)
-  and COGROUPed with the candidate postings, so every kernel receives only
-  its own slice's allowed ids — one keyed shuffle of (doc_id, salt) rows,
-  nothing ever collected to the driver.
-- ``filter_doc_ids`` (explicit small lists, e.g. rerank candidate sets):
-  a driver-provided array broadcast into every kernel.
+semantics (BulkUpdateHandler.java:59). The filter is a ``filter_df``: the
+filtered domain's doc_ids stay a DataFrame; each id is mapped to its salt
+slice by pure arithmetic (salt = doc_id // (segment_size·salt_group),
+geometry from stats.json) and COGROUPed with the candidate postings, so
+every kernel receives only its own slice's allowed ids — one keyed shuffle
+of (doc_id, salt) rows, nothing ever collected to the driver.
 
 WAND pruning stays ON under filters: θ accumulates over allowed docs only,
 and block upper bounds remain valid for any doc — rank-identical (pinned).
@@ -46,7 +42,9 @@ and block upper bounds remain valid for any doc — rank-identical (pinned).
 from __future__ import annotations
 
 import math
+from collections import OrderedDict
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -68,6 +66,14 @@ from solrutils_spark.query.wand import topk_rows
 TOPK_DDL = "doc_id long, score double"
 
 
+class _AlignedFilter(NamedTuple):
+    """One entry of :meth:`IndexReader._aligned_filter`'s cache."""
+
+    source: DataFrame  # the caller's frame: pins it so its id() stays unique
+    aligned: DataFrame  # salted, co-partitioned with the serving cache
+    owned: bool  # the reader persisted ``aligned`` (eviction unpersists it)
+
+
 class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -78,11 +84,9 @@ class IndexReader:
         self._df_cache: dict[str, int] = {}
         self._datasets: dict[str, object] = {}
         self._serving_partitions: int | None = None
-        # filter-alignment cache: id(filter_df) → (source ref, aligned df,
-        # owned). Bounded LRU; see _aligned_filter.
-        from collections import OrderedDict
-
-        self._filter_align_cache: "OrderedDict[int, tuple]" = OrderedDict()
+        # filter-alignment cache: id(filter_df) → _AlignedFilter. Bounded
+        # LRU; see _aligned_filter.
+        self._filter_align_cache: OrderedDict[int, _AlignedFilter] = OrderedDict()
         self._filter_align_max = 8
 
     @property
@@ -139,9 +143,9 @@ class IndexReader:
             num_partitions = min(4 * int(self.stats["num_salts"]), shuffle_parts)
         num_partitions = int(num_partitions)
         if self._serving_partitions not in (None, num_partitions):
-            for _src, aligned, owned in self._filter_align_cache.values():
-                if owned:
-                    aligned.unpersist()
+            for entry in self._filter_align_cache.values():
+                if entry.owned:
+                    entry.aligned.unpersist()
             self._filter_align_cache.clear()
         previous = self.index if self._serving_partitions is not None else None
         self.index = self.index.repartition(num_partitions, "salt").persist()
@@ -216,7 +220,9 @@ class IndexReader:
     def _per_slice(self, cand: DataFrame, fn, schema: str,
                    filter_df: DataFrame | None = None) -> DataFrame:
         """``fn(rows, allowed) → pa.Table`` on every salt slice of ``cand``
-        in one ``applyInArrow`` stage — the shape of every scored query.
+        in one ``applyInArrow`` stage — the one grouped-kernel shape of every
+        query in ``query/`` (ranked, batch, conjunctive, phrase, multi-term,
+        counting).
 
         Without ``filter_df``, ``allowed`` is None. With it, the filter ids
         are salted and co-partitioned (:meth:`_aligned_filter`) and
@@ -285,7 +291,14 @@ class IndexReader:
         filterCache semantics like PlanExecutor._cached_filter_ids):
         at most ``_filter_align_max`` aligned domains are resident, eviction
         unpersists. On a correctly co-partitioned cluster deployment the
-        counts match and this cache never engages (zero extra memory)."""
+        counts match and this cache never engages (zero extra memory).
+
+        The pass-through check trusts the partition COUNT, not the frame's
+        ``outputPartitioning``: a filter with the right count but not
+        hash-partitioned on ``salt`` (e.g. round-robin ``repartition(n)``) is
+        passed through unchanged. Results stay correct — EnsureRequirements
+        still inserts the exchange the cogroup needs — but that frame keeps
+        its per-query exchange."""
         n = self._serving_partitions
         if n is None:
             return self.salted_filter(filter_df)
@@ -293,7 +306,7 @@ class IndexReader:
         hit = self._filter_align_cache.pop(key, None)
         if hit is not None:
             self._filter_align_cache[key] = hit  # re-insert → most recent
-            return hit[1]
+            return hit.aligned
         fids = self.salted_filter(filter_df)
         try:
             cur = fids.rdd.getNumPartitions()
@@ -306,14 +319,12 @@ class IndexReader:
             aligned, owned = fids, False
         else:
             aligned, owned = fids.repartition(n, "salt").persist(), True
-        # the source ref pins the caller's frame so id() stays unique for
-        # the cache entry's lifetime; `owned` marks frames WE persisted
-        # (eviction must not unpersist a caller's own cache)
-        self._filter_align_cache[key] = (filter_df, aligned, owned)
+        # eviction must not unpersist a caller's own cache (owned=False)
+        self._filter_align_cache[key] = _AlignedFilter(filter_df, aligned, owned)
         if len(self._filter_align_cache) > self._filter_align_max:
             _, old = self._filter_align_cache.popitem(last=False)
-            if old[2]:
-                old[1].unpersist()
+            if old.owned:
+                old.aligned.unpersist()
         return aligned
 
     def search(
@@ -322,14 +333,12 @@ class IndexReader:
         k: int = 10,
         *,
         offset: int = 0,
-        filter_doc_ids: list[int] | None = None,
         filter_df: DataFrame | None = None,
     ) -> DataFrame:
         """Disjunctive BM25 top-k → DataFrame(doc_id, score), ranked.
 
-        ``filter_df``: single-column DataFrame of allowed doc_ids — the
-        DISTRIBUTED filter path (see module docstring). ``filter_doc_ids``:
-        small driver-side list. Both are P2 semantics (restrict, never score).
+        ``filter_df``: single-column DataFrame of allowed doc_ids (see module
+        docstring) — P2 semantics (restrict, never score).
         """
         terms = query_terms(query_text)
         dfs = self.term_dfs(terms)
@@ -340,16 +349,10 @@ class IndexReader:
         idf_by_term = {t: self.idf(dfs[t]) for t in terms}
         avgdl = float(self.stats["avgdl"])
         fetch_k = k + offset
-        listed = (
-            np.sort(np.asarray(filter_doc_ids, dtype=np.int64))
-            if filter_doc_ids is not None
-            else None
-        )
 
         def slice_topk(rows, allowed):
             return arrow_rows.topk_table(*wand.topk_rows(
-                rows, idf_by_term, avgdl, fetch_k,
-                allowed_docs=listed if allowed is None else allowed))
+                rows, idf_by_term, avgdl, fetch_k, allowed_docs=allowed))
 
         sliced = self._per_slice(self._candidate_rows(terms), slice_topk,
                                  TOPK_DDL, filter_df)
@@ -629,11 +632,11 @@ class IndexReader:
             return 0
         if len(live) == 1:
             return int(dfs[live[0]])
-        cand = self._candidate_rows(live)
 
-        def count_slice(tbl: pa.Table) -> pa.Table:
-            ids = arrow_rows.slice_doc_ids(arrow_rows.rows_from_arrow(tbl))
+        def count_slice(rows, _allowed):
+            ids = arrow_rows.slice_doc_ids(rows)
             return pa.table({"n": pa.array([ids.size], pa.int64())})
 
-        rows = cand.groupBy("salt").applyInArrow(count_slice, "n long").collect()
-        return int(sum(r["n"] for r in rows))
+        counts = self._per_slice(self._candidate_rows(live), count_slice,
+                                 "n long").collect()
+        return int(sum(r["n"] for r in counts))

@@ -73,7 +73,6 @@ from solrutils_spark.query.boolean import (
     expand_wildcard,
     multi_term_docs,
     phrase_scored,
-    scored_matches,
 )
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
@@ -353,16 +352,15 @@ def _clause_scored(reader, cl: Clause) -> DataFrame | None:
     """(doc_id, score) of ALL docs the clause matches; None = clause has no
     live terms (matches nothing)."""
     if cl.kind == "term":
-        terms = sorted(set(analyze(cl.text)))
-        if not terms:
+        if not analyze(cl.text):
             return None
-        df = scored_matches(reader, terms)
+        df = reader.scored_domain(cl.text)
     elif cl.kind == "phrase":
         seq = analyze(cl.text)
         if not seq:
             return None
         if len(seq) == 1:
-            df = scored_matches(reader, seq)
+            df = reader.scored_domain(cl.text)
         else:
             df = phrase_scored(reader, cl.text, slop=cl.slop)
     elif cl.kind == "wildcard":
@@ -425,16 +423,15 @@ def _node_matches(reader, node) -> DataFrame | None:
         return None if inner is None else inner.select("doc_id")
     cl = node
     if cl.kind == "term":
-        terms = sorted(set(analyze(cl.text)))
-        if not terms:
+        if not analyze(cl.text):
             return None
-        return scored_matches(reader, terms).select("doc_id")
+        return reader.scored_domain(cl.text).select("doc_id")
     if cl.kind == "phrase":
         seq = analyze(cl.text)
         if not seq:
             return None
         if len(seq) == 1:
-            return scored_matches(reader, seq).select("doc_id")
+            return reader.scored_domain(cl.text).select("doc_id")
         return phrase_scored(reader, cl.text, slop=cl.slop).select("doc_id")
     if cl.kind == "wildcard":
         return multi_term_docs(reader, expand_wildcard(reader, cl.text)).select(

@@ -102,11 +102,12 @@ def test_wand_equals_exhaustive(reader):
         assert w and w == exhaustive[qid]
 
 
-def test_filtered_search_restricts_but_never_scores(reader, oracle):
+def test_filtered_search_restricts_but_never_scores(spark, reader, oracle):
     qtext = "posting segment"
     unfiltered = [(r["doc_id"], r["score"]) for r in reader.search(qtext, 50).collect()]
     allowed = [d for d, _ in unfiltered if d % 2 == 0]
-    got = [(r["doc_id"], r["score"]) for r in reader.search(qtext, 10, filter_doc_ids=allowed).collect()]
+    fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long")
+    got = [(r["doc_id"], r["score"]) for r in reader.search(qtext, 10, filter_df=fdf).collect()]
     assert all(d % 2 == 0 for d, _ in got)
     # scores identical to unfiltered run for surviving docs (filters never score)
     unf = dict(unfiltered)
@@ -114,20 +115,20 @@ def test_filtered_search_restricts_but_never_scores(reader, oracle):
         assert s == pytest.approx(unf[d], abs=1e-12)
 
 
-def test_filter_df_distributed_equals_driver_list(spark, reader, oracle):
+def test_filter_df_distributed_equals_exhaustive(spark, reader, oracle):
     """The cogroup filter path (no driver collect) must be rank- and
-    score-identical to the driver-list path AND to the oracle restricted to
-    the filtered domain — broad filter (1/3 of the corpus)."""
+    score-identical to the exhaustive batch kernel under the same filter AND
+    to the oracle restricted to the filtered domain — broad filter (1/3 of
+    the corpus)."""
     allowed = [d for d in range(N_DOCS) if d % 3 == 0]
     fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long")
-    for qid, qtext, k in reference_queries():
-        if qid % 3:
-            continue  # subset for runtime; spans hot/mid/rare-term shapes
+    qs = [(qid, qtext, k) for qid, qtext, k in reference_queries()
+          if qid % 3 == 0]  # subset for runtime; spans hot/mid/rare-term shapes
+    exhaustive = _batch_ranked(reader, qs, filter_df=fdf)
+    for qid, qtext, k in qs:
         via_df = [(r["doc_id"], r["score"])
                   for r in reader.search(qtext, k, filter_df=fdf).collect()]
-        via_list = [(r["doc_id"], r["score"])
-                    for r in reader.search(qtext, k, filter_doc_ids=allowed).collect()]
-        assert via_df == via_list, f"q{qid} {qtext!r}"
+        assert via_df == exhaustive.get(qid, []), f"q{qid} {qtext!r}"
         expected = [(d, s) for d, s in oracle.search(qtext, N_DOCS) if d % 3 == 0][:k]
         assert [d for d, _ in via_df] == [d for d, _ in expected], f"q{qid} {qtext!r}"
         for (gd, gs), (_, es) in zip(via_df, expected):
@@ -476,9 +477,9 @@ def test_maxscore_lookup_mode_engages_and_stays_exact(spark, tmp_path):
 def test_aligned_filter_copartitions_and_is_rank_identical(spark, index_dir):
     """Serving-mode filter alignment (round 6): a filterCache persisted at a
     partition count differing from the serving cache is re-partitioned ONCE,
-    persisted, and memoized (LRU) — results identical to the driver-list
-    path, the cache engages exactly once per filter frame, and eviction
-    unpersists."""
+    persisted, and memoized (LRU) — results identical to the exhaustive
+    batch kernel under the same filter, the cache engages exactly once per
+    filter frame, and eviction unpersists."""
     reader = IndexReader(spark, index_dir).cache_for_serving()
     try:
         n_serving = reader._serving_partitions
@@ -496,8 +497,7 @@ def test_aligned_filter_copartitions_and_is_rank_identical(spark, index_dir):
         qtext = "posting segment lucene"
         got = [(r["doc_id"], r["score"])
                for r in reader.search(qtext, 10, filter_df=fdf).collect()]
-        exp = [(r["doc_id"], r["score"])
-               for r in reader.search(qtext, 10, filter_doc_ids=allowed).collect()]
+        exp = _batch_ranked(reader, [(0, qtext, 10)], filter_df=fdf)[0]
         assert got == exp
         # cache engaged: one aligned entry, co-partitioned with the serving
         # cache and owned (persisted) by the reader
@@ -524,8 +524,8 @@ def test_aligned_filter_copartitions_and_is_rank_identical(spark, index_dir):
         assert got_ok == exp
         assert len(reader._filter_align_cache) == 2
         ok_entry = reader._filter_align_cache[id(fdf_ok)]
-        assert not ok_entry[2]                      # not owned: no persist
-        assert ok_entry[1].rdd.getNumPartitions() == n_serving
+        assert not ok_entry.owned                   # not owned: no persist
+        assert ok_entry.aligned.rdd.getNumPartitions() == n_serving
         # LRU bound: flooding with distinct mismatched frames evicts oldest
         reader._filter_align_max = 2
         frames = []

@@ -373,6 +373,35 @@ def test_boolean_or_equals_search(reader):
     assert a == b
 
 
+def test_lucene_term_clause_scores_equal_search(reader, oracle):
+    """A Lucene term clause scores through the ranked path's kernel: a
+    MUST clause whose text analyzes to ≥3 terms (``a_b_c_…`` splits at the
+    underscores) ranks and scores exactly like ``search`` on the same text,
+    compared by exact ``==`` — the clause-sum association is the shared
+    ``(-idf, term)`` order, not a second summation."""
+    rng = np.random.default_rng(20)
+    doc_ids = sorted(oracle.tokens)
+    idents = []
+    for d in rng.permutation(doc_ids):
+        toks = sorted({t for t in oracle.tokens[int(d)]
+                       if t.isascii() and t.isalpha()})
+        if len(toks) < 6:
+            continue
+        picked = sorted(rng.choice(toks, size=6, replace=False).tolist())
+        ident = "_".join(picked)
+        if sorted(set(analyze(ident))) == picked:
+            idents.append(ident)
+        if len(idents) == 8:
+            break
+    assert len(idents) == 8
+    for ident in idents:
+        got = [(r["doc_id"], r["score"])
+               for r in execute_boolean(reader, "+" + ident, 10).collect()]
+        want = [(r["doc_id"], r["score"])
+                for r in reader.search(ident, 10).collect()]
+        assert got and got == want, ident
+
+
 def test_must_absent_term_matches_nothing(reader):
     assert execute_boolean(reader, "+zzzabsent posting", 10).count() == 0
 
