@@ -269,15 +269,10 @@ class PlanExecutor:
         filter_df = self._cached_filter_ids(plan) if plan.get_params("fq") else None
         if not is_lucene_syntax(q):
             return self.reader.scored_domain(q, filter_df=filter_df)
-        bscored = boolean_scored(self.reader, q)
+        bscored = boolean_scored(self.reader, q, filter_df=filter_df)
         if bscored is None:
             return self.reader.spark.createDataFrame([], TOPK_DDL)
-        if filter_df is None:
-            return bscored
-        return bscored.join(
-            filter_df.select(F.col(filter_df.columns[0]).cast("long").alias("doc_id")),
-            "doc_id", "leftsemi",
-        )
+        return bscored
 
     def _sorted(self, domain: DataFrame, plan: QueryPlan) -> DataFrame:
         sort = plan.get_param("sort")

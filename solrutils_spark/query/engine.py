@@ -82,6 +82,8 @@ class IndexReader:
         self.index = read_index(spark, index_dir)
         self._docs: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
+        # (field, value) → df of a metadata keyword clause (qparser)
+        self._field_df_cache: dict[tuple[str, str], int] = {}
         self._datasets: dict[str, object] = {}
         self._serving_partitions: int | None = None
         # filter-alignment cache: id(filter_df) → _AlignedFilter. Bounded

@@ -52,10 +52,11 @@ names — the same honest-gate contract as sources/minixslt.py.
 
 Execution is pure DataFrame algebra over per-clause retrievals — each text
 clause is an indexed posting read (bounded by its df), each metadata clause
-a pushed-down filter on the docs table, contributions union into one hash
-aggregation, domain restriction is semi/anti joins on doc_id. No
-driver-side doc loops; at cluster scale every step is a bounded shuffle
-keyed on doc_id.
+a pushed-down filter on the docs table. Each nesting level is one tagged
+union of its nodes' frames and one hash aggregation on doc_id that sums
+the score and counts MUST / MUST_NOT rows; the domain is a filter on those
+counts, with no joins. No driver-side doc loops; at cluster scale every
+step is a bounded shuffle keyed on doc_id.
 """
 
 from __future__ import annotations
@@ -376,9 +377,7 @@ def _clause_scored(reader, cl: Clause) -> DataFrame | None:
         # pushed-down parquet scan; memoized per (field, value) on the
         # reader (the docs table is immutable after build — same contract
         # as the termdf sidecar cache).
-        cache = getattr(reader, "_field_df_cache", None)
-        if cache is None:
-            cache = reader._field_df_cache = {}
+        cache = reader._field_df_cache
         key = (cl.field_name, cl.text)
         df_v = cache.get(key)
         if df_v is None:
@@ -413,81 +412,78 @@ def _node_scored(reader, node) -> DataFrame | None:
 
 
 def _node_matches(reader, node) -> DataFrame | None:
-    """doc_id set a node matches (for MUST_NOT exclusion).
-
-    Terms under MUST_NOT use OR-of-terms semantics within the clause (the
-    analyzer can split one input word into several tokens; Lucene's
-    ``-camelCase`` excludes docs matching the sub-query it parses to)."""
-    if isinstance(node, Group):
-        inner = _exec_nodes(reader, node.children)
-        return None if inner is None else inner.select("doc_id")
-    cl = node
-    if cl.kind == "term":
-        if not analyze(cl.text):
-            return None
-        return reader.scored_domain(cl.text).select("doc_id")
-    if cl.kind == "phrase":
-        seq = analyze(cl.text)
-        if not seq:
-            return None
-        if len(seq) == 1:
-            return reader.scored_domain(cl.text).select("doc_id")
-        return phrase_scored(reader, cl.text, slop=cl.slop).select("doc_id")
-    if cl.kind == "wildcard":
-        return multi_term_docs(reader, expand_wildcard(reader, cl.text)).select(
-            "doc_id"
-        )
-    if cl.kind == "fuzzy":
-        return multi_term_docs(
-            reader, expand_fuzzy(reader, cl.text, cl.max_edits, max_expansions=1024)
-        ).select("doc_id")
-    return _field_docs(reader, cl)
+    """doc_id set a MUST_NOT node matches. A metadata clause is its
+    pushed-down docs filter: negated, it never scores, so it must not pay
+    ``field_term``'s df count. Every other node is its scored frame."""
+    if isinstance(node, Clause) and node.kind in ("field_term",
+                                                  "field_wildcard", "range"):
+        return _field_docs(reader, node)
+    df = _node_scored(reader, node)
+    return None if df is None else df.select("doc_id")
 
 
 def _exec_nodes(reader, nodes: list) -> DataFrame | None:
     """BooleanQuery algebra over one nesting level → (doc_id, score) of ALL
-    matching docs, or None when the level can match nothing."""
+    matching docs, or None when the level can match nothing.
+
+    One tagged union, one aggregation: every node's frame is tagged with
+    its occur and a single ``groupBy("doc_id")`` sums the score and counts
+    the MUST and the MUST_NOT rows. A doc is kept when its MUST count
+    equals the number of MUST nodes and no MUST_NOT row is present; a kept
+    doc then has only positive rows, so with no MUST ≥1 SHOULD matched.
+    Each text clause's kernel runs once; a MUST_NOT row's score is never
+    summed into a kept doc.
+
+    Precondition: every node's frame has distinct doc_ids (salt slices are
+    disjoint, ``slice_doc_ids`` uniques, the docs table holds one row per
+    id), so a row count is a node count."""
     musts = [n for n in nodes if n.occur == MUST]
     shoulds = [n for n in nodes if n.occur == SHOULD]
     nots = [n for n in nodes if n.occur == MUST_NOT]
-    if not musts and not shoulds:
-        return None  # Lucene: no positive clause → no hits
-
-    contribs: list[DataFrame] = []
-    must_domains: list[DataFrame] = []
-    for n in musts:
+    tagged: list[DataFrame] = []
+    for n in musts + shoulds:
         df = _node_scored(reader, n)
         if df is None:
-            return None  # a MUST node that can't match → empty result
-        contribs.append(df)
-        must_domains.append(df.select("doc_id"))
-    for n in shoulds:
-        df = _node_scored(reader, n)
-        if df is not None:
-            contribs.append(df)
-    if not contribs:
-        return None
-
-    scored = contribs[0]
-    for df in contribs[1:]:
-        scored = scored.unionByName(df)
-    scored = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
-    # domain: every MUST present. With no MUST, the union already contains
-    # only docs where ≥1 SHOULD matched.
-    for dom in must_domains:
-        scored = scored.join(dom, "doc_id", "leftsemi")
+            if n.occur == MUST:
+                return None  # a MUST node that can't match → empty result
+            continue
+        tagged.append(df.select("doc_id", "score", F.lit(n.occur).alias("occur")))
+    if not tagged:
+        return None  # Lucene: no positive clause → no hits
     for n in nots:
-        nd = _node_matches(reader, n)
-        if nd is not None:
-            scored = scored.join(nd, "doc_id", "left_anti")
-    return scored
+        df = _node_matches(reader, n)
+        if df is not None:
+            tagged.append(df.select("doc_id", F.lit(0.0).alias("score"),
+                                    F.lit(MUST_NOT).alias("occur")))
+
+    union = tagged[0]
+    for df in tagged[1:]:
+        union = union.unionByName(df)
+    occur = F.col("occur")
+    return (union.groupBy("doc_id")
+            .agg(F.sum("score").alias("score"),
+                 F.count(F.when(occur == MUST, 1)).alias("musts"),
+                 F.count(F.when(occur == MUST_NOT, 1)).alias("nots"))
+            .filter((F.col("musts") == len(musts)) & (F.col("nots") == 0))
+            .select("doc_id", "score"))
 
 
-def boolean_scored(reader, q: str) -> DataFrame | None:
+def boolean_scored(reader, q: str, *,
+                   filter_df: DataFrame | None = None) -> DataFrame | None:
     """Parse ``q`` and return ALL (doc_id, score) matches (un-limited), or
     None when the query can match nothing — the building block the
-    PlanExecutor reuses for top-k, numFound and the facet domain."""
-    return _exec_nodes(reader, parse_query(q))
+    PlanExecutor reuses for top-k, numFound and the facet domain.
+
+    ``filter_df``: optional single-column DataFrame of allowed doc_ids (fq
+    semantics — restricts the domain, never scores)."""
+    scored = _exec_nodes(reader, parse_query(q))
+    if scored is None or filter_df is None:
+        return scored
+    fcol = filter_df.columns[0]
+    return scored.join(
+        filter_df.select(F.col(fcol).cast("long").alias("doc_id")),
+        "doc_id", "leftsemi",
+    )
 
 
 def apply_boolean_filter(df: DataFrame, id_column: str, reader, q: str) -> DataFrame:
@@ -528,15 +524,9 @@ def execute_boolean(reader, q: str, k: int = 10, *, offset: int = 0,
 
     ``filter_df``: optional single-column DataFrame of allowed doc_ids (fq
     semantics — restricts the domain BEFORE top-k, never scores)."""
-    scored = boolean_scored(reader, q)
+    scored = boolean_scored(reader, q, filter_df=filter_df)
     if scored is None:
         return reader.spark.createDataFrame([], TOPK_DDL)
-    if filter_df is not None:
-        fcol = filter_df.columns[0]
-        scored = scored.join(
-            filter_df.select(F.col(fcol).cast("long").alias("doc_id")),
-            "doc_id", "leftsemi",
-        )
     ranked = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k + offset)
     return ranked.offset(offset) if offset else ranked
 

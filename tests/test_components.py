@@ -653,9 +653,9 @@ def test_request_job_budget(spark, serving, monkeypatch):
     evaluated: list[str] = []
     orig_boolean = qparser.boolean_scored
 
-    def spy_boolean(reader, q):
+    def spy_boolean(reader, q, **kw):
         evaluated.append(q)
-        return orig_boolean(reader, q)
+        return orig_boolean(reader, q, **kw)
 
     monkeypatch.setattr(qparser, "boolean_scored", spy_boolean)
     lucene = {"query": "+posting -segment", "rows": 5.0}

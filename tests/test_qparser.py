@@ -345,6 +345,12 @@ BOOL_QUERIES = [
     "lang:(py go)^3 OR posting",
     # sloppy phrases with repeated terms (round 5: was a loud gate)
     '"posting posting"~3 OR segment',
+    # the tagged-union aggregation: MUST / MUST_NOT row counts
+    "+posting +posting",
+    "+posting -zzzabsent",
+    "zzzabsent -posting",
+    "-(+posting segment) wand",
+    "posting -path:src/pkg3*",
 ]
 
 
@@ -400,6 +406,25 @@ def test_lucene_term_clause_scores_equal_search(reader, oracle):
         want = [(r["doc_id"], r["score"])
                 for r in reader.search(ident, 10).collect()]
         assert got and got == want, ident
+
+
+@pytest.mark.parametrize("q,kernels", [
+    ("+posting", 1),
+    ("+posting +segment -wand", 3),
+    ('+posting "posting segment" -wand', 3),
+    ("+posting -lang:py", 1),
+])
+def test_boolean_plan_runs_each_text_kernel_once(reader, q, kernels):
+    """Plan pin: a boolean level is one tagged union and one aggregation,
+    so the final AQE plan holds one Python kernel node per text clause and
+    no semi/anti join (a MUST clause is not re-run as a join domain)."""
+    top = execute_boolean(reader, q, 10)
+    top.collect()
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInArrow") == kernels, final
+    assert "LeftSemi" not in final and "LeftAnti" not in final, final
 
 
 def test_must_absent_term_matches_nothing(reader):
