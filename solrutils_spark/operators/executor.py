@@ -20,42 +20,78 @@ Param interpretation:
 - ``facet.field`` / ``facet.query`` / ``facet.range`` + ``json.facet``  (A2-A5)
   computed over the FILTERED, UNPAGED domain (Solr semantics)
 
-Execution shape at scale: a scored request (ranked or Lucene-syntax q)
-takes ONE scored pass — every (doc_id, score) matching q ∩ fq, persisted
-for the request (16 bytes per match) — and derives the ranked page, numFound
-and every facet family from it (Solr's getDocListAndSet); stored fields for
-the page come from a driver-side pyarrow read (``IndexReader.fetch``, no
-job). The response carries only top-k rows and facet buckets to the driver.
-Jobs are labelled per phase (``setJobDescription``; the caller's label is
-restored and its job group left alone). Measured on a 4-core host for a
-ranked q + ``lang`` fq + ``lang`` field facet over a serving-cached
-1,500-doc, 4-salt index (perfbench ``json_request``): 8 jobs, 12 before —
+Two routes for a scored request (ranked or Lucene-syntax q), chosen by
+:meth:`PlanExecutor._driver_route` before any job runs:
 
-- ``search: scored domain`` (2): the cache materialization, the request's
-  one Python-kernel stage (cogroup of the cached postings with the cached
-  filter ids), then the top-(start+rows) TakeOrderedAndProject over it;
-- ``search: numFound`` (2): ``count()`` over the cached matches;
-- ``search: facets`` (4): the broadcasts of the doclen sidecar (the docs
-  table joins it) and of the cached matches, then the two-stage aggregate.
+- **Driver route** — a ranked (non-Lucene) q, no ``sort``, no facet family
+  but ``facet.field``, Σ df of the live query terms ≤
+  :data:`DRIVER_POSTINGS_BUDGET` (the df lookup is the one the idf needs),
+  and an index, collection, fq domain and facet fields within the
+  :data:`DRIVER_DOCS_BUDGET` / ``DRIVER_FACET_*`` bounds.
+  ``IndexReader.scored_local`` scores every match of q ∩ fq with the same
+  per-salt kernel the distributed route runs (bit-identical scores), the
+  page is a lexsort by (score desc, doc_id asc), numFound is the match
+  count and each field facet counts the matches' doc-values codes
+  (``facets.docvalues_facet``). The fq id array (one Spark action) and the
+  field's doc-values (a bounds job, then one collect) are built on their
+  first miss and cached; a warm request runs NO Spark job. Memory: ≤ the
+  postings budget of decoded postings per request; per cached fq-set
+  8 B × |fq domain| ≤ 8 MB; per faceted field 4 B × (max doc_id + 1)
+  ≤ 4 MB plus ≤ 2^16 distinct values (and, while it is built, ≤ 64 MB of
+  string values).
+- **Distributed route** — every other scored request takes ONE scored pass:
+  every (doc_id, score) matching q ∩ fq, persisted for the request (16
+  bytes per match), from which it derives the page (ordered by ``sort``
+  when given, over the matches joined to the collection), numFound and
+  every facet family (Solr's getDocListAndSet). Jobs are labelled per phase
+  (``setJobDescription``; the caller's label is restored and its job group
+  left alone). For a ranked q + ``lang`` fq + ``lang`` field facet over a
+  serving-cached 1,500-doc, 4-salt index (perfbench ``json_request`` shape,
+  4-core host) it runs 8 jobs —
 
-Request p50 on that host, median of 10 seeds: 1,521 ms → 982 ms. The Python
-job costs ~250-350 ms of it, each JVM job ~10-100 ms.
+  - ``search: scored domain`` (2): the cache materialization, the request's
+    one Python-kernel stage (cogroup of the cached postings with the cached
+    filter ids), then the top-(start+rows) TakeOrderedAndProject over it;
+  - ``search: numFound`` (2): ``count()`` over the cached matches;
+  - ``search: facets`` (4): the broadcasts of the doclen sidecar (the docs
+    table joins it) and of the cached matches, then the two-stage aggregate.
+
+On both routes stored fields for the page come from a driver-side pyarrow
+read (``IndexReader.fetch``, no job). Request p50 on that host and index,
+median of 10 seeds (perfbench ``json_request``): 1,120 ms on the
+distributed route (the Python job costs ~250-350 ms of it, each JVM job
+~10-100 ms), 7.4 ms on the driver route. At the budget (Σ df = 2^18 on a
+100k-doc index) a driver-route request took ~110 ms and a 7.3 MB peak of
+traced allocations.
 
 Unscored requests (``*:*``) persist the filtered domain instead when they
 facet, and read numFound and every facet family from it.
+
+The executor's driver-side caches (filterCache entries, doc-values) sit
+behind one lock, so one executor serves requests from several threads; no
+Spark job runs while it is held.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 import time
+from contextlib import contextmanager
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 LOG = logging.getLogger("solrutils_spark.search")
 
 from solrutils_spark.operators.facets import (
+    ID_TYPES,
+    DocValues,
+    strip_key,
+    doc_values,
+    docvalues_facet,
     field_facet,
     json_facet,
     query_facets,
@@ -64,6 +100,44 @@ from solrutils_spark.operators.facets import (
 from solrutils_spark.plans.model import SearchModel
 from solrutils_spark.plans.plan import QueryPlan, parse_json_facet
 from solrutils_spark.query.engine import TOPK_DDL, IndexReader
+from solrutils_spark.query.exact import query_terms
+
+# Memory bounds of the driver route (not tuning options). Largest Σ df
+# over a ranked request's live terms that it scores: the postings one
+# request decodes in driver memory (~40 B each while scoring, so ≤ ~10 MB).
+DRIVER_POSTINGS_BUDGET = 1 << 18
+# Largest index (n_docs) and collection (rows, and doc_id + 1) it serves:
+# each cached fq id array is ≤ 8 B × this (8 MB), each doc-values column
+# ≤ 4 B × this (4 MB); no larger id array or column is ever collected.
+DRIVER_DOCS_BUDGET = 1 << 20
+# Largest facet field it serves from doc-values: distinct values (null is
+# one) and, for strings, bytes of values over the collection (the transient
+# size of the doc-values collect).
+DRIVER_FACET_VALUES = 1 << 16
+DRIVER_FACET_BYTES = 1 << 26
+
+
+class _FilterEntry:
+    """One filterCache entry: the fq-set's doc_ids in the form each route
+    reads, each filled on its route's first miss. ``frame``: salted,
+    co-partitioned with the serving cache and persisted (distributed
+    route). ``ids``: sorted distinct int64 array, 8 B per doc of the fq
+    domain (driver route), or False when that domain has more than
+    ``DRIVER_DOCS_BUDGET`` rows (its requests take the distributed
+    route)."""
+
+    __slots__ = ("frame", "ids")
+
+    def __init__(self) -> None:
+        self.frame: DataFrame | None = None
+        self.ids: np.ndarray | bool | None = None
+
+
+class _DriverRoute(NamedTuple):
+    """A request the driver route serves: ``allowed`` is its fq id array
+    (None: no fq)."""
+
+    allowed: np.ndarray | None
 
 
 class PlanExecutor:
@@ -78,11 +152,20 @@ class PlanExecutor:
         self.reader = reader
         self.id_column = id_column
         # Solr filterCache twin: fq expressions recur across requests, so the
-        # filtered doc_id domain is persisted per distinct fq-set and reused
-        # (Solr caches the DocSet per fq; BulkUpdateHandler.java:57-61 leans
-        # on it). LRU-bounded; entries unpersist on eviction.
+        # filtered doc_id domain is kept per distinct fq-set and reused (Solr
+        # caches the DocSet per fq; BulkUpdateHandler.java:57-61 leans on
+        # it). LRU-bounded (pop/re-insert); eviction unpersists the frame.
+        # Memory: ≤ filter_cache_size × 8 B × |fq domain| of id arrays,
+        # |fq domain| ≤ DRIVER_DOCS_BUDGET.
         self.filter_cache_size = filter_cache_size
-        self._filter_cache: dict[tuple[str, ...], DataFrame] = {}
+        self._filter_cache: dict[tuple[str, ...], _FilterEntry] = {}
+        # facet field → DocValues (None: the field is served by Spark);
+        # 4 B × (max doc_id + 1) ≤ 4 B × DRIVER_DOCS_BUDGET per field
+        self._doc_values: dict[str, DocValues | None] = {}
+        # one lock for every driver-side cache above: requests may come
+        # from several threads. Held only to look up or store an entry;
+        # entries are built outside it (a race builds one twice).
+        self._lock = threading.Lock()
 
     # -- public API ----------------------------------------------------------
     def search(self, model: SearchModel, json_query: dict) -> dict:
@@ -119,6 +202,13 @@ class PlanExecutor:
             or plan.get_params("facet.range")
             or plan.get_param("json.facet")
         )
+        route = self._driver_route(plan, q) if scored else None
+        if route is not None:
+            response = self._driver_response(plan, q, start, rows,
+                                              route.allowed, need_facets)
+            for handler in plan.response_handlers:
+                handler.process(plan, response)
+            return response
 
         if scored:
             # ONE scored pass per request: every (doc_id, score) matching
@@ -130,6 +220,7 @@ class PlanExecutor:
             # fq, so facets join it to the unfiltered collection and never
             # re-evaluate the filter.
             persisted = self._scored(plan, q).persist()
+            ranked = self._ranked(persisted, plan)
             facet_domain = self.collection.join(
                 persisted.select(F.col("doc_id").alias(self.id_column)),
                 self.id_column, "left_semi",
@@ -150,37 +241,84 @@ class PlanExecutor:
             persisted = domain.persist() if need_facets else None
             facet_domain = persisted if need_facets else domain
 
-        sc = self.collection.sparkSession.sparkContext
-        caller_label = sc.getLocalProperty("spark.job.description")
         try:
             if scored:
                 # the first action materializes the cache
-                sc.setJobDescription("search: scored domain")
-                top = persisted.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(start + rows).collect()
+                with self._job_label("search: scored domain"):
+                    top = ranked.limit(start + rows).collect()
                 docs = self.reader.fetch(top[start:], self._fl(plan))
-                sc.setJobDescription("search: numFound")
-                num_found = persisted.count()
+                with self._job_label("search: numFound"):
+                    num_found = persisted.count()
             else:
-                sc.setJobDescription("search: hits")
-                docs = [r.asDict(recursive=True) for r in hits.collect()]
-                sc.setJobDescription("search: numFound")
-                num_found = facet_domain.count()
-            response: dict = {
-                "responseHeader": {"params": {k: v for k, v in plan.params.items()}},
-                "response": {"numFound": num_found, "start": start, "docs": docs},
-            }
+                with self._job_label("search: hits"):
+                    docs = [r.asDict(recursive=True) for r in hits.collect()]
+                with self._job_label("search: numFound"):
+                    num_found = facet_domain.count()
+            response = self._response(plan, num_found, start, docs)
             if need_facets:
-                sc.setJobDescription("search: facets")
-                self._add_facets(plan, facet_domain, response)
+                with self._job_label("search: facets"):
+                    self._add_facets(plan, facet_domain, response)
         finally:
-            sc.setJobDescription(caller_label)
             if persisted is not None:
                 persisted.unpersist()
         for handler in plan.response_handlers:
             handler.process(plan, response)
         return response
+
+    def _driver_route(self, plan: QueryPlan, q: str) -> _DriverRoute | None:
+        """The scored request's driver-route inputs, or None when it takes
+        the distributed route. It runs on the driver when ``q`` is not
+        Lucene syntax, there is no ``sort``, every facet family is
+        ``facet.field``, the index has at most ``DRIVER_DOCS_BUDGET`` docs,
+        the id column is an integer, the Σ df of the live query terms is at
+        most ``DRIVER_POSTINGS_BUDGET``, every facet field has doc-values
+        within the ``DRIVER_FACET_*`` bounds and the fq domain has at most
+        ``DRIVER_DOCS_BUDGET`` rows. Up to the df check nothing runs a job
+        (the df lookup is the one the idf needs); a field's doc-values and
+        an fq-set's id array cost Spark jobs the first time a request asks
+        for them, and their bounds are checked before anything is
+        collected."""
+        from solrutils_spark.query.qparser import is_lucene_syntax
+
+        if (is_lucene_syntax(q) or plan.get_param("sort")
+                or plan.get_params("facet.query")
+                or plan.get_params("facet.range")
+                or plan.get_param("json.facet")
+                or self.reader.stats["n_docs"] > DRIVER_DOCS_BUDGET
+                or dict(self.collection.dtypes).get(self.id_column) not in ID_TYPES):
+            return None
+        live = self.reader.term_dfs(query_terms(q))
+        if sum(live.values()) > DRIVER_POSTINGS_BUDGET:
+            return None
+        if any(self._field_values(strip_key(spec)) is None
+               for spec in plan.get_params("facet.field") or []):
+            return None
+        if not plan.get_params("fq"):
+            return _DriverRoute(None)
+        allowed = self._cached_filter_array(plan)
+        return None if allowed is None else _DriverRoute(allowed)
+
+    def _driver_response(self, plan: QueryPlan, q: str, start: int, rows: int,
+                         allowed: np.ndarray | None, need_facets: bool) -> dict:
+        """The driver route: the matches from ``IndexReader.scored_local``
+        (∩ the fq id array ``allowed``), the page by (score desc, doc_id
+        asc), numFound = the match count, field facets from doc-values. A
+        warm request (fq ids and doc-values cached) runs no Spark job."""
+        ids, scores = self.reader.scored_local(q, allowed)
+        top = np.lexsort((ids, -scores))[start:start + rows]
+        docs = self.reader.fetch(zip(ids[top], scores[top]), self._fl(plan))
+        response = self._response(plan, int(ids.size), start, docs)
+        if need_facets:
+            self._add_facets(plan, ids, response)
+        return response
+
+    @staticmethod
+    def _response(plan: QueryPlan, num_found: int, start: int,
+                  docs: list[dict]) -> dict:
+        return {
+            "responseHeader": {"params": {k: v for k, v in plan.params.items()}},
+            "response": {"numFound": num_found, "start": start, "docs": docs},
+        }
 
     # -- internals -----------------------------------------------------------
     def _fl(self, plan: QueryPlan) -> list[str] | None:
@@ -228,31 +366,94 @@ class PlanExecutor:
                 # docstring's "re-raises the SQL error plus the parser's"
                 raise lucene_err from sql_err
 
+    def _filter_entry(self, plan: QueryPlan) -> _FilterEntry:
+        """The plan's fq-set entry, made most-recently-used (created on a
+        miss, evicting the least-recently-used one at capacity). The caller
+        holds ``self._lock``."""
+        key = tuple(sorted(plan.get_params("fq") or []))
+        entry = self._filter_cache.pop(key, None)
+        if entry is None:
+            entry = _FilterEntry()
+            if len(self._filter_cache) >= self.filter_cache_size:
+                oldest = next(iter(self._filter_cache))  # least-recently-used
+                evicted = self._filter_cache.pop(oldest)
+                if evicted.frame is not None:
+                    evicted.frame.unpersist()
+        self._filter_cache[key] = entry  # re-insert → most-recently-used
+        return entry
+
     def _cached_filter_ids(self, plan: QueryPlan) -> DataFrame:
         """Persisted doc_id domain for the plan's fq set (filterCache twin).
 
         When a reader is attached, the cached domain is pre-salted AND
         hash-partitioned by salt, so repeated scored+fq requests elide the
         filter-side exchange of the cogroup entirely (the Solr analog keeps
-        cached DocSets in index order)."""
-        key = tuple(sorted(plan.get_params("fq") or []))
-        hit = self._filter_cache.pop(key, None)
-        if hit is None:
-            ids = self._filtered_domain(plan).select(self.id_column)
-            if self.reader is not None:
-                ids = self.reader.salted_filter(ids)
-                # co-partition with the serving cache so the cogroup elides
-                # BOTH exchanges (a mismatched count re-exchanges the pruned
-                # candidate rows per query — cache_for_serving docstring)
-                n = self.reader._serving_partitions
-                ids = (ids.repartition(n, "salt") if n is not None
-                       else ids.repartition("salt"))
-            hit = ids.persist()
-            if len(self._filter_cache) >= self.filter_cache_size:
-                oldest = next(iter(self._filter_cache))  # least-recently-used
-                self._filter_cache.pop(oldest).unpersist()
-        self._filter_cache[key] = hit  # re-insert → most-recently-used
-        return hit
+        cached DocSets in index order). The frame is built outside the lock
+        (a Lucene fq runs jobs); the first thread to store it wins, and only
+        the stored frame is persisted."""
+        with self._lock:
+            frame = self._filter_entry(plan).frame
+        if frame is not None:
+            return frame
+        ids = self._filtered_domain(plan).select(self.id_column)
+        if self.reader is not None:
+            ids = self.reader.salted_filter(ids)
+            # co-partition with the serving cache so the cogroup elides
+            # BOTH exchanges (a mismatched count re-exchanges the pruned
+            # candidate rows per query — cache_for_serving docstring)
+            n = self.reader._serving_partitions
+            ids = (ids.repartition(n, "salt") if n is not None
+                   else ids.repartition("salt"))
+        with self._lock:
+            entry = self._filter_entry(plan)
+            if entry.frame is None:
+                entry.frame = ids.persist()  # lazy: no job under the lock
+            return entry.frame
+
+    def _cached_filter_array(self, plan: QueryPlan) -> np.ndarray | None:
+        """The plan's fq-set as a sorted distinct int64 doc_id array (the
+        driver route's filterCache entry), or None when the fq domain has
+        more than ``DRIVER_DOCS_BUDGET`` rows. One Spark job on the first
+        miss, run outside the lock, that collects at most budget + 1 ids;
+        none after."""
+        with self._lock:
+            ids = self._filter_entry(plan).ids
+        if ids is None:
+            with self._job_label("search: filter ids"):
+                col = (self._filtered_domain(plan).select(self.id_column)
+                       .limit(DRIVER_DOCS_BUDGET + 1).toArrow().column(0))
+            ids = (np.unique(col.drop_null().to_numpy().astype(np.int64))
+                   if len(col) <= DRIVER_DOCS_BUDGET else False)
+            with self._lock:
+                self._filter_entry(plan).ids = ids
+        return None if ids is False else ids
+
+    def _field_values(self, field: str) -> DocValues | None:
+        """``field``'s cached doc-values (None: Spark serves its facets),
+        built outside the lock by the first request that facets on it
+        (``facets.doc_values``: a bounds job, then one collect within
+        the ``DRIVER_DOCS_BUDGET`` / ``DRIVER_FACET_*`` bounds)."""
+        with self._lock:
+            if field in self._doc_values:
+                return self._doc_values[field]
+        with self._job_label("search: doc values"):
+            dv = doc_values(self.collection, self.id_column, field,
+                            max_docs=DRIVER_DOCS_BUDGET,
+                            max_values=DRIVER_FACET_VALUES,
+                            max_bytes=DRIVER_FACET_BYTES)
+        with self._lock:
+            return self._doc_values.setdefault(field, dv)
+
+    @contextmanager
+    def _job_label(self, label: str):
+        """Label the Spark jobs of the block; restore the caller's label."""
+        sc = self.collection.sparkSession.sparkContext
+        caller_label = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(label)
+        try:
+            yield
+        finally:
+            sc.setJobDescription(caller_label)
 
     def _scored(self, plan: QueryPlan, q: str) -> DataFrame:
         """(doc_id, score) of every doc matching q AND all filters.
@@ -274,7 +475,19 @@ class PlanExecutor:
             return self.reader.spark.createDataFrame([], TOPK_DDL)
         return bscored
 
-    def _sorted(self, domain: DataFrame, plan: QueryPlan) -> DataFrame:
+    def _ranked(self, matches: DataFrame, plan: QueryPlan) -> DataFrame:
+        """The scored request's (doc_id, score) order over ``matches``: by
+        ``sort`` when given — over the matches joined to the collection, so
+        ``score`` and every collection column are sort keys, ties by id
+        ascending — else by (score desc, doc_id asc)."""
+        if not plan.get_param("sort"):
+            return matches.orderBy(F.desc("score"), F.asc("doc_id"))
+        joined = self.collection.join(
+            matches.withColumnRenamed("doc_id", self.id_column), self.id_column)
+        return self._sorted(joined, plan, F.asc(self.id_column)).select(
+            F.col(self.id_column).alias("doc_id"), "score")
+
+    def _sorted(self, domain: DataFrame, plan: QueryPlan, *ties) -> DataFrame:
         sort = plan.get_param("sort")
         if not sort:
             return domain
@@ -289,21 +502,25 @@ class PlanExecutor:
                 exprs.append(col.desc() if toks[1].lower() == "desc" else col.asc())
             else:
                 exprs.append(F.expr(part).asc())
-        return domain.orderBy(*exprs)
+        return domain.orderBy(*exprs, *ties)
 
-    def _add_facets(self, plan: QueryPlan, domain: DataFrame, response: dict) -> None:
+    def _add_facets(self, plan: QueryPlan, domain, response: dict) -> None:
+        """Every facet family over ``domain``: the facet-domain DataFrame,
+        or on the driver route the matched doc_id array (``facet.field``
+        only, from doc-values)."""
         facet_fields: dict = {}
         for spec in plan.get_params("facet.field") or []:
-            res = field_facet(
-                domain,
-                spec,
-                limit=int(plan.get_param("facet.limit", "100")),
-                mincount=int(plan.get_param("facet.mincount", "0")),
-            )
+            limit = int(plan.get_param("facet.limit", "100"))
+            mincount = int(plan.get_param("facet.mincount", "0"))
+            if isinstance(domain, np.ndarray):
+                res = docvalues_facet(self._field_values(strip_key(spec)),
+                                      domain, spec, limit, mincount)
+            else:
+                res = field_facet(domain, spec, limit=limit, mincount=mincount)
             facet_fields[res["key"]] = res["counts"]
-        facet_queries = query_facets(domain, plan.get_params("facet.query") or [],
-                                     reader=self.reader,
-                                     id_column=self.id_column)
+        specs = plan.get_params("facet.query")
+        facet_queries = query_facets(domain, specs, reader=self.reader,
+                                     id_column=self.id_column) if specs else {}
         facet_ranges: dict = {}
         for spec in plan.get_params("facet.range") or []:
             field = spec.split("}", 1)[1] if spec.startswith("{!") else spec

@@ -17,18 +17,26 @@ Scale note: every facet here is a single shuffle-light aggregation over the
 (already filtered) domain DataFrame; multiple query facets fold into one
 ``agg`` pass. Field facets cap buckets with ``limit`` (Solr default 100) via
 orderBy+limit on the counted result — never a driver-side sort of all values.
+
+Driver twin of the field facet (the executor's driver route): a
+:class:`DocValues` column — dictionary codes indexed by doc_id, Solr's
+DocValues / UnInvertedField — built once per field (a bounds check, then
+one Arrow collect) and cached by the executor; :func:`docvalues_facet` counts a request's matched doc_ids
+with ``np.bincount`` and orders the buckets exactly as :func:`field_facet`.
 """
 
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.plans.operators import Facets
 
-def _strip_key(spec: str) -> str:
+def strip_key(spec: str) -> str:
     """Drop a {!key=...} local-params prefix, leaving the raw expression."""
     return spec.split("}", 1)[1] if spec.startswith("{!") else spec
 
@@ -36,7 +44,7 @@ def _strip_key(spec: str) -> str:
 def field_facet(domain: DataFrame, spec: str, limit: int = 100, mincount: int = 0) -> dict:
     """facet.field entry → ordered {value: count} (Solr count-desc ordering)."""
     key = Facets.extract_key(spec)
-    field = spec.split("}", 1)[1] if spec.startswith("{!") else spec
+    field = strip_key(spec)
     rows = (
         domain.groupBy(field)
         .agg(F.count("*").alias("count"))
@@ -46,6 +54,83 @@ def field_facet(domain: DataFrame, spec: str, limit: int = 100, mincount: int = 
         .collect()
     )
     return {"key": key, "counts": {r[field]: r["count"] for r in rows}}
+
+
+# Spark column types whose Python values compare and order as Spark's
+# groupBy/orderBy do (binary-collation strings, integers, booleans, dates);
+# float NaN/-0.0 and collated strings are left to field_facet
+_DOCVALUE_TYPES = frozenset({"string", "tinyint", "smallint", "int", "bigint",
+                             "boolean", "date"})
+ID_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
+
+
+class DocValues(NamedTuple):
+    """One field's doc-values column. ``values``: the field's distinct
+    values in Spark's ascending order (None first); ``codes[doc_id]``: the
+    index of that doc's value, -1 for a doc_id the collection lacks.
+    Memory: 4 B × (max doc_id + 1), plus the distinct values."""
+
+    values: list
+    codes: np.ndarray
+
+
+def doc_values(collection: DataFrame, id_column: str, field: str, *,
+               max_docs: int, max_values: int,
+               max_bytes: int) -> DocValues | None:
+    """``field``'s :class:`DocValues`, or None when the driver must not hold
+    them or they cannot answer a field facet exactly as :func:`field_facet`
+    would. Checked before anything is collected:
+
+    - on the schema (no job): the id and the field are top-level columns
+      of a type listed above;
+    - by one aggregate job over the collection: at most ``max_docs`` rows,
+      no null id, ids in [0, ``max_docs``) (so ``codes`` is ≤ 4 B ×
+      ``max_docs``), at most ``max_values`` distinct values (null counts
+      as one) and, for a string field, at most ``max_bytes`` of values.
+
+    Only then one Spark job collects ``(id, field)`` as Arrow — transiently
+    ≤ 12 B × ``max_docs`` of ids and string offsets plus ≤ ``max_bytes`` of
+    values — which is dictionary-encoded on the driver. A duplicated id returns None too
+    (:func:`field_facet` counts every row of it)."""
+    import pyarrow.compute as pc
+
+    types = dict(collection.dtypes)
+    if types.get(id_column) not in ID_TYPES or types.get(field) not in _DOCVALUE_TYPES:
+        return None
+    size = F.sum(F.octet_length(field)) if types[field] == "string" else F.lit(0)
+    n, n_ids, lo, hi, distinct, nbytes = collection.agg(
+        F.count(F.lit(1)), F.count(id_column), F.min(id_column),
+        F.max(id_column), F.count_distinct(field), size).first()
+    if (n > max_docs or n_ids < n or distinct + 1 > max_values
+            or (nbytes or 0) > max_bytes or (n and (lo < 0 or hi >= max_docs))):
+        return None
+    tbl = collection.select(id_column, field).toArrow()
+    ids = tbl.column(0).to_numpy().astype(np.int64)
+    if np.unique(ids).size < ids.size:
+        return None
+    enc = pc.dictionary_encode(tbl.column(1), null_encoding="encode").combine_chunks()
+    order = pc.sort_indices(enc.dictionary, null_placement="at_start").to_numpy()
+    rank = np.empty(order.size, np.int32)
+    rank[order] = np.arange(order.size, dtype=np.int32)
+    codes = np.full(hi + 1 if n else 0, -1, np.int32)
+    codes[ids] = rank[enc.indices.to_numpy()]
+    return DocValues(enc.dictionary.take(order).to_pylist(), codes)
+
+
+def docvalues_facet(dv: DocValues, ids: np.ndarray, spec: str,
+                    limit: int = 100, mincount: int = 0) -> dict:
+    """:func:`field_facet` over the docs ``ids`` (distinct matched doc_ids)
+    from the field's doc-values: ``np.bincount`` over their codes, buckets
+    ordered by (count desc, value asc, nulls first) — a stable sort by count
+    over codes that already follow Spark's value order."""
+    if limit < 0:
+        raise ValueError(f"facet.limit must be >= 0, got {limit}")
+    codes = dv.codes[ids[ids < dv.codes.size]]
+    counts = np.bincount(codes[codes >= 0], minlength=len(dv.values))
+    keep = np.flatnonzero((counts > 0) & (counts >= mincount))
+    order = keep[np.argsort(-counts[keep], kind="stable")][:limit]
+    return {"key": Facets.extract_key(spec),
+            "counts": {dv.values[c]: int(counts[c]) for c in order}}
 
 
 def _query_domain(domain: DataFrame, q: str, reader, id_column: str) -> DataFrame:
@@ -81,7 +166,7 @@ def query_facets(domain: DataFrame, specs: list[str], reader=None,
     sql_specs: list[tuple[int, str, str]] = []
     lucene_specs: list[tuple[int, str, str]] = []
     for i, s in enumerate(specs):
-        body = _strip_key(s)
+        body = strip_key(s)
         try:
             domain.filter(F.expr(body))  # eager analysis probe — no job
             sql_specs.append((i, s, body))

@@ -562,10 +562,11 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
 
 
 def _vocab_tables(reader):
-    """Iterate the termdf sidecar's bucket datasets (pyarrow, cached on the
-    reader). Vocabulary-sized: at 100 TB the postings are ~the corpus but the
-    term dictionary is O(10⁷⁻⁸) rows — a driver scan with a pushed filter is
-    the Solr analog of a terms-enum walk. (A globally SORTED term-dict
+    """The termdf sidecar's ``term`` column, one table per bucket (read on
+    the calling thread, footers cached on the reader: ``IndexReader._read``).
+    Vocabulary-sized: at 100 TB the postings are ~the corpus but the term
+    dictionary is O(10⁷⁻⁸) rows — a driver scan is the Solr analog of a
+    terms-enum walk. (A globally SORTED term-dict
     sidecar would turn prefix scans into range pruning; noted in PLANS.md.)"""
     sidecar = Path(reader.index_dir) / "termdf"
     if not sidecar.exists():
@@ -574,7 +575,7 @@ def _vocab_tables(reader):
             "expansion needs the term dictionary (rebuild the index)"
         )
     for bdir in sorted(sidecar.glob("bucket=*")):
-        yield reader._dataset(f"termdf/{bdir.name}")
+        yield reader._read(f"termdf/{bdir.name}", ["term"])
 
 
 _WILDCARD_OK = re.compile(r"^[^*?]*[*?][*?a-z0-9_.*]*$")
@@ -590,8 +591,7 @@ def expand_wildcard(reader, pattern: str, max_expansions: int = 1024) -> list[st
     like = pattern.replace("%", r"\%").replace("_", r"\_")
     like = like.replace("*", "%").replace("?", "_")
     out: list[str] = []
-    for dset in _vocab_tables(reader):
-        tbl = dset.to_table(columns=["term"])
+    for tbl in _vocab_tables(reader):
         mask = pc.match_like(tbl["term"], like)
         out.extend(tbl["term"].filter(mask).to_pylist())
         if len(out) > max_expansions:
@@ -628,15 +628,14 @@ def expand_fuzzy(
 ) -> list[str]:
     """Terms within ``max_edits`` Levenshtein of ``term`` (the term itself
     included when present). The vocabulary scan is length-banded with a
-    pushed pyarrow filter (|len(t)−len(q)| ≤ d is implied by edit distance,
+    pyarrow length mask (|len(t)−len(q)| ≤ d is implied by edit distance,
     so the band is recall-lossless — same argument as the spellcheck
     suggester's band, query/spellcheck.py); the DP early-exits above d."""
     import pyarrow.compute as pc
 
     lo, hi = len(term) - max_edits, len(term) + max_edits
     out: list[str] = []
-    for dset in _vocab_tables(reader):
-        tbl = dset.to_table(columns=["term"])
+    for tbl in _vocab_tables(reader):
         lens = pc.utf8_length(tbl["term"])
         mask = pc.and_(pc.greater_equal(lens, lo), pc.less_equal(lens, hi))
         for t in tbl["term"].filter(mask).to_pylist():

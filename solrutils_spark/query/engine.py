@@ -17,15 +17,21 @@ Query lifecycle (the Spark twin of SURVEY.md §3.1's Solr crossing):
 6. optional stored-field fetch for the ≤ k hits: :meth:`IndexReader.fetch`
    takes the collected (doc_id, score) rows and reads their stored fields
    from ``docs.parquet`` with pyarrow on the driver (requested columns, a
-   ``doc_id`` predicate, cached dataset handles) — no Spark job
+   ``doc_id`` mask, cached footers) — no Spark job
    (J3, QueryReRankComponent.java:80-85 semantics)
+
+Every driver-side read (dfs, candidate postings, stored fields, the
+vocabulary) goes through :meth:`IndexReader._read`: per-file parquet reads
+on the calling thread, never pyarrow's thread pools.
 
 :meth:`IndexReader.scored_domain` is the request-shaped twin of steps 4-5:
 ALL (doc_id, score) matches of the query (∩ filter) from one grouped pass,
 scored by the exhaustive ``wand.topk_slice_batch`` kernel so every score is
 bit-identical to :meth:`IndexReader.search`. ``PlanExecutor`` persists it
 once per request and takes the ranked page, numFound and the facet domain
-from that one frame.
+from that one frame. :meth:`IndexReader.scored_local` is its driver twin
+(same kernel per salt slice, no Spark job), which ``PlanExecutor`` uses for
+ranked requests whose postings fit its budget.
 
 Filters (P2, ``fq``) never affect scores — Lucene ``setIsFilter(true)``
 semantics (BulkUpdateHandler.java:59). The filter is a ``filter_df``: the
@@ -84,7 +90,8 @@ class IndexReader:
         self._df_cache: dict[str, int] = {}
         # (field, value) → df of a metadata keyword clause (qparser)
         self._field_df_cache: dict[tuple[str, str], int] = {}
-        self._datasets: dict[str, object] = {}
+        # rel → [(file path, footer metadata)]; see _read
+        self._files: dict[str, list[tuple[str, object]]] = {}
         self._serving_partitions: int | None = None
         # filter-alignment cache: id(filter_df) → _AlignedFilter. Bounded
         # LRU; see _aligned_filter.
@@ -192,32 +199,55 @@ class IndexReader:
         return {t: self._df_cache[t] for t in terms if self._df_cache.get(t)}
 
     def _sidecar_dfs(self, terms: list[str]) -> dict[str, int]:
-        import pyarrow.dataset as ds
-
         out = {t: 0 for t in terms}
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         for b in buckets:
-            dset = self._dataset(f"termdf/bucket={b}")
-            if dset is None:
-                continue
-            table = dset.to_table(
-                columns=["term", "df"],
-                filter=ds.field("term").isin(terms),
-            )
+            table = self._read(f"termdf/bucket={b}", ["term", "df"], "term", terms)
             for t, d in zip(table["term"].to_pylist(), table["df"].to_pylist()):
                 out[t] = int(d)
         return out
 
-    def _dataset(self, rel: str):
-        """pyarrow dataset handle for ``index_dir/rel``, or None when that
-        directory does not exist. Opened once per reader: a handle is a
-        directory listing, and the built index is immutable."""
-        if rel not in self._datasets:
-            import pyarrow.dataset as ds
+    def _read(self, rel: str, columns: list[str], field: str | None = None,
+              values=None) -> pa.Table:
+        """``columns`` of the parquet files under ``index_dir/rel`` (every
+        ``*.parquet`` below it, ``_``/``.``-prefixed paths skipped, as Spark
+        and pyarrow datasets do), restricted to rows whose ``field`` is in
+        ``values`` when ``field`` is given. No matching row (or no such
+        ``rel``) reads as an empty table of null-typed columns.
 
-            path = Path(self.index_dir) / rel
-            self._datasets[rel] = ds.dataset(str(path)) if path.exists() else None
-        return self._datasets[rel]
+        Reads on the CALLING thread: ``ParquetFile.read(columns,
+        use_threads=False)`` per file, then a ``pc.is_in`` row mask. A
+        dataset scan goes through pyarrow's CPU/IO pool threads, whose
+        allocator keeps dirty pages: over 2,400 in-process driver-route JSON
+        requests (perfbench's 1,500-doc index, 4-core host) RSS grew
+        +12-13 MB with dataset scans against +1 MB with these reads. Whole
+        files are read: the index's bucket files hold one or two row groups
+        each (1,500 and 100k docs), and pruning them by min/max statistics
+        left ``search_local`` p50 unchanged on both. File listings and
+        footers are read once per reader (the built index is immutable)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        files = self._files.get(rel)
+        if files is None:
+            root = Path(self.index_dir) / rel
+            paths = [root] if root.is_file() else sorted(
+                f for f in root.rglob("*.parquet")
+                if not any(part.startswith(("_", "."))
+                           for part in f.relative_to(root).parts))
+            files = [(str(f), pq.read_metadata(f)) for f in paths]
+            self._files[rel] = files
+        value_set = pa.array(list(set(values))) if field is not None else None
+        tables = []
+        for path, meta in files:
+            tbl = pq.ParquetFile(path, metadata=meta).read(
+                columns=columns, use_threads=False)
+            if field is not None:
+                tbl = tbl.filter(pc.is_in(tbl[field], value_set=value_set))
+            tables.append(tbl)
+        if not tables:
+            return pa.table({c: pa.array([], pa.null()) for c in columns})
+        return pa.concat_tables(tables)
 
     def _per_slice(self, cand: DataFrame, fn, schema: str,
                    filter_df: DataFrame | None = None) -> DataFrame:
@@ -454,19 +484,15 @@ class IndexReader:
 
     def _local_rows(self, terms: list[str]) -> list[arrow_rows.PostingRow]:
         """Candidate posting rows read directly with pyarrow (no Spark job):
-        bucket-directory pruned, term-filtered, dataset handles cached — the
-        shared driver-serving fetch under :meth:`search_local` and
-        :meth:`search_conj_local`."""
-        import pyarrow.dataset as ds
-
+        bucket-directory pruned, term-filtered, on the calling thread
+        (:meth:`_read`) — the shared driver-serving fetch under
+        :meth:`search_local`, :meth:`search_conj_local` and
+        :meth:`scored_local`."""
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         rows: list[arrow_rows.PostingRow] = []
         for b in buckets:
-            dset = self._dataset(f"index/bucket={b}")
-            if dset is None:
-                continue
-            tbl = dset.to_table(columns=arrow_rows.POSTING_COLUMNS,
-                                filter=ds.field("term").isin(terms))
+            tbl = self._read(f"index/bucket={b}", arrow_rows.POSTING_COLUMNS,
+                             "term", terms)
             if tbl.num_rows:
                 rows.extend(_rows_from_arrow(tbl))
         return rows
@@ -524,8 +550,8 @@ class IndexReader:
         Hot path is pandas-free: candidate rows go pyarrow table →
         ``PostingRow`` records straight into the kernel (the DataFrame
         conversion + traversal measured ~45% of serving latency), and
-        per-bucket dataset discovery (a filesystem listing) is cached — the
-        on-disk index is immutable after build."""
+        file listings and footers are cached (:meth:`_read`) — the on-disk
+        index is immutable after build."""
         terms = query_terms(query_text)
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t)]
@@ -556,7 +582,8 @@ class IndexReader:
         so it keeps every doc it touches. That kernel shares the arithmetic
         and summation order of :meth:`search`'s, so the scores are
         bit-identical (pinned). Salt slices are disjoint doc ranges: the
-        rows are already distinct."""
+        rows are already distinct. :meth:`scored_local` computes the same
+        pairs on the driver with no Spark job."""
         terms = query_terms(query_text)
         dfs = self.term_dfs(terms)
         idf_by_term = {t: self.idf(dfs[t]) for t in terms if dfs.get(t)}
@@ -572,33 +599,67 @@ class IndexReader:
         return self._per_slice(self._candidate_rows(list(idf_by_term)),
                                slice_all, TOPK_DDL, filter_df)
 
+    def scored_local(self, query_text: str,
+                     allowed: np.ndarray | None = None
+                     ) -> tuple[np.ndarray, np.ndarray]:
+        """Driver twin of :meth:`scored_domain`: every (doc_id, score)
+        matching ≥1 query term (∩ ``allowed``, a sorted int64 doc_id array)
+        as two unranked numpy arrays — no Spark job.
+
+        Candidate rows come from :meth:`_local_rows`, are grouped by salt
+        (the kernel takes one row per term) and each slice runs the same
+        exhaustive ``wand.topk_slice_batch`` with k = :meth:`salt_span` and
+        that slice's part of ``allowed``, so every score is bit-identical
+        to :meth:`scored_domain` (pinned). Memory: the decoded postings of
+        the live terms, Σ df — the caller bounds it (``PlanExecutor``
+        routes here only under ``DRIVER_POSTINGS_BUDGET``)."""
+        ids = [np.empty(0, np.int64)]
+        scores = [np.empty(0, np.float64)]
+        terms = query_terms(query_text)
+        dfs = self.term_dfs(terms)
+        idf_by_term = {t: self.idf(dfs[t]) for t in terms if dfs.get(t)}
+        span = self.salt_span()
+        plans = [(0, idf_by_term, span)]
+        avgdl = float(self.stats["avgdl"])
+        by_salt: dict[int, list] = {}
+        for row in self._local_rows(list(idf_by_term)) if idf_by_term else []:
+            by_salt.setdefault(int(row.salt), []).append(row)
+        for salt, rows in sorted(by_salt.items()):
+            part = None
+            if allowed is not None:
+                lo, hi = np.searchsorted(allowed, [salt * span, (salt + 1) * span])
+                part = allowed[lo:hi]
+                if not part.size:
+                    continue  # as the cogroup: no allowed id, no decode
+            for _, d, s in wand.topk_slice_batch(rows, plans, avgdl, part):
+                ids.append(d)
+                scores.append(s)
+        return np.concatenate(ids), np.concatenate(scores)
+
     def fetch(self, hits, fields: list[str] | None = None) -> list[dict]:
         """J3 — stored fields for collected hits.
 
-        ``hits``: (doc_id, score) pairs (tuples or Rows) in rank order.
+        ``hits``: (doc_id, score) pairs (tuples, Rows or numpy scalars) in
+        rank order — from either request route of ``PlanExecutor``.
         Returns one dict per hit, in the same order, with keys ``doc_id``,
         ``score``, then ``fields`` (default repo, path, commit, lang).
 
-        One pyarrow read of ``docs.parquet`` on the driver: only the
-        requested columns, filtered to the hits' doc_ids, through a cached
-        dataset handle. The doclen sidecar is read only when ``doc_len`` is
+        One pyarrow read of ``docs.parquet`` on the driver's calling thread
+        (:meth:`_read`): only the requested columns, filtered to the hits'
+        doc_ids. The doclen sidecar is read only when ``doc_len`` is
         requested (0 for a doc it lacks, as in :attr:`docs`). No Spark job:
         hits are ≤ start + rows rows already on the driver. The docs files
-        come out of a hash join, so each spans the whole doc_id range: the
-        predicate filters rows but prunes no file or row group."""
-        import pyarrow.dataset as ds
-
+        come out of a hash join, so each spans the whole doc_id range."""
         cols = fields or ["repo", "path", "commit", "lang"]
         hits = [(int(d), float(s)) for d, s in hits]
         if not hits:
             return []
-        ids = ds.field("doc_id").isin([d for d, _ in hits])
+        ids = [d for d, _ in hits]
         stored = [c for c in dict.fromkeys(cols)
                   if c not in ("doc_id", "score", "doc_len")]
-        tbl = self._dataset("docs.parquet").to_table(
-            columns=["doc_id", *stored], filter=ids)
+        tbl = self._read("docs.parquet", ["doc_id", *stored], "doc_id", ids)
         if "doc_len" in cols:
-            lens = self._dataset("doclen").to_table(filter=ids)
+            lens = self._read("doclen", ["doc_id", "doc_len"], "doc_id", ids)
             by_doc = dict(zip(lens.column("doc_id").to_pylist(),
                               lens.column("doc_len").to_pylist()))
             tbl = tbl.append_column("doc_len", pa.array(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,11 +15,15 @@ from solrutils_spark.operators.bulk import bulk_update
 from solrutils_spark.operators.stats_report import latency_stats, read_query_log, top_queries
 from solrutils_spark.plans.model import SearchModel
 from solrutils_spark.query.engine import IndexReader
+from solrutils_spark.query.exact import query_terms
 from solrutils_spark.sources.html import html_to_text
 from solrutils_spark.sources.json_docs import docs_json_array, to_response_docs
 from solrutils_spark.sources.xml_ingest import decode_xml_bytes, sniff_charset, transform_xml
 
 N_DOCS = 300
+# a postings budget below every Σ df — including 0, a request with no live
+# term — so every scored request takes the distributed route
+SPARK_ROUTE = -1
 
 
 @pytest.fixture(scope="module")
@@ -557,12 +562,14 @@ def test_reporting_log_roundtrips_into_stats(spark, engine, tmp_path, caplog):
 
 
 def test_one_domain_decode_per_request(engine, monkeypatch):
-    """A scored+fq+facet request decodes the query-term postings ONCE:
+    """A scored+fq+facet request decodes the query-term postings ONCE, on
+    either route. Distributed (budget forced below every Σ df):
     ``scored_domain`` (the one scored pass) is built exactly once, and every
     facet family acts on a domain whose match side is that PERSISTED frame
     — no second kernel plan — the reference holds one searcher snapshot per
     request (SearchOp.java:133-148). Round 2 rebuilt the decode per facet
-    family."""
+    family. Driver: ``scored_local`` reads the candidate rows once and the
+    field facet reads doc-values, not a DataFrame."""
     from solrutils_spark.operators import executor as ex_mod
     from solrutils_spark.query.engine import IndexReader
 
@@ -573,7 +580,15 @@ def test_one_domain_decode_per_request(engine, monkeypatch):
         decode_plans.append(q)
         return orig_scored(self, q, **kw)
 
+    local_reads: list[list[str]] = []
+    orig_local_rows = IndexReader._local_rows
+
+    def spy_local_rows(self, terms):
+        local_reads.append(terms)
+        return orig_local_rows(self, terms)
+
     monkeypatch.setattr(IndexReader, "scored_domain", spy_scored)
+    monkeypatch.setattr(IndexReader, "_local_rows", spy_local_rows)
 
     facet_domain_cached: list[bool] = []
     orig_field_facet = ex_mod.field_facet
@@ -596,13 +611,22 @@ def test_one_domain_decode_per_request(engine, monkeypatch):
     monkeypatch.setattr(ex_mod, "field_facet", spy_field_facet)
     monkeypatch.setattr(ex_mod, "query_facets", spy_query_facets)
 
-    rsp = engine.search(
-        MODEL,
-        {"query": "posting", "filter": {"lang": "py"}, "facet": ["lang", "py_docs"]},
-    )
+    driver_req = {"query": "posting", "filter": {"lang": "py"}, "facet": ["lang"]}
+    rsp = engine.search(MODEL, driver_req)
     assert rsp["response"]["numFound"] > 0
-    assert len(decode_plans) == 1  # one decode plan per request
-    assert facet_domain_cached == [True, True]
+    assert decode_plans == [] and local_reads == [["posting"]]
+    assert facet_domain_cached == []  # doc-values, no facet DataFrame
+
+    monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", SPARK_ROUTE)
+    local_reads.clear()
+    for req in (driver_req, {**driver_req, "facet": ["lang", "py_docs"]}):
+        decode_plans.clear()
+        facet_domain_cached.clear()
+        rsp = engine.search(MODEL, req)
+        assert rsp["response"]["numFound"] > 0
+        assert len(decode_plans) == 1  # one decode plan per request
+        assert facet_domain_cached == [True] * len(req["facet"])
+    assert local_reads == []
 
 
 @pytest.fixture(scope="module")
@@ -627,16 +651,18 @@ def _request_jobs(spark, executor, req, group):
 
 
 def test_request_job_budget(spark, serving, monkeypatch):
-    """A ranked q + fq + facet request over the serving cache runs at most 8
-    Spark jobs (12 before it took hits, numFound and facets from one
-    persisted scored domain) and builds that domain once. A Lucene-syntax
-    request evaluates its boolean plan once: 7 jobs here, 16 before."""
+    """A warm ranked q + fq + facet request runs 0 Spark jobs on the driver
+    route. Forced onto the distributed route (budget below every Σ df) over
+    the serving cache it runs at most 8 (12 before it took hits, numFound
+    and facets from one persisted scored domain) and builds that domain
+    once. A Lucene-syntax request evaluates its boolean plan once: 7 jobs
+    here, 16 before."""
+    from solrutils_spark.operators import executor as ex_mod
     from solrutils_spark.query import qparser
     from solrutils_spark.query.engine import IndexReader
 
     req = {"query": "posting segment", "filter": {"lang": "py"},
            "facet": ["lang"]}
-    _request_jobs(spark, serving, req, "budget-warm")  # fills the filterCache
     built: list[str] = []
     orig_scored = IndexReader.scored_domain
 
@@ -645,6 +671,15 @@ def test_request_job_budget(spark, serving, monkeypatch):
         return orig_scored(self, q, **kw)
 
     monkeypatch.setattr(IndexReader, "scored_domain", spy_scored)
+    _request_jobs(spark, serving, req, "budget-driver-warm")  # fills the caches
+    rsp, jobs = _request_jobs(spark, serving, req, "budget-driver")
+    assert rsp["response"]["numFound"] > 0
+    assert jobs == 0, jobs
+    assert built == []
+
+    monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", SPARK_ROUTE)
+    _request_jobs(spark, serving, req, "budget-warm")  # fills the filterCache
+    built.clear()
     rsp, jobs = _request_jobs(spark, serving, req, "budget-ranked")
     assert rsp["response"]["numFound"] > 0
     assert jobs <= 8, jobs
@@ -715,12 +750,21 @@ def _parity_requests(oracle):
     return reqs
 
 
-def test_scored_request_parity(spark, engine, engine_oracle):
-    """Executor responses equal the engine's own paths and the oracle: docs
+def test_scored_request_parity(spark, engine, engine_oracle, monkeypatch):
+    """Executor responses equal the engine's own paths and the oracle, on
+    both routes (the default budget, then one below every Σ df): docs
     (ids, exact scores, key order) == ``reader.search`` (or
     ``execute_boolean`` for Lucene syntax) with the same rows/offset/filter,
     numFound == the oracle's match count ∩ fq, facet buckets == a groupBy
     over the docs the oracle matches ∩ fq."""
+    from solrutils_spark.operators import executor as ex_mod
+
+    _check_scored_parity(engine, engine_oracle)
+    monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", SPARK_ROUTE)
+    _check_scored_parity(engine, engine_oracle)
+
+
+def _check_scored_parity(engine, engine_oracle):
     from solrutils_spark.functions.analyzer import analyze
     from solrutils_spark.query.qparser import execute_boolean, is_lucene_syntax
 
@@ -756,6 +800,347 @@ def test_scored_request_parity(spark, engine, engine_oracle):
         want_buckets = [{"val": v, "count": n} for v, n in
                         sorted(counts.items(), key=lambda x: (-x[1], x[0]))]
         assert rsp["facets"]["lang"]["buckets"] == want_buckets, req
+
+
+# facet field with nulls, non-ASCII values and count ties (doc_id mod 7)
+TAGS = [None, "é", "Ω", "z", "A", "ä", "日本"]
+
+
+@pytest.fixture(scope="module")
+def tagged(engine):
+    """An executor over the ``engine`` index whose collection has a ``tag``
+    column."""
+    tag = F.element_at(F.array(*[F.lit(t).cast("string") for t in TAGS]),
+                       (F.col("doc_id") % len(TAGS) + 1).cast("int"))
+    return PlanExecutor(engine.collection.withColumn("tag", tag), engine.reader)
+
+
+def _plan(q, fq=(), facets=(), **params):
+    from solrutils_spark.plans.plan import QueryPlan
+
+    plan = QueryPlan()
+    plan.set("q", q)
+    for f in fq:
+        plan.add("fq", f)
+    for f in facets:
+        plan.add("facet.field", f)
+    for k, v in params.items():
+        plan.set(k.replace("_", "."), v)
+    return plan
+
+
+def _route_shapes(engine):
+    """(q, fq, facet fields, params) request shapes for the route parity
+    test: fixed edge cases plus seeded draws."""
+    import random
+
+    shapes = [
+        ("posting segment", [], [], {}),
+        ("posting segment", ["lang = 'py'"], ["lang"], {"rows": 4, "start": 3}),
+        ("parseDateTime", [], ["lang"], {"rows": 1000}),
+        ("segment", ["lang = 'go'"], [], {"rows": 3}),
+        ("zzzabsentzzz", [], ["lang"], {}),
+        ("posting zzzabsentzzz", ["lang = 'py'"], [], {}),
+        ("posting", ["lang = 'py'", "doc_id < 200"], ["lang", "tag"], {}),
+        ("posting segment", [], ["tag"], {"facet_limit": 3}),
+        ("posting segment", [], ["tag"], {"facet_mincount": 20}),
+        ("posting", [], ["{!key=L}lang", "tag"], {"fl": "doc_id,path,doc_len"}),
+        ("posting", ["lang = 'js'"], ["tag"], {"rows": 0}),
+        ("the and for", [], ["lang"], {}),
+        ("hotTermZipfianStorm posting", [], ["tag"], {"rows": 20}),
+        ("segment", [], [], {"start": 5000}),
+        ("segment wand", [], [], {"fl": "doc_id,score"}),
+        ("posting", ["lang:py OR lang:go"], ["lang"], {}),  # Lucene fq
+        ("posting", ["lang = 'nope'"], ["lang"], {}),        # empty fq domain
+        ("+posting -segment", ["lang = 'py'"], ["lang"], {}),  # Lucene q
+    ]
+    rng = random.Random(8)
+    vocab = sorted(engine.reader.term_dfs(
+        sorted({t for r in engine.collection.orderBy("doc_id").limit(40)
+                .select("content").collect() for t in query_terms(r[0])})))
+    for i in range(8):
+        q = " ".join(rng.sample(vocab, 1 + i % 3))
+        fq = [f"lang = '{rng.choice(['py', 'go', 'js'])}'"] if i % 2 else []
+        facets = [["lang"], ["tag"], []][i % 3]
+        shapes.append((q, fq, facets, {"rows": rng.choice([1, 5, 20]),
+                                       "start": rng.choice([0, 0, 2])}))
+    return shapes
+
+
+def test_driver_route_matches_distributed(tagged, monkeypatch):
+    """Both routes return ``repr``-identical responses (ids, exact scores,
+    key order, numFound, facet buckets — incl. a field with nulls, non-ASCII
+    values and count ties, which Spark orders by (count desc, value asc,
+    nulls first)) on 26 request shapes; every ranked shape with a facet.field
+    family or none takes the driver route at the default budget."""
+    from solrutils_spark.operators import executor as ex_mod
+    from solrutils_spark.query.engine import IndexReader
+    from solrutils_spark.query.qparser import is_lucene_syntax
+
+    local: list[str] = []
+    orig = IndexReader.scored_local
+
+    def spy(self, q, allowed=None):
+        local.append(q)
+        return orig(self, q, allowed)
+
+    monkeypatch.setattr(IndexReader, "scored_local", spy)
+    budget = ex_mod.DRIVER_POSTINGS_BUDGET
+    shapes = _route_shapes(tagged)
+    assert len(shapes) >= 24
+    for q, fq, facets, params in shapes:
+        local.clear()
+        monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", budget)
+        driver = repr(tagged.execute(_plan(q, fq, facets, **params)))
+        assert local == ([] if is_lucene_syntax(q) else [q]), q
+        monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", SPARK_ROUTE)
+        local.clear()
+        spark_rsp = repr(tagged.execute(_plan(q, fq, facets, **params)))
+        assert local == []
+        assert driver == spark_rsp, (q, fq, facets, params)
+
+
+def test_route_choice(spark, engine, monkeypatch):
+    """Lucene q, ``sort``, facet.query / facet.range / json.facet, an
+    over-budget Σ df, a duplicated-id collection (for facets) and a facet
+    field without exact doc-values (double) take the distributed route;
+    a ranked request whose Σ df equals the budget takes the driver route
+    and reads no more postings than the budget."""
+    from solrutils_spark.operators import executor as ex_mod
+    from solrutils_spark.query.engine import IndexReader
+
+    ex = engine
+    q = "posting segment"
+    sum_df = sum(ex.reader.term_dfs(query_terms(q)).values())
+    assert ex._driver_route(_plan(q, ["lang = 'py'"], ["lang"]), q)
+    assert not ex._driver_route(_plan("+posting -segment"), "+posting -segment")
+    assert not ex._driver_route(_plan(q, sort="doc_id asc"), q)
+    for extra in ({"facet_query": "lang = 'py'"}, {"facet_range": "doc_len"},
+                  {"json_facet": '{"n": "sum(doc_len)"}'}):
+        assert not ex._driver_route(_plan(q, facets=["lang"], **extra), q), extra
+
+    read: list[int] = []
+    orig = IndexReader._local_rows
+
+    def spy(self, terms):
+        rows = orig(self, terms)
+        read.append(sum(int(r.df_part) for r in rows))
+        return rows
+
+    monkeypatch.setattr(IndexReader, "_local_rows", spy)
+    monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", sum_df - 1)
+    assert not ex._driver_route(_plan(q), q)
+    monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", sum_df)
+    assert ex._driver_route(_plan(q), q)
+    ex.execute(_plan(q))
+    assert read == [sum_df]
+
+    dup = PlanExecutor(ex.collection.unionByName(ex.collection.limit(3)),
+                       ex.reader)
+    assert not dup._driver_route(_plan(q, facets=["lang"]), q)
+    assert dup._driver_route(_plan(q), q)
+    dbl = PlanExecutor(ex.collection.withColumn("x", F.col("doc_id") / 2),
+                       ex.reader)
+    assert not dbl._driver_route(_plan(q, facets=["x"]), q)
+
+
+def test_warm_driver_request_runs_no_job(spark, engine):
+    """The first driver-route request over cold caches runs the jobs that
+    fill them — the fq id collect (1-2 jobs) and the facet field's
+    doc-values (a bounds aggregate with a distinct count, several jobs
+    under AQE, then one collect): 8 here — a warm one runs
+    none."""
+    ex = PlanExecutor(engine.collection, engine.reader)
+    req = {"query": "posting segment", "filter": {"lang": "go"},
+           "facet": ["lang"]}
+    cold, cold_jobs = _request_jobs(spark, ex, req, "driver-cold")
+    warm, warm_jobs = _request_jobs(spark, ex, req, "driver-warm")
+    assert 3 <= cold_jobs <= 12 and warm_jobs == 0, (cold_jobs, warm_jobs)
+    cold["responseHeader"].pop("RTime")
+    warm["responseHeader"].pop("RTime")
+    assert repr(cold) == repr(warm)
+
+
+def test_driver_cache_memory_bounds(engine):
+    """The stated bounds: each filterCache id array is 8 B × |fq domain|
+    and at most ``filter_cache_size`` entries are kept; a field's
+    doc-values are 4 B × (max doc_id + 1), both under
+    ``DRIVER_DOCS_BUDGET``."""
+    from solrutils_spark.operators import executor as ex_mod
+
+    ex = PlanExecutor(engine.collection, engine.reader, filter_cache_size=2)
+    langs = ["py", "go", "js"]
+    for lang in langs:
+        ex.execute(_plan("posting", [f"lang = '{lang}'"], ["lang"]))
+    assert len(ex._filter_cache) == 2
+    for (fq,), entry in ex._filter_cache.items():
+        n = engine.collection.filter(fq).count()
+        assert entry.ids.dtype == np.int64 and entry.ids.nbytes == 8 * n
+        assert n <= ex_mod.DRIVER_DOCS_BUDGET
+    max_id = engine.collection.agg(F.max("doc_id")).collect()[0][0]
+    assert ex._doc_values["lang"].codes.nbytes == 4 * (max_id + 1)
+    assert max_id < ex_mod.DRIVER_DOCS_BUDGET
+
+
+@pytest.fixture
+def arrow_pulls(monkeypatch):
+    """Row counts of every ``DataFrame.toArrow`` collect, in order."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    pulled: list[int] = []
+    orig = DataFrame.toArrow
+
+    def spy(self):
+        tbl = orig(self)
+        pulled.append(tbl.num_rows)
+        return tbl
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    return pulled
+
+
+def test_over_bound_requests_stay_distributed(tagged, monkeypatch, arrow_pulls):
+    """An index, fq domain or facet field over the driver route's memory
+    bounds sends the request to the distributed route, and nothing over a
+    bound reaches the driver: the index size is read from its stats (no
+    job), the doc-values bounds are checked by an aggregate job before any
+    collect, and the fq id collect stops at budget + 1 rows. The responses
+    equal the distributed route's."""
+    from solrutils_spark.operators import executor as ex_mod
+    from solrutils_spark.operators.facets import doc_values
+
+    q = "posting segment"
+    n_docs = tagged.reader.stats["n_docs"]
+    fresh = lambda coll=tagged.collection: PlanExecutor(coll, tagged.reader)
+
+    # index over DRIVER_DOCS_BUDGET: no job, nothing pulled
+    monkeypatch.setattr(ex_mod, "DRIVER_DOCS_BUDGET", n_docs - 1)
+    ex = fresh()
+    assert ex._driver_route(_plan(q, ["lang = 'py'"], ["lang"]), q) is None
+    assert arrow_pulls == [] and ex._doc_values == {} and ex._filter_cache == {}
+
+    # fq domain over the budget: the collect stops at budget + 1 ids
+    monkeypatch.setattr(ex_mod, "DRIVER_DOCS_BUDGET", n_docs)
+    doubled = tagged.collection.unionByName(tagged.collection)
+    ex = fresh(doubled)
+    plan = _plan(q, ["doc_id >= 0"])
+    assert ex._driver_route(plan, q) is None
+    assert arrow_pulls == [n_docs + 1]
+    assert ex._filter_cache[("doc_id >= 0",)].ids is False
+    assert ex._driver_route(plan, q) is None and arrow_pulls == [n_docs + 1]
+
+    # facet field over the distinct-value or byte bound: no collect
+    arrow_pulls.clear()
+    ex = fresh()
+    monkeypatch.setattr(ex_mod, "DRIVER_FACET_VALUES", len(TAGS) - 1)
+    assert ex._driver_route(_plan(q, facets=["tag"]), q) is None
+    assert ex._driver_route(_plan(q, facets=["lang"]), q) is not None
+    assert ex._doc_values["tag"] is None and arrow_pulls == [n_docs]
+    monkeypatch.setattr(ex_mod, "DRIVER_FACET_BYTES", 10)
+    assert ex._driver_route(_plan(q, facets=["path"]), q) is None
+    assert ex._doc_values["path"] is None and arrow_pulls == [n_docs]
+    plan = _plan(q, ["lang = 'py'"], ["tag", "lang"])
+    got = repr(ex.execute(plan))
+    assert arrow_pulls == [n_docs]
+    monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", SPARK_ROUTE)
+    assert got == repr(fresh().execute(plan))
+
+    # ids outside [0, max_docs) or more rows than max_docs: no collect
+    arrow_pulls.clear()
+    bounds = dict(max_values=1 << 16, max_bytes=1 << 26)
+    shifted = tagged.collection.withColumn("doc_id", F.col("doc_id") + n_docs)
+    assert doc_values(shifted, "doc_id", "lang", max_docs=n_docs, **bounds) is None
+    assert doc_values(doubled, "doc_id", "lang", max_docs=n_docs, **bounds) is None
+    assert arrow_pulls == []
+    # within the bounds, a duplicated id is found after the collect
+    assert doc_values(doubled, "doc_id", "lang", max_docs=2 * n_docs,
+                      **bounds) is None
+    assert arrow_pulls == [2 * n_docs]
+
+
+def test_driver_caches_fill_outside_the_lock(tagged, monkeypatch):
+    """No Spark action runs while the executor's cache lock is held: the
+    doc-values bounds job and collect, the fq id collect and a Lucene fq's
+    jobs (distributed route) all run before the entry is stored."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    ex = PlanExecutor(tagged.collection, tagged.reader)
+    held: list[bool] = []
+    for name in ("toArrow", "collect", "count"):
+        orig = getattr(DataFrame, name)
+
+        def spy(self, *a, _orig=orig, **kw):
+            held.append(ex._lock.locked())
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    ex.execute(_plan("posting", ["lang = 'py'"], ["tag", "lang"]))
+    ex.execute(_plan("posting", ["lang:py OR lang:go"], facet_query="lang = 'py'"))
+    assert held and not any(held), held
+
+
+def test_concurrent_mixed_requests_equal_serial(spark, engine):
+    """Four threads run driver- and distributed-route requests (facet.query,
+    Lucene q) through one executor with cold caches and a 2-entry
+    filterCache over 3 fq-sets, under a shortened switch interval: every
+    response equals the serial run's, the cache keeps its bound and each
+    kept id array, and no filter frame is left persisted beyond the
+    entries that hold one (a lost update would leak one)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    reqs = [
+        {"query": "posting segment", "filter": {"lang": "py"}, "facet": ["lang"]},
+        {"query": "segment", "filter": {"lang": "go"}, "facet": ["lang"]},
+        {"query": "posting", "filter": {"lang": "py"},
+         "facet": ["lang", "py_docs"]},
+        {"query": "+posting -segment", "filter": {"lang": "go"}},
+        {"query": "wand posting", "facet": ["lang"], "rows": 20.0},
+        {"query": "segment posting", "filter": {"lang": "js"}},
+    ]
+
+    def run(ex, req):
+        rsp = ex.search(MODEL, req)
+        rsp["responseHeader"].pop("RTime")
+        return repr(rsp)
+
+    serial_ex = PlanExecutor(engine.collection, engine.reader)
+    serial = [run(serial_ex, r) for r in reqs]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persisted())
+    ex = PlanExecutor(engine.collection, engine.reader, filter_cache_size=2)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = [pool.submit(run, ex, r) for r in reqs * 2]
+            got = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == serial * 2
+    assert len(ex._filter_cache) <= 2
+    for key, entry in ex._filter_cache.items():
+        want = serial_ex._filter_cache[key]
+        if entry.ids is not None:
+            assert np.array_equal(entry.ids, want.ids), key
+    frames = sum(e.frame is not None for e in ex._filter_cache.values())
+    assert len(persisted()) - before <= frames
+
+
+def test_scored_request_applies_sort(engine):
+    """A scored request with ``sort`` orders its matches by it (ties by
+    doc_id), not by score; numFound and scores are unchanged."""
+    q = "posting segment"
+    matches = {r["doc_id"]: r["score"]
+               for r in engine.reader.scored_domain(q).collect()}
+    for sort, key in (("doc_id asc", lambda d: d),
+                      ("doc_id desc", lambda d: -d),
+                      ("score asc", lambda d: (matches[d], d))):
+        rsp = engine.execute(_plan(q, rows=5, sort=sort))
+        want = sorted(matches, key=key)[:5]
+        assert [(d["doc_id"], d["score"]) for d in rsp["response"]["docs"]] == [
+            (d, matches[d]) for d in want], sort
+        assert rsp["response"]["numFound"] == len(matches)
 
 
 def test_xslt_params_do_not_leak_across_apply_templates():
