@@ -142,12 +142,12 @@ def main() -> None:
 
     # scored+fq via the distributed cogroup filter path (round 2: no driver
     # collect, WAND stays on) — broad ~1/3 filter over the built corpus
-    # persisted pre-salted + salt-partitioned, like Solr's filterCache DocSet
-    # (the executor's filterCache does the same): the per-query filter-side
-    # exchange of the cogroup is elided
+    # persisted as salted_filter returns it (salted, partitioned like the
+    # serving cache), like Solr's filterCache DocSet (the executor's
+    # filterCache does the same): the cogroup runs no per-query exchange
     fdf = reader.salted_filter(
         reader.docs.filter("pmod(doc_id, 3) = 0").select("doc_id")
-    ).repartition("salt").persist()
+    ).persist()
     fdf.count()
     t0 = time.perf_counter()
     for _qid, qtext, k in qset[::4]:

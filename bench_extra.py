@@ -122,7 +122,7 @@ def main() -> None:
     qset = reference_queries()
     fdf = reader.salted_filter(
         reader.docs.filter("pmod(doc_id, 3) = 0").select("doc_id")
-    ).repartition("salt").persist()
+    ).persist()
     fdf.count()
     reader.search(qset[0][1], 10, filter_df=fdf).count()
     sc.setJobDescription("extra: filtered per-query loop")

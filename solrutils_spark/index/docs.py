@@ -38,9 +38,8 @@ from pyspark.sql import functions as F
 # would make ids differ between a local[4] and a local[32] build of the same
 # corpus (breaking the §7.0 pure-function-of-data contract). 1024 buckets keep
 # the per-bucket counts job and the offset literal array trivial while giving
-# every realistic cluster full shuffle parallelism; at extreme scale (where a
-# single bucket's skinny keys outgrow one task's sort) pass ``num_partitions``
-# explicitly — it is a determinism-affecting build config, like segment_size.
+# every realistic cluster full shuffle parallelism. Changing it changes every
+# doc_id: it is a determinism-affecting build constant, like segment_size.
 _ID_BUCKETS = 1024
 
 
@@ -58,7 +57,6 @@ def dedup_latest_commit(corpus: DataFrame) -> DataFrame:
 
 def assign_doc_ids(
     corpus: DataFrame,
-    num_partitions: int | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Add dense deterministic ``doc_id`` — one counting job, one shuffle.
@@ -66,11 +64,9 @@ def assign_doc_ids(
     Scheme: ``bucket = pmod(xxhash64(repo, path, commit), P)``; rank rows
     within each bucket by (repo, path, commit); ``doc_id = offset[bucket] +
     local_rank`` where offsets are prefix sums of the per-bucket counts.
-    Dense, and with the default P (``_ID_BUCKETS``, a constant) a pure
-    function of the data — independent of the input's physical partitioning
-    AND of cluster size (pinned by test_doc_ids_dense_and_parallelism_
-    invariant). Passing ``num_partitions`` explicitly changes the id order
-    deterministically for that P (a build-config knob, like segment_size).
+    Dense, and with P = ``_ID_BUCKETS`` (a constant) a pure function of the
+    data — independent of the input's physical partitioning AND of cluster
+    size (pinned by test_doc_ids_dense_and_parallelism_invariant).
 
     Jobs: exactly ONE extra action (the per-bucket counts — P longs to the
     driver); the rank+offset arithmetic rides inside whatever action consumes
@@ -86,9 +82,7 @@ def assign_doc_ids(
     Without a registry the keys are eagerly ``localCheckpoint``-ed instead —
     same determinism, no session-lifetime CacheManager entry to leak.
     """
-    if num_partitions is None:
-        num_partitions = _ID_BUCKETS
-    P = int(num_partitions)
+    P = _ID_BUCKETS
     from pyspark import StorageLevel
 
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(P)).cast("int")
@@ -134,7 +128,6 @@ def assign_doc_ids(
 
 def build_docs(
     corpus: DataFrame,
-    num_partitions: int | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
     """corpus → docs(doc_id, repo, path, commit, lang, content, content_sha256).
@@ -175,7 +168,7 @@ def build_docs(
     if cache_registry is not None:
         cache_registry.append(latest)
     # dense ids on the skinny key table (one counts job — fills the cache too)
-    ranked = assign_doc_ids(latest, num_partitions, cache_registry)
+    ranked = assign_doc_ids(latest, cache_registry)
     # single wide pass: join ids onto the corpus (content moves once, into
     # the join — hash-partitioned by the unique key, no sort of content)
     docs = corpus.join(ranked, ["repo", "path", "commit"])

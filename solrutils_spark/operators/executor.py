@@ -99,7 +99,8 @@ from solrutils_spark.operators.facets import (
 )
 from solrutils_spark.plans.model import SearchModel
 from solrutils_spark.plans.plan import QueryPlan, parse_json_facet
-from solrutils_spark.query.engine import TOPK_DDL, IndexReader
+from solrutils_spark.query.arrow_rows import TOPK_DDL
+from solrutils_spark.query.engine import IndexReader
 from solrutils_spark.query.exact import query_terms
 
 # Memory bounds of the driver route (not tuning options). Largest Σ df
@@ -383,27 +384,19 @@ class PlanExecutor:
         return entry
 
     def _cached_filter_ids(self, plan: QueryPlan) -> DataFrame:
-        """Persisted doc_id domain for the plan's fq set (filterCache twin).
-
-        When a reader is attached, the cached domain is pre-salted AND
-        hash-partitioned by salt, so repeated scored+fq requests elide the
-        filter-side exchange of the cogroup entirely (the Solr analog keeps
-        cached DocSets in index order). The frame is built outside the lock
-        (a Lucene fq runs jobs); the first thread to store it wins, and only
+        """Persisted doc_id domain for the plan's fq set (filterCache twin):
+        ``IndexReader.salted_filter`` of the filtered ids, salted and
+        co-partitioned with the serving cache, so repeated scored+fq
+        requests run no filter-side exchange (the Solr analog keeps cached
+        DocSets in index order). The frame is built outside the lock (a
+        Lucene fq runs jobs); the first thread to store it wins, and only
         the stored frame is persisted."""
         with self._lock:
             frame = self._filter_entry(plan).frame
         if frame is not None:
             return frame
-        ids = self._filtered_domain(plan).select(self.id_column)
-        if self.reader is not None:
-            ids = self.reader.salted_filter(ids)
-            # co-partition with the serving cache so the cogroup elides
-            # BOTH exchanges (a mismatched count re-exchanges the pruned
-            # candidate rows per query — cache_for_serving docstring)
-            n = self.reader._serving_partitions
-            ids = (ids.repartition(n, "salt") if n is not None
-                   else ids.repartition("salt"))
+        ids = self.reader.salted_filter(
+            self._filtered_domain(plan).select(self.id_column))
         with self._lock:
             entry = self._filter_entry(plan)
             if entry.frame is None:

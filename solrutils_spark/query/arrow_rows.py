@@ -95,17 +95,22 @@ def slice_doc_ids(rows) -> np.ndarray:
     return np.unique(np.concatenate(ids)) if ids else np.empty(0, np.int64)
 
 
+# the kernel output schemas of every grouped stage in ``query/``: one row per
+# (doc, score), and per (query, doc, score) for the batch kernels
+TOPK_DDL = "doc_id long, score double"
+BATCH_DDL = "query_id long, doc_id long, score double"
+
+
 def topk_table(doc_ids: np.ndarray, scores: np.ndarray) -> pa.Table:
-    """Kernel output ``doc_id long, score double`` for ``applyInArrow``."""
+    """Kernel output :data:`TOPK_DDL` for ``applyInArrow``."""
     return pa.table({"doc_id": pa.array(doc_ids, pa.int64()),
                      "score": pa.array(scores, pa.float64())})
 
 
 def batch_table(results) -> pa.Table:
-    """``[(query_id, doc_ids, scores)]`` → ONE ``query_id long, doc_id long,
-    score double`` table per slice from concatenated numpy arrays (a
-    per-query frame + concat costs ~20-50 µs × |queries| × slices per
-    job)."""
+    """``[(query_id, doc_ids, scores)]`` → ONE :data:`BATCH_DDL` table per
+    slice from concatenated numpy arrays (a per-query frame + concat costs
+    ~20-50 µs × |queries| × slices per job)."""
     live = [(qid, d, s) for qid, d, s in results if d.size] or [
         (0, np.empty(0, np.int64), np.empty(0, np.float64))]
     qids = np.concatenate([np.full(d.size, qid, np.int64) for qid, d, _ in live])

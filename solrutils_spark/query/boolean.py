@@ -57,9 +57,8 @@ from pyspark.sql import functions as F
 from solrutils_spark.functions.analyzer import B, K1, analyze
 from solrutils_spark.index.codec import decode_run
 from solrutils_spark.query import arrow_rows
+from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.wand import _EMPTY, _member, _tfn
-
-TOPK_DDL = "doc_id long, score double"
 
 
 class TooManyClauses(ValueError):
@@ -249,8 +248,6 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
     round-trips, the measured dominant per-query cost) and nothing else.
     Per-query results are rank- and score-identical to :meth:`search_conj`
     (same kernel, same global-idf summation order; pinned)."""
-    from pyspark.sql import Window
-
     all_terms = sorted({t for _, q, _ in queries for t in set(analyze(q))})
     dfs = reader.term_dfs(all_terms)
     plans = []
@@ -259,13 +256,7 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
         # MUST semantics: any dead term ⇒ the query matches nothing
         if terms and all(dfs.get(t) for t in terms):
             plans.append((qid, {t: reader.idf(dfs[t]) for t in terms}, k))
-    BATCH_DDL = "query_id long, doc_id long, score double"
-    if not plans:
-        return reader.spark.createDataFrame(
-            [], BATCH_DDL + ", rank int"
-        )
     avgdl = float(reader.stats["avgdl"])
-    live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
 
     def slice_conj_batch(rows, _allowed):
         rows_by_term: dict[str, list] = {}
@@ -280,18 +271,7 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
                                             n_terms=len(idf_by_term))))
         return arrow_rows.batch_table(results)
 
-    sliced = reader._per_slice(reader._candidate_rows(live_terms),
-                               slice_conj_batch, BATCH_DDL)
-    k_df = reader.spark.createDataFrame(
-        [(qid, k) for qid, _, k in plans], "query_id long, k int"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        sliced.withColumn("rank", F.row_number().over(w))
-        .join(F.broadcast(k_df), "query_id")
-        .filter(F.col("rank") <= F.col("k"))
-        .drop("k")
-    )
+    return reader._per_query_topk(plans, slice_conj_batch)
 
 
 # --------------------------------------------------------------- phrase ----

@@ -35,11 +35,15 @@ ranked requests whose postings fit its budget.
 
 Filters (P2, ``fq``) never affect scores — Lucene ``setIsFilter(true)``
 semantics (BulkUpdateHandler.java:59). The filter is a ``filter_df``: the
-filtered domain's doc_ids stay a DataFrame; each id is mapped to its salt
-slice by pure arithmetic (salt = doc_id // (segment_size·salt_group),
-geometry from stats.json) and COGROUPed with the candidate postings, so
-every kernel receives only its own slice's allowed ids — one keyed shuffle
-of (doc_id, salt) rows, nothing ever collected to the driver.
+filtered domain's doc_ids stay a DataFrame. :meth:`IndexReader.salted_filter`
+maps each id to its salt slice by pure arithmetic (salt = doc_id //
+(segment_size·salt_group), geometry from stats.json) and hash-partitions the
+ids by salt at the candidate side's partition count; the frame is COGROUPed
+with the candidate postings, so every kernel receives only its own slice's
+allowed ids and nothing is ever collected to the driver. A frame built once
+by ``salted_filter`` and persisted (``PlanExecutor``'s filterCache does so)
+is co-partitioned with the serving cache: repeated filtered queries shuffle
+neither side.
 
 WAND pruning stays ON under filters: θ accumulates over allowed docs only,
 and block upper bounds remain valid for any doc — rank-identical (pinned).
@@ -48,9 +52,7 @@ and block upper bounds remain valid for any doc — rank-identical (pinned).
 from __future__ import annotations
 
 import math
-from collections import OrderedDict
 from pathlib import Path
-from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -60,6 +62,7 @@ from pyspark.sql import functions as F
 from solrutils_spark.index.builder import read_docs, read_stats
 from solrutils_spark.index.merge import read_index, term_bucket
 from solrutils_spark.query import arrow_rows, wand
+from solrutils_spark.query.arrow_rows import BATCH_DDL, TOPK_DDL
 from solrutils_spark.query.arrow_rows import rows_from_arrow as _rows_from_arrow
 from solrutils_spark.query.exact import query_terms
 from solrutils_spark.query.wand import topk_rows
@@ -69,16 +72,6 @@ from solrutils_spark.query.wand import topk_rows
 # (``arrow_rows.rows_from_arrow``, ``wand.topk_rows``), so a driver-side
 # wrapper around these names is never pickled into a task.
 
-TOPK_DDL = "doc_id long, score double"
-
-
-class _AlignedFilter(NamedTuple):
-    """One entry of :meth:`IndexReader._aligned_filter`'s cache."""
-
-    source: DataFrame  # the caller's frame: pins it so its id() stays unique
-    aligned: DataFrame  # salted, co-partitioned with the serving cache
-    owned: bool  # the reader persisted ``aligned`` (eviction unpersists it)
-
 
 class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -86,17 +79,18 @@ class IndexReader:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         self.index = read_index(spark, index_dir)
+        # The memos below (and ``_docs``) are set once or only grow, and
+        # hold only facts of the immutable on-disk index, so threads share
+        # a reader unlocked: a race computes an entry twice and stores an
+        # equal value. None of them persists a frame.
         self._docs: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
         # (field, value) → df of a metadata keyword clause (qparser)
         self._field_df_cache: dict[tuple[str, str], int] = {}
         # rel → [(file path, footer metadata)]; see _read
         self._files: dict[str, list[tuple[str, object]]] = {}
+        # the serving cache's partition count (None: not serving)
         self._serving_partitions: int | None = None
-        # filter-alignment cache: id(filter_df) → _AlignedFilter. Bounded
-        # LRU; see _aligned_filter.
-        self._filter_align_cache: OrderedDict[int, _AlignedFilter] = OrderedDict()
-        self._filter_align_max = 8
 
     @property
     def docs(self) -> DataFrame:
@@ -104,66 +98,38 @@ class IndexReader:
             self._docs = read_docs(self.spark, self.index_dir)
         return self._docs
 
-    def cache_for_serving(self, num_partitions: int | None = None) -> "IndexReader":
+    def cache_for_serving(self) -> "IndexReader":
         """Hot-index mode: repartition the postings by ``salt`` and persist.
 
         Every scored query stage is ``groupBy("salt").applyInArrow(...)``
-        (or its ``cogroup`` twin under ``filter_df``);
-        with the cache already hash-partitioned on salt, Catalyst elides the
-        per-query Exchange (ClusteredDistribution is satisfied by the cached
-        partitioning for ANY partition count) — repeated queries shuffle
-        ZERO bytes and go straight from cache scan to kernel. The cluster
-        twin is a salt-bucketed index table kept resident on the serving
-        executors.
+        (or its ``cogroup`` twin under ``filter_df``); with the cache
+        already hash-partitioned on salt, Catalyst elides the per-query
+        Exchange — repeated queries shuffle ZERO bytes and go straight from
+        cache scan to kernel. The cluster twin is a salt-bucketed index
+        table kept resident on the serving executors.
 
-        ``num_partitions``: tuning knob for the cached partition count.
-        Default (round 6): ``min(4 · num_salts, spark.sql.shuffle.partitions)``
-        — the kernel stage can never have more than ``num_salts`` non-empty
-        groups, so partitions beyond a few × num_salts are pure empty-task
-        overhead (measured on the 8-salt bench index at local[32]:
-        128 cached partitions = 120 empty python-kernel tasks PER JOB;
-        13-query filtered loop 13.6 s → 6.9 s and batch 2.3 → 0.8 s at 32
-        partitions). The 4× oversubscription averages hash-collision
-        imbalance (hashing S salts into exactly S partitions doubles-up
-        ~1/e of them), and the shuffle-partitions cap keeps large-salt
-        indexes at the session's parallelism. A round-5 experiment
-        defaulted this to one partition per CORE (8, on a 64-salt index)
-        hoping to cut the ~2.5 s/job batch floor; measured at 1M docs it
-        did the OPPOSITE — core-count fat tasks serialize ~8 salts behind
-        the slowest sibling (fixed cost 2.46 → 3.33 s). The round-6
-        formula keeps that regime unchanged (min(256, 32) = 32) while
-        removing the empty-task overhead where salts ≪ shuffle
-        partitions. Note a filter side persisted at a DIFFERENT partition
-        count makes the cogroup re-exchange the pruned candidate rows
-        (bucket/term-filtered — MBs, not the index); since round 6 the
-        reader detects this and re-partitions + persists the filter ids
-        itself, once per frame (:meth:`_aligned_filter`) — callers that
-        co-partition their filterCache up front simply bypass that cache.
+        The cached partition count is ``min(4 · num_salts,
+        spark.sql.shuffle.partitions)``. The kernel stage never has more
+        than ``num_salts`` non-empty groups, so partitions beyond a few ×
+        num_salts are empty-task overhead (8-salt bench index at local[32]:
+        128 cached partitions ran 120 empty Python-kernel tasks per job;
+        the 13-query filtered loop took 13.6 s against 6.9 s at 32). The 4×
+        oversubscription averages hash-collision imbalance (hashing S salts
+        into exactly S partitions doubles up ~1/e of them), and the cap
+        keeps large-salt indexes at the session's parallelism: one
+        partition per core instead (8 on a 64-salt, 1M-doc index) made the
+        batch fixed cost 2.46 → 3.33 s, fat tasks serializing ~8 salts
+        behind the slowest sibling. :meth:`salted_filter` partitions filter
+        ids at the same count.
 
-        Calling it again re-partitions the cached index and unpersists the
-        previous cached copy once the new one is materialized; when the
-        partition count changes, the filter-alignment cache is cleared
-        (aligned frames the reader persisted are unpersisted) because its
-        entries are co-partitioned with the OLD count."""
-        if num_partitions is None:
-            shuffle_parts = int(
-                self.spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            num_partitions = min(4 * int(self.stats["num_salts"]), shuffle_parts)
-        num_partitions = int(num_partitions)
-        if self._serving_partitions not in (None, num_partitions):
-            for entry in self._filter_align_cache.values():
-                if entry.owned:
-                    entry.aligned.unpersist()
-            self._filter_align_cache.clear()
-        previous = self.index if self._serving_partitions is not None else None
-        self.index = self.index.repartition(num_partitions, "salt").persist()
+        A second call is a no-op that returns the reader."""
+        if self._serving_partitions is not None:
+            return self
+        shuffle_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        n = min(4 * int(self.stats["num_salts"]), shuffle_parts)
+        self.index = self.index.repartition(n, "salt").persist()
         self.index.count()
-        if previous is not None:
-            # after the count: a materialized cache no longer reads the
-            # copy it was built from, so unpersisting that copy keeps it
-            previous.unpersist()
-        self._serving_partitions = num_partitions
+        self._serving_partitions = n
         return self
 
     def idf(self, df: int) -> float:
@@ -257,11 +223,11 @@ class IndexReader:
         counting).
 
         Without ``filter_df``, ``allowed`` is None. With it, the filter ids
-        are salted and co-partitioned (:meth:`_aligned_filter`) and
-        COGROUPed with the candidate rows, so each slice gets only its own
-        allowed ids as a sorted int64 array (a slice with none skips the
-        decode). ``fn`` is pickled into the tasks: it must not capture the
-        reader."""
+        go through :meth:`salted_filter` (a salted frame passes unchanged)
+        and are COGROUPed with the candidate rows, so each slice gets only
+        its own allowed ids as a sorted int64 array (a slice with none
+        skips the decode). ``fn`` is pickled into the tasks: it must not
+        capture the reader."""
         if filter_df is None:
 
             def kernel(tbl: pa.Table) -> pa.Table:
@@ -274,10 +240,9 @@ class IndexReader:
             rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
             return fn(rows, allowed)
 
-        fids = self._aligned_filter(filter_df)
         return (
             cand.groupBy("salt")
-            .cogroup(fids.groupBy("salt"))
+            .cogroup(self.salted_filter(filter_df).groupBy("salt"))
             .applyInArrow(ckernel, schema)
         )
 
@@ -287,77 +252,29 @@ class IndexReader:
         return int(self.stats["salt_group"]) * int(self.stats["segment_size"])
 
     def salted_filter(self, filter_df: DataFrame) -> DataFrame:
-        """(doc_id) → (doc_id, salt) for the cogroup filter path. Passes
-        through unchanged if the caller already salted it — a filterCache can
-        hand in ``salted_filter(ids).repartition("salt").persist()`` so the
-        per-query filter-side exchange is elided too (the Solr analog keeps
-        DocSets in index order for cheap intersection)."""
+        """(doc_id) → (doc_id, salt), hash-partitioned by ``salt`` like the
+        candidate side of the filter cogroup: at the serving cache's
+        partition count, or (``repartition("salt")``) at the session's
+        shuffle partitions when the reader is not serving. A frame that
+        already has ``salt`` passes through unchanged.
+
+        Persist the result to reuse one filter across queries (the Solr
+        filterCache keeps one DocSet per fq; ``PlanExecutor`` keeps this
+        frame per fq-set): the cogroup then reads both sides as
+        partitioned and runs no per-query exchange. Persist, not
+        ``localCheckpoint``: only the cached relation keeps the hash
+        partitioning visible to Catalyst. A salted frame partitioned some
+        other way stays correct — Catalyst inserts the exchange the cogroup
+        needs on every query."""
         if "salt" in filter_df.columns:
             return filter_df
         span = self.salt_span()
-        return filter_df.select(
+        salted = filter_df.select(
             F.col(filter_df.columns[0]).cast("long").alias("doc_id")
         ).withColumn("salt", (F.col("doc_id") / F.lit(span)).cast("int"))
-
-    def _aligned_filter(self, filter_df: DataFrame) -> DataFrame:
-        """Salt the filter side and CO-PARTITION it with the serving cache.
-
-        The scored-filter cogroup requires both children clustered by
-        ``salt`` with the same partition count. A filterCache persisted at a
-        different count (e.g. ``repartition("salt")`` under default shuffle
-        partitions = 128 against a 32-partition serving cache — the shape a
-        caller gets by following the salted_filter docstring verbatim on a
-        local session) forces EnsureRequirements to re-exchange one side on
-        EVERY query job. Measured on the 20k bench index (local[32],
-        interleaved reps): the 13-query filtered loop runs 20-30% slower
-        with a 128-partition filter than with a co-partitioned one
-        (10.7/8.7/5.6 s vs 7.7/6.9/4.2 s), and a co-partitioned filter is at
-        parity with the unfiltered loop.
-
-        When serving mode is on and the counts mismatch, the salted ids are
-        re-partitioned ONCE and persisted (persist — not localCheckpoint —
-        because only InMemoryRelation preserves the hash partitioning for
-        Catalyst; a checkpointed RDD reports UnknownPartitioning and the
-        per-query exchange comes back). Entries live in a bounded LRU keyed
-        by the caller's filter frame (the Solr filterCache analog,
-        filterCache semantics like PlanExecutor._cached_filter_ids):
-        at most ``_filter_align_max`` aligned domains are resident, eviction
-        unpersists. On a correctly co-partitioned cluster deployment the
-        counts match and this cache never engages (zero extra memory).
-
-        The pass-through check trusts the partition COUNT, not the frame's
-        ``outputPartitioning``: a filter with the right count but not
-        hash-partitioned on ``salt`` (e.g. round-robin ``repartition(n)``) is
-        passed through unchanged. Results stay correct — EnsureRequirements
-        still inserts the exchange the cogroup needs — but that frame keeps
-        its per-query exchange."""
         n = self._serving_partitions
-        if n is None:
-            return self.salted_filter(filter_df)
-        key = id(filter_df)
-        hit = self._filter_align_cache.pop(key, None)
-        if hit is not None:
-            self._filter_align_cache[key] = hit  # re-insert → most recent
-            return hit.aligned
-        fids = self.salted_filter(filter_df)
-        try:
-            cur = fids.rdd.getNumPartitions()
-        except Exception:
-            return fids
-        if cur == n:
-            # memoize the pass-through too: the partition-count probe above
-            # is a per-frame plan conversion (~tens of ms of py4j) that a
-            # correctly co-partitioned caller should pay once, not per query
-            aligned, owned = fids, False
-        else:
-            aligned, owned = fids.repartition(n, "salt").persist(), True
-        # eviction must not unpersist a caller's own cache (owned=False)
-        self._filter_align_cache[key] = _AlignedFilter(filter_df, aligned, owned)
-        if len(self._filter_align_cache) > self._filter_align_max:
-            _, old = self._filter_align_cache.popitem(last=False)
-            if old.owned:
-                old.aligned.unpersist()
-        return aligned
+        return (salted.repartition(n, "salt") if n is not None
+                else salted.repartition("salt"))
 
     def search(
         self,
@@ -447,8 +364,6 @@ class IndexReader:
         intersection (round 2 paid one kernel job PER filtered query).
         Rank-identical to per-query ``search(filter_df=...)`` (pinned).
         """
-        from pyspark.sql import Window
-
         all_terms = sorted({t for _, q, _ in queries for t in query_terms(q)})
         dfs = self.term_dfs(all_terms)
         plans = []
@@ -456,24 +371,32 @@ class IndexReader:
             terms = [t for t in query_terms(qtext) if dfs.get(t)]
             if terms:
                 plans.append((qid, {t: self.idf(dfs[t]) for t in terms}, k))
-        if not plans:
-            return self.spark.createDataFrame(
-                [], "query_id long, doc_id long, score double, rank int"
-            )
         avgdl = float(self.stats["avgdl"])
-        live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
-        BATCH_DDL = "query_id long, doc_id long, score double"
 
         def slice_batch(rows, allowed):
             return arrow_rows.batch_table(
                 wand.topk_slice_batch(rows, plans, avgdl, allowed))
 
-        sliced = self._per_slice(self._candidate_rows(live_terms), slice_batch,
+        return self._per_query_topk(plans, slice_batch, filter_df)
+
+    def _per_query_topk(self, plans, fn, filter_df: DataFrame | None = None
+                        ) -> DataFrame:
+        """One batch job → (query_id, doc_id, score, rank). ``plans``: the
+        batch's (query_id, {term: idf}, k); ``fn(rows, allowed)`` returns a
+        slice's :data:`BATCH_DDL` table over the candidate rows of every
+        plan's terms (:meth:`_per_slice`). ``rank`` is the row number by
+        (score desc, doc_id asc) within a query_id, kept while ≤ that
+        query's k (a broadcast k-map): a repeated query_id ranks the rows
+        of all its plans together and keeps its last k."""
+        from pyspark.sql import Window
+
+        if not plans:
+            return self.spark.createDataFrame([], BATCH_DDL + ", rank int")
+        live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
+        sliced = self._per_slice(self._candidate_rows(live_terms), fn,
                                  BATCH_DDL, filter_df)
-        k_map = {qid: k for qid, _, k in plans}
         k_df = self.spark.createDataFrame(
-            [(qid, k) for qid, k in k_map.items()], "query_id long, k int"
-        )
+            list({qid: k for qid, _, k in plans}.items()), "query_id long, k int")
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             sliced.withColumn("rank", F.row_number().over(w))

@@ -68,8 +68,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import K1, analyze
+from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.boolean import (
-    TOPK_DDL,
     expand_fuzzy,
     expand_wildcard,
     multi_term_docs,

@@ -27,13 +27,16 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster pass ``None`` and let spark-submit decide.
     """
-    # local-mode python workers are forked with the driver's env, not its
-    # sys.path — export the package root so executors can unpickle our UDFs.
-    # On a real cluster this is `spark-submit --py-files` (north_rule).
-    pkg_root = str(Path(__file__).resolve().parent.parent)
-    py_path = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in py_path.split(os.pathsep):
-        os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + py_path if py_path else "")
+    # Python workers unpickle our UDFs, so the package root goes on THEIR
+    # path: Spark merges spark.executorEnv.PYTHONPATH into each worker's
+    # PYTHONPATH. The caller's environment (and so its later subprocesses)
+    # is left alone. On a real cluster this is `spark-submit --py-files`
+    # (north_rule).
+    conf = dict(extra_conf or {})
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [str(Path(__file__).resolve().parent.parent),
+         *([worker_path] if worker_path else [])])
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -77,6 +80,6 @@ def get_spark(
         # saved convert ~1:1 into wall time where cores outnumber spindles
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

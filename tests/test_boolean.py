@@ -159,6 +159,21 @@ def test_conj_batch_dead_term_query_matches_nothing(reader):
     assert 1 not in qids and 0 in qids
 
 
+def test_conj_batch_repeated_query_id_ranks_together(reader):
+    """A query_id given twice ranks the rows of both queries together and
+    keeps its last k (as ``search_batch`` does): each row once, not once
+    per k-map entry."""
+    a, b = "posting segment", "posting lucene"
+    got = reader.search_conj_batch([(0, a, 5), (0, b, 2)]).collect()
+    rows = sorted((r["rank"], r["doc_id"], r["score"]) for r in got)
+    merged = sorted(
+        [(r["doc_id"], r["score"]) for q in (a, b)
+         for r in reader.search_conj(q, 2).collect()],
+        key=lambda x: (-x[1], x[0]))[:2]
+    assert [r for r, _, _ in rows] == [1, 2]
+    assert [(d, s) for _, d, s in rows] == merged
+
+
 def test_conj_local_matches_distributed(reader):
     for qid, qtext, k in _multi_term_queries():
         want = [(r["doc_id"], r["score"])

@@ -503,14 +503,14 @@ def test_xslt_distributed(spark):
     assert all(r["doc"].startswith("<add>") and 'name="id">A1' in r["doc"] for r in rows)
 
 
-def test_filter_cache_reuse_and_lru_eviction(spark):
+def test_filter_cache_reuse_and_lru_eviction(spark, engine):
     """Solr filterCache twin: identical fq sets reuse ONE persisted domain;
     the least-recently-used entry is unpersisted at capacity."""
     from solrutils_spark.operators.executor import PlanExecutor
     from solrutils_spark.plans.plan import QueryPlan
 
     df = spark.range(100).withColumnRenamed("id", "doc_id")
-    ex = PlanExecutor(df, filter_cache_size=2)
+    ex = PlanExecutor(df, engine.reader, filter_cache_size=2)
 
     p1 = QueryPlan()
     p1.add("fq", "doc_id % 2 = 0")
@@ -1856,11 +1856,33 @@ def test_xslt_descendant_gap_with_predicates():
     assert got == [("hot", "a"), ("deep", "b"), ("plain", "c")]
 
 
+def test_get_spark_leaves_caller_pythonpath(spark, monkeypatch):
+    """get_spark gives the package root to the Python workers only
+    (``spark.executorEnv.PYTHONPATH``): the caller's PYTHONPATH, and so
+    every later subprocess's, is unchanged."""
+    import os
+    from pathlib import Path
+
+    from solrutils_spark.session import get_spark
+
+    root = str(Path(__file__).resolve().parent.parent)
+    # getOrCreate re-applies the builder's SQL confs to the running session
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for value in (None, "/elsewhere"):
+        if value is None:
+            monkeypatch.delenv("PYTHONPATH", raising=False)
+        else:
+            monkeypatch.setenv("PYTHONPATH", value)
+        assert get_spark(shuffle_partitions=shuffle) is spark
+        assert os.environ.get("PYTHONPATH") == value
+    assert spark.sparkContext.environment["PYTHONPATH"].split(os.pathsep)[0] == root
+
+
 def test_spark_submit_py_files(tmp_path):
     """north_rule: 'run via spark-submit --py-files on multi-executor
     clusters'. Packages the library as a zip, spark-submits
     tools/submit_job.py from OUTSIDE the repo with a builder-only session
-    (no get_spark PYTHONPATH export), and asserts the printed contract:
+    (no get_spark worker path), and asserts the printed contract:
     top-k returned, absent term empty, per-row sha256 invariant holds."""
     import json
     import shutil

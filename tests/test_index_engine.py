@@ -474,78 +474,151 @@ def test_maxscore_lookup_mode_engages_and_stays_exact(spark, tmp_path):
     ]
 
 
-def test_aligned_filter_copartitions_and_is_rank_identical(spark, index_dir):
-    """Serving-mode filter alignment (round 6): a filterCache persisted at a
-    partition count differing from the serving cache is re-partitioned ONCE,
-    persisted, and memoized (LRU) — results identical to the exhaustive
-    batch kernel under the same filter, the cache engages exactly once per
-    filter frame, and eviction unpersists."""
+def _cogroup_scan_paths(df) -> list[list[str]]:
+    """Runs ``df``; returns the node names on every path of its executed
+    (final adaptive) plan from the filter cogroup (``FlatMapCoGroupsInArrow``)
+    down to an ``InMemoryTableScan``, the scan excluded."""
+    df.collect()
+
+    def children(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        if name.endswith("QueryStage"):
+            return [node.plan()]
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    paths: list[list[str]] = []
+
+    def walk(node, path):
+        name = node.nodeName()
+        if path is None and name.startswith("FlatMapCoGroupsInArrow"):
+            path = []
+        if path is not None and name == "InMemoryTableScan":
+            paths.append(path)
+            return
+        for child in children(node):
+            walk(child, None if path is None else [*path, name])
+
+    walk(df._jdf.queryExecution().executedPlan(), None)
+    return paths
+
+
+def test_salted_filter_copartitions_and_is_rank_identical(spark, index_dir,
+                                                          monkeypatch):
+    """A persisted ``salted_filter`` frame is partitioned like the serving
+    cache: fed to ``search(filter_df=)``, and built by the executor's
+    filterCache for a distributed-route fq request, the cogroup reads both
+    cached sides with no Exchange in between, and the ranks equal
+    ``search_batch`` under the same filter exactly. A salted frame
+    partitioned another way keeps the same results through the exchange
+    Catalyst inserts."""
+    from solrutils_spark.operators import executor as ex_mod
+    from solrutils_spark.operators.executor import PlanExecutor
+    from solrutils_spark.plans.plan import QueryPlan
+
     reader = IndexReader(spark, index_dir).cache_for_serving()
+    n = reader._serving_partitions
+    qtext = "posting segment lucene"
+    ids = spark.createDataFrame([(d,) for d in range(0, N_DOCS, 3)], "doc_id long")
+    fdf = reader.salted_filter(ids).persist()
+    other = reader.salted_filter(ids).repartition(n + 1, "salt").persist()
+    ex = PlanExecutor(reader.docs, reader)
     try:
-        n_serving = reader._serving_partitions
-        assert n_serving is not None
-        mismatched = max(4, n_serving * 2)
-        allowed = [d for d in range(N_DOCS) if d % 3 == 0]
-        fdf = (
-            reader.salted_filter(
-                spark.createDataFrame([(d,) for d in allowed], "doc_id long")
-            )
-            .repartition(mismatched, "salt")
-            .persist()
-        )
-        fdf.count()
-        qtext = "posting segment lucene"
+        assert fdf.rdd.getNumPartitions() == n
+        exp = _batch_ranked(reader, [(0, qtext, 10)], filter_df=fdf)[0]
+        assert len(exp) == 10
         got = [(r["doc_id"], r["score"])
                for r in reader.search(qtext, 10, filter_df=fdf).collect()]
-        exp = _batch_ranked(reader, [(0, qtext, 10)], filter_df=fdf)[0]
         assert got == exp
-        # cache engaged: one aligned entry, co-partitioned with the serving
-        # cache and owned (persisted) by the reader
-        assert len(reader._filter_align_cache) == 1
-        (_src, aligned, owned), = reader._filter_align_cache.values()
-        assert owned
-        assert aligned.rdd.getNumPartitions() == n_serving
-        # second query reuses the SAME aligned frame (memoized by frame id)
-        reader.search(qtext, 5, filter_df=fdf).count()
-        (_src2, aligned2, _), = reader._filter_align_cache.values()
-        assert aligned2 is aligned
-        # an already-co-partitioned filter passes through un-repartitioned
-        # (memoized as a non-owned entry so the partition probe runs once)
-        fdf_ok = (
-            reader.salted_filter(
-                spark.createDataFrame([(d,) for d in allowed], "doc_id long")
-            )
-            .repartition(n_serving, "salt")
-            .persist()
-        )
-        fdf_ok.count()
-        got_ok = [(r["doc_id"], r["score"])
-                  for r in reader.search(qtext, 10, filter_df=fdf_ok).collect()]
-        assert got_ok == exp
-        assert len(reader._filter_align_cache) == 2
-        ok_entry = reader._filter_align_cache[id(fdf_ok)]
-        assert not ok_entry.owned                   # not owned: no persist
-        assert ok_entry.aligned.rdd.getNumPartitions() == n_serving
-        # LRU bound: flooding with distinct mismatched frames evicts oldest
-        reader._filter_align_max = 2
-        frames = []
-        for off in range(3):
-            f = (
-                reader.salted_filter(
-                    spark.createDataFrame(
-                        [(d,) for d in allowed[off:]], "doc_id long")
-                )
-                .repartition(mismatched, "salt")
-                .persist()
-            )
-            f.count()
-            frames.append(f)
-            reader.search(qtext, 5, filter_df=f).count()
-        assert len(reader._filter_align_cache) == 2
-        for f in [fdf, fdf_ok, *frames]:
-            f.unpersist()
+        paths = _cogroup_scan_paths(reader.search(qtext, 10, filter_df=fdf))
+        assert len(paths) == 2, paths  # the index cache and the filter
+        assert not any("Exchange" in name for p in paths for name in p), paths
+
+        monkeypatch.setattr(ex_mod, "DRIVER_POSTINGS_BUDGET", -1)
+        scored = []
+        real = reader.scored_domain
+
+        def spy(q, **kw):
+            scored.append(real(q, **kw))
+            return scored[-1]
+
+        monkeypatch.setattr(reader, "scored_domain", spy)
+        plan = QueryPlan()
+        plan.set("q", qtext)
+        plan.add("fq", "doc_id % 3 = 0")
+        plan.set("rows", "10")
+        rsp = ex.execute(plan)
+        assert [(d["doc_id"], d["score"])
+                for d in rsp["response"]["docs"]] == exp
+        paths = _cogroup_scan_paths(scored[0])
+        assert len(paths) == 2, paths
+        assert not any("Exchange" in name for p in paths for name in p), paths
+
+        got = [(r["doc_id"], r["score"])
+               for r in reader.search(qtext, 10, filter_df=other).collect()]
+        assert got == exp
+        paths = _cogroup_scan_paths(reader.search(qtext, 10, filter_df=other))
+        assert sum("Exchange" in name for p in paths for name in p) == 1, paths
     finally:
+        for entry in ex._filter_cache.values():
+            if entry.frame is not None:
+                entry.frame.unpersist()
+        fdf.unpersist()
+        other.unpersist()
         reader.index.unpersist()
+
+
+def test_serving_reader_concurrent_mixed_calls_equal_serial(spark, index_dir):
+    """One serving reader, four threads, mixed driver and distributed calls
+    (filtered by a persisted ``salted_filter`` frame too) under a shortened
+    switch interval, with cold memos: every result equals the serial run's
+    and the set of persisted RDDs is the same after the threads as
+    before."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    def calls(reader, fdf):
+        def rows(df):
+            return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+        def scored(q):
+            ids, scores = reader.scored_local(q)
+            return ids.tolist(), scores.tolist()
+
+        return [
+            lambda: reader.search_local("posting segment", 10),
+            lambda: reader.search_conj_local("posting segment", 10),
+            lambda: scored("delta encode posting list"),
+            lambda: rows(reader.search("hotTermZipfianStorm posting", 10)),
+            lambda: rows(reader.search("posting segment lucene", 10,
+                                       filter_df=fdf)),
+        ]
+
+    serial_reader = IndexReader(spark, index_dir).cache_for_serving()
+    reader = IndexReader(spark, index_dir).cache_for_serving()
+    ids = spark.createDataFrame([(d,) for d in range(0, N_DOCS, 3)], "doc_id long")
+    fdf = reader.salted_filter(ids).persist()
+    try:
+        fdf.count()
+        serial = [call() for call in calls(serial_reader, fdf)]
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                futures = [pool.submit(call) for call in calls(reader, fdf) * 2]
+                got = [f.result(timeout=600) for f in futures]
+        finally:
+            sys.setswitchinterval(interval)
+        assert got == serial * 2
+        assert set(jsc.getPersistentRDDs().keys()) == before
+    finally:
+        fdf.unpersist()
+        reader.index.unpersist()
+        serial_reader.index.unpersist()
 
 
 def test_rows_from_arrow_sliced_table_matches_unsliced(index_dir):
@@ -575,77 +648,22 @@ def test_rows_from_arrow_sliced_table_matches_unsliced(index_dir):
                 assert va == vb, attr
 
 
-def test_cache_for_serving_reconfigure_drops_aligned_filters(spark, index_dir):
-    """Re-calling cache_for_serving with a new partition count clears the
-    filter-alignment cache: the next filtered search re-aligns the filter
-    at the NEW count, and the frame aligned at the old count is unpersisted."""
-    reader = IndexReader(spark, index_dir).cache_for_serving(4)
-    try:
-        allowed = [d for d in range(N_DOCS) if d % 3 == 0]
-        fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long").repartition(3)
-        qtext = "posting segment lucene"
-        first = [(r["doc_id"], r["score"])
-                 for r in reader.search(qtext, 10, filter_df=fdf).collect()]
-        (_src, old, owned), = reader._filter_align_cache.values()
-        assert owned and old.rdd.getNumPartitions() == 4 and old.is_cached
-        reader.cache_for_serving(2)
-        again = [(r["doc_id"], r["score"])
-                 for r in reader.search(qtext, 10, filter_df=fdf).collect()]
-        assert again == first
-        (_src, aligned, owned), = reader._filter_align_cache.values()
-        assert owned and aligned is not old
-        assert aligned.rdd.getNumPartitions() == 2
-        assert not old.is_cached
-        assert not old.storageLevel.useMemory and not old.storageLevel.useDisk
-    finally:
-        for _src, aligned, owned in reader._filter_align_cache.values():
-            if owned:
-                aligned.unpersist()
-        reader.index.unpersist()
-
-
 def test_cache_for_serving_twice_keeps_one_cached_copy(spark, index_dir):
-    """Re-calling cache_for_serving unpersists the index copy the previous
-    call cached: after two calls one persisted index frame remains."""
+    """A second cache_for_serving call is a no-op: after two calls one
+    persisted index frame remains, and results are unchanged."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
-    reader = IndexReader(spark, index_dir).cache_for_serving(4)
+    reader = IndexReader(spark, index_dir).cache_for_serving()
     first = reader.index
     try:
-        reader.cache_for_serving(2)
-        assert not first.is_cached
+        assert reader.cache_for_serving() is reader
+        assert reader.index is first and first.is_cached
         assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
         got = [r["doc_id"] for r in reader.search("posting segment", 5).collect()]
         want = [r["doc_id"] for r in
                 IndexReader(spark, index_dir).search("posting segment", 5).collect()]
         assert got == want
     finally:
-        first.unpersist()
-        reader.index.unpersist()
-
-
-def test_aligned_filter_salts_only_on_cache_miss(spark, index_dir, monkeypatch):
-    """The filter-alignment cache is looked up BEFORE the filter is salted:
-    a repeated unsalted filter frame is salted once, on the miss."""
-    reader = IndexReader(spark, index_dir).cache_for_serving(4)
-    calls = []
-    real = reader.salted_filter
-
-    def spy(filter_df):
-        calls.append(filter_df)
-        return real(filter_df)
-
-    monkeypatch.setattr(reader, "salted_filter", spy)
-    try:
-        fdf = spark.createDataFrame(
-            [(d,) for d in range(0, N_DOCS, 3)], "doc_id long")
-        for _ in range(2):
-            reader.search("posting segment lucene", 5, filter_df=fdf).collect()
-        assert len(calls) == 1 and calls[0] is fdf
-    finally:
-        for _src, aligned, owned in reader._filter_align_cache.values():
-            if owned:
-                aligned.unpersist()
         reader.index.unpersist()
 
 

@@ -17,11 +17,11 @@ zip and runs exactly this):
         --py-files /tmp/solrutils_spark.zip \
         /path/to/tools/submit_job.py /tmp/idx_dir 2000
 
-Unlike ``session.get_spark`` (which exports PYTHONPATH so *locally forked*
-python workers can unpickle our UDFs), this path relies purely on Spark's
-own py-files distribution — the same mechanism a 1000-executor cluster
-uses — so it catches any import that accidentally leans on the driver's
-working directory.
+Unlike ``session.get_spark`` (which puts the package root on the python
+workers' path via ``spark.executorEnv.PYTHONPATH``), this path relies
+purely on Spark's own py-files distribution — the same mechanism a
+1000-executor cluster uses — so it catches any import that accidentally
+leans on the driver's working directory.
 """
 from __future__ import annotations
 
