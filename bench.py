@@ -48,8 +48,7 @@ def main() -> None:
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    spark = get_spark(app_name="solrutils-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=4 * cpus)
+    spark = get_spark(app_name="solrutils-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry

@@ -98,6 +98,7 @@ from solrutils_spark.operators.facets import (
     range_facet,
 )
 from solrutils_spark.plans.model import SearchModel
+from solrutils_spark.plans.operators import Facets
 from solrutils_spark.plans.plan import QueryPlan, parse_json_facet
 from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.engine import IndexReader
@@ -327,45 +328,15 @@ class PlanExecutor:
         return [f.strip() for f in fl.split(",")] if fl else None
 
     def _filtered_domain(self, plan: QueryPlan) -> DataFrame:
+        """The collection restricted by every fq body (ANDed), each through
+        ``qparser.filter_body``: Spark SQL first, the boolean executor when
+        SQL rejects a Lucene-syntax body."""
+        from solrutils_spark.query.qparser import filter_body
+
         df = self.collection
         for fq in plan.get_params("fq") or []:
-            df = self._apply_fq(df, fq)
+            df = filter_body(df, self.id_column, self.reader, fq)[1]
         return df
-
-    def _apply_fq(self, df: DataFrame, fq: str) -> DataFrame:
-        """One fq body. Spark-SQL boolean expressions keep first claim on
-        the string (the established template style — and SQL analysis is
-        eager, so a mismatch is known immediately, never a silent
-        misfilter); when SQL REJECTS it and the string carries Lucene
-        operator syntax, it runs through the boolean executor as a match
-        DOMAIN over the index — FilterQuery.java:11-64 renders the same
-        template syntax into fq as into q, including text-term filters
-        like ``content:posting AND lang:py``. Filters restrict, they
-        NEVER score. A Lucene-marker string neither engine accepts
-        re-raises the SQL error plus the parser's — loud, per contract."""
-        from solrutils_spark.query.qparser import (
-            apply_boolean_filter,
-            is_lucene_syntax,
-        )
-
-        try:
-            return df.filter(F.expr(fq))
-        except Exception as sql_err:
-            # not only AnalysisException/ParseException: Spark 4 reads
-            # ``lang:py`` as VARIANT path syntax and rejects it with a
-            # wrapped SparkException — any eager-analysis rejection means
-            # "not SQL over this schema", and the Lucene attempt below
-            # happens only BECAUSE SQL raised (never a silent reroute)
-            if self.reader is None or not is_lucene_syntax(fq):
-                raise
-            try:
-                # pure-negative fq bodies get Solr's match-all-minus-matches
-                # rewrite inside apply_boolean_filter (r5 ADVICE, medium)
-                return apply_boolean_filter(df, self.id_column, self.reader, fq)
-            except Exception as lucene_err:
-                # chain so BOTH rejections surface (r5 ADVICE, low): the
-                # docstring's "re-raises the SQL error plus the parser's"
-                raise lucene_err from sql_err
 
     def _filter_entry(self, plan: QueryPlan) -> _FilterEntry:
         """The plan's fq-set entry, made most-recently-used (created on a
@@ -516,8 +487,7 @@ class PlanExecutor:
                                      id_column=self.id_column) if specs else {}
         facet_ranges: dict = {}
         for spec in plan.get_params("facet.range") or []:
-            field = spec.split("}", 1)[1] if spec.startswith("{!") else spec
-            key = field if not spec.startswith("{!") else spec
+            field, key = strip_key(spec), Facets.extract_key(spec)
             start = float(plan.get_param(f"f.{field}.facet.range.start", plan.get_param("facet.range.start", "0")))
             end = float(plan.get_param(f"f.{field}.facet.range.end", plan.get_param("facet.range.end", "0")))
             gap = float(plan.get_param(f"f.{field}.facet.range.gap", plan.get_param("facet.range.gap", "1")))

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.plans.operators import Facets
+from solrutils_spark.query.qparser import filter_body
 
 def strip_key(spec: str) -> str:
     """Drop a {!key=...} local-params prefix, leaving the raw expression."""
@@ -133,61 +134,27 @@ def docvalues_facet(dv: DocValues, ids: np.ndarray, spec: str,
             "counts": {dv.values[c]: int(counts[c]) for c in order}}
 
 
-def _query_domain(domain: DataFrame, q: str, reader, id_column: str) -> DataFrame:
-    """Domain restricted by a facet/filter query body: Spark SQL keeps
-    first claim (eager analysis — a mismatch raises, never misfilters);
-    when SQL rejects the string and it carries Lucene operator syntax,
-    the boolean executor supplies the match domain (same contract as
-    PlanExecutor._apply_fq — Solr facet.query bodies ARE Lucene queries)."""
-    try:
-        return domain.filter(F.expr(q))
-    except Exception as sql_err:
-        from solrutils_spark.query.qparser import (
-            apply_boolean_filter,
-            is_lucene_syntax,
-        )
-
-        if reader is None or not is_lucene_syntax(q):
-            raise
-        try:
-            # pure-negative bodies → Solr's match-all-minus-matches rewrite
-            return apply_boolean_filter(domain, id_column, reader, q)
-        except Exception as lucene_err:
-            raise lucene_err from sql_err  # surface BOTH rejections
-
-
 def query_facets(domain: DataFrame, specs: list[str], reader=None,
                  id_column: str = "doc_id") -> dict[str, int]:
-    """All facet.query entries — SQL-expressible specs count in ONE
-    aggregation pass (conditional counts); Lucene-syntax specs (round 5)
-    each count a boolean-executor match domain."""
+    """All facet.query entries. Each body goes through
+    ``qparser.filter_body``: SQL-expressible specs count in ONE aggregation
+    pass (conditional counts); Lucene-syntax specs (round 5) each count a
+    boolean-executor match domain."""
     if not specs:
         return {}
-    sql_specs: list[tuple[int, str, str]] = []
-    lucene_specs: list[tuple[int, str, str]] = []
-    for i, s in enumerate(specs):
-        body = strip_key(s)
-        try:
-            domain.filter(F.expr(body))  # eager analysis probe — no job
-            sql_specs.append((i, s, body))
-        except Exception:
-            from solrutils_spark.query.qparser import is_lucene_syntax
-
-            if reader is None or not is_lucene_syntax(body):
-                raise
-            lucene_specs.append((i, s, body))
+    preds = []
     out: dict[str, int] = {}
-    if sql_specs:
-        aggs = [
-            F.sum(F.when(F.expr(b), 1).otherwise(0)).alias(f"q{i}")
-            for i, _, b in sql_specs
-        ]
-        row = domain.agg(*aggs).collect()[0]
-        for i, s, _ in sql_specs:
+    for s in specs:
+        pred, qdomain = filter_body(domain, id_column, reader, strip_key(s))
+        if pred is None:
+            out[Facets.extract_key(s)] = qdomain.count()
+        else:
+            preds.append((s, pred))
+    if preds:
+        row = domain.agg(*[F.sum(F.when(p, 1).otherwise(0)).alias(f"q{i}")
+                           for i, (_, p) in enumerate(preds)]).collect()[0]
+        for i, (s, _) in enumerate(preds):
             out[Facets.extract_key(s)] = int(row[f"q{i}"] or 0)
-    for _, s, b in lucene_specs:
-        out[Facets.extract_key(s)] = _query_domain(
-            domain, b, reader, id_column).count()
     # response keys in original spec order (Solr echoes request order)
     return {Facets.extract_key(s): out[Facets.extract_key(s)] for s in specs}
 
@@ -233,7 +200,7 @@ def json_facet(domain: DataFrame, spec: dict, reader=None,
         elif sub.get("type") == "terms":
             out[key] = _terms_facet(domain, sub)
         elif sub.get("type") == "query":
-            qdomain = _query_domain(domain, sub["q"], reader, id_column)
+            qdomain = filter_body(domain, id_column, reader, sub["q"])[1]
             inner = {k: v for k, v in sub.items() if k not in ("type", "q")}
             sub_res = json_facet(qdomain, inner.get("facet", {}), reader,
                                  id_column)

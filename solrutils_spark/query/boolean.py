@@ -11,18 +11,20 @@ rest of that delegated surface, Spark-first:
 - **Conjunction** (``q.op=AND`` / ``+a +b``): the document must contain ALL
   query terms; the score is the SAME BM25 sum as the disjunctive path,
   restricted to the conjunctive domain (Lucene BooleanQuery with MUST
-  clauses). Kernel: rarest-term-first postings intersection with **block
-  skipping** — after the rarest term is decoded, later (hotter) terms decode
-  only the blocks whose doc range can intersect the surviving candidate set
-  (``needed_block_runs``), so a ``rare AND hot`` query decodes a fraction of
-  the hot term's postings. At 100 TB this is the difference between "read
-  the stopword's posting list" and "read 0.1% of it".
-- **Phrase** (``"a b c"``): the same rarest-first block-skipping
-  intersection as the conjunction, then phrase frequency from the index's
-  positional sidecar (a third codec stream of per-posting positions, read
-  only by phrase queries and only for the blocks the intersection keeps) —
-  no document is re-analysed. Scoring follows Lucene's PhraseQuery: tf =
-  phrase frequency, idf = Σ idf(term), same BM25 tf normalization.
+  clauses). Kernel: :func:`_intersect`, the one rarest-term-first postings
+  intersection with **block skipping** — after the rarest term is decoded,
+  later (hotter) terms decode only the blocks whose doc range can intersect
+  the surviving candidate set (``needed_block_runs``), so a ``rare AND hot``
+  query decodes a fraction of the hot term's postings. At 100 TB this is
+  the difference between "read the stopword's posting list" and "read 0.1%
+  of it". :func:`conj_slice` scores the intersection's postings.
+- **Phrase** (``"a b c"``): the SAME :func:`_intersect` call, with the
+  positions of the kept blocks decoded from the index's positional sidecar
+  (a third codec stream of per-posting positions, read only by phrase
+  queries) — a phrase is a conjunction plus a position check, as in
+  Lucene's PhraseQuery. No document is re-analysed. Scoring follows
+  Lucene's PhraseQuery: tf = phrase frequency, idf = Σ idf(term), same
+  BM25 tf normalization.
 - **Prefix / wildcard** (``pre*``, ``te?m``): term-dictionary expansion over
   the ``termdf`` sidecar (vocabulary-sized, NOT corpus-sized), capped at
   ``max_expansions`` with a loud ``TooManyClauses`` (Lucene's
@@ -55,9 +57,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import B, K1, analyze
-from solrutils_spark.index.codec import decode_run
+from solrutils_spark.index.codec import decode_positions_run, decode_run
 from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.arrow_rows import TOPK_DDL
+from solrutils_spark.query.engine import ranked_page
 from solrutils_spark.query.wand import _EMPTY, _member, _tfn
 
 
@@ -96,6 +99,70 @@ def needed_block_runs(
     return [(int(needed[s]), int(needed[e]) + 1) for s, e in zip(starts, ends)]
 
 
+def _intersect(
+    rows,
+    idf_by_term: dict[str, float],
+    n_terms: int,
+    allowed_docs: np.ndarray | None = None,
+    *,
+    positions: bool = False,
+) -> tuple[np.ndarray, dict[str, tuple[np.ndarray, ...]]]:
+    """Rarest-first postings intersection with block skipping — the one
+    loop under every AND and phrase kernel (Lucene's ConjunctionDISI, which
+    PhraseQuery also drives).
+
+    Terms run in (idf desc, term asc) order. The rarest term decodes in
+    full; each later term decodes only the blocks whose doc range can hold
+    a surviving candidate (:func:`needed_block_runs`), and the candidates
+    narrow to the docs it holds. A term's rows (one per salt) are disjoint,
+    ascending doc ranges, so decoding them in ``first_doc`` order yields
+    ascending doc_ids with no sort.
+
+    Returns ``cand`` (ascending doc_ids holding every term, ∩
+    ``allowed_docs``) and, per term in that order, the arrays of the blocks
+    it decoded: ``(d, tf, dl)``, plus the flat positions when
+    ``positions`` is set. ``cand`` ⊆ every term's ``d``, so
+    ``np.searchsorted(d, cand)`` gathers its postings. No match (a term
+    missing from ``rows``, or an empty intersection) returns an empty
+    ``cand`` and no arrays."""
+    by_term: dict[str, list] = {}
+    for r in rows:
+        by_term.setdefault(r.term, []).append(r)
+    if len(by_term) < n_terms:
+        return _EMPTY[0], {}
+    cand: np.ndarray | None = None
+    decoded: dict[str, tuple[np.ndarray, ...]] = {}
+    for term in sorted(by_term, key=lambda t: (-idf_by_term[t], t)):
+        parts: list[tuple[np.ndarray, ...]] = []
+        for r in sorted(by_term[term], key=lambda r: int(r.first_doc)):
+            bo, bl = r.block_offset, r.block_last
+            runs = ([(0, len(bo))] if cand is None
+                    else needed_block_runs(bl, int(r.first_doc), cand))
+            for i0, i1 in runs:
+                prev_last = int(bl[i0 - 1]) if i0 else 0
+                part = decode_run(r.payload, int(r.df_part), bo, i0, i1, prev_last)
+                if positions:
+                    part += (decode_positions_run(
+                        r.pos_payload, r.pos_block_offset, i0, i1, part[1]),)
+                parts.append(part)
+        if not parts:
+            return _EMPTY[0], {}
+        arrays = tuple(np.concatenate(col) for col in zip(*parts))
+        d = arrays[0]
+        if cand is None:
+            cand = d if allowed_docs is None else d[_member(d, allowed_docs)]
+        else:
+            idx = np.searchsorted(d, cand)
+            ok = idx < d.size
+            ok &= d[np.minimum(idx, d.size - 1)] == cand
+            cand = cand[ok]
+        if cand.size == 0:
+            return _EMPTY[0], {}
+        decoded[term] = arrays
+    assert cand is not None
+    return cand, decoded
+
+
 def conj_slice(
     rows,
     idf_by_term: dict[str, float],
@@ -108,68 +175,20 @@ def conj_slice(
     ``rows``: ``PostingRow`` records for this slice (or every salt, on the
     driver). ``n_terms``: number of live query terms — a slice
     missing any term can contain no conjunctive match and returns without
-    decoding a byte. Scores are the BM25 sum over the query terms (identical
-    arithmetic to the disjunctive kernels, summed rare→hot by GLOBAL df —
-    idf desc, term asc — so the summation order, and hence every float, is
-    identical across the distributed per-slice, batch and driver-local
-    paths). ``allowed_docs``: P2 filter semantics (restricts the candidate
-    set, never scores)."""
-    by_term: dict[str, list] = {}
-    for r in rows:
-        by_term.setdefault(r.term, []).append(r)
-    if len(by_term) < n_terms:
+    decoding a byte. The match set is :func:`_intersect`'s ``cand``; each
+    term's postings are gathered at it and the score is the BM25 sum over
+    the query terms (identical arithmetic to the disjunctive kernels,
+    summed rare→hot by GLOBAL df — idf desc, term asc — so the summation
+    order, and hence every float, is identical across the distributed
+    per-slice, batch and driver-local paths). ``allowed_docs``: P2 filter
+    semantics (restricts the candidate set, never scores)."""
+    cand, decoded = _intersect(rows, idf_by_term, n_terms, allowed_docs)
+    if cand.size == 0:
         return _EMPTY
-    ordered = sorted(
-        by_term.items(), key=lambda kv: (-idf_by_term[kv[0]], kv[0])
-    )
-    cand: np.ndarray | None = None
-    tfns: list[np.ndarray] = []
-    terms_in_order: list[str] = []
-    for term, rlist in ordered:
-        parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        for r in rlist:
-            bo, bl = r.block_offset, r.block_last
-            if cand is None:
-                parts.append(decode_run(r.payload, int(r.df_part), bo, 0, len(bo), 0))
-            else:
-                for i0, i1 in needed_block_runs(bl, int(r.first_doc), cand):
-                    prev_last = int(bl[i0 - 1]) if i0 else 0
-                    parts.append(
-                        decode_run(r.payload, int(r.df_part), bo, i0, i1, prev_last)
-                    )
-        if not parts:
-            return _EMPTY
-        d = np.concatenate([p[0] for p in parts])
-        tf = np.concatenate([p[1] for p in parts])
-        dl = np.concatenate([p[2] for p in parts])
-        if len(parts) > 1:  # multiple rows/runs: restore global doc order
-            order = np.argsort(d, kind="stable")
-            d, tf, dl = d[order], tf[order], dl[order]
-        if d.size == 0:
-            return _EMPTY
-        if cand is None:
-            if allowed_docs is not None:
-                ok = _member(d, allowed_docs)
-                d, tf, dl = d[ok], tf[ok], dl[ok]
-                if d.size == 0:
-                    return _EMPTY
-            cand = d
-            tfns = [_tfn(tf, dl, avgdl)]
-        else:
-            pos = np.searchsorted(d, cand)
-            ok = pos < d.size
-            ok &= d[np.minimum(pos, d.size - 1)] == cand
-            if not ok.any():
-                return _EMPTY
-            cand = cand[ok]
-            sel = pos[ok]
-            tfns = [t[ok] for t in tfns]
-            tfns.append(_tfn(tf[sel], dl[sel], avgdl))
-        terms_in_order.append(term)
-    assert cand is not None
     scores = np.zeros(cand.size, dtype=np.float64)
-    for term, t in zip(terms_in_order, tfns):
-        scores += idf_by_term[term] * t
+    for term, (d, tf, dl) in decoded.items():
+        idx = np.searchsorted(d, cand)
+        scores += idf_by_term[term] * _tfn(tf[idx], dl[idx], avgdl)
     return cand, scores
 
 
@@ -226,12 +245,9 @@ def search_conj(
         return arrow_rows.topk_table(*topk_conj(
             rows, idf_by_term, avgdl, fetch_k, n_terms, allowed_docs=allowed))
 
-    sliced = reader._per_slice(reader._candidate_rows(terms), slice_conj,
-                               TOPK_DDL, filter_df)
-    ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
-    if offset:
-        ranked = ranked.offset(offset)
-    return ranked
+    return ranked_page(reader._per_slice(
+        reader._candidate_rows(terms), slice_conj, TOPK_DDL, filter_df),
+        k, offset)
 
 
 def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
@@ -357,8 +373,7 @@ def phrase_search(reader, phrase_text: str, k: int = 10,
     seq = analyze(phrase_text)
     if len(seq) == 1:
         return reader.search(phrase_text, k)
-    scored = phrase_scored(reader, phrase_text, slop=slop)
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return ranked_page(phrase_scored(reader, phrase_text, slop=slop), k)
 
 
 def phrase_slice(
@@ -371,9 +386,9 @@ def phrase_slice(
     """ALL (doc_id, score) of one salt slice for a phrase, computed from the
     POSITIONAL SIDECAR — no document re-analysis.
 
-    Shape: rarest-first conjunctive intersection with block skipping (the
-    same ``needed_block_runs`` certificate as :func:`conj_slice`), then
-    positions decoded ONLY for the blocks those runs touched, then
+    Shape: the conjunction's :func:`_intersect` with ``positions`` set
+    (positions decoded ONLY for the blocks the intersection kept), then
+    phrase frequency over the candidates it returns:
 
     - slop == 0: per-slot keys ``doc·stride + (pos − slot + m)`` intersected
       across slots (`np.intersect1d`, unique+sorted by construction) — the
@@ -386,71 +401,17 @@ def phrase_slice(
     Scoring is Lucene PhraseQuery: tf = phrase frequency, idf = Σ idf over
     unique terms, BM25 tf-normalization — rank- and score-identical to the
     re-analysing ``OracleIndex.search_phrase`` (pinned by tests)."""
-    from solrutils_spark.index.codec import decode_positions_run
-
-    uniq_terms = sorted(set(seq))
-    n_terms = len(uniq_terms)
     m = len(seq)
-    by_term: dict[str, list] = {}
-    for r in rows:
-        by_term.setdefault(r.term, []).append(r)
-    if len(by_term) < n_terms:
+    cand, decoded = _intersect(rows, idf_by_term, len(set(seq)), positions=True)
+    if cand.size == 0:
         return _EMPTY
-    ordered = sorted(
-        by_term.items(), key=lambda kv: (-idf_by_term[kv[0]], kv[0])
-    )
-    cand: np.ndarray | None = None
-    dl_first: np.ndarray | None = None
-    term_data: dict[str, tuple] = {}  # term → (docs, tfs, pos_flat)
-    for term, rlist in ordered:
-        rlist = sorted(rlist, key=lambda r: int(r.first_doc))
-        d_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
-        for r in rlist:
-            bo, bl, pos_bo = r.block_offset, r.block_last, r.pos_block_offset
-            runs = (
-                [(0, len(bo))]
-                if cand is None
-                else needed_block_runs(bl, int(r.first_doc), cand)
-            )
-            for i0, i1 in runs:
-                prev_last = int(bl[i0 - 1]) if i0 else 0
-                d, tf, dl = decode_run(
-                    r.payload, int(r.df_part), bo, i0, i1, prev_last
-                )
-                d_parts.append(d)
-                tf_parts.append(tf)
-                dl_parts.append(dl)
-                pos_parts.append(
-                    decode_positions_run(r.pos_payload, pos_bo, i0, i1, tf)
-                )
-        if not d_parts:
-            return _EMPTY
-        d = np.concatenate(d_parts)
-        tf = np.concatenate(tf_parts)
-        dl = np.concatenate(dl_parts)
-        pos_flat = np.concatenate(pos_parts)
-        if d.size == 0:
-            return _EMPTY
-        term_data[term] = (d, tf, pos_flat)
-        # narrow the candidate set (docs ascending: runs of one row are
-        # ascending and rows are disjoint ascending doc ranges)
-        if cand is None:
-            cand = d
-            dl_first = dl
-        else:
-            pos_idx = np.searchsorted(d, cand)
-            ok = pos_idx < d.size
-            ok &= d[np.minimum(pos_idx, d.size - 1)] == cand
-            if not ok.any():
-                return _EMPTY
-            cand = cand[ok]
-            dl_first = dl_first[ok]
-    assert cand is not None and dl_first is not None
+    d0, _, dl0, _ = next(iter(decoded.values()))
+    cand_dl = dl0[np.searchsorted(d0, cand)]  # |d| of each candidate
 
     def slot_positions(term: str) -> tuple[np.ndarray, np.ndarray]:
         """(doc, position) pairs of this term restricted to ``cand`` —
         vectorized gather of the candidate postings' position runs."""
-        d, tf, pos_flat = term_data[term]
+        d, tf, _, pos_flat = decoded[term]
         idx = np.searchsorted(d, cand)  # cand ⊆ d by construction
         counts = tf[idx]
         vstart = np.zeros(d.size, dtype=np.int64)
@@ -463,10 +424,10 @@ def phrase_slice(
         return np.repeat(cand, counts), pos_flat[flat_idx]
 
     idf_sum = float(sum(idf_by_term.values()))
-    norm = K1 * (1.0 - B + B * dl_first.astype(np.float64) / avgdl) if avgdl else np.full(cand.size, K1)
+    norm = K1 * (1.0 - B + B * cand_dl.astype(np.float64) / avgdl) if avgdl else np.full(cand.size, K1)
 
     if slop == 0:
-        stride = int(dl_first.max()) + m + 1
+        stride = int(cand_dl.max()) + m + 1
         inter: np.ndarray | None = None
         slot_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         for i, t in enumerate(seq):
@@ -534,7 +495,7 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
         return arrow_rows.topk_table(*phrase_slice(
             rows, seq, idf_by_term, avgdl, slop))
 
-    return reader._per_slice(reader._candidate_rows_with_positions(uniq),
+    return reader._per_slice(reader._candidate_rows(uniq, positions=True),
                              slice_phrase, TOPK_DDL)
 
 

@@ -73,6 +73,14 @@ from solrutils_spark.query.wand import topk_rows
 # wrapper around these names is never pickled into a task.
 
 
+def ranked_page(scored: DataFrame, k: int, offset: int = 0) -> DataFrame:
+    """Rows ``offset`` … ``offset + k`` of (doc_id, score) ``scored`` by
+    (score desc, doc_id asc): one TakeOrderedAndProject of k + offset rows,
+    never a full sort."""
+    page = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k + offset)
+    return page.offset(offset) if offset else page
+
+
 class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -136,17 +144,14 @@ class IndexReader:
         n = self.stats["n_docs"]
         return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
-    def _candidate_rows(self, terms: list[str]) -> DataFrame:
-        buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
-        return self.index.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-
-    def _candidate_rows_with_positions(self, terms: list[str]) -> DataFrame:
-        """Candidate rows INCLUDING the positional sidecar columns — read
-        fresh from disk (not the lean serving cache): only phrase queries
-        pay for the position bytes, and only for their own terms' buckets."""
-        idx = read_index(self.spark, self.index_dir, with_positions=True)
+    def _candidate_rows(self, terms: list[str], positions: bool = False
+                        ) -> DataFrame:
+        """Index rows of ``terms``: bucket-directory pruned, term-filtered.
+        ``positions`` adds the positional sidecar columns, read fresh from
+        disk (not the lean serving cache): only phrase queries pay for the
+        position bytes, and only for their own terms' buckets."""
+        idx = (read_index(self.spark, self.index_dir, with_positions=True)
+               if positions else self.index)
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         return idx.filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
@@ -303,12 +308,9 @@ class IndexReader:
             return arrow_rows.topk_table(*wand.topk_rows(
                 rows, idf_by_term, avgdl, fetch_k, allowed_docs=allowed))
 
-        sliced = self._per_slice(self._candidate_rows(terms), slice_topk,
-                                 TOPK_DDL, filter_df)
-        ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked
+        return ranked_page(self._per_slice(
+            self._candidate_rows(terms), slice_topk, TOPK_DDL, filter_df),
+            k, offset)
 
     def search_conj(self, query_text: str, k: int = 10, *, offset: int = 0,
                     filter_df: DataFrame | None = None) -> DataFrame:

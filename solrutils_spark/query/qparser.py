@@ -64,7 +64,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import K1, analyze
@@ -75,6 +75,7 @@ from solrutils_spark.query.boolean import (
     multi_term_docs,
     phrase_scored,
 )
+from solrutils_spark.query.engine import ranked_page
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 
@@ -518,6 +519,38 @@ def apply_boolean_filter(df: DataFrame, id_column: str, reader, q: str) -> DataF
     )
 
 
+def filter_body(df: DataFrame, id_column: str, reader, q: str
+                ) -> tuple[Column | None, DataFrame]:
+    """One FILTER body (fq / facet.query / json.facet query) over ``df`` →
+    (SQL predicate or None, restricted ``df``).
+
+    Spark SQL keeps first claim on the string (the established template
+    style — and SQL analysis is eager, so a mismatch is known here, never
+    a silent misfilter): the predicate and ``df.filter`` of it, no job.
+    When SQL REJECTS it and the string carries Lucene operator syntax, the
+    predicate is None and the domain is :func:`apply_boolean_filter`'s over
+    the index — FilterQuery.java:11-64 renders the same template syntax
+    into fq as into q, and Solr facet.query bodies ARE Lucene queries.
+    Filters restrict, they NEVER score. Without a ``reader`` or Lucene
+    syntax the SQL error re-raises; a Lucene body the parser rejects too
+    raises the parser's error chained from the SQL one (both surface)."""
+    try:
+        pred = F.expr(q)
+        return pred, df.filter(pred)
+    except Exception as sql_err:
+        # not only AnalysisException/ParseException: Spark 4 reads
+        # ``lang:py`` as VARIANT path syntax and rejects it with a wrapped
+        # SparkException — any eager-analysis rejection means "not SQL
+        # over this schema", and the Lucene attempt below happens only
+        # BECAUSE SQL raised (never a silent reroute)
+        if reader is None or not is_lucene_syntax(q):
+            raise
+        try:
+            return None, apply_boolean_filter(df, id_column, reader, q)
+        except Exception as lucene_err:
+            raise lucene_err from sql_err
+
+
 def execute_boolean(reader, q: str, k: int = 10, *, offset: int = 0,
                     filter_df: DataFrame | None = None) -> DataFrame:
     """Parse ``q`` and run it → DataFrame(doc_id, score) top-k.
@@ -527,8 +560,7 @@ def execute_boolean(reader, q: str, k: int = 10, *, offset: int = 0,
     scored = boolean_scored(reader, q, filter_df=filter_df)
     if scored is None:
         return reader.spark.createDataFrame([], TOPK_DDL)
-    ranked = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k + offset)
-    return ranked.offset(offset) if offset else ranked
+    return ranked_page(scored, k, offset)
 
 
 #: does a raw ``q`` string use Lucene operator syntax (vs plain terms)?
@@ -559,5 +591,6 @@ __all__ = [
     "SHOULD",
     "UnsupportedQuerySyntax",
     "execute_boolean",
+    "filter_body",
     "parse_query",
 ]

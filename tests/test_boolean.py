@@ -10,15 +10,19 @@ import numpy as np
 import pytest
 
 from solrutils_spark.corpus import reference_queries, synth_corpus
+from solrutils_spark.functions.analyzer import analyze
 from solrutils_spark.index.builder import build_index
 from solrutils_spark.oracle.reference_bm25 import OracleIndex
+from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.boolean import (
     TooManyClauses,
     _levenshtein_banded,
     _sloppy_sweep,
+    conj_slice,
     expand_fuzzy,
     expand_wildcard,
     needed_block_runs,
+    phrase_slice,
 )
 from solrutils_spark.query.engine import IndexReader
 
@@ -174,7 +178,7 @@ def test_conj_batch_repeated_query_id_ranks_together(reader):
     assert [(d, s) for _, d, s in rows] == merged
 
 
-def test_conj_local_matches_distributed(reader):
+def test_conj_local_matches_distributed(reader, oracle):
     for qid, qtext, k in _multi_term_queries():
         want = [(r["doc_id"], r["score"])
                 for r in reader.search_conj(qtext, k).collect()]
@@ -184,6 +188,41 @@ def test_conj_local_matches_distributed(reader):
                            atol=0), qtext  # bit-identical: same kernel+order
     assert reader.search_conj_local("posting zzzneverseen", 5) == []
     assert reader.search_conj_local("", 5) == []
+
+    # the shared intersection decodes a term's rows (one per salt) in
+    # first_doc order: rows handed over in reversed salt order give exactly
+    # the same (doc_id, score) arrays, for AND and for phrases
+    avgdl = float(reader.stats["avgdl"])
+
+    def same_for_reversed_salts(kernel, rows, *args):
+        rows = sorted(rows, key=lambda r: (r.term, r.salt))
+        assert len({r.salt for r in rows}) > 1
+        want_d, want_s = kernel(rows, *args)
+        got_d, got_s = kernel(rows[::-1], *args)
+        assert got_d.tolist() == want_d.tolist()
+        assert got_s.tolist() == want_s.tolist()
+        return want_d.size
+
+    matched = 0
+    for qid, qtext, k in _multi_term_queries():
+        terms = sorted(set(analyze(qtext)))
+        dfs = reader.term_dfs(terms)
+        if terms and len(dfs) == len(terms):
+            idf = {t: reader.idf(dfs[t]) for t in terms}
+            matched += same_for_reversed_salts(
+                conj_slice, reader._local_rows(terms), idf, avgdl, len(terms))
+    phrases = {" ".join(oracle.tokens[d][:2]) for d in sorted(oracle.tokens)[:3]}
+    for phrase in sorted(phrases):
+        seq = analyze(phrase)
+        uniq = sorted(set(seq))
+        dfs = reader.term_dfs(uniq)
+        rows = arrow_rows.rows_from_arrow(
+            reader._candidate_rows(uniq, positions=True).toArrow())
+        for slop in (0, 2):
+            matched += same_for_reversed_salts(
+                phrase_slice, rows, seq, {t: reader.idf(dfs[t]) for t in uniq},
+                avgdl, slop)
+    assert matched
 
 
 # ------------------------------------------------------ phrase parity ----

@@ -900,6 +900,19 @@ def test_driver_route_matches_distributed(tagged, monkeypatch):
         assert driver == spark_rsp, (q, fq, facets, params)
 
 
+def test_facet_range_key_local_param(engine):
+    """``facet.range={!key=len}doc_len`` reports its buckets under ``len``
+    (as ``facet.field`` does), not under the raw spec."""
+    def ranges(spec):
+        plan = _plan("posting", facet_range=spec, facet_range_start="0",
+                     facet_range_end="400", facet_range_gap="100")
+        return engine.execute(plan)["facet_counts"]["facet_ranges"]
+
+    plain = ranges("doc_len")
+    assert list(plain) == ["doc_len"] and sum(plain["doc_len"].values())
+    assert ranges("{!key=len}doc_len") == {"len": plain["doc_len"]}
+
+
 def test_route_choice(spark, engine, monkeypatch):
     """Lucene q, ``sort``, facet.query / facet.range / json.facet, an
     over-budget Σ df, a duplicated-id collection (for facets) and a facet
