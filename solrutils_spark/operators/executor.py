@@ -58,9 +58,10 @@ Two routes for a scored request (ranked or Lucene-syntax q), chosen by
 
 On both routes stored fields for the page come from a driver-side pyarrow
 read (``IndexReader.fetch``, no job). Request p50 on that host and index,
-median of 10 seeds (perfbench ``json_request``): 1,120 ms on the
-distributed route (the Python job costs ~250-350 ms of it, each JVM job
-~10-100 ms), 7.4 ms on the driver route. At the budget (Σ df = 2^18 on a
+median over seeds (perfbench ``json_request``): 1,120 ms on the
+distributed route (10 seeds; the Python job costs ~250-350 ms of it, each
+JVM job ~10-100 ms), 3.6 ms on the driver route (11 seeds, the reader's
+bucket postings resident). At the budget (Σ df = 2^18 on a
 100k-doc index) a driver-route request took ~110 ms and a 7.3 MB peak of
 traced allocations.
 
@@ -77,7 +78,6 @@ from __future__ import annotations
 import logging
 import threading
 import time
-from contextlib import contextmanager
 from typing import NamedTuple
 
 import numpy as np
@@ -103,6 +103,7 @@ from solrutils_spark.plans.plan import QueryPlan, parse_json_facet
 from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.engine import IndexReader
 from solrutils_spark.query.exact import query_terms
+from solrutils_spark.session import job_label
 
 # Memory bounds of the driver route (not tuning options). Largest Σ df
 # over a ranked request's live terms that it scores: the postings one
@@ -408,16 +409,9 @@ class PlanExecutor:
         with self._lock:
             return self._doc_values.setdefault(field, dv)
 
-    @contextmanager
     def _job_label(self, label: str):
         """Label the Spark jobs of the block; restore the caller's label."""
-        sc = self.collection.sparkSession.sparkContext
-        caller_label = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(label)
-        try:
-            yield
-        finally:
-            sc.setJobDescription(caller_label)
+        return job_label(self.collection.sparkSession, label)
 
     def _scored(self, plan: QueryPlan, q: str) -> DataFrame:
         """(doc_id, score) of every doc matching q AND all filters.

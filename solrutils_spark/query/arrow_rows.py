@@ -1,11 +1,13 @@
 """Posting rows from Arrow — the one adapter between pyarrow tables and the
 query kernels.
 
-The driver reads candidate rows with pyarrow datasets (``search_local``,
-``search_conj_local``); executors receive one salt slice per
-``applyInArrow`` group. Both hand the table to :func:`rows_from_arrow`, so
-every kernel in ``query/`` sees the same :class:`PostingRow` records with
-the same dtypes, and kernel results go back to Spark as ``pa.table``s.
+The driver masks its candidate rows out of the reader's resident bucket
+tables (``IndexReader._local_rows``, under ``search_local``,
+``search_conj_local`` and ``scored_local``); executors receive one salt
+slice per ``applyInArrow`` group. Both hand the table to
+:func:`rows_from_arrow`, so every kernel in ``query/`` sees the same
+:class:`PostingRow` records with the same dtypes, and kernel results go
+back to Spark as ``pa.table``s.
 Round-2 profiling measured the pandas conversion + per-row traversal at
 ~45% of serving latency, more than the decode kernel itself.
 """

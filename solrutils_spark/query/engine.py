@@ -22,7 +22,13 @@ Query lifecycle (the Spark twin of SURVEY.md §3.1's Solr crossing):
 
 Every driver-side read (dfs, candidate postings, stored fields, the
 vocabulary) goes through :meth:`IndexReader._read`: per-file parquet reads
-on the calling thread, never pyarrow's thread pools.
+on the calling thread, never pyarrow's thread pools. The driver's candidate
+postings (``search_local``, ``search_conj_local``, ``scored_local``) are read
+once per bucket per reader: each touched ``index/bucket=<b>``'s
+``arrow_rows.POSTING_COLUMNS`` stay resident as one table while the
+resident total fits :data:`DRIVER_POSTINGS_BYTES`, and a query masks its
+terms' rows out of it. The termdf, stored-field, doclen and vocabulary
+reads go to disk per call.
 
 :meth:`IndexReader.scored_domain` is the request-shaped twin of steps 4-5:
 ALL (doc_id, score) matches of the query (∩ filter) from one grouped pass,
@@ -52,10 +58,12 @@ and block upper bounds remain valid for any doc — rank-identical (pinned).
 from __future__ import annotations
 
 import math
+import threading
 from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,11 +74,20 @@ from solrutils_spark.query.arrow_rows import BATCH_DDL, TOPK_DDL
 from solrutils_spark.query.arrow_rows import rows_from_arrow as _rows_from_arrow
 from solrutils_spark.query.exact import query_terms
 from solrutils_spark.query.wand import topk_rows
+from solrutils_spark.session import job_label
 
 # Driver paths call the module-level ``_rows_from_arrow`` / ``topk_rows``
 # names; executor closures reach the same functions through their modules
 # (``arrow_rows.rows_from_arrow``, ``wand.topk_rows``), so a driver-side
 # wrapper around these names is never pickled into a task.
+
+# Memory bound of a reader's resident driver postings (not a tuning
+# option): the largest total Arrow ``nbytes`` of index-bucket tables
+# (``arrow_rows.POSTING_COLUMNS``) one reader keeps after their first read.
+# A bucket that does not fit is read from disk on every driver query. The
+# perfbench index (1,500 docs, 4 buckets) holds ~1.5 MB; the bound covers an
+# index ~170× that size.
+DRIVER_POSTINGS_BYTES = 256 << 20
 
 
 def ranked_page(scored: DataFrame, k: int, offset: int = 0) -> DataFrame:
@@ -90,13 +107,19 @@ class IndexReader:
         # The memos below (and ``_docs``) are set once or only grow, and
         # hold only facts of the immutable on-disk index, so threads share
         # a reader unlocked: a race computes an entry twice and stores an
-        # equal value. None of them persists a frame.
+        # equal value. None of them persists a frame. The resident postings
+        # also only grow, but their byte total is a bound, so their
+        # check-and-store (only that) runs under ``_lock``.
         self._docs: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
         # (field, value) → df of a metadata keyword clause (qparser)
         self._field_df_cache: dict[tuple[str, str], int] = {}
         # rel → [(file path, footer metadata)]; see _read
         self._files: dict[str, list[tuple[str, object]]] = {}
+        # bucket → its resident POSTING_COLUMNS table; see _bucket_postings
+        self._postings: dict[int, pa.Table] = {}
+        self._postings_bytes = 0
+        self._lock = threading.Lock()
         # the serving cache's partition count (None: not serving)
         self._serving_partitions: int | None = None
 
@@ -130,13 +153,16 @@ class IndexReader:
         behind the slowest sibling. :meth:`salted_filter` partitions filter
         ids at the same count.
 
-        A second call is a no-op that returns the reader."""
+        The materializing job is labelled ``serving: cache index`` (the
+        caller's label is restored). A second call is a no-op that returns
+        the reader."""
         if self._serving_partitions is not None:
             return self
         shuffle_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         n = min(4 * int(self.stats["num_salts"]), shuffle_parts)
         self.index = self.index.repartition(n, "salt").persist()
-        self.index.count()
+        with job_label(self.spark, "serving: cache index"):
+            self.index.count()
         self._serving_partitions = n
         return self
 
@@ -195,8 +221,9 @@ class IndexReader:
         files are read: the index's bucket files hold one or two row groups
         each (1,500 and 100k docs), and pruning them by min/max statistics
         left ``search_local`` p50 unchanged on both. File listings and
-        footers are read once per reader (the built index is immutable)."""
-        import pyarrow.compute as pc
+        footers are read once per reader (the built index is immutable);
+        the driver's postings reads go through :meth:`_bucket_postings`,
+        which keeps what it reads."""
         import pyarrow.parquet as pq
 
         files = self._files.get(rel)
@@ -408,19 +435,47 @@ class IndexReader:
         )
 
     def _local_rows(self, terms: list[str]) -> list[arrow_rows.PostingRow]:
-        """Candidate posting rows read directly with pyarrow (no Spark job):
-        bucket-directory pruned, term-filtered, on the calling thread
-        (:meth:`_read`) — the shared driver-serving fetch under
-        :meth:`search_local`, :meth:`search_conj_local` and
-        :meth:`scored_local`."""
+        """Candidate posting rows of ``terms`` on the driver (no Spark job):
+        per touched bucket, a ``pc.is_in`` term mask over its
+        :meth:`_bucket_postings` table, then the one Arrow adapter — the
+        shared driver-serving fetch under :meth:`search_local`,
+        :meth:`search_conj_local` and :meth:`scored_local`. On a resident
+        bucket a query allocates only its own rows and a one-bit-per-row
+        mask; rows keep the files' order, so results do not depend on
+        residency."""
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
+        value_set = pa.array(list(set(terms)), pa.string())
         rows: list[arrow_rows.PostingRow] = []
         for b in buckets:
-            tbl = self._read(f"index/bucket={b}", arrow_rows.POSTING_COLUMNS,
-                             "term", terms)
+            tbl = self._bucket_postings(b)
+            if tbl.num_rows:
+                tbl = tbl.filter(pc.is_in(tbl["term"], value_set=value_set))
             if tbl.num_rows:
                 rows.extend(_rows_from_arrow(tbl))
         return rows
+
+    def _bucket_postings(self, b: int) -> pa.Table:
+        """Bucket ``b``'s ``arrow_rows.POSTING_COLUMNS``, every row of its
+        files in one table: the resident table when the reader holds one,
+        else a whole-bucket :meth:`_read`, kept while the resident total
+        stays ≤ :data:`DRIVER_POSTINGS_BYTES`. The store only grows, so a
+        bucket that did not fit is read from disk on every call and costs
+        what every driver query paid before residency: its files decoded
+        whole, then the caller's term mask. The lock covers only the
+        check-and-store: two threads may both read a cold bucket, and the
+        first to store it wins."""
+        tbl = self._postings.get(b)
+        if tbl is not None:
+            return tbl
+        tbl = self._read(f"index/bucket={b}", arrow_rows.POSTING_COLUMNS)
+        with self._lock:
+            held = self._postings.get(b)
+            if held is not None:
+                return held
+            if self._postings_bytes + tbl.nbytes <= DRIVER_POSTINGS_BYTES:
+                self._postings[b] = tbl
+                self._postings_bytes += tbl.nbytes
+        return tbl
 
     def search_conj_local(self, query_text: str, k: int = 10, *,
                           offset: int = 0) -> list[tuple[int, float]]:
@@ -462,8 +517,9 @@ class IndexReader:
         offset: int = 0,
     ) -> list[tuple[int, float]]:
         """Low-latency serving path: SAME on-disk index, SAME WAND kernel,
-        but candidate rows are read directly with pyarrow (bucket-directory
-        pruned + term-filtered) and scored on the driver — no Spark job.
+        but candidate rows come from :meth:`_local_rows` (bucket pruned,
+        term-masked out of the reader's resident bucket tables) and are
+        scored on the driver — no Spark job.
 
         Rank-identical to :meth:`search` by construction (shared kernel,
         shared stats); pinned by tests. Use for interactive/point queries —
@@ -474,9 +530,12 @@ class IndexReader:
 
         Hot path is pandas-free: candidate rows go pyarrow table →
         ``PostingRow`` records straight into the kernel (the DataFrame
-        conversion + traversal measured ~45% of serving latency), and
-        file listings and footers are cached (:meth:`_read`) — the on-disk
-        index is immutable after build."""
+        conversion + traversal measured ~45% of serving latency), and a
+        bucket is decoded from disk once per reader
+        (:meth:`_bucket_postings`, within :data:`DRIVER_POSTINGS_BYTES`) —
+        the on-disk index is immutable after build. Decoding every touched
+        bucket file per query took 3.3 ms of a 5.1 ms perfbench
+        ``local_query`` (1,500-doc index, 4-core host)."""
         terms = query_terms(query_text)
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t)]
@@ -537,7 +596,9 @@ class IndexReader:
         that slice's part of ``allowed``, so every score is bit-identical
         to :meth:`scored_domain` (pinned). Memory: the decoded postings of
         the live terms, Σ df — the caller bounds it (``PlanExecutor``
-        routes here only under ``DRIVER_POSTINGS_BUDGET``)."""
+        routes here only under ``DRIVER_POSTINGS_BUDGET``) — besides the
+        reader's resident bucket tables (≤ :data:`DRIVER_POSTINGS_BYTES`,
+        shared by every driver query)."""
         ids = [np.empty(0, np.int64)]
         scores = [np.empty(0, np.float64)]
         terms = query_terms(query_text)

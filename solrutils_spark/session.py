@@ -11,6 +11,7 @@ Defaults are tuned for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -83,3 +84,17 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Label the Spark jobs the block runs on this thread
+    (``setJobDescription``); restore the caller's label after, and leave
+    its job group alone."""
+    sc = spark.sparkContext
+    caller_label = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(caller_label)

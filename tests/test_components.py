@@ -1140,6 +1140,205 @@ def test_concurrent_mixed_requests_equal_serial(spark, engine):
     assert len(persisted()) - before <= frames
 
 
+# driver-route JSON requests (ranked q, fq, facet.field) and point queries
+# over the ``engine`` index, for the resident-postings tests
+DRIVER_REQS = [
+    {"query": "posting segment", "filter": {"lang": "py"}, "facet": ["lang"]},
+    {"query": "segment", "filter": {"lang": "go"}, "facet": ["lang"]},
+    {"query": "wand posting", "facet": ["lang"], "rows": 20.0},
+]
+LOCAL_QUERIES = ["posting segment", "hotTermZipfianStorm posting",
+                 "delta encode posting list", "wand lucene segment"]
+
+
+def _driver_request(ex, req):
+    rsp = ex.search(MODEL, req)
+    rsp["responseHeader"].pop("RTime")
+    return repr(rsp)
+
+
+def _forbid_distributed_route(monkeypatch):
+    def distributed(*_a, **_kw):
+        raise AssertionError("a JSON request left the driver route")
+
+    monkeypatch.setattr(IndexReader, "scored_domain", distributed)
+
+
+def _local_calls(reader):
+    """Every driver postings entry point over LOCAL_QUERIES: search_local,
+    search_conj_local, scored_local without and with an allowed set."""
+    allowed = np.arange(0, N_DOCS, 3, dtype=np.int64)
+
+    def scored(q, allowed=None):
+        ids, scores = reader.scored_local(q, allowed)
+        return ids.tolist(), scores.tolist()
+
+    calls = []
+    for q in LOCAL_QUERIES:
+        calls += [lambda q=q: reader.search_local(q, 10),
+                  lambda q=q: reader.search_conj_local(q, 10),
+                  lambda q=q: scored(q),
+                  lambda q=q: scored(q, allowed)]
+    return calls
+
+
+def _bucket_bytes(reader) -> dict[int, int]:
+    """Arrow bytes of every index bucket's table as the reader keeps it."""
+    from solrutils_spark.query.arrow_rows import POSTING_COLUMNS
+
+    return {b: reader._read(f"index/bucket={b}", POSTING_COLUMNS).nbytes
+            for b in range(reader.stats["num_buckets"])}
+
+
+def test_resident_postings_parity_and_residency(spark, engine, monkeypatch):
+    """Driver queries and a driver-route JSON request answer identically
+    with every bucket read per call (bound 0: nothing is kept) and with the
+    default bound; once a query has made its buckets resident, repeating
+    it opens no parquet file."""
+    import pyarrow.parquet as pq
+
+    from solrutils_spark.query import engine as engine_mod
+
+    index_dir = engine.reader.index_dir
+    default = engine_mod.DRIVER_POSTINGS_BYTES
+
+    def run(reader):
+        ex = PlanExecutor(reader.docs, reader)
+        return ([call() for call in _local_calls(reader)],
+                [_driver_request(ex, req) for req in DRIVER_REQS])
+
+    _forbid_distributed_route(monkeypatch)
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", 0)
+    per_call_reader = IndexReader(spark, index_dir)
+    per_call = run(per_call_reader)
+    assert per_call_reader._postings == {}
+    assert per_call_reader._postings_bytes == 0
+
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", default)
+    reader = IndexReader(spark, index_dir)
+    assert run(reader) == per_call
+    assert reader._postings
+    assert reader._postings_bytes == sum(
+        t.nbytes for t in reader._postings.values()) <= default
+
+    reads: list[str] = []
+    orig_read = pq.ParquetFile.read
+
+    def spy_read(self, *a, **kw):
+        reads.append(str(self))
+        return orig_read(self, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read", spy_read)
+    assert [call() for call in _local_calls(reader)] == per_call[0]
+    assert reads == []
+
+
+def test_resident_postings_bound(spark, engine, monkeypatch):
+    """With the bound between one bucket's bytes and two buckets', exactly
+    the buckets that fit in query order are held, the resident total never
+    exceeds the bound, and the buckets left out still answer identically
+    (read per call). Under the smallest bucket's bytes nothing is kept."""
+    from solrutils_spark.query import engine as engine_mod
+
+    index_dir = engine.reader.index_dir
+    probe = IndexReader(spark, index_dir)
+    sizes = _bucket_bytes(probe)
+    first_term = {}
+    for b in sizes:
+        tbl = probe._read(f"index/bucket={b}", ["term"])
+        if tbl.num_rows:
+            first_term[b] = tbl["term"][0].as_py()
+    order = sorted(first_term)
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", 0)
+    want = [probe.search_local(first_term[b], 10) for b in order]
+    assert probe._postings == {}
+
+    bound = sizes[order[0]] + sizes[order[1]] - 1
+    fits, held = [], 0
+    for b in order:
+        if held + sizes[b] <= bound:
+            fits.append(b)
+            held += sizes[b]
+    assert 0 < len(fits) < len(order)
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", bound)
+    reader = IndexReader(spark, index_dir)
+    for _ in range(2):  # the second pass answers left-out buckets from disk
+        got = []
+        for b in order:
+            got.append(reader.search_local(first_term[b], 10))
+            assert reader._postings_bytes <= bound
+        assert got == want
+        assert sorted(reader._postings) == fits
+        assert reader._postings_bytes == held
+
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", min(sizes.values()) - 1)
+    reader = IndexReader(spark, index_dir)
+    assert [reader.search_local(first_term[b], 10) for b in order] == want
+    assert reader._postings == {} and reader._postings_bytes == 0
+
+
+def test_cold_serving_reader_mixed_threads_equal_serial(spark, engine,
+                                                         monkeypatch):
+    """Four threads share one cold serving reader, mixing search_local /
+    search_conj_local / scored_local calls with driver-route JSON requests
+    under a shortened switch interval, with the bound at half the index's
+    bucket bytes (some buckets resident, some read per call): every result
+    equals a serial run's, the resident bytes stay ≤ the bound and no
+    bucket is stored (or counted) twice."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from solrutils_spark.query import engine as engine_mod
+
+    def calls(reader, ex):
+        return _local_calls(reader) + [lambda req=req: _driver_request(ex, req)
+                                       for req in DRIVER_REQS]
+
+    index_dir = engine.reader.index_dir
+    serial_reader = IndexReader(spark, index_dir)
+    bound = sum(_bucket_bytes(serial_reader).values()) // 2
+    serial = [call() for call in calls(
+        serial_reader, PlanExecutor(serial_reader.docs, serial_reader))]
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", bound)
+    _forbid_distributed_route(monkeypatch)
+    reader = IndexReader(spark, index_dir).cache_for_serving()
+    ex = PlanExecutor(reader.docs, reader)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = [pool.submit(call) for call in calls(reader, ex) * 2]
+            got = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+        reader.index.unpersist()
+    assert got == serial * 2
+    assert reader._postings
+    assert reader._postings_bytes == sum(
+        t.nbytes for t in reader._postings.values()) <= bound
+
+
+def test_cache_for_serving_labels_its_job(spark, engine):
+    """cache_for_serving's materializing jobs carry the description
+    ``serving: cache index`` (read back from Spark's status store), and the
+    caller's own label is restored after."""
+    sc = spark.sparkContext
+    reader = IndexReader(spark, engine.reader.index_dir)
+    sc.setJobGroup("serving-label", "caller label")
+    try:
+        reader.cache_for_serving()
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        reader.index.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("serving-label")
+    store = sc._jsc.sc().statusStore()
+    assert jobs
+    assert {store.job(j).description().get() for j in jobs} == {
+        "serving: cache index"}
+
+
 def test_scored_request_applies_sort(engine):
     """A scored request with ``sort`` orders its matches by it (ties by
     doc_id), not by score; numFound and scores are unchanged."""
