@@ -38,7 +38,7 @@ rest of that delegated surface, Spark-first:
 
 All paths reuse the engine's layout: candidate rows pruned to the query
 terms' hash buckets, per-salt-slice kernels over the same delta+VByte
-payloads (``decode_run``) run through the reader's one grouped stage
+payloads (``decode_blocks_many``) run through the reader's one grouped stage
 (``IndexReader._per_slice``), slice outputs unioned with no extra shuffle
 (slices are disjoint doc ranges). Scored OR clauses of the Lucene-syntax
 executor (term clauses, single-token phrases) are not scored here: they
@@ -57,11 +57,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import B, K1, analyze
-from solrutils_spark.index.codec import decode_positions_run, decode_run
+from solrutils_spark.index.codec import (BLOCK, decode_blocks_many,
+                                         decode_positions_run)
 from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.engine import ranked_page
-from solrutils_spark.query.wand import _EMPTY, _member, _tfn
+from solrutils_spark.query.wand import _EMPTY, _member, _prev_lasts, _tfn
 
 
 class TooManyClauses(ValueError):
@@ -99,6 +100,22 @@ def needed_block_runs(
     return [(int(needed[s]), int(needed[e]) + 1) for s, e in zip(starts, ends)]
 
 
+def _run_positions(runs_of, tf: np.ndarray) -> np.ndarray:
+    """Flat positions of the blocks :func:`_intersect` decoded for one
+    term: ``runs_of`` is [(row, block runs)] in decode order and ``tf`` the
+    decoded tfs of exactly those blocks; each run's positions decode from
+    its slice of ``tf``."""
+    out, at = [], 0
+    for r, runs in runs_of:
+        n = int(r.df_part)
+        for i0, i1 in runs:
+            count = min(n, i1 * BLOCK) - i0 * BLOCK
+            out.append(decode_positions_run(
+                r.pos_payload, r.pos_block_offset, i0, i1, tf[at:at + count]))
+            at += count
+    return np.concatenate(out)
+
+
 def _intersect(
     rows,
     idf_by_term: dict[str, float],
@@ -133,21 +150,23 @@ def _intersect(
     cand: np.ndarray | None = None
     decoded: dict[str, tuple[np.ndarray, ...]] = {}
     for term in sorted(by_term, key=lambda t: (-idf_by_term[t], t)):
-        parts: list[tuple[np.ndarray, ...]] = []
+        # every salt row's kept blocks decode in ONE call: the decoder's
+        # per-call fixed cost, not its per-block work, dominates the few
+        # blocks a point query keeps
+        parts, runs_of = [], []
         for r in sorted(by_term[term], key=lambda r: int(r.first_doc)):
-            bo, bl = r.block_offset, r.block_last
-            runs = ([(0, len(bo))] if cand is None
-                    else needed_block_runs(bl, int(r.first_doc), cand))
-            for i0, i1 in runs:
-                prev_last = int(bl[i0 - 1]) if i0 else 0
-                part = decode_run(r.payload, int(r.df_part), bo, i0, i1, prev_last)
-                if positions:
-                    part += (decode_positions_run(
-                        r.pos_payload, r.pos_block_offset, i0, i1, part[1]),)
-                parts.append(part)
+            runs = ([(0, len(r.block_offset))] if cand is None
+                    else needed_block_runs(r.block_last, int(r.first_doc), cand))
+            if runs:
+                blocks = np.concatenate([np.arange(i0, i1) for i0, i1 in runs])
+                parts.append((r.payload, int(r.df_part), r.block_offset,
+                              blocks, _prev_lasts(r)))
+                runs_of.append((r, runs))
         if not parts:
             return _EMPTY[0], {}
-        arrays = tuple(np.concatenate(col) for col in zip(*parts))
+        arrays = decode_blocks_many(parts)
+        if positions:
+            arrays += (_run_positions(runs_of, arrays[1]),)
         d = arrays[0]
         if cand is None:
             cand = d if allowed_docs is None else d[_member(d, allowed_docs)]

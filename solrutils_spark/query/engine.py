@@ -24,11 +24,12 @@ Every driver-side read (dfs, candidate postings, stored fields, the
 vocabulary) goes through :meth:`IndexReader._read`: per-file parquet reads
 on the calling thread, never pyarrow's thread pools. The driver's candidate
 postings (``search_local``, ``search_conj_local``, ``scored_local``) are read
-once per bucket per reader: each touched ``index/bucket=<b>``'s
-``arrow_rows.POSTING_COLUMNS`` stay resident as one table while the
-resident total fits :data:`DRIVER_POSTINGS_BYTES`, and a query masks its
-terms' rows out of it. The termdf, stored-field, doclen and vocabulary
-reads go to disk per call.
+and adapted once per bucket per reader: each touched ``index/bucket=<b>``'s
+``arrow_rows.POSTING_COLUMNS`` stay resident as one
+``arrow_rows.PostingView`` (numpy columns plus a term → row-index map)
+while the resident total fits :data:`DRIVER_POSTINGS_BYTES`, and a query
+looks its terms' rows up in it by term, with no Arrow call. The termdf,
+stored-field, doclen and vocabulary reads go to disk per call.
 
 :meth:`IndexReader.scored_domain` is the request-shaped twin of steps 4-5:
 ALL (doc_id, score) matches of the query (∩ filter) from one grouped pass,
@@ -82,11 +83,12 @@ from solrutils_spark.session import job_label
 # wrapper around these names is never pickled into a task.
 
 # Memory bound of a reader's resident driver postings (not a tuning
-# option): the largest total Arrow ``nbytes`` of index-bucket tables
-# (``arrow_rows.POSTING_COLUMNS``) one reader keeps after their first read.
-# A bucket that does not fit is read from disk on every driver query. The
-# perfbench index (1,500 docs, 4 buckets) holds ~1.5 MB; the bound covers an
-# index ~170× that size.
+# option): the largest total ``nbytes`` of index-bucket views
+# (``arrow_rows.PostingView`` of ``arrow_rows.POSTING_COLUMNS``: their
+# arrays and term maps) one reader keeps after their first read. A bucket
+# that does not fit is read from disk on every driver query. The perfbench
+# index (1,500 docs, 4 buckets) holds ~2.7 MB (its Arrow tables: 1.4 MB);
+# the bound covers an index ~90× that size.
 DRIVER_POSTINGS_BYTES = 256 << 20
 
 
@@ -116,9 +118,11 @@ class IndexReader:
         self._field_df_cache: dict[tuple[str, str], int] = {}
         # rel → [(file path, footer metadata)]; see _read
         self._files: dict[str, list[tuple[str, object]]] = {}
-        # bucket → its resident POSTING_COLUMNS table; see _bucket_postings
-        self._postings: dict[int, pa.Table] = {}
+        # bucket → its resident POSTING_COLUMNS view, and the buckets that
+        # did not fit; see _bucket_postings
+        self._postings: dict[int, arrow_rows.PostingView] = {}
         self._postings_bytes = 0
+        self._unheld: set[int] = set()
         self._lock = threading.Lock()
         # the serving cache's partition count (None: not serving)
         self._serving_partitions: int | None = None
@@ -435,52 +439,64 @@ class IndexReader:
         )
 
     def _local_rows(self, terms: list[str]) -> list[arrow_rows.PostingRow]:
-        """Candidate posting rows of ``terms`` on the driver (no Spark job):
-        per touched bucket, a ``pc.is_in`` term mask over its
-        :meth:`_bucket_postings` table, then the one Arrow adapter — the
-        shared driver-serving fetch under :meth:`search_local`,
-        :meth:`search_conj_local` and :meth:`scored_local`. On a resident
-        bucket a query allocates only its own rows and a one-bit-per-row
-        mask; rows keep the files' order, so results do not depend on
-        residency."""
-        buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
-        value_set = pa.array(list(set(terms)), pa.string())
+        """Candidate posting rows of ``terms`` on the driver (no Spark job),
+        bucket by bucket — the shared driver-serving fetch under
+        :meth:`search_local`, :meth:`search_conj_local` and
+        :meth:`scored_local`. A resident bucket (:meth:`_bucket_postings`)
+        answers with dictionary lookups and numpy slices of its view: no
+        Arrow call, no mask, no per-query conversion. A bucket over the
+        bound is read per call, its terms' rows masked out of the read
+        (``_read``) and adapted (``_rows_from_arrow``). Either way rows keep
+        the files' order, so results do not depend on residency."""
+        num_buckets = self.stats["num_buckets"]
+        by_bucket: dict[int, list[str]] = {}
+        for t in set(terms):
+            by_bucket.setdefault(term_bucket(t, num_buckets), []).append(t)
         rows: list[arrow_rows.PostingRow] = []
-        for b in buckets:
-            tbl = self._bucket_postings(b)
-            if tbl.num_rows:
-                tbl = tbl.filter(pc.is_in(tbl["term"], value_set=value_set))
-            if tbl.num_rows:
-                rows.extend(_rows_from_arrow(tbl))
+        for b, bucket_terms in sorted(by_bucket.items()):
+            view = self._bucket_postings(b)
+            if view is not None:
+                rows.extend(view.rows(bucket_terms))
+            else:
+                rows.extend(_rows_from_arrow(self._read(
+                    f"index/bucket={b}", arrow_rows.POSTING_COLUMNS,
+                    "term", bucket_terms)))
         return rows
 
-    def _bucket_postings(self, b: int) -> pa.Table:
-        """Bucket ``b``'s ``arrow_rows.POSTING_COLUMNS``, every row of its
-        files in one table: the resident table when the reader holds one,
-        else a whole-bucket :meth:`_read`, kept while the resident total
-        stays ≤ :data:`DRIVER_POSTINGS_BYTES`. The store only grows, so a
-        bucket that did not fit is read from disk on every call and costs
-        what every driver query paid before residency: its files decoded
-        whole, then the caller's term mask. The lock covers only the
+    def _bucket_postings(self, b: int) -> arrow_rows.PostingView | None:
+        """Bucket ``b``'s ``arrow_rows.POSTING_COLUMNS`` as one
+        :class:`~arrow_rows.PostingView` of every row of its files, or None
+        when the bucket is read per call.
+
+        The first call reads the bucket whole and keeps its view while the
+        resident total of view ``nbytes`` (everything a view holds, not only
+        its Arrow buffers) stays ≤ :data:`DRIVER_POSTINGS_BYTES`. The store
+        only grows, so a bucket that did not fit never will: it is
+        remembered in ``_unheld`` and from then on read per call, its terms
+        masked, as every driver query read it before residency (the view
+        built on that first call still serves it). The lock covers only the
         check-and-store: two threads may both read a cold bucket, and the
         first to store it wins."""
-        tbl = self._postings.get(b)
-        if tbl is not None:
-            return tbl
-        tbl = self._read(f"index/bucket={b}", arrow_rows.POSTING_COLUMNS)
+        view = self._postings.get(b)
+        if view is not None or b in self._unheld:
+            return view
+        view = arrow_rows.PostingView(
+            self._read(f"index/bucket={b}", arrow_rows.POSTING_COLUMNS))
         with self._lock:
             held = self._postings.get(b)
             if held is not None:
                 return held
-            if self._postings_bytes + tbl.nbytes <= DRIVER_POSTINGS_BYTES:
-                self._postings[b] = tbl
-                self._postings_bytes += tbl.nbytes
-        return tbl
+            if self._postings_bytes + view.nbytes <= DRIVER_POSTINGS_BYTES:
+                self._postings[b] = view
+                self._postings_bytes += view.nbytes
+            else:
+                self._unheld.add(b)
+        return view
 
     def search_conj_local(self, query_text: str, k: int = 10, *,
                           offset: int = 0) -> list[tuple[int, float]]:
-        """Driver-serving twin of :meth:`search_conj` — same pyarrow fetch as
-        :meth:`search_local`, same block-skipping intersection kernel as the
+        """Driver-serving twin of :meth:`search_conj` — same resident-view
+        fetch as :meth:`search_local`, same block-skipping intersection kernel as the
         distributed path (``conj_slice`` merges multi-salt rows per term), so
         results are rank- and score-identical by construction (pinned)."""
         from solrutils_spark.query.boolean import topk_conj
@@ -518,7 +534,7 @@ class IndexReader:
     ) -> list[tuple[int, float]]:
         """Low-latency serving path: SAME on-disk index, SAME WAND kernel,
         but candidate rows come from :meth:`_local_rows` (bucket pruned,
-        term-masked out of the reader's resident bucket tables) and are
+        looked up by term in the reader's resident bucket views) and are
         scored on the driver — no Spark job.
 
         Rank-identical to :meth:`search` by construction (shared kernel,
@@ -528,14 +544,15 @@ class IndexReader:
         interactive; a query hot enough to break that belongs on the batch
         path).
 
-        Hot path is pandas-free: candidate rows go pyarrow table →
-        ``PostingRow`` records straight into the kernel (the DataFrame
-        conversion + traversal measured ~45% of serving latency), and a
-        bucket is decoded from disk once per reader
-        (:meth:`_bucket_postings`, within :data:`DRIVER_POSTINGS_BYTES`) —
-        the on-disk index is immutable after build. Decoding every touched
-        bucket file per query took 3.3 ms of a 5.1 ms perfbench
-        ``local_query`` (1,500-doc index, 4-core host)."""
+        Hot path is pandas- and Arrow-free: a bucket is decoded from disk
+        and adapted to numpy once per reader (:meth:`_bucket_postings`,
+        within :data:`DRIVER_POSTINGS_BYTES`) — the on-disk index is
+        immutable after build — and a query's ``PostingRow`` records are
+        slices of that view, found by term. On perfbench ``local_query``
+        (1,500-doc index, 4-core host) decoding every touched bucket file
+        per query took 3.3 ms of a 5.1 ms op; masking the resident tables
+        and re-adapting the masked rows per query still took ~40% of a
+        1.3 ms op."""
         terms = query_terms(query_text)
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t)]
@@ -597,7 +614,7 @@ class IndexReader:
         to :meth:`scored_domain` (pinned). Memory: the decoded postings of
         the live terms, Σ df — the caller bounds it (``PlanExecutor``
         routes here only under ``DRIVER_POSTINGS_BUDGET``) — besides the
-        reader's resident bucket tables (≤ :data:`DRIVER_POSTINGS_BYTES`,
+        reader's resident bucket views (≤ :data:`DRIVER_POSTINGS_BYTES`,
         shared by every driver query)."""
         ids = [np.empty(0, np.int64)]
         scores = [np.empty(0, np.float64)]

@@ -11,8 +11,9 @@ variant, and the ONLY pruning kernel — every execution shape runs it:
   ``applyInArrow`` group — slices are disjoint doc ranges, so top-k is
   embarrassingly parallel and Spark merges len(slices)·k candidate rows.
 
-Rows reach it through the one Arrow adapter (``arrow_rows.rows_from_arrow``)
-on both sides. Terms are processed rare→hot; before decoding a block of
+Rows reach it through the one Arrow adapter (``arrow_rows.PostingView``) on
+both sides: every row of a slice's view on executors, the query's terms
+looked up in resident bucket views on the driver. Terms are processed rare→hot; before decoding a block of
 term *t* the kernel checks the certificate::
 
       max(best accumulated score inside the block's doc range, 0)

@@ -69,6 +69,47 @@ def test_needed_block_runs_selects_overlapping_blocks_only():
     assert needed_block_runs(bl, 10, np.empty(0, np.int64)) == []
 
 
+def _encoded_row(term, salt, docs, positions):
+    """A PostingRow of ``docs`` (ascending) with per-doc ``positions``,
+    encoded by the index codec, positional sidecar included."""
+    from solrutils_spark.index.codec import encode_many, encode_positions_many
+
+    counts = np.array([docs.size])
+    tfs = np.array([len(positions[d]) for d in docs])
+    enc = encode_many(counts, docs, tfs, np.full(docs.size, 10))
+    deltas = np.concatenate([np.diff(positions[d], prepend=0) for d in docs])
+    pos = encode_positions_many(counts, tfs, deltas.astype(np.uint64))
+    r = arrow_rows.PostingRow()
+    r.term, r.salt, r.df_part, r.first_doc = term, salt, np.int64(docs.size), docs[0]
+    r.payload, r.pos_payload = enc.payload, pos.payload
+    r.block_offset, r.pos_block_offset = enc.block_offset, pos.block_offset
+    r.block_last = enc.block_last
+    r.block_max_tf = enc.block_max_tf.astype(np.int64)
+    r.block_min_dl = enc.block_min_dl.astype(np.int64)
+    return r
+
+
+def test_intersect_positions_of_runs_past_block_zero():
+    """A hot term's kept blocks are runs that start past block 0, in two
+    salt rows: the one batched decode and the positions decoded per run
+    from its tf slices line up posting by posting."""
+    from solrutils_spark.query.boolean import _intersect
+
+    positions = {d: np.arange(1 + d % 3) * 7 + d % 5 for d in range(1200)}
+    hot = [_encoded_row("hot", s, np.arange(600 * s, 600 * (s + 1)), positions)
+           for s in (0, 1)]
+    rare = _encoded_row("rare", 0, np.array([300, 310, 900]), positions)
+    cand, decoded = _intersect([*hot, rare], {"hot": 0.5, "rare": 2.0}, 2,
+                               positions=True)
+    assert cand.tolist() == [300, 310, 900]
+    d, tf, dl, pos = decoded["hot"]
+    # blocks 2 of each salt row: docs 256..383 and 856..983
+    assert d.tolist() == [*range(256, 384), *range(856, 984)]
+    assert tf.tolist() == [len(positions[x]) for x in d.tolist()]
+    assert (dl == 10).all()
+    assert pos.tolist() == np.concatenate([positions[x] for x in d.tolist()]).tolist()
+
+
 def test_levenshtein_banded_matches_full_dp():
     def full(a, b):
         la, lb = len(a), len(b)

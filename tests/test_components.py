@@ -1183,10 +1183,11 @@ def _local_calls(reader):
 
 
 def _bucket_bytes(reader) -> dict[int, int]:
-    """Arrow bytes of every index bucket's table as the reader keeps it."""
-    from solrutils_spark.query.arrow_rows import POSTING_COLUMNS
+    """Resident charge of every index bucket: the ``nbytes`` of its view as
+    the reader keeps it (its Arrow buffers, converted copies and term map)."""
+    from solrutils_spark.query.arrow_rows import POSTING_COLUMNS, PostingView
 
-    return {b: reader._read(f"index/bucket={b}", POSTING_COLUMNS).nbytes
+    return {b: PostingView(reader._read(f"index/bucket={b}", POSTING_COLUMNS)).nbytes
             for b in range(reader.stats["num_buckets"])}
 
 
@@ -1316,6 +1317,76 @@ def test_cold_serving_reader_mixed_threads_equal_serial(spark, engine,
     assert reader._postings
     assert reader._postings_bytes == sum(
         t.nbytes for t in reader._postings.values()) <= bound
+
+
+def test_warm_resident_query_does_no_arrow_work(spark, engine, monkeypatch):
+    """Once its buckets are resident, a driver query (search_local,
+    search_conj_local, scored_local with and without an allowed set) builds
+    no view and masks nothing: no ``pc.is_in`` and no ``PostingView``. The
+    results equal a reader's at bound 0, where every bucket is read per
+    call; once such a bucket did not fit, a query adapts only its terms'
+    rows of it, never the whole bucket again."""
+    from solrutils_spark.query import arrow_rows
+    from solrutils_spark.query import engine as engine_mod
+
+    index_dir = engine.reader.index_dir
+    default = engine_mod.DRIVER_POSTINGS_BYTES
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", 0)
+    per_call_reader = IndexReader(spark, index_dir)
+    per_call = [call() for call in _local_calls(per_call_reader)]
+    assert per_call_reader._unheld and not per_call_reader._postings
+    monkeypatch.setattr(engine_mod, "DRIVER_POSTINGS_BYTES", default)
+    reader = IndexReader(spark, index_dir)
+    assert [call() for call in _local_calls(reader)] == per_call  # warm up
+    assert reader._postings and not reader._unheld
+
+    is_in_calls, views = [], []
+    is_in, view = engine_mod.pc.is_in, arrow_rows.PostingView
+
+    def counting_is_in(*a, **kw):
+        is_in_calls.append(1)
+        return is_in(*a, **kw)
+
+    def counting_view(tbl):
+        views.append(tbl.num_rows)
+        return view(tbl)
+
+    monkeypatch.setattr(engine_mod.pc, "is_in", counting_is_in)
+    monkeypatch.setattr(arrow_rows, "PostingView", counting_view)
+    for _ in range(2):
+        assert [call() for call in _local_calls(reader)] == per_call
+    assert is_in_calls == [] and views == []
+
+    assert [call() for call in _local_calls(per_call_reader)] == per_call
+    smallest = min(v.num_rows for v in reader._postings.values())
+    assert is_in_calls and views and max(views) < smallest
+
+
+def test_resident_view_footprint_within_charge(spark, engine):
+    """What one resident bucket really holds — Python allocations seen by
+    tracemalloc plus the growth of Arrow's memory pool — stays within the
+    ``nbytes`` it is charged against the bound."""
+    import gc
+    import tracemalloc
+
+    import pyarrow as pa
+
+    reader = IndexReader(spark, engine.reader.index_dir)
+    sizes = _bucket_bytes(reader)  # also caches every bucket's footer
+    b = max(sizes, key=sizes.get)
+    gc.collect()
+    arrow0 = pa.total_allocated_bytes()
+    tracemalloc.start()
+    try:
+        base = tracemalloc.get_traced_memory()[0]
+        view = reader._bucket_postings(b)
+        gc.collect()
+        traced = tracemalloc.get_traced_memory()[0] - base
+    finally:
+        tracemalloc.stop()
+    footprint = traced + pa.total_allocated_bytes() - arrow0
+    assert reader._postings == {b: view}
+    assert 0 < footprint <= view.nbytes == reader._postings_bytes
 
 
 def test_cache_for_serving_labels_its_job(spark, engine):

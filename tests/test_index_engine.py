@@ -621,31 +621,85 @@ def test_serving_reader_concurrent_mixed_calls_equal_serial(spark, index_dir):
         serial_reader.index.unpersist()
 
 
+def _assert_same_rows(got, want):
+    """Two PostingRow lists are equal attribute by attribute: the same
+    attributes set, the same types, arrays of the same dtype and values."""
+    import numpy as np
+
+    from solrutils_spark.query.arrow_rows import PostingRow
+
+    assert len(got) == len(want)
+    for a, b in zip(got, want):
+        for attr in PostingRow.__slots__:
+            assert hasattr(a, attr) == hasattr(b, attr), attr
+            if not hasattr(a, attr):
+                continue
+            va, vb = getattr(a, attr), getattr(b, attr)
+            assert type(va) is type(vb), attr
+            if isinstance(va, np.ndarray):
+                assert va.dtype == vb.dtype and np.array_equal(va, vb), attr
+            else:
+                assert va == vb, attr
+
+
 def test_rows_from_arrow_sliced_table_matches_unsliced(index_dir):
     """The one Arrow adapter reads a sliced table (non-zero ListArray
     offset, as ``combine_chunks`` leaves a single sliced chunk) through the
     same zero-copy views: every row equals the matching unsliced row,
     including the positional sidecar columns."""
-    import numpy as np
     import pyarrow.dataset as ds
 
-    from solrutils_spark.query.arrow_rows import PostingRow, rows_from_arrow
+    from solrutils_spark.query.arrow_rows import rows_from_arrow
 
     tbl = ds.dataset(str(Path(index_dir) / "index")).to_table().combine_chunks()
     assert "pos_payload" in tbl.column_names
     n = tbl.num_rows - 2
     sliced = tbl.slice(1, n)
     assert sliced.combine_chunks().column("block_offset").chunk(0).offset == 1
-    full = rows_from_arrow(tbl)[1 : 1 + n]
-    part = rows_from_arrow(sliced)
-    assert len(part) == n
-    for a, b in zip(full, part):
-        for attr in PostingRow.__slots__:
-            va, vb = getattr(a, attr), getattr(b, attr)
-            if isinstance(va, np.ndarray):
-                assert va.dtype == vb.dtype and np.array_equal(va, vb), attr
-            else:
-                assert va == vb, attr
+    _assert_same_rows(rows_from_arrow(sliced), rows_from_arrow(tbl)[1 : 1 + n])
+
+
+def test_term_lookup_rows_equal_masked_rows(spark, index_dir):
+    """Looking a term up in a view gives the rows a term mask plus the
+    adapter give: for every term of the index through a reader's resident
+    buckets (``_local_rows``), and for every term of a sliced table (non-zero
+    binary and list offsets) with the positional sidecar columns."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from solrutils_spark.query.arrow_rows import (POSTING_COLUMNS, PostingView,
+                                                  rows_from_arrow)
+
+    def masked(tbl, term):
+        return rows_from_arrow(tbl.filter(pc.equal(tbl["term"], term)))
+
+    reader = IndexReader(spark, index_dir)
+    n_terms = 0
+    for b in range(reader.stats["num_buckets"]):
+        tbl = reader._read(f"index/bucket={b}", POSTING_COLUMNS)
+        for term in sorted(set(tbl["term"].to_pylist())):
+            _assert_same_rows(reader._local_rows([term]), masked(tbl, term))
+            n_terms += 1
+    assert n_terms == reader._read("termdf", ["term"]).num_rows
+    assert len(reader._postings) == reader.stats["num_buckets"]
+
+    tbl = ds.dataset(str(Path(index_dir) / "index")).to_table().combine_chunks()
+    sliced = tbl.slice(1, tbl.num_rows - 2).combine_chunks()
+    assert sliced.column("payload").chunk(0).offset == 1
+    assert sliced.column("block_offset").chunk(0).offset == 1
+    view = PostingView(sliced)
+    for term in set(sliced["term"].to_pylist()):
+        _assert_same_rows(view.rows([term]), masked(sliced, term))
+    row = view.rows([sliced["term"][0].as_py()])[0]
+    assert (type(row.term), type(row.salt), row.df_part.dtype, row.first_doc.dtype) == (
+        str, int, np.int64, np.int64)
+    assert {attr: getattr(row, attr).dtype for attr in (
+        "payload", "block_offset", "block_last", "block_max_tf", "block_min_dl",
+        "pos_payload", "pos_block_offset")} == {
+        "payload": np.uint8, "block_offset": np.int32, "block_last": np.int64,
+        "block_max_tf": np.int64, "block_min_dl": np.int64,
+        "pos_payload": np.uint8, "pos_block_offset": np.int64}
 
 
 def test_cache_for_serving_twice_keeps_one_cached_copy(spark, index_dir):
