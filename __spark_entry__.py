@@ -421,7 +421,7 @@ PHRASE_TERMS = ["customer", "join"]  # adjacent pair realized at sf0.01
 
 
 def q_phrase(spark, sf_dir):
-    """Exact-phrase query twin (query/boolean.py::phrase_search), Lucene
+    """Exact-phrase query twin (query/qparser.py::phrase_search), Lucene
     PhraseQuery scoring: tf = phrase frequency (adjacent-occurrence count),
     idf = Σ idf(term) over the phrase's unique terms, BM25 tf-normalization.
     The token array is materialized in its own projection before the
@@ -494,7 +494,7 @@ def q_phrase(spark, sf_dir):
 
 
 def q_prefix_query(spark, sf_dir):
-    """Prefix/wildcard query twin (query/boolean.py::prefix_search):
+    """Prefix/wildcard query twin (query/qparser.py::prefix_search):
     constant-score docs containing ≥1 term starting with 's' (Lucene's
     CONSTANT_SCORE multi-term rewrite — no BM25 ranking), index order."""
     docs = _t(spark, sf_dir, "documents")
@@ -512,7 +512,7 @@ def q_prefix_query(spark, sf_dir):
 
 
 def q_fuzzy_query(spark, sf_dir):
-    """Fuzzy query twin (query/boolean.py::fuzzy_search): constant-score
+    """Fuzzy query twin (query/qparser.py::fuzzy_search): constant-score
     docs containing ≥1 term within Levenshtein 2 of 'sort' (matches 'sort'
     and 'part' in the sf vocab) — both engines run the classic unweighted
     edit distance, so the doc sets agree exactly."""

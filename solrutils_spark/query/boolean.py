@@ -28,33 +28,32 @@ rest of that delegated surface, Spark-first:
 - **Prefix / wildcard** (``pre*``, ``te?m``): term-dictionary expansion over
   the ``termdf`` sidecar (vocabulary-sized, NOT corpus-sized), capped at
   ``max_expansions`` with a loud ``TooManyClauses`` (Lucene's
-  maxClauseCount), then a constant-score document union (Lucene's default
-  CONSTANT_SCORE rewrite for multi-term queries).
+  maxClauseCount); the docs holding ≥1 expanded term score a constant 1.0
+  (Lucene's default CONSTANT_SCORE rewrite for multi-term queries).
 - **Fuzzy** (``term~1``): length-banded vocabulary scan + banded Levenshtein
   DP on the driver (band ⇒ |len(t)−len(q)| ≤ d is recall-lossless), then the
-  same constant-score union. (Lucene builds a Levenshtein automaton; the
+  same constant-score rewrite. (Lucene builds a Levenshtein automaton; the
   band+DP is exact for our vocab sizes — at web-scale vocabularies the
   automaton/trie intersection is the upgrade path, noted in PLANS.md.)
+- **Boolean tree** (``qparser``'s Lucene syntax): :func:`tree_slice`
+  evaluates a compiled tree of the leaves above per salt slice, MUST /
+  SHOULD / MUST_NOT as sorted-array intersection / union / difference.
 
 All paths reuse the engine's layout: candidate rows pruned to the query
 terms' hash buckets, per-salt-slice kernels over the same delta+VByte
 payloads (``decode_blocks_many``) run through the reader's one grouped stage
 (``IndexReader._per_slice``), slice outputs unioned with no extra shuffle
-(slices are disjoint doc ranges). Scored OR clauses of the Lucene-syntax
-executor (term clauses, single-token phrases) are not scored here: they
-reuse :meth:`IndexReader.scored_domain` (the exhaustive
-``wand.topk_slice_batch`` pass the ranked paths share), so a clause scores
-every doc bit-identically to ``IndexReader.search``.
+(slices are disjoint doc ranges). The phrase, multi-term and boolean
+entry points live in ``qparser``: each is one tree through one such stage.
 """
 
 from __future__ import annotations
 
-import re
+from functools import reduce
 from pathlib import Path
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import B, K1, analyze
 from solrutils_spark.index.codec import (BLOCK, decode_blocks_many,
@@ -62,7 +61,8 @@ from solrutils_spark.index.codec import (BLOCK, decode_blocks_many,
 from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.engine import ranked_page
-from solrutils_spark.query.wand import _EMPTY, _member, _prev_lasts, _tfn
+from solrutils_spark.query.wand import (_EMPTY, _member, _prev_lasts, _tfn,
+                                        topk_slice_batch)
 
 
 class TooManyClauses(ValueError):
@@ -312,10 +312,6 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
 # --------------------------------------------------------------- phrase ----
 
 
-class UnsupportedQueryFeature(ValueError):
-    """Query combines features outside the supported semantics (loud gate)."""
-
-
 def _sloppy_sweep(lists: list[list[int]], seq: list[str], slop: int) -> float:
     """Sloppy-phrase frequency of one document: minimal-window sweep over
     phrase-offset-adjusted positions (Lucene PhraseQuery slop semantics:
@@ -376,23 +372,6 @@ def _sloppy_sweep(lists: list[list[int]], seq: list[str], slop: int) -> float:
             freq += 1.0 / (1.0 + (mx - mn))
         if not advance(mn_i):
             return freq
-
-
-def phrase_search(reader, phrase_text: str, k: int = 10,
-                  slop: int = 0) -> DataFrame:
-    """Phrase BM25 top-k → DataFrame(doc_id, score).
-
-    Lucene PhraseQuery scoring: tf = phrase frequency (exact-adjacency
-    count at slop=0; the minimal-window sloppy frequency of
-    :func:`_sloppy_sweep` under slop>0), idf = Σ idf(term) over the phrase's
-    UNIQUE terms, BM25 tf-normalization with the doc's |d| — computed from
-    the positional sidecar by :func:`phrase_slice`. Single-token phrases
-    degrade to the plain ranked query (Lucene parses ``"foo"`` to a
-    TermQuery)."""
-    seq = analyze(phrase_text)
-    if len(seq) == 1:
-        return reader.search(phrase_text, k)
-    return ranked_page(phrase_scored(reader, phrase_text, slop=slop), k)
 
 
 def phrase_slice(
@@ -492,31 +471,61 @@ def phrase_slice(
     )
 
 
-def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
-    """ALL (doc_id, score) pairs matching the phrase (un-limited — the
-    boolean executor needs every contribution, not a top-k cut).
+# ------------------------------------------------------- boolean tree ----
 
-    One grouped stage (``IndexReader._per_slice``) over the phrase terms'
-    candidate rows read WITH the positional sidecar: each salt slice runs
-    :func:`phrase_slice`, which decodes positions only for the blocks the
-    conjunction certificate keeps (so a phrase of two Zipf-head terms never
-    re-reads the corpus)."""
-    seq = analyze(phrase_text)
-    if not seq:
-        return reader.spark.createDataFrame([], TOPK_DDL)
-    uniq = sorted(set(seq))
-    live, idf_by_term = _live_terms(reader, uniq)
-    if len(live) < len(uniq):
-        return reader.spark.createDataFrame([], TOPK_DDL)
-    avgdl = float(reader.stats["avgdl"])
 
-    def slice_phrase(rows, _allowed):
-        return arrow_rows.topk_table(*phrase_slice(
-            rows, seq, idf_by_term, avgdl, slop))
+def tree_slice(rows, tagged: dict[int, np.ndarray], root, leaves,
+               avgdl: float, span: int) -> tuple[np.ndarray, np.ndarray]:
+    """ALL (doc_id, score) of one salt slice, doc_id ascending, for a tree
+    compiled by ``qparser``: each leaf once, then the tree bottom-up over
+    sorted doc_id arrays (SURVEY E10). ``leaves``: ``[(spec, boost)]`` —
+    ``("terms", {term: idf})`` BM25, all such leaves the plans of ONE
+    ``topk_slice_batch`` call with k = ``span`` (scores bit-identical to
+    ``IndexReader.search``); ``("phrase", {term: idf}, seq, slop)``;
+    ``("any", terms)`` constant 1.0; ``("tag", tag, score)`` constant over
+    ``tagged[tag]``, the slice's ids from the stage's side. ``root``: a
+    leaf index or a level ``(boost, [(node, required)], [negative node])``:
+    domain ∩ required (∪ positive if none) − ∪ negative, score the positive
+    nodes' added in clause order from 0.0, × boost."""
+    def rows_of(terms) -> list:
+        return [r for r in rows if r.term in terms]
 
-    return reader._per_slice(reader._candidate_rows(uniq, positions=True),
-                             slice_phrase, TOPK_DDL)
+    plans = [(i, spec[1], span) for i, (spec, _) in enumerate(leaves)
+             if spec[0] == "terms"]
+    out = dict.fromkeys((i for i, _, _ in plans), _EMPTY)
+    for i, d, s in topk_slice_batch(
+            rows_of({t for _, idfs, _ in plans for t in idfs}), plans, avgdl):
+        order = np.argsort(d)
+        out[i] = d[order], s[order]
+    for i, (spec, boost) in enumerate(leaves):
+        if spec[0] == "phrase":
+            out[i] = phrase_slice(rows_of(spec[1]), spec[2], spec[1], avgdl,
+                                  spec[3])
+        elif spec[0] == "any":
+            d = arrow_rows.slice_doc_ids(rows_of(spec[1]))
+            out[i] = d, np.ones(d.size)
+        elif spec[0] == "tag":
+            d = tagged.get(spec[1], _EMPTY[0])
+            out[i] = d, np.full(d.size, spec[2])
+        out[i] = out[i][0], out[i][1] * boost  # × 1.0 is exact
 
+    def evaluate(node) -> tuple[np.ndarray, np.ndarray]:
+        if isinstance(node, int):
+            return out[node]
+        boost, positive, negative = node
+        pos = [evaluate(n) for n, _ in positive]
+        required = [d for (d, _), (_, req) in zip(pos, positive) if req]
+        dom = (reduce(np.intersect1d, required) if required
+               else np.unique(np.concatenate([d for d, _ in pos])))
+        for n in negative:
+            dom = np.setdiff1d(dom, evaluate(n)[0], assume_unique=True)
+        score = np.zeros(dom.size)
+        for d, s in pos:
+            hit = _member(dom, d)
+            score[hit] += s[np.searchsorted(d, dom[hit])]
+        return dom, score * boost
+
+    return evaluate(root)
 
 # ---------------------------------------------- multi-term expansions ----
 
@@ -536,9 +545,6 @@ def _vocab_tables(reader):
         )
     for bdir in sorted(sidecar.glob("bucket=*")):
         yield reader._read(f"termdf/{bdir.name}", ["term"])
-
-
-_WILDCARD_OK = re.compile(r"^[^*?]*[*?][*?a-z0-9_.*]*$")
 
 
 def expand_wildcard(reader, pattern: str, max_expansions: int = 1024) -> list[str]:
@@ -607,40 +613,3 @@ def expand_fuzzy(
                         f">{max_expansions} terms"
                     )
     return sorted(out)
-
-
-def multi_term_docs(reader, terms: list[str]) -> DataFrame:
-    """Constant-score union: DataFrame(doc_id, score=1.0) of docs containing
-    ≥1 of ``terms`` (Lucene CONSTANT_SCORE multi-term rewrite — prefix,
-    wildcard and fuzzy queries never rank by BM25 by default)."""
-    dfs = reader.term_dfs(sorted(set(terms)))
-    live = sorted(t for t, d in dfs.items() if d)
-    if not live:
-        return reader.spark.createDataFrame([], TOPK_DDL)
-
-    def slice_docs(rows, _allowed):
-        docs = arrow_rows.slice_doc_ids(rows)
-        return arrow_rows.topk_table(docs, np.ones(docs.size))
-
-    return reader._per_slice(reader._candidate_rows(live), slice_docs,
-                             TOPK_DDL)
-
-
-def prefix_search(
-    reader, pattern: str, k: int = 10, max_expansions: int = 1024
-) -> DataFrame:
-    """Prefix/wildcard query → constant-score docs, doc_id asc, first k
-    (Lucene: ConstantScoreQuery(MultiTermQuery) — index order, score 1.0)."""
-    if not _WILDCARD_OK.match(pattern):
-        raise ValueError(f"not a wildcard pattern: {pattern!r}")
-    terms = expand_wildcard(reader, pattern, max_expansions)
-    return multi_term_docs(reader, terms).orderBy(F.asc("doc_id")).limit(k)
-
-
-def fuzzy_search(
-    reader, term: str, k: int = 10, max_edits: int = 1,
-    max_expansions: int = 50,
-) -> DataFrame:
-    """Fuzzy query → constant-score docs, doc_id asc, first k."""
-    terms = expand_fuzzy(reader, term, max_edits, max_expansions)
-    return multi_term_docs(reader, terms).orderBy(F.asc("doc_id")).limit(k)

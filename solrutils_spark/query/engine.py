@@ -255,14 +255,15 @@ class IndexReader:
                    filter_df: DataFrame | None = None) -> DataFrame:
         """``fn(rows, allowed) → pa.Table`` on every salt slice of ``cand``
         in one ``applyInArrow`` stage — the one grouped-kernel shape of every
-        query in ``query/`` (ranked, batch, conjunctive, phrase, multi-term,
-        counting).
+        query in ``query/`` (ranked, batch, conjunctive, counting and the
+        Lucene boolean tree, phrase and multi-term queries among them).
 
         Without ``filter_df``, ``allowed`` is None. With it, the filter ids
         go through :meth:`salted_filter` (a salted frame passes unchanged)
         and are COGROUPed with the candidate rows, so each slice gets only
         its own allowed ids as a sorted int64 array (a slice with none
-        skips the decode). ``fn`` is pickled into the tasks: it must not
+        skips the decode); with a ``leaf`` column (the boolean tree's side),
+        ``{leaf: sorted ids}``. ``fn`` is pickled into the tasks: it must not
         capture the reader."""
         if filter_df is None:
 
@@ -272,7 +273,13 @@ class IndexReader:
             return cand.groupBy("salt").applyInArrow(kernel, schema)
 
         def ckernel(cand_tbl: pa.Table, fid_tbl: pa.Table) -> pa.Table:
-            allowed = np.sort(fid_tbl.column("doc_id").to_numpy())
+            ids = fid_tbl.column("doc_id").to_numpy()
+            if "leaf" in fid_tbl.column_names:
+                leaf = fid_tbl.column("leaf").to_numpy()
+                return fn(arrow_rows.rows_from_arrow(cand_tbl),
+                          {int(t): np.unique(ids[leaf == t])
+                           for t in np.unique(leaf)})
+            allowed = np.sort(ids)
             rows = arrow_rows.rows_from_arrow(cand_tbl) if allowed.size else []
             return fn(rows, allowed)
 
@@ -301,12 +308,13 @@ class IndexReader:
         ``localCheckpoint``: only the cached relation keeps the hash
         partitioning visible to Catalyst. A salted frame partitioned some
         other way stays correct — Catalyst inserts the exchange the cogroup
-        needs on every query."""
+        needs on every query. Of the other columns only ``leaf`` is kept."""
         if "salt" in filter_df.columns:
             return filter_df
         span = self.salt_span()
         salted = filter_df.select(
-            F.col(filter_df.columns[0]).cast("long").alias("doc_id")
+            F.col(filter_df.columns[0]).cast("long").alias("doc_id"),
+            *(["leaf"] if "leaf" in filter_df.columns else []),
         ).withColumn("salt", (F.col("doc_id") / F.lit(span)).cast("int"))
         n = self._serving_partitions
         return (salted.repartition(n, "salt") if n is not None
@@ -354,22 +362,22 @@ class IndexReader:
     def phrase_search(self, phrase_text: str, k: int = 10,
                       slop: int = 0) -> DataFrame:
         """Phrase query, exact or sloppy, scored from the positional
-        sidecar — see query/boolean.py."""
-        from solrutils_spark.query.boolean import phrase_search
+        sidecar — see query/qparser.py."""
+        from solrutils_spark.query.qparser import phrase_search
 
         return phrase_search(self, phrase_text, k, slop=slop)
 
     def prefix_search(self, pattern: str, k: int = 10,
                       max_expansions: int = 1024) -> DataFrame:
-        """Prefix/wildcard query (constant-score) — see query/boolean.py."""
-        from solrutils_spark.query.boolean import prefix_search
+        """Prefix/wildcard query (constant-score) — see query/qparser.py."""
+        from solrutils_spark.query.qparser import prefix_search
 
         return prefix_search(self, pattern, k, max_expansions)
 
     def fuzzy_search(self, term: str, k: int = 10, max_edits: int = 1,
                      max_expansions: int = 50) -> DataFrame:
-        """Fuzzy term query (constant-score) — see query/boolean.py."""
-        from solrutils_spark.query.boolean import fuzzy_search
+        """Fuzzy term query (constant-score) — see query/qparser.py."""
+        from solrutils_spark.query.qparser import fuzzy_search
 
         return fuzzy_search(self, term, k, max_edits, max_expansions)
 

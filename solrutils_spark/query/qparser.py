@@ -4,7 +4,7 @@ The reference's search model renders raw Lucene query strings into ``q`` /
 ``fq`` (``Query.java:10-31`` sets the rendered template as the main query;
 ``FilterQuery.java:11-64`` appends filter queries; templates can emit any
 syntax Solr's LuceneQParser accepts). This module parses the practical core
-of that syntax and executes it against the engine with DataFrame algebra:
+of that syntax and executes it against the engine in one kernel stage:
 
   query       ::=  node (connector? node)*
   node        ::=  [+|-|NOT|!] ( group | clause )
@@ -50,30 +50,32 @@ re-scopes, as Lucene does). Unsupported constructs fail LOUDLY
 (``UnsupportedQuerySyntax``): fuzzy on metadata fields and unknown field
 names — the same honest-gate contract as sources/minixslt.py.
 
-Execution is pure DataFrame algebra over per-clause retrievals — each text
-clause is an indexed posting read (bounded by its df), each metadata clause
-a pushed-down filter on the docs table. Each nesting level is one tagged
-union of its nodes' frames and one hash aggregation on doc_id that sums
-the score and counts MUST / MUST_NOT rows; the domain is a filter on those
-counts, with no joins. No driver-side doc loops; at cluster scale every
-step is a bounded shuffle keyed on doc_id.
+Execution compiles the parsed tree once on the driver into term, phrase,
+wildcard/fuzzy and metadata leaves, and evaluates the whole tree in ONE
+grouped kernel stage: per salt slice, ``boolean.tree_slice`` scores every
+leaf over one candidate read and combines them as set algebra over sorted
+doc_id arrays, summing clause scores in clause order. Metadata ids (one
+pushed-down docs scan, tagged per leaf) and fq ids ride in the stage's
+cogroup side. No join, no per-level aggregation.
 """
 
 from __future__ import annotations
 
+import operator
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import K1, analyze
+from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.boolean import (
     expand_fuzzy,
     expand_wildcard,
-    multi_term_docs,
-    phrase_scored,
+    tree_slice,
 )
 from solrutils_spark.query.engine import ranked_page
 
@@ -120,6 +122,7 @@ _CONNECTOR_RE = re.compile(r"(?:AND|OR|NOT|&&|\|\||!)(?=[\s(\"]|$)")
 _FIELD_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_.]*):")
 _QUOTED_RE = re.compile(r'"((?:\\.|[^"\\])*)"(~\d+)?')
 _RANGE_RE = re.compile(r"([\[{])\s*(\S+)\s+TO\s+(\S+)\s*([\]}])")
+_INT_RE = re.compile(r"[+-]?\d+")
 # bare tokens: backslash-pairs ride along (C5 `escape` renders Lucene
 # metacharacters as \x — ClientUtils.escapeQueryChars, Conversion.java:220)
 _BARE_RE = re.compile(r'(?:\\.|[^\s"()\\])+')
@@ -184,17 +187,7 @@ def _parse_nodes(q: str, pos: int, depth: int,
             pos += 1
             continue
         if ch == "(":
-            children, pos = _parse_nodes(q, pos + 1, depth + 1, field_ctx)
-            if pos >= len(q) or q[pos] != ")":
-                raise UnsupportedQuerySyntax(f"unclosed '(' in: {q!r}")
-            pos += 1
-            g = Group(children=children)
-            bm = _BOOST_RE.match(q, pos)
-            if bm:
-                g.boost = float(bm.group(1))
-                pos = bm.end()
-            if not children:
-                raise UnsupportedQuerySyntax(f"empty group in: {q!r}")
+            g, pos = _parse_group(q, pos, depth, field_ctx)
             attach(g)
             continue
         m = _CONNECTOR_RE.match(q, pos) if pending_prefix is None else None
@@ -219,17 +212,7 @@ def _parse_nodes(q: str, pos: int, depth: int,
             pos = fm.end()
             if pos < len(q) and q[pos] == "(":
                 # field grouping: every bare atom inside scopes to fname
-                children, pos = _parse_nodes(q, pos + 1, depth + 1, fname)
-                if pos >= len(q) or q[pos] != ")":
-                    raise UnsupportedQuerySyntax(f"unclosed '(' in: {q!r}")
-                pos += 1
-                g = Group(children=children)
-                bm = _BOOST_RE.match(q, pos)
-                if bm:
-                    g.boost = float(bm.group(1))
-                    pos = bm.end()
-                if not children:
-                    raise UnsupportedQuerySyntax(f"empty group in: {q!r}")
+                g, pos = _parse_group(q, pos, depth, fname)
                 attach(g)
                 continue
         cl, pos = _parse_atom(q, pos, fname or field_ctx)
@@ -239,6 +222,24 @@ def _parse_nodes(q: str, pos: int, depth: int,
     return nodes, pos
 
 
+def _parse_group(q: str, pos: int, depth: int,
+                 field_ctx: str) -> tuple[Group, int]:
+    """``(query)[^boost]`` with ``q[pos] == "("``."""
+    children, pos = _parse_nodes(q, pos + 1, depth + 1, field_ctx)
+    if pos >= len(q) or q[pos] != ")":
+        raise UnsupportedQuerySyntax(f"unclosed '(' in: {q!r}")
+    if not children:
+        raise UnsupportedQuerySyntax(f"empty group in: {q!r}")
+    boost, pos = _boost(q, pos + 1)
+    return Group(children=children, boost=boost), pos
+
+
+def _boost(q: str, pos: int) -> tuple[float, int]:
+    """An optional ``^boost`` at ``pos`` → (boost, position after it)."""
+    bm = _BOOST_RE.match(q, pos)
+    return (float(bm.group(1)), bm.end()) if bm else (1.0, pos)
+
+
 def _parse_atom(q: str, pos: int, fname: str) -> tuple[Clause, int]:
     qm = _QUOTED_RE.match(q, pos)
     if qm:
@@ -246,13 +247,9 @@ def _parse_atom(q: str, pos: int, fname: str) -> tuple[Clause, int]:
             raise UnsupportedQuerySyntax(
                 f"phrase on non-text field: {fname}:{qm.group(0)!r}"
             )
-        pos = qm.end()
         slop = int(qm.group(2)[1:]) if qm.group(2) else 0
         cl = Clause(kind="phrase", text=_unescape(qm.group(1)), slop=slop)
-        bm = _BOOST_RE.match(q, pos)
-        if bm:
-            cl.boost = float(bm.group(1))
-            pos = bm.end()
+        cl.boost, pos = _boost(q, qm.end())
         return cl, pos
     rm = _RANGE_RE.match(q, pos)
     if rm:
@@ -263,15 +260,16 @@ def _parse_atom(q: str, pos: int, fname: str) -> tuple[Clause, int]:
         _check_field(fname, allow_id=True)
         if fname == TEXT_FIELD:
             raise UnsupportedQuerySyntax("range on the text field")
-        pos = rm.end()
+        if fname == ID_FIELD:
+            for v in (rm.group(2), rm.group(3)):
+                if v != "*" and not _INT_RE.fullmatch(v):
+                    raise UnsupportedQuerySyntax(
+                        f"non-integer doc_id range endpoint: {rm.group(0)!r}")
         cl = Clause(
             kind="range", field_name=fname, lo=rm.group(2), hi=rm.group(3),
             incl_lo=rm.group(1) == "[", incl_hi=rm.group(4) == "]",
         )
-        bm = _BOOST_RE.match(q, pos)
-        if bm:
-            cl.boost = float(bm.group(1))
-            pos = bm.end()
+        cl.boost, pos = _boost(q, rm.end())
         return cl, pos
     bm_ = _BARE_RE.match(q, pos)
     if not bm_:
@@ -325,148 +323,141 @@ def _check_field(fname: str, allow_id: bool = False) -> None:
 # ------------------------------------------------------------ executor ----
 
 
-def _field_docs(reader, cl: Clause) -> DataFrame:
-    """doc_id domain of a metadata clause — a pushed-down filter on the docs
-    table (parquet scan prunes to the filter + doc_id projection)."""
-    docs = reader.docs
-    if cl.kind == "field_term":
-        return docs.filter(F.col(cl.field_name) == cl.text).select("doc_id")
-    if cl.kind == "field_wildcard":
-        like = (cl.text.replace("%", r"\%").replace("_", r"\_")
-                .replace("*", "%").replace("?", "_"))
-        return docs.filter(F.col(cl.field_name).like(like)).select("doc_id")
-    if cl.kind == "range":
-        col = F.col(cl.field_name)
-        if cl.field_name == ID_FIELD:
-            conv = lambda v: F.lit(int(v))  # noqa: E731
-        else:
-            conv = F.lit
-        cond = F.lit(True)
-        if cl.lo != "*":
-            cond = cond & (col >= conv(cl.lo) if cl.incl_lo else col > conv(cl.lo))
-        if cl.hi != "*":
-            cond = cond & (col <= conv(cl.hi) if cl.incl_hi else col < conv(cl.hi))
-        return docs.filter(cond).select("doc_id")
-    raise AssertionError(cl.kind)  # pragma: no cover
+@dataclass
+class _Tree:
+    """A tree compiled for ``boolean.tree_slice``; tag ``i``: ``preds[i]``."""
+    root: object = None
+    leaves: list = field(default_factory=list)
+    preds: list = field(default_factory=list)
 
 
-def _clause_scored(reader, cl: Clause) -> DataFrame | None:
-    """(doc_id, score) of ALL docs the clause matches; None = clause has no
-    live terms (matches nothing)."""
-    if cl.kind == "term":
-        if not analyze(cl.text):
-            return None
-        df = reader.scored_domain(cl.text)
-    elif cl.kind == "phrase":
-        seq = analyze(cl.text)
-        if not seq:
-            return None
-        if len(seq) == 1:
-            df = reader.scored_domain(cl.text)
-        else:
-            df = phrase_scored(reader, cl.text, slop=cl.slop)
-    elif cl.kind == "wildcard":
-        df = multi_term_docs(reader, expand_wildcard(reader, cl.text))
-    elif cl.kind == "fuzzy":
-        df = multi_term_docs(
-            reader, expand_fuzzy(reader, cl.text, cl.max_edits, max_expansions=1024)
-        )
-    elif cl.kind == "field_term":
-        dom = _field_docs(reader, cl)
-        # Lucene BM25 on a single-token keyword field: tf=1, |d|=avgdl=1
-        # ⇒ idf(df_value)/(1+k1), a per-value constant. The count is one
-        # pushed-down parquet scan; memoized per (field, value) on the
-        # reader (the docs table is immutable after build — same contract
-        # as the termdf sidecar cache).
-        cache = reader._field_df_cache
-        key = (cl.field_name, cl.text)
-        df_v = cache.get(key)
-        if df_v is None:
-            df_v = cache[key] = dom.count()
-        if df_v == 0:
-            return None
-        score = reader.idf(df_v) / (1.0 + K1)
-        df = dom.select("doc_id", F.lit(float(score)).alias("score"))
-    elif cl.kind in ("field_wildcard", "range"):
-        # Lucene rewrites multi-term/range queries to constant score 1.0
-        df = _field_docs(reader, cl).select(
-            "doc_id", F.lit(1.0).alias("score")
-        )
-    else:  # pragma: no cover
-        raise AssertionError(cl.kind)
-    if cl.boost != 1.0:
-        df = df.select("doc_id", (F.col("score") * F.lit(cl.boost)).alias("score"))
-    return df
+def _compile(reader, nodes: list, scored: bool = True) -> _Tree | None:
+    """A parsed tree compiled on the driver, or None when it can match
+    nothing. Unscored (filter bodies, MUST_NOT subtrees), a term clause is
+    match-only and a ``field_term`` pays no df count."""
+    tree = _Tree()
+    tree.root = _level(reader, nodes, tree, scored, 1.0)
+    return None if tree.root is None else tree
 
 
-def _node_scored(reader, node) -> DataFrame | None:
-    if isinstance(node, Clause):
-        return _clause_scored(reader, node)
-    inner = _exec_nodes(reader, node.children)
-    if inner is None:
-        return None
-    if node.boost != 1.0:
-        inner = inner.select(
-            "doc_id", (F.col("score") * F.lit(node.boost)).alias("score")
-        )
-    return inner
-
-
-def _node_matches(reader, node) -> DataFrame | None:
-    """doc_id set a MUST_NOT node matches. A metadata clause is its
-    pushed-down docs filter: negated, it never scores, so it must not pay
-    ``field_term``'s df count. Every other node is its scored frame."""
-    if isinstance(node, Clause) and node.kind in ("field_term",
-                                                  "field_wildcard", "range"):
-        return _field_docs(reader, node)
-    df = _node_scored(reader, node)
-    return None if df is None else df.select("doc_id")
-
-
-def _exec_nodes(reader, nodes: list) -> DataFrame | None:
-    """BooleanQuery algebra over one nesting level → (doc_id, score) of ALL
-    matching docs, or None when the level can match nothing.
-
-    One tagged union, one aggregation: every node's frame is tagged with
-    its occur and a single ``groupBy("doc_id")`` sums the score and counts
-    the MUST and the MUST_NOT rows. A doc is kept when its MUST count
-    equals the number of MUST nodes and no MUST_NOT row is present; a kept
-    doc then has only positive rows, so with no MUST ≥1 SHOULD matched.
-    Each text clause's kernel runs once; a MUST_NOT row's score is never
-    summed into a kept doc.
-
-    Precondition: every node's frame has distinct doc_ids (salt slices are
-    disjoint, ``slice_doc_ids`` uniques, the docs table holds one row per
-    id), so a row count is a node count."""
-    musts = [n for n in nodes if n.occur == MUST]
-    shoulds = [n for n in nodes if n.occur == SHOULD]
-    nots = [n for n in nodes if n.occur == MUST_NOT]
-    tagged: list[DataFrame] = []
-    for n in musts + shoulds:
-        df = _node_scored(reader, n)
-        if df is None:
+def _level(reader, nodes: list, tree: _Tree, scored: bool, boost: float):
+    """One level → ``(boost, positive, negative)``; None when a MUST node
+    can't match or no positive node is left (Lucene: no positive clause)."""
+    positive, negative = [], []
+    for n in nodes:
+        neg = n.occur == MUST_NOT
+        c = (_level(reader, n.children, tree, scored and not neg, n.boost)
+             if isinstance(n, Group) else
+             _leaf(reader, n, tree, scored and not neg))
+        if c is None:
             if n.occur == MUST:
-                return None  # a MUST node that can't match → empty result
-            continue
-        tagged.append(df.select("doc_id", "score", F.lit(n.occur).alias("occur")))
-    if not tagged:
-        return None  # Lucene: no positive clause → no hits
-    for n in nots:
-        df = _node_matches(reader, n)
-        if df is not None:
-            tagged.append(df.select("doc_id", F.lit(0.0).alias("score"),
-                                    F.lit(MUST_NOT).alias("occur")))
+                return None
+        elif neg:
+            negative.append(c)
+        else:
+            positive.append((c, n.occur == MUST))
+    return (boost, positive, negative) if positive else None
 
-    union = tagged[0]
-    for df in tagged[1:]:
-        union = union.unionByName(df)
-    occur = F.col("occur")
-    return (union.groupBy("doc_id")
-            .agg(F.sum("score").alias("score"),
-                 F.count(F.when(occur == MUST, 1)).alias("musts"),
-                 F.count(F.when(occur == MUST_NOT, 1)).alias("nots"))
-            .filter((F.col("musts") == len(musts)) & (F.col("nots") == 0))
-            .select("doc_id", "score"))
+
+def _leaf(reader, cl: Clause, tree: _Tree, scored: bool) -> int | None:
+    """Index of the clause's new leaf in ``tree.leaves``, None when it can't
+    match (no live term, an absent phrase term, no doc with the value)."""
+    if cl.kind in ("term", "phrase"):
+        seq = analyze(cl.text)
+        idfs = {t: reader.idf(d)
+                for t, d in reader.term_dfs(sorted(set(seq))).items()}
+        if cl.kind == "phrase" and len(seq) > 1:
+            spec = (("phrase", idfs, seq, cl.slop)
+                    if len(idfs) == len(set(seq)) else None)
+        else:
+            spec = (None if not idfs else ("terms", idfs) if scored
+                    else ("any", sorted(idfs)))
+    elif cl.kind == "wildcard":
+        spec = _any(reader, expand_wildcard(reader, cl.text))
+    elif cl.kind == "fuzzy":
+        spec = _any(reader, expand_fuzzy(reader, cl.text, cl.max_edits,
+                                         max_expansions=1024))
+    else:
+        pred = _field_pred(cl)
+        score = 1.0  # Lucene rewrites multi-term/range queries to constant score
+        if cl.kind == "field_term" and scored:
+            # Lucene BM25 on a keyword field: tf=1, |d|=avgdl=1 ⇒ the constant
+            # idf(df_value)/(1+k1); the df count is memoized on the reader
+            cache, key = reader._field_df_cache, (cl.field_name, cl.text)
+            if key not in cache:
+                cache[key] = reader.docs.filter(pred).count()
+            df_v = cache[key]
+            if df_v == 0:
+                return None
+            score = reader.idf(df_v) / (1.0 + K1)
+        tree.preds.append(pred)
+        spec = ("tag", len(tree.preds) - 1, score)
+    if spec is None:
+        return None
+    tree.leaves.append((spec, cl.boost))
+    return len(tree.leaves) - 1
+
+
+def _any(reader, terms: list[str]) -> tuple | None:
+    """Constant-score leaf over the live ``terms`` (None: none is live)."""
+    live = sorted(reader.term_dfs(sorted(set(terms))))
+    return ("any", live) if live else None
+
+
+def _field_pred(cl: Clause) -> Column:
+    """A metadata clause as a predicate on the docs table."""
+    col = F.col(cl.field_name)
+    if cl.kind == "field_term":
+        return col == cl.text
+    if cl.kind == "field_wildcard":
+        return col.like(cl.text.replace("%", r"\%").replace("_", r"\_")
+                        .replace("*", "%").replace("?", "_"))
+    conv = (lambda v: F.lit(int(v))) if cl.field_name == ID_FIELD else F.lit
+    cond = F.lit(True)
+    if cl.lo != "*":
+        cond = cond & (col >= conv(cl.lo) if cl.incl_lo else col > conv(cl.lo))
+    if cl.hi != "*":
+        cond = cond & (col <= conv(cl.hi) if cl.incl_hi else col < conv(cl.hi))
+    return cond
+
+
+def _metadata_ids(reader, preds: list[Column]) -> DataFrame:
+    """(doc_id, leaf) per (doc, predicate it matches): ONE pushed-down scan."""
+    tags = F.array_compact(F.array(*[F.when(p, F.lit(i))
+                                     for i, p in enumerate(preds)]))
+    return reader.docs.filter(reduce(operator.or_, preds)).select(
+        "doc_id", F.explode(tags).alias("leaf"))
+
+
+def _run(reader, tree: _Tree, filter_df: DataFrame | None = None
+         ) -> DataFrame:
+    """(doc_id, score) of ALL docs ``tree`` matches (∩ ``filter_df``): ONE
+    ``_per_slice`` stage of ``boolean.tree_slice`` over one candidate read
+    of every text leaf's terms. Metadata and filter ids ride in one salted
+    (doc_id, salt, leaf) side; the filter is a required score-0.0 leaf
+    around the root: it restricts and never changes a score."""
+    root, leaves, side = tree.root, list(tree.leaves), []
+    if tree.preds:
+        side.append(reader.salted_filter(_metadata_ids(reader, tree.preds)))
+    if filter_df is not None:
+        fq = len(tree.preds)
+        side.append(reader.salted_filter(filter_df).select(
+            "doc_id", "salt", F.lit(fq).alias("leaf")))
+        leaves.append((("tag", fq, 0.0), 1.0))
+        root = (1.0, [(root, True), (len(leaves) - 1, True)], [])
+    terms = sorted({t for spec, _ in leaves if spec[0] != "tag"
+                    for t in spec[1]})
+    avgdl, span = float(reader.stats["avgdl"]), reader.salt_span()
+
+    def slice_tree(rows, tagged):
+        return arrow_rows.topk_table(*tree_slice(
+            rows, tagged or {}, root, leaves, avgdl, span))
+
+    return reader._per_slice(
+        reader._candidate_rows(terms, positions=any(
+            spec[0] == "phrase" for spec, _ in leaves)),
+        slice_tree, TOPK_DDL,
+        reduce(DataFrame.unionByName, side) if side else None)
 
 
 def boolean_scored(reader, q: str, *,
@@ -477,46 +468,29 @@ def boolean_scored(reader, q: str, *,
 
     ``filter_df``: optional single-column DataFrame of allowed doc_ids (fq
     semantics — restricts the domain, never scores)."""
-    scored = _exec_nodes(reader, parse_query(q))
-    if scored is None or filter_df is None:
-        return scored
-    fcol = filter_df.columns[0]
-    return scored.join(
-        filter_df.select(F.col(fcol).cast("long").alias("doc_id")),
-        "doc_id", "leftsemi",
-    )
+    tree = _compile(reader, parse_query(q))
+    return None if tree is None else _run(reader, tree, filter_df)
 
 
 def apply_boolean_filter(df: DataFrame, id_column: str, reader, q: str) -> DataFrame:
-    """Restrict ``df`` to the docs a FILTER body (fq / facet.query) matches.
+    """Restrict ``df`` to the docs a FILTER body (fq / facet.query) matches:
+    the body compiled unscored, one kernel stage, one semi-join.
 
     One Solr special case beyond ``boolean_scored`` (r5 ADVICE, medium): a
-    TOP-LEVEL body of only negative clauses (``-lang:py``, a very common
-    Solr fq idiom) matches *everything except* the union of the negated
-    sub-queries — Solr rewrites top-level pure-negative q/fq as ``*:*``
-    minus matches, while BooleanQuery semantics inside a sub-clause still
-    require a positive clause. Implemented as anti-joins against the
-    caller's own domain (no match-all scan, and correct even when the
-    domain is wider than the index). A positive body that can match
-    nothing (e.g. a MUST term absent from the corpus) yields the empty
-    domain, as before."""
+    TOP-LEVEL body of only negative clauses (``-lang:py``, a common fq
+    idiom) matches *everything except* the union of the negated
+    sub-queries (Solr's ``*:*`` minus matches): they run as SHOULD, and one
+    anti-join removes their union from the caller's own domain (no
+    match-all scan; correct for a domain wider than the index)."""
     nodes = parse_query(q)
-    if nodes and all(n.occur == MUST_NOT for n in nodes):
-        out = df
-        for n in nodes:
-            nd = _node_matches(reader, n)
-            if nd is not None:
-                out = out.join(
-                    nd.select(F.col("doc_id").alias(id_column)),
-                    id_column, "left_anti",
-                )
-        return out
-    scored = _exec_nodes(reader, nodes)
-    if scored is None:
-        return df.filter(F.lit(False))
-    return df.join(
-        scored.select(F.col("doc_id").alias(id_column)), id_column, "left_semi"
-    )
+    negative = bool(nodes) and all(n.occur == MUST_NOT for n in nodes)
+    if negative:
+        nodes = [replace(n, occur=SHOULD) for n in nodes]
+    tree = _compile(reader, nodes, scored=False)
+    if tree is None:
+        return df if negative else df.filter(F.lit(False))
+    ids = _run(reader, tree).select(F.col("doc_id").alias(id_column))
+    return df.join(ids, id_column, "left_anti" if negative else "left_semi")
 
 
 def filter_body(df: DataFrame, id_column: str, reader, q: str
@@ -561,6 +535,48 @@ def execute_boolean(reader, q: str, k: int = 10, *, offset: int = 0,
     if scored is None:
         return reader.spark.createDataFrame([], TOPK_DDL)
     return ranked_page(scored, k, offset)
+
+
+def phrase_search(reader, phrase_text: str, k: int = 10,
+                  slop: int = 0) -> DataFrame:
+    """Phrase BM25 top-k → DataFrame(doc_id, score): the one-leaf tree of
+    ``"phrase_text"~slop``, Lucene PhraseQuery scoring from the positional
+    sidecar (``boolean.phrase_slice``). A single-token phrase is a term
+    leaf, scored as :meth:`IndexReader.search` scores it (Lucene: a
+    TermQuery)."""
+    tree = _compile(reader, [Clause(kind="phrase", text=phrase_text, slop=slop)])
+    if tree is None:
+        return reader.spark.createDataFrame([], TOPK_DDL)
+    return ranked_page(_run(reader, tree), k)
+
+
+_WILDCARD_OK = re.compile(r"^[^*?]*[*?][*?a-z0-9_.*]*$")
+
+
+def prefix_search(reader, pattern: str, k: int = 10,
+                  max_expansions: int = 1024) -> DataFrame:
+    """Prefix/wildcard query → constant-score docs, doc_id asc, first k
+    (Lucene: ConstantScoreQuery(MultiTermQuery) — index order, score 1.0)."""
+    if not _WILDCARD_OK.match(pattern):
+        raise ValueError(f"not a wildcard pattern: {pattern!r}")
+    return _constant_docs(reader, expand_wildcard(reader, pattern,
+                                                  max_expansions), k)
+
+
+def fuzzy_search(reader, term: str, k: int = 10, max_edits: int = 1,
+                 max_expansions: int = 50) -> DataFrame:
+    """Fuzzy query → constant-score docs, doc_id asc, first k."""
+    return _constant_docs(reader, expand_fuzzy(reader, term, max_edits,
+                                               max_expansions), k)
+
+
+def _constant_docs(reader, terms: list[str], k: int) -> DataFrame:
+    """The one-leaf tree of an expansion: its first k docs by doc_id."""
+    spec = _any(reader, terms)
+    if spec is None:
+        return reader.spark.createDataFrame([], TOPK_DDL)
+    return (_run(reader, _Tree(root=0, leaves=[(spec, 1.0)]))
+            .orderBy(F.asc("doc_id")).limit(k))
 
 
 #: does a raw ``q`` string use Lucene operator syntax (vs plain terms)?

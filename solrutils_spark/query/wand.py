@@ -146,14 +146,15 @@ def topk_rows(
     rows = sorted(rows, key=lambda r: (r.term, r.salt))
     if not rows:
         return _EMPTY
-    # per-term max upper bound across its rows (sound: a doc sees one row/term)
+    # per-term max upper bound across its rows (sound: a doc sees one row/term);
+    # each row keeps its block bounds (before idf) for both paths below
     term_ub: dict[str, float] = {}
     rows_by_term: dict[str, list] = {}
     for row in rows:
         bb = _tfn(row.block_max_tf, row.block_min_dl, avgdl)
         ub = float(idf_by_term[row.term] * bb.max()) if len(bb) else 0.0
         term_ub[row.term] = max(term_ub.get(row.term, 0.0), ub)
-        rows_by_term.setdefault(row.term, []).append(row)
+        rows_by_term.setdefault(row.term, []).append((row, bb))
     terms_sorted = sorted(term_ub, key=lambda t: (-idf_by_term[t], t))
     remaining_after = {}
     acc_ub = 0.0
@@ -179,8 +180,8 @@ def topk_rows(
         idf = idf_by_term[t]
         blocks = []  # (bound, row_idx, block_idx)
         row_data = []
-        for ri, row in enumerate(rows_by_term[t]):
-            block_ub = idf * _tfn(row.block_max_tf, row.block_min_dl, avgdl)
+        for ri, (row, bb) in enumerate(rows_by_term[t]):
+            block_ub = idf * bb
             row_data.append(
                 (row.payload, int(row.df_part), row.block_offset, _prev_lasts(row))
             )
@@ -271,11 +272,11 @@ def topk_rows(
         # all kept blocks of ALL rows decode in ONE decode_blocks_many call
         # (amortizes the decoder's per-call fixed costs across the salts)
         parts = []
-        for row in rows_by_term[t]:
+        for row, bb in rows_by_term[t]:
             prev_lasts = _prev_lasts(row)
             lo_doc, hi_doc = prev_lasts + 1 - base, row.block_last - base
             if np.isfinite(theta):
-                block_ub = idf * _tfn(row.block_max_tf, row.block_min_dl, avgdl)
+                block_ub = idf * bb
                 max_acc = _range_max(scores, lo_doc, hi_doc + 1)
                 keep = max_acc + block_ub + rem >= theta
             else:

@@ -139,12 +139,14 @@ def test_phrase_positions_path_equals_candidate_verify(
     pos_index, pos_oracle, ptext, slop
 ):
     """The sidecar kernel equals candidate-verify semantics — the oracle
-    re-analyses every document's content and counts phrase windows."""
-    from solrutils_spark.query.boolean import phrase_scored
+    re-analyses every document's content and counts phrase windows. Every
+    match of the phrase's one-leaf boolean tree is compared, not a top-k."""
+    from solrutils_spark.query.qparser import boolean_scored
 
+    scored = boolean_scored(pos_index, f'"{ptext}"~{slop}')
     a = sorted(
         (r["doc_id"], round(r["score"], 12))
-        for r in phrase_scored(pos_index, ptext, slop=slop).collect()
+        for r in (scored.collect() if scored is not None else [])
     )
     n_docs = int(pos_index.stats["n_docs"])
     b = sorted(

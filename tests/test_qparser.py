@@ -186,6 +186,17 @@ def test_parse_backslash_escapes():
     assert nodes[0].kind == "phrase" and nodes[0].text == 'a " b'
 
 
+def test_parse_rejects_non_integer_doc_id_range():
+    """A ``doc_id`` range compares numerically, so a non-integer endpoint
+    is a parse error, not an execution-time ``int()`` failure."""
+    for bad in ["doc_id:[a TO 5] posting", "doc_id:[1.5 TO *]",
+                "doc_id:{* TO 7x}", "+posting doc_id:[1 TO 2e3]"]:
+        with pytest.raises(UnsupportedQuerySyntax):
+            parse_query(bad)
+    nodes = parse_query("doc_id:[-3 TO +40] doc_id:{* TO 9}")
+    assert [(n.lo, n.hi) for n in nodes] == [("-3", "+40"), ("*", "9")]
+
+
 def test_parse_open_range_and_boost():
     nodes = parse_query("lang:[* TO java]^3")
     assert nodes[0].lo == "*" and nodes[0].hi == "java"
@@ -408,23 +419,35 @@ def test_lucene_term_clause_scores_equal_search(reader, oracle):
         assert got and got == want, ident
 
 
-@pytest.mark.parametrize("q,kernels", [
-    ("+posting", 1),
-    ("+posting +segment -wand", 3),
-    ('+posting "posting segment" -wand', 3),
-    ("+posting -lang:py", 1),
+@pytest.mark.parametrize("q,fq", [
+    ("+posting", False),
+    ("+posting +segment -wand", False),
+    ('+posting "posting segment" -wand', False),
+    ("+posting -lang:py", False),
+    ("lang:py AND posting", False),
+    ("lang:java OR lang:go", False),
+    ("post* AND wand", False),
+    ("(posting OR segment~1) AND -(lang:py doc_id:[10 TO 80])", False),
+    ("+posting +segment -wand", True),
+    ('"posting segment" OR lang:rs', True),
 ])
-def test_boolean_plan_runs_each_text_kernel_once(reader, q, kernels):
-    """Plan pin: a boolean level is one tagged union and one aggregation,
-    so the final AQE plan holds one Python kernel node per text clause and
-    no semi/anti join (a MUST clause is not re-run as a join domain)."""
-    top = execute_boolean(reader, q, 10)
+def test_boolean_plan_runs_each_text_kernel_once(reader, q, fq):
+    """Plan pin: the whole tree — text, phrase, wildcard/fuzzy and
+    metadata leaves, and the fq — is evaluated in ONE Python-kernel stage,
+    so the final AQE plan holds exactly one FlatMapGroupsInArrow /
+    FlatMapCoGroupsInArrow node, no semi/anti join and no aggregate (no
+    union-then-groupBy of clause frames)."""
+    fdf = reader.docs.filter("lang != 'go'").select("doc_id") if fq else None
+    top = execute_boolean(reader, q, 10, filter_df=fdf)
     top.collect()
     plan = top._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan, plan
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("FlatMapGroupsInArrow") == kernels, final
+    kernels = (final.count("FlatMapGroupsInArrow")
+               + final.count("FlatMapCoGroupsInArrow"))
+    assert kernels == 1, final
     assert "LeftSemi" not in final and "LeftAnti" not in final, final
+    assert "Aggregate" not in final, final
 
 
 def test_must_absent_term_matches_nothing(reader):
@@ -432,18 +455,46 @@ def test_must_absent_term_matches_nothing(reader):
 
 
 def test_field_clause_pushdown_plan(reader):
-    """Scale pin: a metadata clause's domain is a pushed-down parquet scan —
-    the filter reaches the source (PushedFilters) and the scan reads only
-    the filter column + doc_id (column pruning), never content bytes."""
-    from solrutils_spark.query.qparser import Clause, _field_docs
+    """Scale pin: the metadata leaves' ids are one pushed-down parquet scan
+    of the docs table — the filter reaches the source (PushedFilters) and
+    the scan reads only the filter columns + doc_id (column pruning), never
+    content bytes."""
+    from solrutils_spark.query.qparser import _compile, _metadata_ids
 
-    dom = _field_docs(
-        reader, Clause(kind="field_term", text="py", field_name="lang"))
+    tree = _compile(reader, parse_query("+posting lang:py -path:src*"))
+    dom = _metadata_ids(reader, tree.preds)
     plan = dom._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "lang" in plan, plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "doc_id" in read_schema and "lang" in read_schema, read_schema
+    assert "path" in read_schema, read_schema
     assert "content" not in read_schema, read_schema
+
+
+def test_boolean_bit_identical_across_partitions_and_serving(
+        spark, index_dir, reader):
+    """Every BOOL_QUERIES query returns ``==`` ids and scores at two
+    shuffle-partition counts and on a serving-cached reader versus a cold
+    one: the per-slice tree sums each doc's clauses in clause order, so no
+    plan shape can reorder the float additions."""
+    def run(r):
+        return [[(x["doc_id"], x["score"])
+                 for x in execute_boolean(r, q, 10).collect()]
+                for q in BOOL_QUERIES]
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    cold = run(reader)
+    try:
+        spark.conf.set(key, "3")
+        assert run(reader) == cold
+    finally:
+        spark.conf.set(key, before)
+    serving = IndexReader(spark, index_dir).cache_for_serving()
+    try:
+        assert run(serving) == cold
+    finally:
+        serving.index.unpersist()
 
 
 def test_parser_robustness_fuzz():
