@@ -19,6 +19,14 @@ Per-term metadata columns (enable block skipping WITHOUT decoding):
     block_max_tf : int32[]  max tf within block
     block_min_dl : int32[]  min dl within block
 
+Decode: one private core (``_varint_spans`` terminator scan, ``_varints``
+byte loop, ``_restart_cumsum`` run-restarting prefix sums, ``_decode``
+de-interleave) under every production decoder — ``decode_many`` (merge: one
+run per row), ``decode_blocks_many`` (every query kernel: one run per
+selected block), ``decode_positions_run`` (one run per posting) and
+``position_layout_from_bytes`` (spans only). ``vbyte_decode``,
+``decode_block`` and ``decode_postings`` are the scalar reference.
+
 Block-max score bound (WAND): tf_norm is increasing in tf and decreasing in
 dl, so  idf * max_tf/(max_tf + k1*(1-b+b*min_dl/avgdl))  upper-bounds every
 posting in the block — prune-only, never changes scores (rank-identical
@@ -149,13 +157,21 @@ def decode_block(
 
 
 # --------------------------------------------------------------------------
-# multi-term vectorized codec — the build/merge hot path.
+# multi-term vectorized codec — the build/merge and query hot paths.
 #
 # encode_many/decode_many process EVERY term of a segment (or every row of a
 # merge group) in one numpy pass: no per-term Python loop, no pandas
 # groupby-iterate (measured ~150μs/group — the difference between 975 and
 # several-thousand docs/s at build). Byte layout is IDENTICAL to
 # encode_postings/decode_postings (pinned by tests).
+#
+# Every decoder is an assembler over ONE decode core (below encode_many):
+# _varint_spans (the terminator scan), _varints (the byte loop),
+# _restart_cumsum (prefix sums restarting per run, each on its base) and
+# _decode (the [deltas][tfs][dls] de-interleave). Run shapes: decode_many one
+# run per row, base 0; decode_blocks_many one run per selected block, based
+# on the previous block's last doc; decode_positions_run one run per
+# posting, base 0; position_layout_from_bytes only the spans.
 # --------------------------------------------------------------------------
 
 
@@ -285,142 +301,75 @@ def encode_many(
     )
 
 
+def _varint_spans(buf: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Start offset and byte length of each of the first ``n`` varints of
+    ``buf`` (one scan for terminator bytes, msb clear)."""
+    ends = np.flatnonzero((buf & 0x80) == 0)[:n]
+    starts = np.empty(n, dtype=np.int64)
+    starts[:1] = 0
+    starts[1:] = ends[:-1] + 1
+    return starts, ends - starts + 1
+
+
+def _varints(buf: np.ndarray, n: int) -> np.ndarray:
+    """The first ``n`` varints of ``buf`` as uint64: one masked pass per
+    byte position (byte 0 of every varint in one unmasked pass)."""
+    starts, lengths = _varint_spans(buf, n)
+    # explicit astype: uint8 & uint8-scalar stays uint8, and the << would wrap
+    vals = (buf[starts] & np.uint8(0x7F)).astype(np.uint64)
+    for j in range(1, int(lengths.max(initial=0))):
+        m = np.flatnonzero(lengths > j)
+        vals[m] |= (buf[starts[m] + j] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * j)
+    return vals
+
+
+def _restart_cumsum(deltas: np.ndarray, counts: np.ndarray, base) -> np.ndarray:
+    """int64 prefix sums of ``deltas`` restarting at every run of
+    ``counts`` values, run i offset by ``base[i]`` (or a scalar base)."""
+    d = deltas.astype(np.int64)
+    cs = np.cumsum(d)
+    run_starts = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=run_starts[1:])
+    return cs + np.repeat(base - (cs[run_starts] - d[run_starts]), counts)
+
+
+def _decode(seg: np.ndarray, counts: np.ndarray, run_counts: np.ndarray,
+            run_base) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Blocks of ``counts`` postings laid out back to back in ``seg`` →
+    (docs, tfs, dls) int64. Block b is ``[c deltas][c tfs][c dls]``, so the
+    delta of its posting p sits at value ``2·P_b + p`` (``P_b`` = postings
+    before block b, ``p`` counted over all blocks), its tf ``c_b`` later and
+    its dl ``2·c_b`` later. Doc ids are the delta prefix sums, restarted at
+    every run of ``run_counts`` postings on that run's ``run_base``."""
+    total = int(counts.sum())
+    vals = _varints(seg, 3 * total)
+    before = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=before[1:])
+    at = np.repeat(2 * before, counts) + np.arange(total)
+    c = np.repeat(counts, counts)
+    docs = _restart_cumsum(vals[at], run_counts, run_base)
+    return docs, vals[at + c].astype(np.int64), vals[at + 2 * c].astype(np.int64)
+
+
 def decode_many(
     payloads: list[bytes] | np.ndarray, ns: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode many rows' postings in one pass → concatenated (docs, tfs, dls).
 
     Each row's payload is the standard layout; rows are independent (their
-    output is concatenated in input order). One global varint-terminator scan
-    replaces per-row/per-block decode loops.
-    """
+    output is concatenated in input order): one run per row, base 0 (a
+    block-initial delta is a plain diff, so one cumsum spans the row)."""
     ns = np.asarray(ns, dtype=np.int64)
-    R = ns.size
-    if R == 0:
+    if ns.size == 0:
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy()
     buf = np.frombuffer(b"".join(bytes(p) for p in payloads), dtype=np.uint8)
-    # global value order: per row: per block: [deltas][tfs][dls]
-    ends = np.flatnonzero((buf & 0x80) == 0)
-    total_vals = int(3 * ns.sum())
-    ends = ends[:total_vals]
-    starts = np.empty(total_vals, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(total_vals, dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        m = lengths > j
-        # explicit astype: uint8 & uint64-scalar stays uint8 in numpy 1.x,
-        # and the <<7 would wrap
-        vals[m] |= (buf[starts[m] + j] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * j)
-
-    # classify each value into its stream: per row r with n postings and
-    # B=ceil(n/128) blocks, value layout is per-block chunks of sizes
-    # (c, c, c) where c = postings in that block
-    blocks_per_row = (ns + BLOCK - 1) // BLOCK
-    # per-block posting counts, row-major
-    tot_blocks = int(blocks_per_row.sum())
-    blk_row = np.repeat(np.arange(R), blocks_per_row)
-    blk_idx_in_row = np.arange(tot_blocks) - np.repeat(
-        np.cumsum(np.append(0, blocks_per_row[:-1])), blocks_per_row
-    )
-    blk_counts = np.minimum(ns[blk_row] - blk_idx_in_row * BLOCK, BLOCK)
-    # chunk sizes in value space: 3 chunks per block, each blk_counts
-    chunk_counts = np.repeat(blk_counts, 3)
-    chunk_stream = np.tile(np.array([0, 1, 2]), tot_blocks)
-    chunk_val_start = np.zeros(chunk_counts.size, dtype=np.int64)
-    np.cumsum(chunk_counts[:-1], out=chunk_val_start[1:])
-
-    out_streams = []
-    for s in range(3):
-        sel = chunk_stream == s
-        cstarts = chunk_val_start[sel]
-        ccounts = chunk_counts[sel]
-        idx = np.repeat(cstarts, ccounts) + (
-            np.arange(int(ccounts.sum()))
-            - np.repeat(np.cumsum(np.append(0, ccounts[:-1])), ccounts)
-        )
-        out_streams.append(vals[idx])
-    deltas, tfs, dls = out_streams
-
-    # deltas → docs: segmented cumsum per ROW (block-initial deltas are plain
-    # diffs, so one cumsum per row reconstructs all blocks)
-    d_i64 = deltas.astype(np.int64)
-    cs = np.cumsum(d_i64)
-    row_val_starts = np.zeros(R, dtype=np.int64)
-    np.cumsum(ns[:-1], out=row_val_starts[1:])
-    base = cs[row_val_starts] - d_i64[row_val_starts]
-    docs = cs - np.repeat(base, ns)
-    return docs, tfs.astype(np.int64), dls.astype(np.int64)
-
-
-def decode_run(
-    payload: np.ndarray,
-    n: int,
-    block_offset: np.ndarray,
-    i0: int,
-    i1: int,
-    prev_last: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode blocks [i0, i1) of one term in ONE vectorized pass.
-
-    ``prev_last`` = last doc of block i0-1 (ignored when i0 == 0, where the
-    first delta is absolute). The per-block python loop this replaces cost
-    ~0.25ms/block; a run decode is one terminator scan + one de-interleave.
-    """
-    counts = np.minimum(n - np.arange(i0, i1, dtype=np.int64) * BLOCK, BLOCK)
-    total = int(counts.sum())
-    byte_start = int(block_offset[i0])
-    byte_end = int(block_offset[i1]) if i1 < len(block_offset) else payload.size
-    seg = payload[byte_start:byte_end]
-
-    ends = np.flatnonzero((seg & 0x80) == 0)[: 3 * total]
-    starts = np.empty(3 * total, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(3 * total, dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        m = lengths > j
-        vals[m] |= (seg[starts[m] + j] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * j)
-
-    # de-interleave [d c][t c][l c] per block
-    chunk_counts = np.repeat(counts, 3)
-    chunk_stream = np.tile(np.array([0, 1, 2]), i1 - i0)
-    chunk_start = np.zeros(chunk_counts.size, dtype=np.int64)
-    np.cumsum(chunk_counts[:-1], out=chunk_start[1:])
-    outs = []
-    for s in range(3):
-        sel = chunk_stream == s
-        cstarts = chunk_start[sel]
-        ccounts = chunk_counts[sel]
-        idx = np.repeat(cstarts, ccounts) + (
-            np.arange(total) - np.repeat(np.cumsum(np.append(0, ccounts[:-1])), ccounts)
-        )
-        outs.append(vals[idx])
-    deltas, tfs, dls = outs
-    docs = np.cumsum(deltas.astype(np.int64))
-    if i0 > 0:
-        docs += prev_last
-    return docs, tfs.astype(np.int64), dls.astype(np.int64)
-
-
-def decode_blocks(
-    payload: np.ndarray,
-    n: int,
-    block_offset: np.ndarray,
-    selected: np.ndarray,
-    prev_lasts: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode an arbitrary SET of blocks of one term in one vectorized pass.
-
-    ``selected``: sorted block indices; ``prev_lasts``: per-block base doc
-    (block_last of the preceding block; ignored for block 0 whose first delta
-    is absolute). Replaces per-run loops when WAND keeps scattered blocks —
-    one terminator scan + one de-interleave regardless of fragmentation.
-    """
-    return decode_blocks_many([(payload, n, block_offset, selected, prev_lasts)])
+    blocks = (ns + BLOCK - 1) // BLOCK
+    first = np.zeros(ns.size, dtype=np.int64)
+    np.cumsum(blocks[:-1], out=first[1:])
+    in_row = np.arange(int(blocks.sum())) - np.repeat(first, blocks)
+    counts = np.minimum(np.repeat(ns, blocks) - in_row * BLOCK, BLOCK)
+    return _decode(buf, counts, ns, 0)
 
 
 # decode working-set budget (posting values per vectorized pass): the varint
@@ -438,13 +387,16 @@ def decode_blocks_many(
     """Decode block sets of MANY rows in cache-sized vectorized passes.
 
     ``parts``: list of ``(payload, n, block_offset, selected, prev_lasts)``
-    — e.g. every salt slice of one term in the serving path. The varint
-    terminator scan, de-interleave and segmented cumsum all have per-CALL
-    fixed costs (allocations + one python-level pass per varint byte);
-    grouping salt rows amortizes them, while the ``_DECODE_CHUNK_DOCS``
-    budget keeps each pass's temporaries cache-resident (see above). Output
-    is identical to per-row :func:`decode_blocks` concatenation
-    (caller's row order, ascending doc ranges)."""
+    per row — ``selected``: sorted block indices; ``prev_lasts``: per block
+    index, the last doc of the block before it (ignored for block 0, whose
+    first delta is absolute). Every query kernel decodes through here: one
+    call per term (WAND, conjunctions) or per slice (batch kernel, id sets).
+    The decode core's per-CALL fixed costs (allocations + one numpy pass per
+    varint byte) amortize over the grouped rows, while the
+    ``_DECODE_CHUNK_DOCS`` budget keeps each pass's temporaries
+    cache-resident (see above). Output: the selected blocks' postings,
+    concatenated in the caller's row order (ascending doc ranges); one run
+    per block, based on its ``prev_lasts`` entry."""
     if len(parts) > 1:
         groups, cur, cur_docs = [], [], 0
         for part in parts:
@@ -482,45 +434,7 @@ def decode_blocks_many(
     counts = counts_l[0] if len(counts_l) == 1 else np.concatenate(counts_l)
     block_base = bases_l[0] if len(bases_l) == 1 else np.concatenate(bases_l)
     seg = segs[0] if len(segs) == 1 else np.concatenate(segs)
-    total = int(counts.sum())
-    nb = counts.size
-
-    ends = np.flatnonzero((seg & 0x80) == 0)[: 3 * total]
-    vstarts = np.empty(3 * total, dtype=np.int64)
-    vstarts[0] = 0
-    vstarts[1:] = ends[:-1] + 1
-    lengths = ends - vstarts + 1
-    vals = np.zeros(3 * total, dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        m = lengths > j
-        vals[m] |= (seg[vstarts[m] + j] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * j)
-
-    # de-interleave [d c][t c][l c] per block
-    chunk_counts = np.repeat(counts, 3)
-    chunk_stream = np.tile(np.array([0, 1, 2]), nb)
-    chunk_start = np.zeros(3 * nb, dtype=np.int64)
-    np.cumsum(chunk_counts[:-1], out=chunk_start[1:])
-    outs = []
-    for s in range(3):
-        sel_m = chunk_stream == s
-        cstarts = chunk_start[sel_m]
-        ccounts = chunk_counts[sel_m]
-        base = np.zeros(nb, dtype=np.int64)
-        np.cumsum(ccounts[:-1], out=base[1:])
-        idx = np.repeat(cstarts - base, ccounts) + np.arange(total)
-        outs.append(vals[idx])
-    deltas, tfs, dls = outs
-
-    # docs: segmented cumsum per block + per-block base (prev block's last;
-    # block 0's first delta is already absolute)
-    d_i64 = deltas.astype(np.int64)
-    cs = np.cumsum(d_i64)
-    blk_starts = np.zeros(nb, dtype=np.int64)
-    np.cumsum(counts[:-1], out=blk_starts[1:])
-    seg_base = cs[blk_starts] - d_i64[blk_starts]
-    bases = block_base - seg_base
-    docs = cs + np.repeat(bases, counts)
-    return docs, tfs.astype(np.int64), dls.astype(np.int64)
+    return _decode(seg, counts, counts, block_base)
 
 
 # --------------------------------------------------------------------------
@@ -624,15 +538,9 @@ def position_layout_from_bytes(
     decoding any values: one varint-terminator scan gives every value's byte
     length, and the block geometry follows from (tf_all, term_counts) exactly
     as in :func:`encode_positions_many`. ``payload`` is set to ``buf``."""
-    total_vals = int(np.asarray(tf_all, dtype=np.int64).sum())
-    ends = np.flatnonzero((buf & 0x80) == 0)[:total_vals]
-    starts = np.empty(total_vals, dtype=np.int64)
-    if total_vals:
-        starts[0] = 0
-        starts[1:] = ends[:-1] + 1
-    L = (ends - starts + 1) if total_vals else np.empty(0, dtype=np.int64)
-    enc = _position_layout(L, np.asarray(tf_all, dtype=np.int64),
-                           np.asarray(term_counts, dtype=np.int64))
+    tf_all = np.asarray(tf_all, dtype=np.int64)
+    _, L = _varint_spans(buf, int(tf_all.sum()))
+    enc = _position_layout(L, tf_all, np.asarray(term_counts, dtype=np.int64))
     enc.payload = buf
     return enc
 
@@ -646,8 +554,10 @@ def decode_positions_run(
 ) -> np.ndarray:
     """Decode the positions of blocks [i0, i1) of one term → flat int64
     positions (caller segments by ``tfs``, the decoded tf array of exactly
-    those blocks' postings). Mirrors :func:`decode_run`'s one-scan shape."""
-    total = int(np.asarray(tfs, dtype=np.int64).sum())
+    those blocks' postings): one run per posting, base 0 (each posting's
+    first position delta is absolute)."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    total = int(tfs.sum())
     if total == 0:
         return np.empty(0, dtype=np.int64)
     byte_start = int(pos_block_offset[i0])
@@ -656,23 +566,7 @@ def decode_positions_run(
         else pos_payload.size
     )
     seg = pos_payload[byte_start:byte_end]
-    ends = np.flatnonzero((seg & 0x80) == 0)[:total]
-    starts = np.empty(total, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(total, dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        m = lengths > j
-        vals[m] |= (seg[starts[m] + j] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * j)
-    # segmented cumsum per posting (first delta of each posting is absolute)
-    d_i64 = vals.astype(np.int64)
-    cs = np.cumsum(d_i64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    p_starts = np.zeros(tfs.size, dtype=np.int64)
-    np.cumsum(tfs[:-1], out=p_starts[1:])
-    base = cs[p_starts] - d_i64[p_starts]
-    return cs - np.repeat(base, tfs)
+    return _restart_cumsum(_varints(seg, total), tfs, 0)
 
 
 def decode_postings(enc_n: int, payload: np.ndarray, block_offset: np.ndarray,

@@ -56,9 +56,10 @@ Two routes for a scored request (ranked or Lucene-syntax q), chosen by
   - ``search: facets`` (4): the broadcasts of the doclen sidecar (the docs
     table joins it) and of the cached matches, then the two-stage aggregate.
 
-  A Lucene q (perfbench's traced ``+a "b c" -d`` probe, same fq and facet)
-  runs 10: 3 ``search: scored domain`` jobs around the tree's one kernel
-  stage, and an unlabelled listing of the positional index it reads.
+  A warm Lucene q (perfbench's traced ``+a "b c" -d`` probe, same fq and
+  facet) runs 9: 3 ``search: scored domain`` jobs around the tree's one
+  kernel stage, then the same 2 + 4. The reader's first phrase query also
+  runs an unlabelled listing of the positional index, which it then keeps.
 
 On both routes stored fields for the page come from a driver-side pyarrow
 read (``IndexReader.fetch``, no job). Request p50 on that host and index,

@@ -23,7 +23,7 @@ import sys
 import numpy as np
 import pyarrow as pa
 
-from solrutils_spark.index.codec import decode_run
+from solrutils_spark.index.codec import decode_blocks_many
 
 
 # the index columns the scoring kernels read (the positional sidecar is
@@ -165,14 +165,29 @@ def rows_from_arrow(tbl: pa.Table) -> list[PostingRow]:
     return PostingView(tbl).rows()
 
 
-def slice_doc_ids(rows) -> np.ndarray:
-    """Sorted unique doc ids of every posting in ``rows`` (full decode)."""
-    ids = [
-        decode_run(r.payload, int(r.df_part), r.block_offset, 0,
-                   len(r.block_offset), 0)[0]
+def prev_lasts(row) -> np.ndarray:
+    """Per block, the last doc id before it (block 0: ``first_doc - 1``)."""
+    out = np.empty(len(row.block_last), dtype=np.int64)
+    out[0] = int(row.first_doc) - 1
+    out[1:] = row.block_last[:-1]
+    return out
+
+
+def decode_rows(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every posting of non-empty ``rows`` in ONE ``decode_blocks_many``
+    call (every block selected) → (docs, tfs, dls), concatenated in row
+    order: row i holds the next ``rows[i].df_part`` entries."""
+    return decode_blocks_many([
+        (r.payload, int(r.df_part), r.block_offset,
+         np.arange(len(r.block_offset)), prev_lasts(r))
         for r in rows
-    ]
-    return np.unique(np.concatenate(ids)) if ids else np.empty(0, np.int64)
+    ])
+
+
+def slice_doc_ids(rows) -> np.ndarray:
+    """Sorted unique doc ids of every posting in ``rows``: one
+    :func:`decode_rows` call for the whole slice, none for no rows."""
+    return np.unique(decode_rows(rows)[0]) if rows else np.empty(0, np.int64)
 
 
 # the kernel output schemas of every grouped stage in ``query/``: one row per

@@ -61,7 +61,7 @@ from solrutils_spark.index.codec import (BLOCK, decode_blocks_many,
 from solrutils_spark.query import arrow_rows
 from solrutils_spark.query.arrow_rows import TOPK_DDL
 from solrutils_spark.query.engine import ranked_page
-from solrutils_spark.query.wand import (_EMPTY, _member, _prev_lasts, _tfn,
+from solrutils_spark.query.wand import (_EMPTY, _member, _tfn,
                                         topk_slice_batch)
 
 
@@ -160,7 +160,7 @@ def _intersect(
             if runs:
                 blocks = np.concatenate([np.arange(i0, i1) for i0, i1 in runs])
                 parts.append((r.payload, int(r.df_part), r.block_offset,
-                              blocks, _prev_lasts(r)))
+                              blocks, arrow_rows.prev_lasts(r)))
                 runs_of.append((r, runs))
         if not parts:
             return _EMPTY[0], {}

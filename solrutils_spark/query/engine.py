@@ -106,13 +106,17 @@ class IndexReader:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         self.index = read_index(spark, index_dir)
-        # The memos below (and ``_docs``) are set once or only grow, and
-        # hold only facts of the immutable on-disk index, so threads share
-        # a reader unlocked: a race computes an entry twice and stores an
-        # equal value. None of them persists a frame. The resident postings
-        # also only grow, but their byte total is a bound, so their
-        # check-and-store (only that) runs under ``_lock``.
+        # The memos below (``_docs`` and ``_positional`` among them) are set
+        # once or only grow, and hold only facts of the immutable on-disk
+        # index, so threads share a reader unlocked: a race computes an
+        # entry twice and stores an equal value. None of them persists a
+        # frame. The resident postings also only grow, but their byte total
+        # is a bound, so their check-and-store (only that) runs under
+        # ``_lock``.
         self._docs: DataFrame | None = None
+        # the index with its positional sidecar columns (phrase queries);
+        # see _candidate_rows
+        self._positional: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
         # (field, value) → df of a metadata keyword clause (qparser)
         self._field_df_cache: dict[tuple[str, str], int] = {}
@@ -177,11 +181,15 @@ class IndexReader:
     def _candidate_rows(self, terms: list[str], positions: bool = False
                         ) -> DataFrame:
         """Index rows of ``terms``: bucket-directory pruned, term-filtered.
-        ``positions`` adds the positional sidecar columns, read fresh from
-        disk (not the lean serving cache): only phrase queries pay for the
-        position bytes, and only for their own terms' buckets."""
-        idx = (read_index(self.spark, self.index_dir, with_positions=True)
-               if positions else self.index)
+        ``positions`` adds the positional sidecar columns, read from disk
+        (not the lean serving cache): only phrase queries pay for the
+        position bytes, and only for their own terms' buckets. That frame
+        is built on the first phrase query and kept, so later ones skip the
+        parquet listing job a fresh read runs."""
+        if positions and self._positional is None:
+            self._positional = read_index(self.spark, self.index_dir,
+                                          with_positions=True)
+        idx = self._positional if positions else self.index
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
         return idx.filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)

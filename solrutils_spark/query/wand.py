@@ -38,7 +38,8 @@ from __future__ import annotations
 import numpy as np
 
 from solrutils_spark.functions.analyzer import B, K1
-from solrutils_spark.index.codec import BLOCK, decode_blocks_many, decode_run
+from solrutils_spark.index.codec import BLOCK, decode_blocks_many
+from solrutils_spark.query.arrow_rows import decode_rows, prev_lasts
 
 
 # test-visible instrumentation: how many times a kernel switched into
@@ -63,14 +64,6 @@ def _member(d: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
         return np.zeros(d.size, dtype=bool)
     pos = np.minimum(np.searchsorted(sorted_ids, d), sorted_ids.size - 1)
     return sorted_ids[pos] == d
-
-
-def _prev_lasts(row) -> np.ndarray:
-    """Per block, the last doc id before it (block 0: ``first_doc - 1``)."""
-    out = np.empty(len(row.block_last), dtype=np.int64)
-    out[0] = int(row.first_doc) - 1
-    out[1:] = row.block_last[:-1]
-    return out
 
 
 def _range_max(values: np.ndarray, left: np.ndarray, right: np.ndarray) -> np.ndarray:
@@ -183,7 +176,7 @@ def topk_rows(
         for ri, (row, bb) in enumerate(rows_by_term[t]):
             block_ub = idf * bb
             row_data.append(
-                (row.payload, int(row.df_part), row.block_offset, _prev_lasts(row))
+                (row.payload, int(row.df_part), row.block_offset, prev_lasts(row))
             )
             for bi, ub in enumerate(block_ub):
                 blocks.append((float(ub), ri, bi))
@@ -198,8 +191,8 @@ def topk_rows(
             # flat list: bulk-decode EVERY row in one call (contiguous-run
             # fast path inside decode_blocks_many) + one global selection
             docs1, scores1 = scored([
-                (payload, n, block_offset, np.arange(len(block_offset)), prev_lasts)
-                for payload, n, block_offset, prev_lasts in row_data
+                (payload, n, block_offset, np.arange(len(block_offset)), lasts)
+                for payload, n, block_offset, lasts in row_data
             ], idf)
             sel = np.lexsort((docs1, -scores1))[: min(k, docs1.size)]
             return docs1[sel], scores1[sel]
@@ -273,14 +266,14 @@ def topk_rows(
         # (amortizes the decoder's per-call fixed costs across the salts)
         parts = []
         for row, bb in rows_by_term[t]:
-            prev_lasts = _prev_lasts(row)
-            lo_doc, hi_doc = prev_lasts + 1 - base, row.block_last - base
+            lasts = prev_lasts(row)
+            lo_doc, hi_doc = lasts + 1 - base, row.block_last - base
             if np.isfinite(theta):
                 block_ub = idf * bb
                 max_acc = _range_max(scores, lo_doc, hi_doc + 1)
                 keep = max_acc + block_ub + rem >= theta
             else:
-                keep = np.ones(len(prev_lasts), dtype=bool)
+                keep = np.ones(len(lasts), dtype=bool)
             if lookup:
                 # only blocks holding ≥1 touched doc can contribute
                 lo = np.searchsorted(touched, lo_doc, side="left")
@@ -289,7 +282,7 @@ def topk_rows(
             kept = np.flatnonzero(keep)
             if kept.size:
                 parts.append((row.payload, int(row.df_part), row.block_offset,
-                              kept, prev_lasts))
+                              kept, lasts))
         if parts:
             d, nc = scored(parts, idf)
             d = d - base
@@ -316,10 +309,12 @@ def topk_slice_batch(
     avgdl: float,
     allowed_docs: np.ndarray | None = None,
 ) -> list[tuple[int, np.ndarray, np.ndarray]]:
-    """Many-queries-one-slice kernel: decode every candidate row ONCE, then
-    score all queries from the decoded arrays. A Zipf-hot term shared by most
-    of the batch decodes once instead of once per query — decode is the batch
-    path's dominant cost.
+    """Many-queries-one-slice kernel: decode every candidate row of the slice
+    in ONE ``decode_blocks_many`` call (every block; split at the rows'
+    ``df_part`` boundaries), then score all queries from the decoded arrays.
+    A Zipf-hot term shared by most of the batch decodes once instead of once
+    per query — decode is the batch path's dominant cost. No rows: no
+    decode, no result.
 
     ``rows``: one salt slice's ``PostingRow`` records (one row per term).
     Accumulation is EXHAUSTIVE with the same BM25 arithmetic and the same
@@ -336,15 +331,18 @@ def topk_slice_batch(
     test_search_batch_filtered_rank_identical).
     """
     decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for row in rows:
-        d, tf, dl = decode_run(
-            row.payload, int(row.df_part), row.block_offset, 0,
-            len(row.block_offset), 0,
-        )
+    if rows:
+        d, tf, dl = decode_rows(rows)
+        cut = np.cumsum([int(row.df_part) for row in rows])[:-1]
         if allowed_docs is not None:
             ok = _member(d, allowed_docs)
             d, tf, dl = d[ok], tf[ok], dl[ok]
-        decoded[row.term] = (d, _tfn(tf, dl, avgdl))
+            cut = np.cumsum(ok)[cut - 1]
+        # filter and tf-norm run once over the slice (elementwise, so each
+        # row's values equal a per-row pass), then split per row
+        for row, dr, nr in zip(rows, np.split(d, cut),
+                               np.split(_tfn(tf, dl, avgdl), cut)):
+            decoded[row.term] = (dr, nr)
 
     # dense per-query accumulator over the slice's doc range (round 4): a
     # base-shifted float64 array replaces the per-term argsort-mergesort

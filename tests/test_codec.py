@@ -136,39 +136,46 @@ def test_bucket_col_matches_python():
         assert got[t] == term_bucket(t, 64), t
 
 
-def test_decode_run_matches_blocks():
-    from solrutils_spark.index.codec import decode_run
+def _prev_lasts(enc) -> np.ndarray:
+    """Per block, the last doc before it (block 0's entry is ignored)."""
+    out = np.zeros(len(enc.block_offset), dtype=np.int64)
+    out[1:] = enc.block_last[:-1]
+    return out
+
+
+def _expected(arrays, sel) -> list[np.ndarray]:
+    """The encoder's input arrays, sliced per selected block."""
+    return [np.concatenate([a[i * BLOCK:(i + 1) * BLOCK] for i in sel])
+            for a in arrays]
+
+
+def test_decode_contiguous_runs():
+    """Contiguous block runs, including runs that start past block 0."""
+    from solrutils_spark.index.codec import decode_blocks_many
 
     d, t, l = _random_postings(1000, 99)
     enc = encode_postings(d, t, l)
     nb = len(enc.block_offset)
     for i0, i1 in [(0, nb), (0, 1), (3, 7), (nb - 1, nb), (2, 3)]:
-        prev = int(enc.block_last[i0 - 1]) if i0 > 0 else 0
-        dd, tt, ll = decode_run(enc.payload, enc.n, enc.block_offset, i0, i1, prev)
-        lo, hi = i0 * BLOCK, min(i1 * BLOCK, enc.n)
-        np.testing.assert_array_equal(dd, d[lo:hi])
-        np.testing.assert_array_equal(tt, t[lo:hi])
-        np.testing.assert_array_equal(ll, l[lo:hi])
+        sel = np.arange(i0, i1)
+        got = decode_blocks_many(
+            [(enc.payload, enc.n, enc.block_offset, sel, _prev_lasts(enc))])
+        for g, e in zip(got, _expected((d, t, l), sel)):
+            np.testing.assert_array_equal(g, e)
 
 
 def test_decode_blocks_scattered():
-    from solrutils_spark.index.codec import decode_blocks
+    from solrutils_spark.index.codec import decode_blocks_many
 
     d, t, l = _random_postings(1000, 123)
     enc = encode_postings(d, t, l)
     nb = len(enc.block_offset)
-    prev_lasts = np.empty(nb, dtype=np.int64)
-    prev_lasts[0] = 0
-    prev_lasts[1:] = enc.block_last[:-1]
     for sel in [[0], [nb - 1], [0, 2, 3, 6], list(range(nb)), [1, 5]]:
         sel = np.array(sel)
-        dd, tt, ll = decode_blocks(enc.payload, enc.n, enc.block_offset, sel, prev_lasts)
-        exp_d = np.concatenate([d[i * BLOCK : (i + 1) * BLOCK] for i in sel])
-        exp_t = np.concatenate([t[i * BLOCK : (i + 1) * BLOCK] for i in sel])
-        exp_l = np.concatenate([l[i * BLOCK : (i + 1) * BLOCK] for i in sel])
-        np.testing.assert_array_equal(dd, exp_d)
-        np.testing.assert_array_equal(tt, exp_t)
-        np.testing.assert_array_equal(ll, exp_l)
+        got = decode_blocks_many(
+            [(enc.payload, enc.n, enc.block_offset, sel, _prev_lasts(enc))])
+        for g, e in zip(got, _expected((d, t, l), sel)):
+            np.testing.assert_array_equal(g, e)
 
 
 # property-based round-trip (hypothesis) — SURVEY §5.2 item 4
@@ -182,15 +189,23 @@ try:
     )
     @settings(max_examples=50, deadline=None)
     def test_property_roundtrip(gaps, tf_seed):
+        from solrutils_spark.index.codec import decode_blocks_many, decode_many
+
         rng = np.random.default_rng(tf_seed)
         docs = np.cumsum(np.array(gaps, dtype=np.int64))
         tfs = rng.integers(1, 1000, size=len(gaps)).astype(np.int64)
         dls = rng.integers(1, 100000, size=len(gaps)).astype(np.int64)
         enc = encode_postings(docs, tfs, dls)
-        d, t, l = decode_postings(enc.n, enc.payload, enc.block_offset, enc.block_last)
-        np.testing.assert_array_equal(d, docs)
-        np.testing.assert_array_equal(t, tfs)
-        np.testing.assert_array_equal(l, dls)
+        every = np.arange(len(enc.block_offset))
+        for d, t, l in (
+            decode_postings(enc.n, enc.payload, enc.block_offset, enc.block_last),
+            decode_many([enc.payload.tobytes()], np.array([enc.n])),
+            decode_blocks_many([(enc.payload, enc.n, enc.block_offset, every,
+                                 _prev_lasts(enc))]),
+        ):
+            np.testing.assert_array_equal(d, docs)
+            np.testing.assert_array_equal(t, tfs)
+            np.testing.assert_array_equal(l, dls)
 
 except ImportError:  # pragma: no cover
     pass
@@ -198,12 +213,12 @@ except ImportError:  # pragma: no cover
 
 def test_decode_blocks_many_equals_per_row():
     """Round-4: the grouped multi-row decoder (incl. its cache-budget
-    chunking and contiguous-run slice fast path) must equal per-row
-    decode_blocks concatenation on random rows with random block subsets."""
+    chunking and contiguous-run slice fast path) must return each row's
+    selected blocks of the encoder's input, concatenated in row order, on
+    random rows with random block subsets."""
     import random
 
-    from solrutils_spark.index.codec import (
-        _DECODE_CHUNK_DOCS, decode_blocks, decode_blocks_many)
+    from solrutils_spark.index.codec import _DECODE_CHUNK_DOCS, decode_blocks_many
 
     rng = random.Random(777)
     parts, want_d, want_t, want_l = [], [], [], []
@@ -227,14 +242,12 @@ def test_decode_blocks_many_equals_per_row():
             sel = np.flatnonzero([rng.random() < 0.6 for _ in range(nb)])
             if sel.size == 0:
                 sel = np.array([0])
-        prev_lasts = np.empty(nb, dtype=np.int64)
+        prev_lasts = _prev_lasts(enc)
         prev_lasts[0] = int(d[0]) - 1
-        prev_lasts[1:] = np.asarray(enc.block_last[:-1], dtype=np.int64)
-        args = (payload, size, np.asarray(enc.block_offset, dtype=np.int32),
-                sel, prev_lasts)
-        parts.append(args)
-        rd, rt, rl = decode_blocks(*args)
-        want_d.append(rd); want_t.append(rt); want_l.append(rl)
+        parts.append((payload, size, np.asarray(enc.block_offset, dtype=np.int32),
+                      sel, prev_lasts))
+        ed, et, el = _expected((d, t, l), sel)
+        want_d.append(ed); want_t.append(et); want_l.append(el)
     got_d, got_t, got_l = decode_blocks_many(parts)
     assert sum(len(x) for x in want_d) > _DECODE_CHUNK_DOCS  # chunking engaged
     np.testing.assert_array_equal(got_d, np.concatenate(want_d))

@@ -338,6 +338,58 @@ def test_search_batch_filtered_rank_identical(spark, reader):
         assert all(d % 3 == 0 for _, d, _ in got), f"q{qid}"
 
 
+def test_slice_batch_full_row_decode():
+    """``topk_slice_batch`` decodes a slice's rows in one call and splits
+    them per row: ids and scores ``==`` a per-row scalar decode scored term
+    by term (and ``topk_rows``), with and without ``allowed_docs``, on 1-3
+    row slices with rows of exactly 128 postings and multi-block rows. An
+    empty slice decodes nothing and returns nothing."""
+    import numpy as np
+
+    from solrutils_spark.index.codec import decode_postings, encode_postings
+    from solrutils_spark.query.arrow_rows import PostingRow, slice_doc_ids
+    from solrutils_spark.query.wand import (_dense_topk, _tfn, topk_rows,
+                                            topk_slice_batch)
+
+    avgdl, k = 57.0, 1000
+    assert topk_slice_batch([], [(0, {"t0": 1.0}, k)], avgdl) == []
+    assert slice_doc_ids([]).size == 0
+    rng = np.random.default_rng(5)
+    for sizes in [(128,), (128, 300), (1, 128, 129), (300, 5)]:
+        rows = []
+        for j, size in enumerate(sizes):
+            docs = np.sort(rng.choice(600, size, replace=False))
+            enc = encode_postings(docs, rng.integers(1, 9, size),
+                                  rng.integers(1, 200, size))
+            row = PostingRow()
+            row.term, row.salt, row.df_part = f"t{j}", 0, size
+            row.first_doc, row.payload = int(docs[0]), enc.payload
+            row.block_offset, row.block_last = enc.block_offset, enc.block_last
+            row.block_max_tf = enc.block_max_tf.astype(np.int64)
+            row.block_min_dl = enc.block_min_dl.astype(np.int64)
+            rows.append(row)
+        idf = {r.term: 1.0 + 0.37 * j for j, r in enumerate(rows)}
+        for allowed in (None, np.arange(0, 600, 3)):
+            scores = np.zeros(600)
+            for t in sorted(idf, key=lambda t: (-idf[t], t)):
+                r = rows[int(t[1:])]
+                d, tf, dl = decode_postings(r.df_part, r.payload,
+                                            r.block_offset, r.block_last)
+                if allowed is not None:
+                    ok = np.isin(d, allowed)
+                    d, tf, dl = d[ok], tf[ok], dl[ok]
+                scores[d] += idf[t] * _tfn(tf, dl, avgdl)
+            want = _dense_topk(scores, k)
+            (_, d, s), = topk_slice_batch(rows, [(0, idf, k)], avgdl, allowed)
+            assert d.tolist() == want.tolist(), sizes
+            assert s.tolist() == scores[want].tolist(), sizes
+            wd, ws = topk_rows(rows, idf, avgdl, k, allowed)
+            assert (d.tolist(), s.tolist()) == (wd.tolist(), ws.tolist())
+        assert slice_doc_ids(rows).tolist() == sorted(
+            {int(x) for r in rows for x in decode_postings(
+                r.df_part, r.payload, r.block_offset, r.block_last)[0]})
+
+
 def test_doc_ids_dense_and_parallelism_invariant(spark):
     """doc_id is a pure function of the data with the DEFAULT bucket count
     (a constant, never cluster parallelism): identical ids at any input

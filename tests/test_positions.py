@@ -153,3 +153,24 @@ def test_phrase_positions_path_equals_candidate_verify(
         (d, round(s, 12)) for d, s in pos_oracle.search_phrase(ptext, n_docs, slop)
     )
     assert a == b
+
+
+def test_positional_index_read_once_per_reader(spark, pos_index, monkeypatch):
+    """A reader reads the positional index (a parquet listing job) on its
+    first phrase query only; a repeated phrase query returns ``==`` rows."""
+    from solrutils_spark.query import engine
+    from solrutils_spark.query.qparser import boolean_scored
+
+    reads = []
+    real = engine.read_index
+
+    def counting(*args, **kwargs):
+        reads.append(kwargs.get("with_positions", False))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "read_index", counting)
+    reader = engine.IndexReader(spark, pos_index.index_dir)
+    first, second = (sorted(boolean_scored(reader, '"query stats"').collect())
+                     for _ in range(2))
+    assert reads.count(True) == 1
+    assert first == second and first
